@@ -6,6 +6,7 @@ import graft.Tables
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.model.ContentTypes
+import graft.util.AtomicDir
 
 /** The user-facing vector database — the reference's `VectorDatabase`
   * class surface (vector_db.py:27-229, 615-759), batch-native:
@@ -58,6 +59,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   // queue, cross-process writers fail loudly. Intrinsic locks are
   // re-entrant, so nested mutations on one thread pass through.
   private val leaseMonitor = new Object
+  private var recovered = false
 
   private def leasePath = new org.apache.hadoop.fs.Path(storeDir, "_LOCK")
 
@@ -116,11 +118,40 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       }
     } else writeLease(fs, overwrite = true) // nested entry: heartbeat refresh
     leaseDepth += 1
-    try body
-    finally {
+    try {
+      if (!recovered) {
+        // the first write of this instance: a crashed writer's residue
+        // may sit in any area, not only the ones this op touches. Set
+        // first: the recovery's own nested writes must not re-enter it
+        recovered = true
+        try recover() catch { case e: Throwable => recovered = false; throw e }
+      }
+      body
+    } finally {
       leaseDepth -= 1
       if (leaseDepth == 0) fs.delete(leasePath, false)
     }
+  }
+
+  /** Every area's crash recovery ([[AtomicDir.recover]]): store
+    * partitions and files, each built index, both sidecars and the
+    * snapshot dir, then a crashed ingest's missing entries
+    * ([[completeIngest]]). Runs once per instance, on its first write;
+    * each area's own recovery also runs on entry to the ops that
+    * rewrite it. */
+  private def recover(): Unit = {
+    recoverCompact()
+    recoverAnnBuild(_ => true)
+    channelNames.map(ch => new org.apache.hadoop.fs.Path(annPath(ch)))
+      .filter(existsPath).foreach(p => recoverAnnIndex(fsOf(p), p))
+    recoverLexical()
+    recoverNearDup()
+    Seq(storeDir -> "_INGEST", s"$storeDir/_snapshots" -> "manifest.v").foreach {
+      case (d, name) =>
+        val dir = new org.apache.hadoop.fs.Path(d)
+        AtomicDir.recover(fsOf(dir), dir, ".old_", Seq(AtomicDir.stagedPrefix(name)))
+    }
+    completeIngest()
   }
 
   def store: DataFrame = spark.read.parquet(storePath)
@@ -200,6 +231,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val n = fresh.count()
     try {
       if (n > 0) {
+        // the store write and the appends below are not one commit: a
+        // crash between them leaves stored rows without index/sidecar
+        // entries, which a re-run would skip as already stored, so the
+        // marker makes the next writer's recovery complete them
+        val marker = ingestMarker
+        AtomicDir.write(fsOf(marker), marker, writerId)
         // sort within partitions so parquet row-group min/max stats on
         // doc_name support location-filtered search skipping
         fresh.sortWithinPartitions("doc_name", "page_num")
@@ -219,9 +256,44 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         // lexical sidecar rides every ingest once built (fail-open:
         // after the store write — see appendLexical)
         if (lexicalIndexed) appendLexical(fresh)
+        fsOf(marker).delete(marker, false)
       }
     } finally Tables.release(fresh) // a failed write must not pin the batch
     n
+  }
+
+  private def ingestMarker = new org.apache.hadoop.fs.Path(storeDir, "_INGEST")
+
+  /** Complete what a crashed ingest left undone (its `_INGEST` marker
+    * is still there): every appendable ANN index and the live lexical
+    * postings take the store rows they lack, and the corpus stats are
+    * recounted (the crash may have advanced them already). Whichever
+    * write comes next runs this, so it works on the store rather than
+    * on a batch. Near-dup sidecar entries are not completed — chunked
+    * store rows do not reconstruct a doc's shingles, and a missing
+    * entry only admits a future near-dup (fail-open). */
+  private def completeIngest(): Unit = {
+    val marker = ingestMarker
+    if (!existsPath(marker)) return
+    log.warn(s"an ingest into $storeDir did not finish - adding the stored rows " +
+      "its ANN index and lexical sidecar appends missed")
+    channelNames.filter(annIndexExists).foreach { ch =>
+      val missing = Tables.materialize(channelFilter(store, ch)
+        .join(cachedIndex(ch).index.select($"row_id"),
+          xxhash64($"doc_name", $"content_type", $"content_id") === $"row_id", "left_anti"))
+      try if (!missing.isEmpty) appendAnnIndex(missing, ch)
+      finally Tables.release(missing)
+    }
+    if (lexicalIndexed) {
+      val chunk = Seq("doc_name", "page_num", "content_type", "content_id")
+      val missing = Tables.materialize(channelFilter(store, "text").join(
+        liveByGen(readPostings(), lexTombPath).select(chunk.map(col): _*),
+        chunk, "left_anti"))
+      try if (!missing.isEmpty) appendLexical(missing)
+      finally Tables.release(missing)
+      refreshLexStats()
+    }
+    fsOf(marker).delete(marker, false)
   }
 
   /** Whether a channel's ANN index has been built AND can take appends
@@ -239,10 +311,14 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * the channel — for a takedown that is silent retention. */
   def annIndexBuilt(channel: String): Boolean =
     existsPath(new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")) ||
-      recoverAnnBuild(channel)
+      (recoverAnnBuild(_ == channel) &&
+        existsPath(new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")))
 
   private def existsPath(p: org.apache.hadoop.fs.Path): Boolean =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+
+  private def fsOf(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Streaming ingest: an unbounded documents source flows into the
     * store via foreachBatch — every micro-batch runs the SAME
@@ -315,18 +391,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * frequencies, a gate verifying against superseded shingles.) */
   private def nextGen(root: String, dirs: Seq[(String, String)]): Long = {
     val g = curGen(root, dirs) + 1
-    // atomic write (temp + rename): _GEN is CORRECTNESS-critical — a
-    // torn write degrading to 0 would stamp fresh entries BELOW live
-    // tombstones, suppressing correctly-ingested docs and letting the
-    // next compaction delete them permanently
+    // _GEN is CORRECTNESS-critical: a torn value degrading to 0 would
+    // stamp fresh entries BELOW live tombstones, suppressing correctly
+    // ingested docs and letting the next compaction delete them
     val p = new org.apache.hadoop.fs.Path(root, "_GEN")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(root, s".gen_tmp_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(g.toString.getBytes("UTF-8"))
-    out.close()
-    fs.delete(p, false)
-    require(fs.rename(tmp, p), s"nextGen: rename $tmp -> $p failed")
+    AtomicDir.write(fsOf(p), p, g.toString)
     g
   }
 
@@ -337,15 +406,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * generation clock here. */
   private def curGen(root: String, dirs: Seq[(String, String)]): Long = {
     val p = new org.apache.hadoop.fs.Path(root, "_GEN")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stored =
-      try {
-        val len = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(p)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, "UTF-8").trim.toLongOption
-      } catch { case _: java.io.FileNotFoundException => None }
+    val stored = AtomicDir.read(fsOf(p), p).flatMap(_.trim.toLongOption)
     stored.getOrElse {
       val recovered = dirs.flatMap { case (dir, genCol) =>
         if (!existsPath(new org.apache.hadoop.fs.Path(dir))) None
@@ -605,50 +666,34 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Compact the near-dup sidecar: drop tombstoned docs from both
     * tables, rewrite each as `targetFiles` files (streaming-gate use
-    * appends a file-set per batch), swap via rename, and clear the
-    * tombstones LAST — a crash anywhere re-converges on the next
-    * [[recoverNearDup]] and reads stay correct throughout (tombstone
+    * appends a file-set per batch), swap each in, and clear the
+    * tombstones LAST — reads stay correct throughout (tombstone
     * filtering applies at read time until the clear). */
   def maintainNearDup(targetFiles: Int = 4): Unit =
     if (nearDupIndexed) withWriterLease("maintainNearDup") {
       recoverNearDup()
-      val fs = new org.apache.hadoop.fs.Path(nearDupPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val hasTomb = existsPath(new org.apache.hadoop.fs.Path(ndTombPath))
       Seq(ndBandsPath -> Seq("band", "bkey"), ndSetsPath -> Seq("doc_name"))
         .foreach { case (dir, sortCols) =>
           val live = new org.apache.hadoop.fs.Path(dir)
           val tmp = new org.apache.hadoop.fs.Path(s"$nearDupPath/.tmp_${live.getName}")
-          val old = new org.apache.hadoop.fs.Path(s"$nearDupPath/.old_${live.getName}")
-          val df = liveByGen(readSidecar(dir), ndTombPath)
-          df.repartition(targetFiles)
+          liveByGen(readSidecar(dir), ndTombPath).repartition(targetFiles)
             .sortWithinPartitions(sortCols.map(col): _*)
             .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapDir(fs, live, tmp, old, "maintainNearDup")
+          AtomicDir.swap(fsOf(live), tmp, live,
+            new org.apache.hadoop.fs.Path(s"$nearDupPath/.old_${live.getName}"))
         }
-      if (hasTomb) fs.delete(new org.apache.hadoop.fs.Path(ndTombPath), true)
+      if (hasTomb) fsOf(new org.apache.hadoop.fs.Path(ndTombPath))
+        .delete(new org.apache.hadoop.fs.Path(ndTombPath), true)
       spark.catalog.refreshByPath(nearDupPath)
     }
 
-  /** Restore the sidecar from a crashed [[maintainNearDup]] window:
-    * a live dir missing beside its `.old_` twin rolls back; stale
-    * `.tmp_`/`.old_` residue clears. Called by every gate entrypoint. */
+  /** Roll back a crashed [[maintainNearDup]] swap and drop staged
+    * residue ([[AtomicDir.recover]]). Called by every gate entrypoint. */
   private def recoverNearDup(): Unit = {
     val root = new org.apache.hadoop.fs.Path(nearDupPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    Seq(ndBandsPath, ndSetsPath).foreach { dir =>
-      val live = new org.apache.hadoop.fs.Path(dir)
-      val old = new org.apache.hadoop.fs.Path(s"$nearDupPath/.old_${live.getName}")
-      if (!fs.exists(live) && fs.exists(old)) {
-        require(fs.rename(old, live),
-          s"recoverNearDup: could not restore $old -> $live")
-        log.warn(s"recoverNearDup: restored $live from a crashed maintainNearDup")
-      }
-      val tmp = new org.apache.hadoop.fs.Path(s"$nearDupPath/.tmp_${live.getName}")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(live) && fs.exists(old)) fs.delete(old, true)
-    }
+    AtomicDir.recover(fsOf(root), root, ".old_",
+      Seq(".tmp_", AtomicDir.stagedPrefix("_GEN")))
   }
 
   /** Tombstone doc_names in the near-dup sidecar (no-op without one).
@@ -709,30 +754,30 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Build (or rebuild) the lexical sidecar from the store's live text
     * channel — one corpus explode + partial-agg groupBy, written
-    * bucket-partitioned and term-sorted (tmp + rename swap, so the old
-    * sidecar serves until the new one is live). Clears tombstones (a
-    * fresh build can't contain deleted rows) and recomputes the corpus
-    * stats exactly. Returns chunks indexed. */
+    * bucket-partitioned and term-sorted (staged and swapped in, so the
+    * old sidecar serves until the new one is live). Clears tombstones
+    * (a fresh build can't contain deleted rows) and recomputes the
+    * corpus stats exactly. Returns chunks indexed. */
   def indexLexical(): Long = withWriterLease("indexLexical") {
     recoverLexical()
-    val fs = new org.apache.hadoop.fs.Path(lexicalPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"$lexicalPath/.tmp_postings")
-    val old = new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings")
     lexPostingsOf(store).withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
       .repartition(col("bucket"))
       .sortWithinPartitions($"bucket", $"term", $"doc_name")
       .write.mode(SaveMode.Overwrite)
       .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-      .partitionBy("bucket").parquet(tmp.toString)
-    if (fs.exists(live)) swapDir(fs, live, tmp, old, "indexLexical")
-    else require(fs.rename(tmp, live), s"indexLexical: rename $tmp -> $live failed")
-    if (existsPath(new org.apache.hadoop.fs.Path(lexTombPath)))
-      fs.delete(new org.apache.hadoop.fs.Path(lexTombPath), true)
+      .partitionBy("bucket").parquet(lexStagedPath)
+    swapLexPostings()
+    val tomb = new org.apache.hadoop.fs.Path(lexTombPath)
+    if (existsPath(tomb)) fsOf(tomb).delete(tomb, true)
     spark.catalog.refreshByPath(lexicalPath)
-    // exact stats from the just-written postings (one NARROW sidecar
-    // read, not a second full corpus scan+tokenize)
+    refreshLexStats()
+  }
+
+  /** Exact corpus stats (`_NDOCS`, `_SUMDL`) and term stats from the
+    * LIVE postings — one NARROW sidecar read, not a corpus
+    * scan+tokenize. Empty-safe: deleting every doc must leave (0, 0)
+    * counters, not a crash. Returns the chunk count. */
+  private def refreshLexStats(): Long = {
     val (n, sumdl) = lexPostingsStats()
     writeLongAt(lexCounter("_NDOCS"), n)
     writeLongAt(lexCounter("_SUMDL"), sumdl)
@@ -816,12 +861,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   def maintainLexical(): Unit =
     if (lexicalIndexed) withWriterLease("maintainLexical") {
       recoverLexical()
-      val fs = new org.apache.hadoop.fs.Path(lexicalPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasTomb = existsPath(new org.apache.hadoop.fs.Path(lexTombPath))
-      val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
-      val tmp = new org.apache.hadoop.fs.Path(s"$lexicalPath/.tmp_postings")
-      val old = new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings")
+      val tomb = new org.apache.hadoop.fs.Path(lexTombPath)
+      val hasTomb = existsPath(tomb)
       // BUMP the generation: another live instance serving this store
       // keys its gate/stats caches on _GEN, and a compaction after
       // deletes rewrites termstats and clears tombstones WITHOUT any
@@ -835,41 +876,34 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       // safe, because every surviving row is live and later tombstones
       // record the generation current at THEIR delete.
       val g2 = nextGen(lexicalPath, lexGenDirs)
-      val df = liveByGen(readSidecar(lexPostingsPath), lexTombPath)
+      liveByGen(readSidecar(lexPostingsPath), lexTombPath)
         .withColumn("gen", lit(g2))
-      df.repartition(col("bucket"))
+        .repartition(col("bucket"))
         .sortWithinPartitions($"bucket", $"term", $"doc_name")
         .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-      .partitionBy("bucket").parquet(tmp.toString)
-      swapDir(fs, live, tmp, old, "maintainLexical")
+        .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
+        .partitionBy("bucket").parquet(lexStagedPath)
+      swapLexPostings()
       spark.catalog.refreshByPath(lexicalPath)
-      // exact stat refresh from the compacted postings (empty-safe:
-      // deleting every doc must leave (0, 0) counters, not a crash)
-      val (n, sumdl) = lexPostingsStats()
-      writeLongAt(lexCounter("_NDOCS"), n)
-      writeLongAt(lexCounter("_SUMDL"), sumdl)
-      refreshLexTermStats()
-      if (hasTomb) fs.delete(new org.apache.hadoop.fs.Path(lexTombPath), true)
+      refreshLexStats()
+      if (hasTomb) fsOf(tomb).delete(tomb, true)
     }
 
-  /** Restore the sidecar from a crashed [[indexLexical]]/
-    * [[maintainLexical]] window: live missing beside `.old_` rolls
-    * back, stale `.tmp_`/`.old_` residue clears. */
+  private def lexStagedPath = s"$lexicalPath/.tmp_postings"
+
+  private def swapLexPostings(): Unit = {
+    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
+    AtomicDir.swap(fsOf(live), new org.apache.hadoop.fs.Path(lexStagedPath), live,
+      new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings"))
+  }
+
+  /** Roll back a crashed [[indexLexical]]/[[maintainLexical]] swap or
+    * counter replacement and drop staged residue
+    * ([[AtomicDir.recover]]). */
   private def recoverLexical(): Unit = {
     val root = new org.apache.hadoop.fs.Path(lexicalPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
-    val old = new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings")
-    val tmp = new org.apache.hadoop.fs.Path(s"$lexicalPath/.tmp_postings")
-    if (!fs.exists(live) && fs.exists(old)) {
-      require(fs.rename(old, live),
-        s"recoverLexical: could not restore $old -> $live")
-      log.warn(s"recoverLexical: restored $live from a crashed lexical rewrite")
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(live) && fs.exists(old)) fs.delete(old, true)
+    AtomicDir.recover(fsOf(root), root, ".old_",
+      ".tmp_" +: Seq("_GEN", "_NDOCS", "_SUMDL", "_PCOUNT").map(AtomicDir.stagedPrefix))
   }
 
   // ─────────── MaxScore early termination (impact-ordered stats) ───────────
@@ -1663,8 +1697,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Versioned snapshot manifest — the consistent-copy contract for a
     * store operated across systems: one atomically-committed file
-    * (`_snapshots/manifest.vN`, the `_splits` write-to-temp + rename
-    * protocol) listing every LIVE data/metadata file of the store and
+    * (`_snapshots/manifest.vN`, an [[AtomicDir.commitVersion]])
+    * listing every LIVE data/metadata file of the store and
     * every channel's ANN index with its byte length. Dot-prefixed
     * crash/staging residue (`.compact_*`, `.delete_*`, `.ann_build_*`,
     * `.splits_tmp_*`) is NEVER listed — a copy made by replaying the
@@ -1699,27 +1733,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .map(st => (fs.makeQualified(st.getPath).toString
         .stripPrefix(qualifiedRoot).stripPrefix("/"), st.getLen))
       .sortBy(_._1)
-    val snapDir = new org.apache.hadoop.fs.Path(rootP, "_snapshots")
-    fs.mkdirs(snapDir)
-    val curV = fs.listStatus(snapDir).map(_.getPath.getName)
-      .filter(_.startsWith("manifest.v"))
-      .flatMap(_.stripPrefix("manifest.v").toIntOption)
-      .maxOption.getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(snapDir,
-      s".manifest_tmp_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(files.map { case (p, len) => s"$p\t$len" }
-      .mkString("\n").getBytes("UTF-8"))
-    out.close()
-    val dest = new org.apache.hadoop.fs.Path(snapDir, s"manifest.v${curV + 1}")
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"snapshot: rename $tmp -> $dest failed")
-    // superseded versions (and any crashed write's tmp) are dead now
-    (1 to curV).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir, s"manifest.v$v"), false))
-    fs.listStatus(snapDir).filter(_.getPath.getName.startsWith(".manifest_tmp_"))
-      .foreach(st => fs.delete(st.getPath, false))
-    dest.toString
+    AtomicDir.commitVersion(fs, new org.apache.hadoop.fs.Path(rootP, "_snapshots"),
+      "manifest.v", files.map { case (p, len) => s"$p\t$len" }.mkString("\n"))
+      .toString
   }
 
   /** Replay the latest [[snapshot]] manifest into `destRoot` and open
@@ -1748,21 +1764,14 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val srcRootP = new org.apache.hadoop.fs.Path(storeDir)
     val srcFs = srcRootP.getFileSystem(conf)
     val snapDir = new org.apache.hadoop.fs.Path(srcRootP, "_snapshots")
-    val manifest = (if (srcFs.exists(snapDir)) srcFs.listStatus(snapDir).toSeq
-      else Nil)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("manifest.v"))
-      .sortBy(_.getName.stripPrefix("manifest.v").toIntOption.getOrElse(0))
-      .lastOption
+    val (manifestName, manifestText) = AtomicDir.readLatest(srcFs, snapDir, "manifest.v")
       .getOrElse(throw new IllegalStateException(
         s"restore: no snapshot manifest under $snapDir - call snapshot() first"))
     val destRootP = new org.apache.hadoop.fs.Path(destRoot)
     val destFs = destRootP.getFileSystem(conf)
     require(!destFs.exists(new org.apache.hadoop.fs.Path(destRootP, "vector_store")),
       s"restore: $destRoot already holds a store - refusing to overwrite")
-    val in = srcFs.open(manifest)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toVector finally in.close()
+    val lines = manifestText.split("\n").filter(_.nonEmpty).toVector
     // verify FIRST, driver-side, metadata-only: a stale manifest must
     // fail loudly before any bytes move, and from the driver (not
     // wrapped in a task failure)
@@ -1794,10 +1803,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       spark.sparkContext.parallelize(parsed, par).foreach { case (rel, len) =>
         GraftVectorDB.restoreCopyOne(sq, dq, rel, len, serConf.value) }
     }
-    val destSnap = new org.apache.hadoop.fs.Path(destRootP, "_snapshots")
-    destFs.mkdirs(destSnap)
-    org.apache.hadoop.fs.FileUtil.copy(srcFs, manifest, destFs,
-      new org.apache.hadoop.fs.Path(destSnap, manifest.getName), false, conf)
+    val destManifest = new org.apache.hadoop.fs.Path(destRootP, s"_snapshots/$manifestName")
+    AtomicDir.write(destFs, destManifest, manifestText)
     new GraftVectorDB(spark, destRoot)
   }
 
@@ -2302,18 +2309,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         $"content_id", $"content_raw", $"row_id", $"v",
         l2Norm($"v").as("nrm"), cellExpr.as("cell"),
         AnnIndex.encodeCodes(pqBooks).as("codes"))
-    // build into a dot-prefixed temp dir and swap via the keep-old
-    // two-rename protocol (swapDir — the compact()/compactAnnIndex
-    // pattern): a plain Overwrite would expose a HALF-BUILT index
-    // (cells without a routing table) for the whole build, and the
-    // previous delete-then-rename order left a no-index window where a
-    // crash stranded the channel with NO index at all — every search
-    // and a streaming auto-rebuild's next appendAnnIndex would fail
-    // until a manual rebuild. Now the old index serves until the new
-    // one is live, and recoverAnnBuild (run on entry here AND from
-    // cachedIndex's missing-index path) rolls a between-renames crash
-    // forward, so serving self-heals. Single-writer contract as ever.
-    recoverAnnBuild(channel)
+    // build staged and swap in (AtomicDir.swap): a plain Overwrite
+    // would expose a HALF-BUILT index (cells without a routing table)
+    // for the whole build; the old index serves until the new one is
+    // live
+    recoverAnnBuild(_ == channel)
     val tmp = s"$storeDir/.ann_build_tmp_$channel"
     // sorted by doc_name WITHIN each cell's files: parquet row-group
     // min/max stats on doc_name then let a location-filtered ANN
@@ -2325,10 +2325,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // reader never sees an imi table without the marker or vice versa
     imiTag.foreach { k1 =>
       val gp = new org.apache.hadoop.fs.Path(s"$tmp/_centroids/_GEOMETRY")
-      val gfs = gp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = gfs.create(gp, true)
-      out.write(s"imi:$k1".getBytes("UTF-8"))
-      out.close()
+      AtomicDir.write(fsOf(gp), gp, s"imi:$k1")
     }
     AnnIndex.writeCodebooks(spark, pqBooks, s"$tmp/_codebooks")
     val live = new org.apache.hadoop.fs.Path(annPath(channel))
@@ -2345,14 +2342,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         (r.getAs[String]("mn"), r.getAs[String]("mx"))).toMap
     GraftVectorDB.writeDocRanges(fs,
       new org.apache.hadoop.fs.Path(s"$tmp/_centroids"), builtRanges)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    if (fs.exists(live))
-      swapDir(fs, live, tmpPath,
-        new org.apache.hadoop.fs.Path(s"$storeDir/.ann_build_old_$channel"),
-        "buildAnnIndex")
-    else if (!fs.rename(tmpPath, live))
-      throw new java.io.IOException(
-        s"buildAnnIndex: rename $tmp -> ${annPath(channel)} failed")
+    AtomicDir.swap(fs, new org.apache.hadoop.fs.Path(tmp), live,
+      new org.apache.hadoop.fs.Path(s"$storeDir/.ann_build_old_$channel"))
     val n = spark.read.parquet(annPath(channel)).count() // footer-stats count, no data scan
     // drift baseline: the rename swapped in a fresh _centroids dir, so
     // _APPENDED is implicitly reset to 0; record the built size the
@@ -2361,32 +2352,19 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     n
   }
 
-  /** Crash recovery for [[buildAnnIndex]]'s whole-index swap — the
-    * index-level twin of [[recoverCompact]]: a `.ann_build_old_<ch>`
-    * whose live index dir is MISSING means the crash hit between the
-    * two renames — restore it (the channel's only serving copy), so a
-    * rebuild crash can never leave the channel index-less; an old
-    * beside a live dir means the swap completed — drop the superseded
-    * index. A stale build tmp is always safe to drop (the build starts
-    * over). Runs on buildAnnIndex entry AND from [[cachedIndex]]'s
-    * missing-index path, so serving self-heals without waiting for the
-    * next maintenance run. Returns whether the live index was
+  /** Crash recovery for [[buildAnnIndex]]'s whole-index swaps of the
+    * channels `channels` accepts ([[AtomicDir.recover]] over the store
+    * root): a rebuild crash can never leave a channel index-less. Runs
+    * on buildAnnIndex entry AND from the missing-index paths
+    * ([[annIndexBuilt]], [[cachedIndex]]), so serving self-heals without
+    * waiting for the next maintenance run; those run without the lease,
+    * so they touch only their own channel's exact names and never
+    * another channel's in-flight build. Returns whether an index was
     * restored. */
-  private def recoverAnnBuild(channel: String): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(annPath(channel))
-    val old = new org.apache.hadoop.fs.Path(s"$storeDir/.ann_build_old_$channel")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var restored = false
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(old, live)) throw new java.io.IOException(
-          s"buildAnnIndex: crash recovery rename $old -> $live failed")
-        log.warn(s"buildAnnIndex: restored $live from an interrupted rebuild swap")
-        restored = true
-      } else fs.delete(old, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/.ann_build_tmp_$channel"), true)
-    restored
+  private def recoverAnnBuild(channels: String => Boolean): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    AtomicDir.recover(fsOf(root), root, ".ann_build_old_",
+      Seq(".ann_build_tmp_"), ch => s"ann_index_$ch", channels)
   }
 
   /** Incrementally extend the channel's ANN index with newly-ingested
@@ -2463,7 +2441,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       // keep the row-group-skipping property for location filters
       indexed.sortWithinPartitions($"cell", $"doc_name")
         .write.mode(SaveMode.Append).partitionBy("cell").parquet(annPath(channel))
-      bumpIndexGeneration(channel)
       // drift accounting: appends route with BUILD-time centroids, so
       // cell geometry degrades as the appended fraction grows — past
       // the measured-safe bound (AnnAppendDriftSpec) the caller must
@@ -2473,6 +2450,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       // FS round-trip (an object-store GET at deployment scale)
       val appended = readCounter(channel, "_APPENDED") + n
       writeCounter(channel, "_APPENDED", appended)
+      // stamp LAST: each replacement under _centroids moves its mtime
+      // (a cache-key part), so a reader re-caching before the stamp
+      // would re-cache once more after it
+      bumpIndexGeneration(channel)
       val built = readCounter(channel, "_BUILT")
       val frac = if (built <= 0) 0.0 else appended.toDouble / built
       if (frac > GraftVectorDB.AppendRebuildFraction)
@@ -2493,10 +2474,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * tag exists to prevent. */
   private def bumpIndexGeneration(channel: String): Unit = {
     val stamp = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids/_STAMP")
-    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(stamp, true)
-    out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    out.close()
+    AtomicDir.write(fsOf(stamp), stamp, java.util.UUID.randomUUID().toString)
     GraftVectorDB.routingCache.remove(
       new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids").toString)
   }
@@ -2518,32 +2496,20 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   private def writeCounter(channel: String, name: String, v: Long): Unit =
     writeLongAt(counterPath(channel, name), v)
 
-  private def readLongAt(p: org.apache.hadoop.fs.Path): Long = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      // a torn write (crash between create-truncate and write, or a
-      // reader racing the truncation) leaves an empty/partial file:
-      // these are BOOKKEEPING values, so degrade to 0 with a warning
-      // rather than poisoning every subsequent append with a
-      // NumberFormatException the caller cannot act on
-      new String(buf, "UTF-8").trim.toLongOption.getOrElse {
+  private def readLongAt(p: org.apache.hadoop.fs.Path): Long =
+    AtomicDir.read(fsOf(p), p).fold(0L) { s =>
+      // a counter torn by a pre-AtomicDir in-place write is
+      // BOOKKEEPING: degrade to 0 with a warning rather than poisoning
+      // every subsequent append with a NumberFormatException
+      s.trim.toLongOption.getOrElse {
         log.warn(s"counter $p is unreadable (torn write?) - treating as 0; " +
           "accounting resets at the next rebuild of its sidecar/index")
         0L
       }
-    } catch { case _: java.io.FileNotFoundException => 0L }
-  }
+    }
 
-  private def writeLongAt(p: org.apache.hadoop.fs.Path, v: Long): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(v.toString.getBytes("UTF-8"))
-    out.close()
-  }
+  private def writeLongAt(p: org.apache.hadoop.fs.Path, v: Long): Unit =
+    AtomicDir.write(fsOf(p), p, v.toString)
 
   /** Appended rows since the last build, as a fraction of the built
     * corpus (0.0 for a fresh or never-built index). The drift gauge:
@@ -2606,7 +2572,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
             else cur.repartitionByRange(targetFiles, $"doc_name", $"row_id")
           laid.sortWithinPartitions("doc_name", "row_id")
             .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapDir(fs, cellDir, tmp, old, "compactAnnIndex")
+          AtomicDir.swap(fs, tmp, cellDir, old)
           rewritten += n
         }
       }
@@ -2770,9 +2736,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       assigned.filter($"cell2" === id).drop("cell2")
         .repartition(1).sortWithinPartitions("doc_name", "row_id")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(root, s"cell=$id")))
-        throw new java.io.IOException(
-          s"splitCell: rename $tmp -> cell=$id failed")
+      AtomicDir.swap(fs, tmp, new org.apache.hadoop.fs.Path(root, s"cell=$id"),
+        new org.apache.hadoop.fs.Path(root, s".compact_old_cell=$id"))
     }
     // the staged dirs are UNREFERENCED (invisible to every probe) until
     // the amendment commits — so an abort here leaves no trace beyond
@@ -2820,62 +2785,21 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       }
   }
 
-  /** Crash recovery for the per-cell two-rename swap — shared by
-    * [[compactAnnIndex]] and [[deleteWhere]]'s index cleanup, which
-    * use the same `.compact_old_cell=` / `.compact_tmp_cell=` protocol:
-    * an old whose live dir is MISSING means the crash hit between the
-    * two renames — restore it (the data's only blessed copy), so a
-    * cell can never silently vanish from serving; an old beside a live
-    * dir means the crash hit before cleanup — the swap completed, drop
-    * the superseded copy. Stale tmps are always safe to drop (the
-    * rewrite starts over). Returns whether any cell was restored. */
+  /** Crash recovery ([[AtomicDir.recover]]) for one channel's index:
+    * the per-cell swaps of [[compactAnnIndex]], [[splitHotCells]] and
+    * the delete paths, the small and versioned files under
+    * `_centroids`, and the per-file delete swaps inside each cell.
+    * Returns whether any cell was restored. */
   private def recoverAnnIndex(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Boolean = {
-    var recovered = false
-    fs.listStatus(root).filter(_.getPath.getName.startsWith(".compact_old_cell="))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(root,
-          st.getPath.getName.stripPrefix(".compact_old_"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live)) throw new java.io.IOException(
-            s"ANN index crash recovery: rename ${st.getPath} -> $live failed")
-          log.warn(s"ANN index: restored $live from an interrupted rewrite")
-          recovered = true
-        } else fs.delete(st.getPath, true)
-      }
-    fs.listStatus(root).filter(_.getPath.getName.startsWith(".compact_tmp_cell="))
-      .foreach(st => fs.delete(st.getPath, true))
-    // a writeSplits crash between create and rename strands a
-    // .splits_tmp_<uuid> in _centroids — no other protocol reclaims
-    // that prefix (the amendment itself is intact: the rename never ran,
-    // so the prior version still serves)
-    val cDir = new org.apache.hadoop.fs.Path(root, "_centroids")
-    if (fs.exists(cDir))
-      fs.listStatus(cDir).filter(_.getPath.getName.startsWith(".splits_tmp_"))
-        .foreach(st => fs.delete(st.getPath, false))
-    // per-FILE swap leftovers (the file-granular delete) live INSIDE
-    // the cell dirs
+    val recovered = AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"))
+    AtomicDir.recover(fs, new org.apache.hadoop.fs.Path(root, "_centroids"), ".old_",
+      Seq("_splits.v", "_docranges.v", "_STAMP", "_BUILT", "_APPENDED", "_DELETED")
+        .map(AtomicDir.stagedPrefix))
     fs.listStatus(root)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .foreach(st => recoverFileSwaps(fs, st.getPath))
     recovered
-  }
-
-  /** Two-rename dir swap with the superseded copy KEPT until the
-    * replacement is live (a delete-then-rename order would make a
-    * crash in between lose the dir's only copy — silently, since a
-    * missing partition/cell just vanishes from results rather than
-    * erroring). The matching recovery-on-entry loops restore `old` if
-    * the second rename never ran. */
-  private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path, op: String): Unit = {
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"$op: rename $live -> $old failed")
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"$op: rename $tmp -> $live failed " +
-        s"(original preserved at $old — rerun to recover)")
-    fs.delete(old, true)
   }
 
   /** Document deletion — the takedown/GDPR lifecycle op a store
@@ -2884,12 +2808,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     *  - [[delete]] (by name, the common takedown shape) is
     *    FILE-granular: parquet footers identify exactly which
     *    doc_name-sorted files can hold a victim, and only those files
-    *    rewrite (per-file rename-aside swap, [[recoverFileSwaps]]) —
+    *    rewrite (per-file [[AtomicDir.swap]]) —
     *    O(touched files) regardless of store size; untouched files are
     *    neither read nor moved.
     *  - [[deleteWhere]] (arbitrary predicate) rewrites the touched
-    *    content_type partitions (per-partition anti-join, `compact()`'s
-    *    two-rename swap and crash-recovery protocol) — general but
+    *    content_type partitions (per-partition anti-join and swap, as
+    *    `compact()` does) — general but
     *    partition-granular; prefer [[delete]] for name lists.
     *  - every BUILT channel's ANN index drops the same rows —
     *    O(touched cells) for predicates, O(touched files) for name
@@ -2960,13 +2884,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * output file per source via a partitioned write) — a takedown
     * touching hundreds of files costs one cluster-parallel job, not
     * hundreds of sequential driver-paced single-file jobs (the round-6
-    * serialization). Each output then swaps in via the same per-file
-    * rename-aside protocol as before (`.delete_old_<name>` beside a
-    * missing live file ⇒ restore; beside a live one ⇒ superseded,
-    * drop — [[recoverFileSwaps]]), and an all-rows-deleted file is
-    * replaced by a ZERO-ROW file rather than removed, so a missing
-    * live file is always unambiguous crash state, never a completed
-    * delete. `sortCols` restores the dir's sorted layout (store
+    * serialization). Each output then swaps in over its source file
+    * ([[AtomicDir.swap]], aside `.delete_old_<name>`), and an
+    * all-rows-deleted file is replaced by a ZERO-ROW file rather than
+    * removed, so a missing live file is always unambiguous crash
+    * state, never a completed delete. `sortCols` restores the dir's sorted layout (store
     * partitions: doc_name+page_num; index cells: doc_name+row_id) —
     * the batched read does not preserve per-file row order the way the
     * old single-file read did. Returns rows removed. */
@@ -3024,39 +2946,17 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
               s"deleteNamesFromDir: no zero-row part file under $empty"))
         }
       removed -= footerRows(replacement)
-      val aside = new org.apache.hadoop.fs.Path(dir,
-        s".delete_old_${live.getName}")
-      if (!fs.rename(live, aside))
-        throw new java.io.IOException(s"delete: rename $live -> $aside failed")
-      if (!fs.rename(replacement, live))
-        throw new java.io.IOException(s"delete: rename $replacement -> $live " +
-          s"failed (original preserved at $aside — rerun to recover)")
-      fs.delete(aside, false)
+      AtomicDir.swap(fs, replacement, live,
+        new org.apache.hadoop.fs.Path(dir, s".delete_old_${live.getName}"))
     }
     fs.delete(tmp, true)
     removed
   }
 
-  /** Per-file crash recovery for [[deleteNamesFromDir]]'s swaps: a
-    * `.delete_old_<file>` whose live file is missing means the crash
-    * hit between the two renames — restore it; beside a live file the
-    * swap completed — drop it. Stale tmp dirs always drop. */
+  /** Crash recovery for [[deleteNamesFromDir]]'s per-file swaps. */
   private def recoverFileSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).filter(_.getPath.getName.startsWith(".delete_old_"))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(dir,
-          st.getPath.getName.stripPrefix(".delete_old_"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live)) throw new java.io.IOException(
-            s"delete: crash recovery rename ${st.getPath} -> $live failed")
-          log.warn(s"delete: restored $live from an interrupted file swap")
-        } else fs.delete(st.getPath, false)
-      }
-    fs.listStatus(dir).filter(_.getPath.getName.startsWith(".delete_tmp_"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
+      dir: org.apache.hadoop.fs.Path): Unit =
+    AtomicDir.recover(fs, dir, ".delete_old_", Seq(".delete_tmp_"))
 
   /** Name-list index cleanup, file-granular: the touched CELLS come
     * from one column-pruned, row-group-skipping scan; within each,
@@ -3137,7 +3037,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       remaining.repartitionByRange(nFiles, $"doc_name", $"page_num")
         .sortWithinPartitions("doc_name", "page_num")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapDir(fs, partDir, tmp, old, "deleteWhere")
+      AtomicDir.swap(fs, tmp, partDir, old)
     }
     // index cleanup ALWAYS runs for EVERY registered channel (see
     // scaladoc: rerun-to-converge after a crash between the store
@@ -3171,7 +3071,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       cur.filter(keep).repartition(1)
         .sortWithinPartitions("doc_name", "row_id")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapDir(fs, cellDir, tmp, old, s"deleteFromAnnIndex($channel)")
+      AtomicDir.swap(fs, tmp, cellDir, old)
       removed += before - spark.read.parquet(cellDir.toString).count()
     }
     if (touchedCells.nonEmpty || recovered) bumpIndexGeneration(channel)
@@ -3282,12 +3182,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val cDir = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")
     val fs = cDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a clear contract error beats the raw FileNotFoundException the
-    // getFileStatus below would surface for a never-built index — but
-    // first try rolling forward a rebuild that crashed between its two
-    // swap renames (the live dir is missing, the only copy sits aside
-    // as .ann_build_old_<ch>): serving self-heals instead of failing
-    // until a manual rebuild
-    if (!fs.exists(cDir) && !recoverAnnBuild(channel))
+    // getFileStatus below would surface for a never-built index
+    // (annIndexBuilt first rolls back a crashed rebuild swap, so
+    // serving self-heals instead of failing until a manual rebuild)
+    if (!annIndexBuilt(channel))
       throw new IllegalStateException(
         s"ANN index '$channel' has not been built (no ${annPath(channel)}/_centroids) — " +
           s"run buildAnnIndex(channel = \"$channel\") first")
@@ -3296,19 +3194,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // (root mtime does not move) and stamp mtime alone has filesystem
     // tick granularity — two appends in one tick would leave cached
     // file listings stale, silently dropping the second batch
-    val stamp = new org.apache.hadoop.fs.Path(cDir, "_STAMP")
-    val stampTag =
-      try {
-        // readFully against the file's length: a bare read() may
-        // legally return a prefix, and a truncated tag could compare
-        // equal to a stale one — a short read would reproduce the
-        // stale-cache bug the content tag exists to prevent
-        val len = fs.getFileStatus(stamp).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(stamp)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, "UTF-8")
-      } catch { case _: java.io.FileNotFoundException => "" }
+    val stampTag = AtomicDir.read(fs, new org.apache.hadoop.fs.Path(cDir, "_STAMP"))
+      .getOrElse("")
     // the split-amendment version rides the generation key: a split's
     // atomic commit (a new _splits.vN) must invalidate cached routing
     // just like a rebuild or append does
@@ -3328,13 +3215,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         // production reader would rank via half-score sums instead of
         // materializing K² rows — below it this expansion is free.
         val geomP = new org.apache.hadoop.fs.Path(cDir, "_GEOMETRY")
-        val baseBooks =
-          if (fs.exists(geomP)) {
-            val len = fs.getFileStatus(geomP).getLen.toInt
-            val buf = new Array[Byte](len)
-            val in = fs.open(geomP)
-            try in.readFully(0, buf) finally in.close()
-            val tag = new String(buf, "UTF-8").trim
+        val baseBooks = AtomicDir.read(fs, geomP).map(_.trim) match {
+          case Some(tag) =>
             require(tag.startsWith("imi:"),
               s"unknown ANN geometry marker '$tag' at $geomP")
             val k1 = tag.stripPrefix("imi:").toInt
@@ -3345,7 +3227,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
               .map(_._2.sortBy(_._2).map(_._3))
             (for (i <- hb(0).indices; j <- hb(1).indices)
               yield (i * k1 + j, hb(0)(i) ++ hb(1)(j))).toArray
-          } else AnnIndex.routingBooks(spark.read.parquet(cDir.toString))
+          case None => AnnIndex.routingBooks(spark.read.parquet(cDir.toString))
+        }
         val books = GraftVectorDB.applySplits(baseBooks, splitOps)
         // an index persisted before PQ landed has no _codebooks —
         // it stays servable on the plain probe path; only searchAnnPq
@@ -3801,78 +3684,32 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .sortWithinPartitions((col("__k") +: keys.tail): _*)
       .drop("__k")
       .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-    // the store path's OWN filesystem (a store on s3a/hdfs with a
-    // different fs.defaultFS would otherwise delete/rename nothing and
-    // report success), and checked results so a failed swap is loud.
-    // Swap via TWO renames with the superseded copy KEPT until the new
-    // one is live — the compactAnnIndex pattern: the old delete-then-
-    // rename order made a crash in between lose the partition's only
-    // blessed copy (absent from serving, recoverable only by hand from
-    // the dot-prefixed tmp dir). recoverCompact() on entry restores an
-    // orphaned partition a crash left behind.
+    // the store path's OWN filesystem: a store on s3a/hdfs with a
+    // different fs.defaultFS would otherwise rename nothing.
     // CONCURRENCY CONTRACT: maintenance assumes a single writer — run
     // compact() with streaming ingest stopped (an append landing
     // between the renames would be lost); readers in the swap window
     // see the partition briefly absent, not corrupt.
     val part = new org.apache.hadoop.fs.Path(partDir)
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    swapDir(fs, part, new org.apache.hadoop.fs.Path(tmpDir),
-      new org.apache.hadoop.fs.Path(oldDir), "compact")
+    AtomicDir.swap(fsOf(part), new org.apache.hadoop.fs.Path(tmpDir), part,
+      new org.apache.hadoop.fs.Path(oldDir))
     n
   }
 
-  /** Crash recovery for [[compact]]'s two-rename swap — same protocol
-    * as compactAnnIndex's recovery-on-entry: a `.compact_old_
-    * content_type=T` whose live partition dir is MISSING means the
-    * crash hit between the two renames — restore it (it is the data's
-    * only blessed copy), so a partition can never silently vanish from
-    * serving; an old beside a live dir means the crash hit before
-    * cleanup — the swap completed, drop the superseded copy. Stale tmp
-    * dirs are always safe to drop (the rewrite starts over). */
+  /** Crash recovery ([[AtomicDir.recover]]) for the store's partition
+    * swaps ([[compact]], [[deleteWhere]]) and, inside each partition,
+    * [[delete]]'s per-file swaps. Pre-r6 asides lack the
+    * `content_type=` segment (`.compact_old_<ct>`); the live-name
+    * mapping restores those too. */
   private def recoverCompact(): Unit = {
     val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(".compact_old_content_type="))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(root,
-          st.getPath.getName.stripPrefix(".compact_old_"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live)) throw new java.io.IOException(
-            s"compact: crash recovery rename ${st.getPath} -> $live failed")
-          log.warn(s"compact: restored $live from an interrupted compaction")
-        } else fs.delete(st.getPath, true)
-      }
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(".compact_tmp_content_type="))
-      .foreach(st => fs.delete(st.getPath, true))
-    // LEGACY naming (pre-r6: .compact_tmp_<ct> / .compact_old_<ct>,
-    // no content_type= segment): a crash under the old naming left
-    // dirs the current-prefix scans above never match, so they would
-    // sit in the store root forever — same recovery semantics, the
-    // partition path mapped explicitly from the bare <ct> suffix
-    fs.listStatus(root)
-      .filter(st => st.getPath.getName.startsWith(".compact_old_") &&
-        !st.getPath.getName.startsWith(".compact_old_content_type="))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(root,
-          s"content_type=${st.getPath.getName.stripPrefix(".compact_old_")}")
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live)) throw new java.io.IOException(
-            s"compact: legacy crash recovery rename ${st.getPath} -> $live failed")
-          log.warn(s"compact: restored $live from a legacy-named interrupted compaction")
-        } else fs.delete(st.getPath, true)
-      }
-    fs.listStatus(root)
-      .filter(st => st.getPath.getName.startsWith(".compact_tmp_") &&
-        !st.getPath.getName.startsWith(".compact_tmp_content_type="))
-      .foreach(st => fs.delete(st.getPath, true))
-    // per-FILE swap leftovers (the file-granular delete) live INSIDE
-    // the partition dirs
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("content_type="))
-      .foreach(st => recoverFileSwaps(fs, st.getPath))
+    val fs = fsOf(root)
+    AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"),
+      ct => if (ct.startsWith("content_type=")) ct else s"content_type=$ct")
+    if (fs.exists(root))
+      fs.listStatus(root)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("content_type="))
+        .foreach(st => recoverFileSwaps(fs, st.getPath))
   }
 
   /** One query = ONE corpus scan: scoring and metadata ride the same
@@ -4123,69 +3960,22 @@ object GraftVectorDB {
     * has ever committed. */
   private[operators] def readSplits(fs: org.apache.hadoop.fs.FileSystem,
       cDir: org.apache.hadoop.fs.Path): (String, Seq[SplitOp]) =
-    readSplits(fs, cDir, attempts = 3)
-
-  private def readSplits(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path, attempts: Int): (String, Seq[SplitOp]) = {
-    val vs = fs.listStatus(cDir).map(_.getPath.getName)
-      .filter(_.startsWith("_splits.v"))
-      .flatMap(n => n.stripPrefix("_splits.v").toIntOption.map(n -> _))
-    if (vs.isEmpty) return ("", Seq.empty)
-    val (name, _) = vs.maxBy(_._2)
-    val p = new org.apache.hadoop.fs.Path(cDir, name)
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      val ops = new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).map { line =>
+    AtomicDir.readLatest(fs, cDir, "_splits.v").fold(("", Seq.empty[SplitOp])) {
+      case (name, text) => name -> text.split("\n").filter(_.nonEmpty).map { line =>
         val parts = line.split(",", 3)
         SplitOp(parts(0), parts(1).toInt,
           if (parts.length < 3 || parts(2).isEmpty) Array.empty[Double]
           else parts(2).split(" ").map(java.lang.Double.parseDouble))
       }.toSeq
-      (name, ops)
-    } catch {
-      // a reader can list version N just as the (single) writer commits
-      // N+1 and reclaims N — re-list and read the fresh version rather
-      // than failing a search on maintenance timing. BOUNDED: on an
-      // eventually-consistent store (or a version file removed
-      // externally with no successor) unbounded recursion would spin
-      // to StackOverflowError instead of a diagnosable failure.
-      case e: java.io.FileNotFoundException =>
-        if (attempts > 1) readSplits(fs, cDir, attempts - 1)
-        else throw new IllegalStateException(
-          s"readSplits: a _splits.vN amendment file under $cDir kept vanishing " +
-            "across 3 list/read attempts — either the listing is eventually " +
-            "consistent (retry the search) or a version file was removed " +
-            "without a successor (restore it or rebuild the index)", e)
     }
-  }
 
-  /** Commit a new amendment history as version N+1 — write-to-temp +
-    * rename, the dest name never exists, so the commit is one atomic
-    * metadata op. Doubles serialize via Double.toString (exact
-    * round-trip through parseDouble). */
+  /** Commit a new amendment history as the next `_splits.vN`. Doubles
+    * serialize via Double.toString (exact round-trip through
+    * parseDouble). */
   private[operators] def writeSplits(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path, ops: Seq[SplitOp]): Unit = {
-    val curV = fs.listStatus(cDir).map(_.getPath.getName)
-      .filter(_.startsWith("_splits.v"))
-      .flatMap(_.stripPrefix("_splits.v").toIntOption)
-      .maxOption.getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(cDir,
-      s".splits_tmp_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(ops.map(o =>
-        s"${o.op},${o.cell},${o.cv.map(_.toString).mkString(" ")}")
-      .mkString("\n").getBytes("UTF-8"))
-    out.close()
-    val dest = new org.apache.hadoop.fs.Path(cDir, s"_splits.v${curV + 1}")
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"writeSplits: rename $tmp -> $dest failed")
-    // superseded versions are dead the moment the new one is live
-    (1 to curV).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(cDir, s"_splits.v$v"), false))
-  }
+      cDir: org.apache.hadoop.fs.Path, ops: Seq[SplitOp]): Unit =
+    AtomicDir.commitVersion(fs, cDir, "_splits.v", ops.map(o =>
+      s"${o.op},${o.cell},${o.cv.map(_.toString).mkString(" ")}").mkString("\n"))
 
   /** The base routing table with the amendment history applied, in
     * cell-id order (deterministic probe tie-breaks). */
@@ -4266,27 +4056,16 @@ object GraftVectorDB {
 
   private[operators] def readDocRanges(fs: org.apache.hadoop.fs.FileSystem,
       cDir: org.apache.hadoop.fs.Path): Map[Int, (String, String)] = {
-    val latest = (try fs.listStatus(cDir).toSeq catch {
-      case _: java.io.FileNotFoundException => Nil
-    }).map(_.getPath)
-      .filter(_.getName.startsWith("_docranges.v"))
-      .sortBy(_.getName.stripPrefix("_docranges.v").toIntOption.getOrElse(0))
-      .lastOption
-    latest match {
-      case None => Map.empty
-      case Some(p) =>
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toVector finally in.close()
-        val dec = java.util.Base64.getDecoder
-        lines.flatMap { l =>
-          l.split("\t") match {
-            case Array(c, mn, mx) => c.toIntOption.map(_ ->
-              (new String(dec.decode(mn), "UTF-8"),
-                new String(dec.decode(mx), "UTF-8")))
-            case _ => None
-          }
-        }.toMap
+    val dec = java.util.Base64.getDecoder
+    AtomicDir.readLatest(fs, cDir, "_docranges.v").fold(Map.empty[Int, (String, String)]) {
+      case (_, text) => text.split("\n").filter(_.nonEmpty).flatMap { l =>
+        l.split("\t") match {
+          case Array(c, mn, mx) => c.toIntOption.map(_ ->
+            (new String(dec.decode(mn), "UTF-8"),
+              new String(dec.decode(mx), "UTF-8")))
+          case _ => None
+        }
+      }.toMap
     }
   }
 
@@ -4294,27 +4073,10 @@ object GraftVectorDB {
       cDir: org.apache.hadoop.fs.Path,
       ranges: Map[Int, (String, String)]): Unit = {
     val enc = java.util.Base64.getEncoder
-    val body = ranges.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s"$c\t${enc.encodeToString(u8(mn))}\t${enc.encodeToString(u8(mx))}"
-    }.mkString("\n")
-    val curV = (try fs.listStatus(cDir).toSeq catch {
-      case _: java.io.FileNotFoundException => Nil
-    }).map(_.getPath.getName)
-      .filter(_.startsWith("_docranges.v"))
-      .flatMap(_.stripPrefix("_docranges.v").toIntOption)
-      .maxOption.getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(cDir,
-      s".docranges_tmp_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    val dest = new org.apache.hadoop.fs.Path(cDir, s"_docranges.v${curV + 1}")
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"writeDocRanges: rename $tmp -> $dest failed")
-    (1 to curV).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(cDir, s"_docranges.v$v"), false))
-    fs.listStatus(cDir).filter(_.getPath.getName.startsWith(".docranges_tmp_"))
-      .foreach(st => fs.delete(st.getPath, false))
+    AtomicDir.commitVersion(fs, cDir, "_docranges.v",
+      ranges.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
+        s"$c\t${enc.encodeToString(u8(mn))}\t${enc.encodeToString(u8(mx))}"
+      }.mkString("\n"))
   }
 
   /** Serving-path cache keyed by index path. Generation couples the
@@ -4322,7 +4084,7 @@ object GraftVectorDB {
     * the append stamp's content, so rebuilds AND appends invalidate;
     * entries are tiny (≤ cells routing rows + codebooks + a lazy
     * frame). Keyed by absolute path — safe across db instances. */
-  private val routingCache =
+  private[graft] val routingCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedAnnIndex]
 
   /** documents-shaped frame → VectorRecord rows (chunk + embed + hash

@@ -53,4 +53,19 @@ class DocRangesSpec extends AnyFunSuite {
     assert(!may("aaa", "zzz", "é")) // é-prefix cannot live in [aaa, zzz]
     assert(may("aaa", "é1", "é"))
   }
+
+  test("a reader re-lists when the listed version vanishes under it") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    graft.FaultFs.register(conf)
+    val dir = new org.apache.hadoop.fs.Path(graft.FaultFs.uri("target/docranges_vanish_spec"))
+    val fs = dir.getFileSystem(conf)
+    graft.FaultFs.reset()
+    fs.delete(dir, true)
+    val ranges = Map(0 -> ("corpus/a", "corpus/m"), 1 -> ("corpus/n", "corpus/z"))
+    GraftVectorDB.writeDocRanges(fs, dir, ranges)
+    // an appendAnnIndex committing v(N+1) and dropping vN between this
+    // reader's list and open
+    graft.FaultFs.vanishOnOpen(_.startsWith("_docranges.v"))
+    assert(GraftVectorDB.readDocRanges(fs, dir) == ranges)
+  }
 }
