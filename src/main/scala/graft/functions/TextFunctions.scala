@@ -28,10 +28,6 @@ object TextFunctions {
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** Seeded 32-bit hash — distinct hash families for MinHash. */
-  def hash32Seeded(c: Column, seed: Int): Column =
-    hash32(concat(lit(s"$seed:"), c))
-
   /** md5-derived bucket id in [0, buckets): first byte of the digest
     * modulo the bucket count. Used by the hashing-trick embedder.
     * (Named to avoid clashing with sql.functions.bucket.) */

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * ranked by s₀[i]+s₁[j] = <q,(c₁|c₂)> − |(c₁|c₂)|²/2, the exact
   * probeCells L2 metric — WITHOUT materializing all k₁² pair sums.
   *
-  * Why it exists (BENCH_imi_r17, tools/ImiProbe): full pair
+  * Why it exists (BENCH_imi_r17.json): full pair
   * enumeration materializes `cells` scalar sums per query, so
   * enumerated IMI routing measured MORE expensive than a flat
   * broadcast scan at 64k cells (8.4 vs 1.7 s/100 queries) even

@@ -27,11 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * at the production V=65536 clamp the term-major projection is
   * ~32 MB, and a plan-literal form re-serializes that with the
   * expression tree ONCE PER STAGE on the driver and deserializes it
-  * once per TASK (the EncoderProbe V-sweep measured ~0.25 s/task —
-  * thousands of wasted CPU-seconds per 100 TB scan stage). The
-  * broadcast handle is bytes in the task binary; the model transfers
-  * once per executor and is shared by every task and every stage that
-  * serves the channel. Per-row work is V-independent either way. */
+  * once per TASK (the V-sweep in SURVEY.md round 12, item 8 measured
+  * ~0.25 s/task — thousands of wasted CPU-seconds per 100 TB scan
+  * stage). The broadcast handle is bytes in the task binary; the model
+  * transfers once per executor and is shared by every task and every
+  * stage that serves the channel. Per-row work is V-independent either way. */
 case class ProjectTfidf(child: Expression,
     model: Broadcast[ProjectTfidf.Model], dim: Int)
     extends UnaryExpression with CodegenFallback {

@@ -40,11 +40,6 @@ object SynthWarc {
     org.apache.spark.sql.graft.ColumnBridge.column(
       SynthWarc(org.apache.spark.sql.graft.ColumnBridge.expression(text)))
 
-  /** The capture's CANONICAL page URL (what
-    * [[graft.operators.Dedup.canonicalUrl]] recovers from [[rawUriOf]]). */
-  private[graft] def uriOf(md5Prefix8: String): String =
-    s"http://example.com/${md5Prefix8}"
-
   /** The MESSY form a real crawler records — uppercase scheme/host,
     * default port, doubled slash, trailing slash, tracking params,
     * fragment. WARC-Target-URI carries this so the crawl-pipeline
@@ -150,12 +145,12 @@ object SynthWarcImg {
 
   /** r17: the logo raster is one of TEN deterministic images, but the
     * synth re-rendered (raster + filter + deflate) and re-base64'd it
-    * for EVERY capture — ~40% of the whole synthesis wall (DecodeProbe:
-    * synthesis alone was 7.7 s of mm_crawl's 15.4 s at sf1). One
-    * per-JVM memo of the (mime, base64) pair per bucket; SynthPng.build
-    * is pure, so the cached bytes are byte-identical to the per-row
-    * render and nothing downstream can tell (oracle hashes unchanged —
-    * the regression check). */
+    * for EVERY capture — ~40% of the whole synthesis wall
+    * (OPTIMIZATION_r17.md, crawl family: synthesis alone was 7.7 s of
+    * mm_crawl's 15.4 s at sf1). One per-JVM memo of the (mime, base64)
+    * pair per bucket; SynthPng.build is pure, so the cached bytes are
+    * byte-identical to the per-row render and nothing downstream can
+    * tell (oracle hashes unchanged — the regression check). */
   private val logoMemo =
     new java.util.concurrent.ConcurrentHashMap[Int, (String, String)]()
   private def logoOf(bucket: Int): (String, String) =

@@ -33,8 +33,8 @@ import graft.functions.VectorFunctions._
   */
 object AnnIndex {
 
-  /** Cells/probes calibrated with tools/RecallProbe for recall@5 ≥ 0.9
-    * on this corpus (0.94 at sf0.001, 0.98 at sf0.01). The probe
+  /** Cells/probes calibrated for recall@5 ≥ 0.9 on this corpus (0.94
+    * at sf0.001, 0.98 at sf0.01; SURVEY.md round 2, item 2). The probe
     * fraction is data-dependent: these synthetic vectors are
     * deliberately unclustered (max neighbor cosine ≈ 0.46), the
     * worst case for any cell index, so 0.9 recall costs a ~0.6 probe
@@ -49,11 +49,11 @@ object AnnIndex {
     * the LIVE cell count at call time via [[autoNProbe]]. A fixed
     * `NProbe = 20` that probes 33% of a 61-cell sf1 index is 3.9% of
     * the 512 adaptive cells a 10×-grown store rebuilds to — measured
-    * recall@5 decayed 0.997 → 0.903 across that decade (ServeProbe)
-    * while the cell GEOMETRY stayed anchored. The probe budget has to
-    * scale with the routing table it ranks over, exactly as
-    * [[AutoShortlist]] scales with the rows the ADC pass selects
-    * from. */
+    * recall@5 decayed 0.997 → 0.903 across that decade (SURVEY.md
+    * round 9, item 3) while the cell GEOMETRY stayed anchored. The
+    * probe budget has to scale with the routing table it ranks over,
+    * exactly as [[AutoShortlist]] scales with the rows the ADC pass
+    * selects from. */
   val AutoNProbe = 0
 
   /** One probe per 8 cells, floored at [[NProbe]]: holds the probed
@@ -102,8 +102,9 @@ object AnnIndex {
     * sample (the [[pqCodebooks]] discipline) instead of an MLlib
     * `KMeans.fit` — the distributed fit iterated a ≤ [[SampleTarget]]-
     * row frame through 5 scheduler round-trips plus a cache build and
-    * an ML-pipeline transform pass (JobProbe: 15 of ann_ivf's 24 jobs;
-    * ~1.2 s of the 2.3 s sf0.1 wall), all to move < 1 MB of sample.
+    * an ML-pipeline transform pass (OPTIMIZATION_r17.md, ANN family: 15
+    * of ann_ivf's 24 jobs; ~1.2 s of the 2.3 s sf0.1 wall), all to move
+    * < 1 MB of sample.
     * Assignment is the fused [[cellOf]] expression (argmin L2 via
     * argmax(<v,c>−|c|²/2), first-max ties) — one narrow codegen'd
     * projection, no vector-UDT conversions. Centroids change (lloyd's
@@ -344,7 +345,7 @@ object AnnIndex {
     * same per-row table lookups); codes stay 16 ints. The sample fit
     * (≤ 2048 rows per subspace for 256 centroids) is thin but lawful
     * — empty clusters keep their seed — and the serving recall is
-    * measured per-corpus by ServeProbe. */
+    * measured per corpus in SURVEY.md round 9, item 3. */
   val PqStoreK = 256
 
   /** Sentinel default for the STORE PQ search surfaces: resolve the
@@ -715,7 +716,7 @@ object AnnIndex {
     * 64-dim distance evaluations per query and a 500k-row broadcast;
     * the IMI reaches the same cell count with 2·√500k ≈ 1.4k
     * half-dim evaluations, and corpus assignment drops by the same
-    * √cells factor. MEASURED (BENCH_imi_r17, tools/ImiProbe): the
+    * √cells factor. MEASURED (BENCH_imi_r17.json): the
     * ASSIGNMENT crossover is strong — at 64k cells flat costs 8.3×
     * IMI per assigned vector and grows linearly in cells, and
     * assignment is the corpus-sized cost every ingested row pays.

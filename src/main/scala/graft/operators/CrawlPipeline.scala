@@ -388,10 +388,11 @@ object CrawlPipeline {
     * synthesis/decompress/WARC-walk chain twice — measured at sf1 to
     * be the entire mm_interleave wall (the pixel decode the r16
     * verdict held `weak` measures <1 s of 19.5; the capture chain is
-    * ~9 s per pass, see tools/DecodeProbe). A single tagged frame
-    * makes the downstream (kind, url) keeper shuffle IDENTICAL in
-    * every branch, so Catalyst/AQE exchange reuse runs the capture
-    * chain once no matter how many consumers branch off the keeper. */
+    * ~9 s per pass, see OPTIMIZATION_r17.md, crawl family). A single
+    * tagged frame makes the downstream (kind, url) keeper shuffle
+    * IDENTICAL in every branch, so Catalyst/AQE exchange reuse runs
+    * the capture chain once no matter how many consumers branch off
+    * the keeper. */
   private[graft] def unifiedEntries(captures: DataFrame): DataFrame = {
     val spark = captures.sparkSession
     import spark.implicits._
@@ -502,9 +503,9 @@ object CrawlPipeline {
     * three separate capture chains (measured — the r17 first cut ran
     * the synthesis 3×). The per-kept-image decode runs in two
     * branches (group count + join back) — <1 s at sf1 against ~9 s
-    * per avoided capture pass (tools/DecodeProbe). The per-page
-    * position walk is a LINEAR array aggregate (list + running image
-    * ordinal), never a quadratic slice-and-count. */
+    * per avoided capture pass (OPTIMIZATION_r17.md, crawl family). The
+    * per-page position walk is a LINEAR array aggregate (list +
+    * running image ordinal), never a quadratic slice-and-count. */
   def interleave(captures: DataFrame, gated: Boolean = true,
       trainedLangId: Option[LangIdClassifier.Model] = None,
       trainedQuality: Option[(LangIdClassifier.Model, Double)] = None)

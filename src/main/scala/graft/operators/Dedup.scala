@@ -32,7 +32,6 @@ object Dedup {
   val MinHashSeeds = 30
   val BandRows = 3
   val JaccardThreshold = 0.5
-  val SimHashBits = 60
   val HammingMax = 3
 
   /** Exact near-dup clusters on canonicalized text. */
@@ -560,8 +559,8 @@ object Dedup {
     embedPairsOf(v, threshold, EmbedLshTables, EmbedLshPlanes)
 
   /** The persisted (vec_id, sg: array of per-table signature strings)
-    * frame plus its base/probe bucket-key sides — shared by the pair
-    * path and the candidate diagnostic. Signatures come from the fused
+    * frame plus its base/probe bucket-key sides for the pair path.
+    * Signatures come from the fused
     * [[graft.functions.expressions.RpSignature]] expression: ONE
     * codegen'd pass over a plane-matrix reference object. The per-plane
     * Column form (tables × planes `when(dot ≥ 0)` exprs, each with a
@@ -592,19 +591,6 @@ object Dedup {
         concat($"t".cast("string"), lit(":"), s)
       }: _*)).as("bkey"))
     (sigs, base, flips)
-  }
-
-  /** Candidate-pair count a geometry generates on a corpus — the
-    * diagnostic behind the adaptive sizing (tools/GeomProbe). */
-  private[graft] def candidateCount(spark: SparkSession, dir: String,
-      tables: Int, planes: Int): Long = {
-    import spark.implicits._
-    val (sigs, base, flips) = signatureSides(embedVecs(spark, dir), tables, planes)
-    try flips.select($"vec_id".as("a_id"), $"bkey")
-      .join(base.select($"vec_id".as("b_id"), $"bkey"), "bkey")
-      .filter($"a_id" < $"b_id")
-      .select($"a_id", $"b_id").distinct().count()
-    finally sigs.unpersist(blocking = false) // a failed job must not pin the frame
   }
 
   private[graft] def embedPairsOf(v: DataFrame, threshold: Double,

@@ -3848,7 +3848,7 @@ object GraftVectorDB {
     * the pruned plan's fixed overhead. The pruned path costs ~4 small
     * scheduling rounds (stats read cold, rare-scan job A, θ/candidate
     * collects, name-pruned job B) where the full plan is one scan —
-    * ServeProbe measured the constant at sf1: forced-MaxScore 1.14 s
+    * measured at sf1 (SURVEY.md round 9): forced-MaxScore 1.14 s
     * vs full 0.65 s when the "common" list is only 7k rows. At a core-
     * saturated ~5M postings/s scan rate the crossover sits at a few
     * million skippable rows, so: engage when the query's common terms

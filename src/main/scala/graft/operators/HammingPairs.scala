@@ -125,10 +125,10 @@ object HammingPairs {
 
   /** Candidate-pair volume a geometry generates on a corpus BEFORE
     * the hamming verify — the measured side of the occupancy story
-    * (the [[graft.operators.Dedup.candidateCount]] diagnostic applied
-    * to the Hamming domain): HammingPairsSpec asserts the rung ladder
-    * actually collapses candidate volume on a corpus that outgrows
-    * rung 0, not just that the pair set survives. */
+    * (the embed-LSH geometry measurement of SURVEY.md round 6, item 1,
+    * applied to the Hamming domain): HammingPairsSpec asserts the rung
+    * ladder actually collapses candidate volume on a corpus that
+    * outgrows rung 0, not just that the pair set survives. */
   private[graft] def candidateCount(hashed: DataFrame, idCol: String,
       bits: Int, k: Int, rungIdx: Int, hotCap: Long = HotCap): Long = {
     val spark = hashed.sparkSession

@@ -32,7 +32,7 @@ private[operators] object ProjectionEncoder {
     // preserved (spec-asserted per channel). The model broadcasts
     // ONCE here and every encode column reuses the handle — at the
     // V=65536 clamp the plan-literal form cost ~0.25 s of model
-    // deserialization per task (EncoderProbe V-sweep)
+    // deserialization per task (V-sweep, SURVEY.md round 12, item 8)
     val bc = graft.functions.expressions.ProjectTfidf.broadcastModel(
       org.apache.spark.sql.SparkSession.active, vocab, idf, proj, dim)
     def encode(c: Column): Column =

@@ -39,8 +39,8 @@ object ScaleGen {
     val KO = 10000000L // orderkey / event stride
 
     // SPARK_GRAFT_TABLES=documents,embeddings emits only those tables
-    // (the MaxScore probe corpus needs documents alone — no point
-    // writing 60M lineitem rows for it)
+    // (the MaxScore engagement corpus of BENCH_maxscore_sf10_r11.json
+    // needs documents alone — no point writing 60M lineitem rows for it)
     val only: Set[String] = sys.env.get("SPARK_GRAFT_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)

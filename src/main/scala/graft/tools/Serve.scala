@@ -230,8 +230,11 @@ private class ServeState(spark: SparkSession) {
           // is_folder=true means "sweep this directory for documents"
           val isParquetTable =
             !isFolder && (ext(f.getName) == "parquet" || f.isDirectory)
+          // /search serves from a built ANN index: rows it does not
+          // take stay unfindable until the next rebuild
+          val indexed = d.channelNames.filter(d.annIndexExists)
           if (isParquetTable) {
-            val n = d.ingest(spark.read.parquet(path))
+            val n = d.ingest(spark.read.parquet(path), indexed)
             (200, JObject("message" -> JString(s"ingested corpus table $path"),
               "records" -> JLong(n)))
           } else {
@@ -259,7 +262,8 @@ private class ServeState(spark: SparkSession) {
               d.ingestRecords(
                 if (fmt == "warc")
                   DocParse.records(DocParse.warcHtml(payloads), "html")
-                else DocParse.records(payloads, fmt))
+                else DocParse.records(payloads, fmt),
+                indexed)
             }.sum
             (200, JObject(
               "message" -> JString(s"successfully embedded " +

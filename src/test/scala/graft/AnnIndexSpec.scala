@@ -18,7 +18,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val ivf = hitSet(AnnIndex.ivf(spark, sf))
     val recall = (ivf & exact).size.toDouble / exact.size
     info(s"ivf recall@5 = $recall")
-    // measured 0.92–0.98 (tools/RecallProbe): MLlib KMeans' seeded
+    // measured 0.92–0.98 (SURVEY.md round 2, item 2): MLlib KMeans' seeded
     // random init samples per-partition, so centroids — and recall —
     // vary slightly with core count; the bound holds across configs
     assert(recall >= 0.9)

@@ -6,8 +6,8 @@ import graft.operators.{AnnIndex, GraftVectorDB}
 
 /** Scale-adaptive probe budget — the serving twin of the adaptive cell
   * count: a fixed `nProbe = 20` that probes 33% of a 61-cell index is
-  * 3.9% of the 512 cells a 10×-grown store rebuilds to, and ServeProbe
-  * measured exactly that as recall@5 decay (0.997 sf1 → 0.903 sf10)
+  * 3.9% of the 512 cells a 10×-grown store rebuilds to; SURVEY.md round 9
+  * (item 3) records exactly that as recall@5 decay (0.997 sf1 → 0.903 sf10)
   * while the cell geometry stayed anchored. `AutoNProbe` (the store
   * surfaces' default) resolves the budget from the LIVE cell count:
   * floor `NProbe` below 8×NProbe cells (all existing behavior and

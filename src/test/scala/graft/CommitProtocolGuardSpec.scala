@@ -2,21 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps `graft.util.AtomicDir` the store's only commit protocol: a
-  * Hadoop `rename(` anywhere else in src/main, or a Hadoop `create(`
-  * other than the writer lease's exclusive create (mutual exclusion,
-  * not a commit), fails this spec. */
+/** Source scans over src/main. Keeps `graft.util.AtomicDir` the store's
+  * only commit protocol: a Hadoop `rename(` anywhere else, or a Hadoop
+  * `create(` other than the writer lease's exclusive create (mutual
+  * exclusion, not a commit), fails this spec. Keeps src/main a library
+  * with a fixed set of entry points: one-off measurement programs
+  * belong outside it. */
 class CommitProtocolGuardSpec extends AnyFunSuite {
+  private val root = new java.io.File("src/main/scala")
+
+  private def walk(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  private def lines(f: java.io.File): Seq[(String, Int)] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().zipWithIndex.toList finally src.close()
+  }
+
   test("hadoop rename/create appear in src/main only inside AtomicDir (and the lease)") {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val rename = """\.rename\(""".r
     val create = """(?i)\b\w*fs\.create\(""".r
-    val offenders = walk(new java.io.File("src/main/scala"))
+    val offenders = walk(root)
       .filterNot(_.getName == "AtomicDir.scala")
       .flatMap { f =>
-        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+        lines(f).collect {
           case (line, i) if rename.findFirstIn(line).nonEmpty ||
               (create.findFirstIn(line).nonEmpty && !line.contains("fs.create(leasePath,")) =>
             s"${f.getPath}:${i + 1}: ${line.trim}"
@@ -24,5 +34,20 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty,
       s"commit through graft.util.AtomicDir instead:\n${offenders.mkString("\n")}")
+  }
+
+  test("src/main has exactly the six kept entry points") {
+    val kept = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/Serve.scala",
+      "graft/tools/ScaleGen.scala", "graft/tools/Explain.scala", "graft/tools/Demo.scala")
+    val entry = """\bdef main\(|\b(extends|with)\s+App\b""".r
+    val found = walk(root).flatMap { f =>
+      lines(f).collect { case (line, i) if entry.findFirstIn(line).nonEmpty =>
+        root.toPath.relativize(f.toPath).toString.replace('\\', '/') -> s"${f.getPath}:${i + 1}"
+      }
+    }
+    val offenders = found.filterNot { case (rel, _) => kept(rel) }.map(_._2)
+    assert(offenders.isEmpty,
+      s"a measurement program belongs outside src/main:\n${offenders.mkString("\n")}")
+    assert(found.map(_._1).toSet == kept)
   }
 }

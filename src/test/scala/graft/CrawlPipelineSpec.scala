@@ -184,7 +184,7 @@ class CrawlPipelineSpec extends AnyFunSuite {
     // synthesis/decompress/WARC-walk chain once per half (and a naive
     // shared-exchange rework paid it THREE times — per-branch column
     // pruning de-canonicalizes the keeper subtrees, measured in
-    // tools/PlanProbe). The r17 shape materializes ONE unified
+    // SURVEY.md round 17, item 2). The r17 shape materializes ONE unified
     // (kind, url) keeper; the final query must read ONLY that
     // materialized frame — zero capture-chain nodes downstream.
     import graft.functions.expressions.SynthWarcImg

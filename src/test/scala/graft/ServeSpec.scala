@@ -166,6 +166,42 @@ class ServeSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("/embed after buildAnnIndex: ANN-served /search finds the new doc, scoped and unscoped") {
+    val server = graft.tools.Serve.start(spark, 0)
+    val port = server.getAddress.getPort
+    val client = java.net.http.HttpClient.newHttpClient()
+    def post(path: String, body: String): (Int, String) = {
+      val req = java.net.http.HttpRequest.newBuilder()
+        .uri(java.net.URI.create(s"http://127.0.0.1:$port$path"))
+        .header("Content-Type", "application/json")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
+      val resp = client.send(req,
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
+    }
+    try {
+      val dir = "target/vdb_serve_fresh"
+      rmRf(new java.io.File(dir))
+      assert(post("/initialize", s"""{"save_dir":"$dir"}""")._1 == 200)
+      assert(post("/embed",
+        s"""{"path":"$sf/documents.parquet","is_folder":false}""")._1 == 200)
+      // from here on /search serves from the text ANN index
+      new graft.operators.GraftVectorDB(spark, dir).buildAnnIndex()
+      val text = "quokka zephyr embedded after the index build"
+      val fresh = java.nio.file.Files.createTempDirectory("serve_fresh")
+        .resolve("fresh.parquet").toString
+      Seq((900001L, text, "en", "src1", text.length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.parquet(fresh)
+      val (ce, be) = post("/embed", s"""{"path":"$fresh","is_folder":false}""")
+      assert(ce == 200 && be.contains("\"records\":1"), be)
+      for (scope <- Seq(""","search_location":"corpus/src1/"""", "")) {
+        val (cs, bs) = post("/search", s"""{"query":{"text":"$text"},"top_n":3$scope}""")
+        assert(cs == 200 && bs.contains("corpus/src1/doc_900001.txt"), s"scope [$scope]: $bs")
+      }
+    } finally server.stop(0)
+  }
+
   test("ResponseGen: prompt assembly byte-parity and clean_json_string behavior") {
     import graft.operators.ResponseGen
     val hits = Seq(
