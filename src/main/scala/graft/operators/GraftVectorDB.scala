@@ -717,7 +717,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * the term and term-sorted within files, so a query's terms resolve
     * as a partition-PRUNED, stats-skipped scan; `tombstones`
     * (doc_name) marks deleted docs until [[maintainLexical]] compacts
-    * them out (the [[nearDupPath]] protocol). Corpus stats (`_NDOCS`
+    * them out (the [[nearDupPath]] protocol). Ingests land in one
+    * more partition, the append partition
+    * ([[GraftVectorDB.LexAppendBucket]], (term, doc_name)-sorted per
+    * file), which every pruned read scans beside its terms' buckets
+    * and compaction folds back into them. Corpus stats (`_NDOCS`
     * chunk count, `_SUMDL` total tokens) live as counter files and
     * feed BM25's N/avgdl. */
   def lexicalPath: String = s"$storeDir/lexical"
@@ -735,12 +739,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       existsPath(new org.apache.hadoop.fs.Path(lexPostingsPath))
     }
 
-  /** (bucket, term, tf, dl, + the store row key) for a records-shaped
-    * frame: one explode of the chunk text, tf and chunk length riding
-    * the same shuffle (the vs_hybrid/tx_tfidf shape). The bucket is
-    * the term's first md5 byte mod [[GraftVectorDB.LexBuckets]] —
-    * md5 driver-reproducible, so query-time routing needs no Spark
-    * job (see [[GraftVectorDB.lexBucket]]). */
+  /** (term, tf, dl, + the store row key) for a records-shaped frame:
+    * one explode of the chunk text, tf and chunk length riding the
+    * same shuffle (the vs_hybrid/tx_tfidf shape). */
   private def lexPostingsOf(records: DataFrame): DataFrame =
     channelFilter(records, "text")
       .select($"doc_name", $"page_num", $"content_type", $"content_id",
@@ -748,9 +749,16 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         explode(tokens($"content_raw")).as("term"))
       .groupBy($"doc_name", $"page_num", $"content_type", $"content_id", $"term")
       .agg(count(lit(1)).as("tf"), first($"dl").as("dl"))
-      .withColumn("bucket",
-        (conv(substring(md5($"term"), 1, 2), 16, 10).cast("int")
-          % GraftVectorDB.LexBuckets).cast("int"))
+
+  /** The term's md5 bucket, in-plan: first md5 byte mod
+    * [[GraftVectorDB.LexBuckets]] — md5 driver-reproducible, so
+    * query-time routing needs no Spark job (see
+    * [[GraftVectorDB.lexBucket]]). Every bucket-partitioned lexical
+    * write derives its partition from this, which is how compaction
+    * moves append-partition rows into their buckets. */
+  private def termBucket(term: Column): Column =
+    (conv(substring(md5(term), 1, 2), 16, 10).cast("int")
+      % GraftVectorDB.LexBuckets).cast("int")
 
   /** Build (or rebuild) the lexical sidecar from the store's live text
     * channel — one corpus explode + partial-agg groupBy, written
@@ -760,7 +768,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * corpus stats exactly. Returns chunks indexed. */
   def indexLexical(): Long = withWriterLease("indexLexical") {
     recoverLexical()
-    lexPostingsOf(store).withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
+    lexPostingsOf(store).withColumn("bucket", termBucket($"term"))
+      .withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
       .repartition(col("bucket"))
       .sortWithinPartitions($"bucket", $"term", $"doc_name")
       .write.mode(SaveMode.Overwrite)
@@ -778,36 +787,38 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * scan+tokenize. Empty-safe: deleting every doc must leave (0, 0)
     * counters, not a crash. Returns the chunk count. */
   private def refreshLexStats(): Long = {
-    val (n, sumdl) = lexPostingsStats()
+    val (n, sumdl, _) = lexPostingsStats()
     writeLongAt(lexCounter("_NDOCS"), n)
     writeLongAt(lexCounter("_SUMDL"), sumdl)
     refreshLexTermStats()
     n
   }
 
-  /** (chunk count, total tokens) folded from a postings frame — the
-    * per-chunk dl repeats on every posting, so fold to one row per
-    * chunk first. BOTH stats paths (append increments and
-    * rebuild/compaction refresh) derive from postings, so a chunk that
-    * produces no postings (e.g. null text) counts in neither and N
-    * stays invariant across maintenance boundaries. */
-  private def lexStatsOfPostings(posts: DataFrame): (Long, Long) = {
+  /** (chunk count, total tokens, postings rows) folded from a postings
+    * frame in one aggregate — the per-chunk dl repeats on every
+    * posting, so fold to one row per chunk first. BOTH stats paths
+    * (append increments and rebuild/compaction refresh) derive from
+    * postings, so a chunk that produces no postings (e.g. null text)
+    * counts in neither and N stays invariant across maintenance
+    * boundaries. */
+  private def lexStatsOfPostings(posts: DataFrame): (Long, Long, Long) = {
     val r = posts
       .groupBy($"doc_name", $"page_num", $"content_type", $"content_id")
-      .agg(first($"dl").as("dl"))
-      .agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).collect()(0)
-    (r.getLong(0), r.getLong(1))
+      .agg(first($"dl").as("dl"), count(lit(1)).as("rows"))
+      .agg(count(lit(1)), coalesce(sum($"dl"), lit(0L)), coalesce(sum($"rows"), lit(0L)))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** [[lexStatsOfPostings]] over the LIVE sidecar. Empty-safe: a
     * fully-compacted-away sidecar (every doc deleted) holds no data
     * files, which must read as (0, 0), not crash — nDocs = 0 is
     * exactly what makes the serving path return an empty pool. */
-  private def lexPostingsStats(): (Long, Long) =
+  private def lexPostingsStats(): (Long, Long, Long) =
     try lexStatsOfPostings(spark.read.parquet(lexPostingsPath))
     catch {
       case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => (0L, 0L)
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => (0L, 0L, 0L)
     }
 
   /** Keep the sidecar current with an ingested batch — called by
@@ -818,26 +829,35 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * postings land — a crash between over-counts N, which only
     * dampens idf slightly; the reverse order could under-count into
     * df > N, where the un-clamped idf would NaN. O(batch): the
-    * batch's own explode/groupBy, appended per-bucket. */
+    * batch's own explode/groupBy and ONE counter aggregate, written
+    * into the append partition ([[GraftVectorDB.LexAppendBucket]]) in
+    * the batch's own partitioning, (term, doc_name)-sorted so
+    * row-group stats prune its term and doc_name runs — one file per
+    * batch partition, not one per touched md5 bucket, until
+    * [[maintainLexical]] folds it back. */
   private def appendLexical(records: DataFrame): Unit = {
     val g = nextGen(lexicalPath, lexGenDirs)
     val posts = Tables.materialize(
       lexPostingsOf(records).withColumn("gen", lit(g)))
     try {
-      val (n, sumdl) = lexStatsOfPostings(posts)
+      val (n, sumdl, rows) = lexStatsOfPostings(posts)
       writeLongAt(lexCounter("_NDOCS"), readLongAt(lexCounter("_NDOCS")) + n)
       writeLongAt(lexCounter("_SUMDL"), readLongAt(lexCounter("_SUMDL")) + sumdl)
-      posts.repartition(col("bucket"))
-        .sortWithinPartitions($"bucket", $"term", $"doc_name")
+      posts.sortWithinPartitions($"term", $"doc_name")
         .write.mode(SaveMode.Append)
         .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-        .partitionBy("bucket").parquet(lexPostingsPath)
+        .parquet(lexAppendPath(lexPostingsPath))
       // impact stats ride the same materialized frame AFTER the
       // postings land (a crash between leaves _PCOUNT behind the
       // footer count — MaxScore gate closed, serving stays exact)
-      appendLexTermStats(posts, posts.count())
+      appendLexTermStats(posts, rows)
     } finally Tables.release(posts)
   }
+
+  /** The append partition's directory under a bucket-partitioned
+    * lexical sidecar dir. */
+  private def lexAppendPath(dir: String) =
+    s"$dir/bucket=${GraftVectorDB.LexAppendBucket}"
 
   /** Tombstone doc_names in the lexical sidecar (no-op without one).
     * Same fail-open ordering as [[tombstoneNearDup]]: written BEFORE
@@ -853,10 +873,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         .withColumn("tgen", lit(curGen(lexicalPath, lexGenDirs)))
         .write.mode(SaveMode.Append).parquet(lexTombPath)
 
-  /** Compact the lexical sidecar: drop tombstoned docs, rewrite each
-    * bucket's accumulated per-batch files term-sorted, swap via
-    * rename, recompute corpus stats exactly, clear tombstones LAST —
-    * the [[maintainNearDup]] protocol (reads stay correct throughout:
+  /** Compact the lexical sidecar: drop tombstoned docs, rewrite every
+    * posting into its md5 bucket term-sorted (the bucket recomputed
+    * from the term, so the append partition's per-batch files fold
+    * back and no append partition remains), swap via rename, recompute
+    * corpus and term stats exactly, clear tombstones LAST — the
+    * [[maintainNearDup]] protocol (reads stay correct throughout:
     * tombstone filtering applies at query time until the clear). */
   def maintainLexical(): Unit =
     if (lexicalIndexed) withWriterLease("maintainLexical") {
@@ -878,6 +900,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       val g2 = nextGen(lexicalPath, lexGenDirs)
       liveByGen(readSidecar(lexPostingsPath), lexTombPath)
         .withColumn("gen", lit(g2))
+        .withColumn("bucket", termBucket($"term"))
         .repartition(col("bucket"))
         .sortWithinPartitions($"bucket", $"term", $"doc_name")
         .write.mode(SaveMode.Overwrite)
@@ -912,8 +935,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * max_tf), the max-impact store MaxScore-style early termination
     * reads (Turtle & Flood 1995, public): df feeds the exact idf
     * without a postings scan, max_tf the per-term contribution upper
-    * bound. Rebuilds write it whole; appends add the batch's partial
-    * rows (query-time reads aggregate sum(df)/max(max_tf)). `_PCOUNT`
+    * bound. Rebuilds write it whole into md5 buckets; appends add the
+    * batch's partial rows to the append partition (query-time reads
+    * aggregate sum(df)/max(max_tf)). `_PCOUNT`
     * (total postings rows at last consistent write) is the torn-append
     * detector: the serving gate ([[lexMaxScoreReady]]) only trusts the
     * stats when it matches the live postings' footer row count. */
@@ -936,10 +960,13 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // stale df here would under-bound idf — the exactness the gate
     // exists to guarantee
     lexStatsCache = (-1L, Map.empty)
+    // grouped by term alone, the bucket recomputed from it: postings
+    // still in the append partition fold into their md5 buckets
     val stats =
       try spark.read.parquet(lexPostingsPath)
-        .groupBy($"bucket", $"term")
+        .groupBy($"term")
         .agg(count(lit(1)).as("df"), max($"tf").as("max_tf"))
+        .withColumn("bucket", termBucket($"term"))
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
@@ -958,7 +985,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     writeLongAt(lexPcount, n)
   }
 
-  /** Append a batch's partial stats (+ advance `_PCOUNT`). Skipped on
+  /** Append a batch's partial stats (+ advance `_PCOUNT`) to the
+    * append partition, term-sorted in the aggregate's own partitioning
+    * ([[refreshLexTermStats]] folds them into md5 buckets). Skipped on
     * a sidecar that predates termstats — partial-only stats would be
     * wrong, and `_PCOUNT` staying behind keeps the gate closed until
     * the next [[indexLexical]]/[[maintainLexical]] adopts. Any crash
@@ -966,11 +995,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * rows — gate closed, serving falls back to the full scan. */
   private def appendLexTermStats(posts: DataFrame, postRows: Long): Unit =
     if (existsPath(new org.apache.hadoop.fs.Path(lexTermStatsPath))) {
-      posts.groupBy($"bucket", $"term")
+      posts.groupBy($"term")
         .agg(count(lit(1)).as("df"), max($"tf").as("max_tf"))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("bucket")
-        .parquet(lexTermStatsPath)
+        .sortWithinPartitions($"term")
+        .write.mode(SaveMode.Append)
+        .parquet(lexAppendPath(lexTermStatsPath))
       writeLongAt(lexPcount, readLongAt(lexPcount) + postRows)
       lexGateCache = None
       lexStatsCache = (-1L, Map.empty)
@@ -1041,9 +1070,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val merged =
       if (missing.isEmpty) cached
       else {
-        val buckets = missing.map(GraftVectorDB.lexBucket).distinct
         val fetched = spark.read.parquet(lexTermStatsPath)
-          .filter($"bucket".isin(buckets: _*) && $"term".isin(missing: _*))
+          .filter(GraftVectorDB.lexBucketFilter(missing) && $"term".isin(missing: _*))
           .groupBy($"term").agg(sum($"df").as("df"), max($"max_tf").as("max_tf"))
           .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
         val m = cached ++ missing.map(t => t -> fetched.getOrElse(t, (0L, 0L)))
@@ -1114,7 +1142,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       pool: Int, location: Option[String],
       nDocs: Long, avgdl: Double): DataFrame = {
     val allTerms = qTerms.flatMap(_._2).distinct
-    val buckets = allTerms.map(GraftVectorDB.lexBucket).distinct
     // the term In literal is a scan-pruning assist (row-group stats on
     // the term-sorted files) — the broadcast (q_id, term) join below
     // filters exactly either way; a huge batch's term union would
@@ -1122,7 +1149,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // only the bucket partition pruning narrows the scan
     val matched = liveByGen(
       readPostings()
-        .filter($"bucket".isin(buckets: _*))
+        .filter(GraftVectorDB.lexBucketFilter(allTerms))
         .transform(df =>
           if (allTerms.length <= GraftVectorDB.InLiteralMax)
             df.filter($"term".isin(allTerms: _*))
@@ -1251,10 +1278,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       rs.map(t => (id, t, stats(t)._1, loc.orNull)) }
       .toDF("q_id", "term", "df", "q_loc")
     val rareTerms = aQ.flatMap(_._2).distinct
-    val rBuckets = rareTerms.map(GraftVectorDB.lexBucket).distinct
     // the gate holds (no tombstones), so the raw read IS the live set
     val rScan = readPostings()
-      .filter($"bucket".isin(rBuckets: _*))
+      .filter(GraftVectorDB.lexBucketFilter(rareTerms))
       .filter($"term".isin(rareTerms: _*))
     val anyLoc = qInfo.exists(_._4.isDefined)
     def qScoped(df: DataFrame): DataFrame =
@@ -1334,9 +1360,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
           cs.map(t => (id, t, stats(t)._1, loc.orNull)) }
           .toDF("q_id", "term", "df", "q_loc")
         val cTerms = commonPruned.flatMap(_._3).distinct
-        val cBuckets = cTerms.map(GraftVectorDB.lexBucket).distinct
         val cScan = readPostings()
-          .filter($"bucket".isin(cBuckets: _*))
+          .filter(GraftVectorDB.lexBucketFilter(cTerms))
           .filter($"term".isin(cTerms: _*))
           .filter($"doc_name".isin(names: _*))
         val cc = qScoped(locScoped(cScan, location).join(broadcast(cQt), "term"))
@@ -3829,8 +3854,19 @@ object GraftVectorDB {
     * partitions. 256 (the md5 first byte unsplit) keeps directory
     * listings trivial; per-bucket data volume is what grows with the
     * corpus, and within a bucket term-sorted row-group stats carry the
-    * pruning the rest of the way. */
+    * pruning the rest of the way. Buckets are 0 until this; the one
+    * value past them is [[LexAppendBucket]]. */
   val LexBuckets = 256
+
+  /** The lexical sidecar's append partition (`bucket=256`, outside the
+    * md5 range): each ingest lands its postings and term-stats partials
+    * here, (term, doc_name)-sorted, as one file per batch partition
+    * instead of one small file per touched md5 bucket. Compaction
+    * ([[GraftVectorDB.maintainLexical]]) and rebuilds fold it back into
+    * md5 buckets — the log-structured-merge split (O'Neil et al.,
+    * Acta Informatica 1996): small writes land in one place, the
+    * existing compaction moves them. */
+  private[graft] val LexAppendBucket: Int = LexBuckets
 
   /** Per-channel candidate pool depth feeding [[GraftVectorDB.searchHybrid]]'s
     * RRF fusion (the [[HybridSearch.PoolK]] operating point). */
@@ -3886,6 +3922,14 @@ object GraftVectorDB {
     val md = java.security.MessageDigest.getInstance("MD5")
     (md.digest(term.getBytes("UTF-8"))(0) & 0xFF) % LexBuckets
   }
+
+  /** The one bucket router of every pruned lexical read (postings and
+    * termstats): a partition filter on the terms' md5 buckets plus the
+    * append partition, which holds un-compacted ingests of any term.
+    * Nothing else may prune on `bucket` (CommitProtocolGuardSpec
+    * holds that), or a read would silently skip the append partition. */
+  private[graft] def lexBucketFilter(terms: Seq[String]): Column =
+    col("bucket").isin((terms.map(lexBucket).distinct :+ LexAppendBucket): _*)
 
   /** Intra-batch verified-pair bound for [[GraftVectorDB.ingestNearDup]]'s
     * driver-side keep-smallest sweep (~32 MB of pair tuples — the same

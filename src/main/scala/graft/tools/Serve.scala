@@ -31,12 +31,14 @@ import graft.operators.{DocParse, GraftVectorDB, ResponseGen}
   *    "search_location": …, "top_n": …} → run_search: text results
   *    from the warm ANN path when the text index is built (exact scan
   *    otherwise), one result list per base64 image query through the
-  *    image channel; 400 on missing text or undecodable base64 (the
-  *    reference's validation), 500 on execution errors. The body
-  *    carries run_search's full return contract: "response" (the
-  *    summary through [[graft.operators.ResponseGen.ExtractiveModel]]
-  *    — the reference's LLM call sits behind the same ResponseModel
-  *    seam) and "sources" (generate_source_list over the combined
+  *    image channel; 400 on missing text, undecodable base64 (the
+  *    reference's validation) or a `top_n` that is present but not an
+  *    integer in [1, Int.MaxValue] (absent means 5), 500 on execution
+  *    errors. The body carries run_search's full return contract:
+  *    "response" (the summary through
+  *    [[graft.operators.ResponseGen.ExtractiveModel]] — the
+  *    reference's LLM call sits behind the same ResponseModel seam)
+  *    and "sources" (generate_source_list over the combined
   *    text-then-image rows), plus the per-channel "results" lists;
   *  - GET / → a minimal static frontend driving the three endpoints
   *    (the analog of templates/index.html, app.py:12-14).
@@ -295,8 +297,12 @@ private class ServeState(spark: SparkSession) {
         case Some(text) =>
           val location = str(json, "search_location").filter(_.nonEmpty)
           val topN = (json \ "top_n") match {
-            case JInt(n) => n.toInt
-            case _ => 5
+            case JNothing => 5
+            case JInt(n) if n >= 1 && n <= Int.MaxValue => n.toInt
+            case other =>
+              return (400, JObject("error" -> JString(
+                s"top_n must be an integer in [1, ${Int.MaxValue}], got " +
+                  JsonMethods.compact(JsonMethods.render(other)))))
           }
           val images = (json \ "image") match {
             case JArray(items) => items.collect { case JString(s) => s }

@@ -636,4 +636,143 @@ class LexicalHybridSpec extends AnyFunSuite {
       forceFull = false, forceMaxScore = true).get) == rowsOf(
       db.lexAllScanPlan(qt, 3, None, forceFull = true).get))
   }
+
+  /** Parquet data files under `dir`, as paths relative to it. */
+  private def parquetFiles(dir: String): Set[String] = {
+    val root = new java.io.File(dir).toPath
+    if (!root.toFile.exists) Set.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => root.relativize(p).toString.replace('\\', '/')).toSet
+      finally files.close()
+    }
+  }
+
+  private val appendDir = s"bucket=${GraftVectorDB.LexAppendBucket}"
+
+  test("an ingest lands one file per lexical sidecar, in the append partition") {
+    val dir = "target/vdb_lexical_append_files"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingest(docsFrame(corpus.take(3)))
+    db.indexLexical()
+    val subs = Seq("postings", "termstats")
+    val before = subs.map(sub => parquetFiles(s"$dir/lexical/$sub"))
+    assert(before.forall(fs => fs.nonEmpty && !fs.exists(_.startsWith(appendDir))),
+      s"indexLexical writes md5 buckets only: $before")
+    // three docs whose terms spread over many md5 buckets
+    db.ingest(docsFrame(Seq(
+      21L -> "harbor lantern mooring quay bollard common",
+      22L -> "orchard pruning grafting rootstock scion",
+      23L -> "glacier moraine cirque arete serac common")))
+    subs.zip(before).foreach { case (sub, was) =>
+      val added = parquetFiles(s"$dir/lexical/$sub") -- was
+      assert(added.size == 1 && added.head.startsWith(s"$appendDir/"),
+        s"$sub: one ingest must add one file, in the append partition: $added")
+    }
+    assert(db.lexMaxScoreReady, "the append keeps _PCOUNT equal to the footer rows")
+    val hits = db.searchHybrid("glacier moraine", 3).collect()
+    assert(hits.nonEmpty && hits.head.getAs[String]("doc_name").contains("doc_23"),
+      s"the appended doc must surface lexically: ${hits.toSeq}")
+  }
+
+  /** 600 docs that all carry a common term, a few with a rare one —
+    * the MaxScore corpus, so forced MaxScore engages. */
+  private val maxScoreDocs = (0 until 600).map { i =>
+    val rare = if (i % 150 == 0) " zanzibarq" else if (i % 100 == 7) " rarebeta" else ""
+    (i.toLong, s"filler$i stopzz body unique$i words$rare")
+  }
+
+  test("appended, deleted-from sidecar serves what a rebuild of the same store serves") {
+    val dir = "target/vdb_lexical_append_parity"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingest(docsFrame(maxScoreDocs, source = "ap"))
+    db.indexLexical()
+    db.ingest(docsFrame(Seq(
+      1000L -> "late stopzz zanzibarq quokka",
+      1001L -> "quokka wombat stopzz rarebeta"), source = "ap"))
+    db.ingest(docsFrame(Seq(
+      1002L -> "another zanzibarq quokka stopzz stopzz",
+      1003L -> "wombat numbat rarebeta"), source = "ap"))
+    assert(parquetFiles(s"$dir/lexical/postings").count(_.startsWith(s"$appendDir/")) == 2)
+
+    val qt = Seq(
+      (0L, Seq("zanzibarq", "stopzz"), Option.empty[String]),
+      (1L, Seq("rarebeta", "stopzz", "quokka"), Option.empty[String]),
+      (2L, Seq("zanzibarq", "wombat", "stopzz"), Some("corpus/ap/doc_10")))
+    def lexRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("lex_rnk"),
+        r.getAs[String]("doc_name"), r.getAs[String]("content_id")))
+      .sortBy(t => (t._1, t._2)).toSeq
+    def full() = lexRows(db.lexAllScanPlan(qt, 3, None, forceFull = true).get)
+    def maxScore() = lexRows(db.lexAllScanPlan(qt, 3, None,
+      forceFull = false, forceMaxScore = true).get)
+    // with the append partition live and no tombstone, MaxScore (its
+    // stats read, job A and job B) must agree with the full scan and
+    // rank the appended docs
+    assert(db.lexMaxScoreReady)
+    val incrMaxScore = maxScore()
+    assert(incrMaxScore == full(), "MaxScore over the append partition")
+    assert(incrMaxScore.exists(_._3.endsWith("/doc_1002.txt")), incrMaxScore)
+
+    db.delete(Seq("corpus/ap/doc_150.txt"))
+    val queries = Seq(
+      (1L, "zanzibarq stopzz", null),
+      (2L, "quokka wombat rarebeta", null),
+      (3L, "zanzibarq quokka", "corpus/ap/doc_100")).toDF("q_id", "q_text", "q_loc")
+    def served() = {
+      val singles = Seq("zanzibarq stopzz", "quokka wombat rarebeta", "numbat")
+        .map(q => db.searchHybrid(q, 5).collect().map(r =>
+          (r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"), r.getAs[String]("doc_name"),
+            r.getAs[String]("content_id"), Option(r.getAs[java.lang.Long]("lex_rnk")),
+            Option(r.getAs[java.lang.Long]("ann_rnk")))).toSeq)
+      val batch = db.searchAllHybrid(queries, 5).collect().map(r =>
+        (r.getAs[Long]("q_id"), r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"),
+          r.getAs[String]("doc_name"), r.getAs[String]("content_id"))).toSeq.sorted
+      (singles, batch, full())
+    }
+    val incr = served()
+    assert(!incr._3.exists(_._3.endsWith("/doc_150.txt")), "the deleted doc must not serve")
+    db.indexLexical()
+    assert(parquetFiles(s"$dir/lexical/postings").forall(!_.startsWith(appendDir)))
+    val rebuilt = served()
+    assert(rebuilt == incr, s"rebuild != appended sidecar:\n $rebuilt\n $incr")
+    // the rebuild reopens the MaxScore gate: its pruned plan ranks
+    // exactly what the appended, tombstoned sidecar's full plan ranked
+    assert(db.lexMaxScoreReady)
+    assert(maxScore() == incr._3, "MaxScore after the rebuild")
+  }
+
+  test("maintainLexical folds the append partition back into md5 buckets") {
+    val dir = "target/vdb_lexical_fold"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingest(docsFrame(corpus.take(3)))
+    db.indexLexical()
+    db.ingest(docsFrame(Seq(31L -> "harbor lantern mooring alpha common")))
+    db.ingest(docsFrame(Seq(32L -> "glacier moraine beta delta common")))
+    val subs = Seq("postings", "termstats")
+    subs.foreach(sub => assert(new java.io.File(s"$dir/lexical/$sub/$appendDir").isDirectory))
+    def served() = Seq("alpha beta common", "glacier harbor", "moraine delta")
+      .map(q => db.searchHybrid(q, 5).collect().map(r =>
+        (r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"), r.getAs[String]("doc_name"),
+          r.getAs[String]("content_id"))).toSeq)
+    val before = served()
+    db.maintainLexical()
+    subs.foreach { sub =>
+      assert(!new java.io.File(s"$dir/lexical/$sub/$appendDir").exists,
+        s"$sub: compaction must leave no append partition")
+      val misplaced = spark.read.parquet(s"$dir/lexical/$sub")
+        .select($"term", $"bucket").distinct().collect()
+        .filter(r => GraftVectorDB.lexBucket(r.getString(0)) != r.getInt(1))
+      assert(misplaced.isEmpty, s"$sub: terms outside their md5 bucket: ${misplaced.toSeq}")
+    }
+    assert(spark.read.parquet(s"$dir/lexical/postings")
+      .filter($"term" === "moraine").count() == 1, "the appended postings survive")
+    assert(db.lexMaxScoreReady)
+    assert(served() == before, "compaction must not change results")
+  }
 }

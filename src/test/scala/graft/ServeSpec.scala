@@ -202,6 +202,50 @@ class ServeSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("/search answers 400 to a top_n that is not an integer in [1, Int.MaxValue]") {
+    val server = graft.tools.Serve.start(spark, 0)
+    val port = server.getAddress.getPort
+    val client = java.net.http.HttpClient.newHttpClient()
+    def post(path: String, body: String): (Int, String) = {
+      val req = java.net.http.HttpRequest.newBuilder()
+        .uri(java.net.URI.create(s"http://127.0.0.1:$port$path"))
+        .header("Content-Type", "application/json")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
+      val resp = client.send(req,
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
+    }
+    try {
+      val dir = "target/vdb_serve_topn"
+      rmRf(new java.io.File(dir))
+      assert(post("/initialize", s"""{"save_dir":"$dir"}""")._1 == 200)
+      val corpus = java.nio.file.Files.createTempDirectory("serve_topn")
+        .resolve("docs.parquet").toString
+      Seq((1L, "alpha beta gamma", "en", "s"), (2L, "delta epsilon", "en", "s"),
+          (3L, "zeta eta theta", "en", "s"))
+        .toDF("doc_id", "text", "lang", "source").coalesce(1).write.parquet(corpus)
+      assert(post("/embed", s"""{"path":"$corpus","is_folder":false}""")._1 == 200)
+      def search(topN: String): (Int, String) =
+        post("/search", s"""{"query":{"text":"alpha beta"}$topN}""")
+      // 0 and -1 used to reach the search unchecked, 4294967299 wrapped
+      // to 3, and "7" silently became the default 5
+      for (bad <- Seq("0", "-1", "4294967299", "\"7\"", "2.5", "null")) {
+        val (c, b) = search(s""","top_n":$bad""")
+        assert(c == 400 && b.contains("\"error\"") && b.contains("top_n"), s"top_n $bad: $c $b")
+      }
+      def textHits(b: String): Int = {
+        import org.json4s._
+        (org.json4s.jackson.JsonMethods.parse(b) \ "results" \ "text")
+          .asInstanceOf[JArray].arr.size
+      }
+      val (c1, b1) = search(""","top_n":1""")
+      assert(c1 == 200 && textHits(b1) == 1, b1)
+      // absent keeps the default of 5 (the store holds only 3 chunks)
+      val (c0, b0) = search("")
+      assert(c0 == 200 && textHits(b0) == 3, b0)
+    } finally server.stop(0)
+  }
+
   test("ResponseGen: prompt assembly byte-parity and clean_json_string behavior") {
     import graft.operators.ResponseGen
     val hits = Seq(
