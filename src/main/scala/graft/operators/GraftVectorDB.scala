@@ -135,16 +135,18 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Every area's crash recovery ([[AtomicDir.recover]]): store
     * partitions and files, each built index, both sidecars and the
-    * snapshot dir, then a crashed ingest's missing entries
-    * ([[completeIngest]]). Runs once per instance, on its first write;
-    * each area's own recovery also runs on entry to the ops that
-    * rewrite it. */
+    * snapshot dir, a lexical sidecar still in the md5-bucket layout
+    * (rewritten flat, [[lexInBucketLayout]]), then a crashed ingest's
+    * missing entries ([[completeIngest]]). Runs once per instance, on
+    * its first write; each area's own recovery also runs on entry to
+    * the ops that rewrite it. */
   private def recover(): Unit = {
     recoverCompact()
     recoverAnnBuild(_ => true)
     channelNames.map(ch => new org.apache.hadoop.fs.Path(annPath(ch)))
       .filter(existsPath).foreach(p => recoverAnnIndex(fsOf(p), p))
     recoverLexical()
+    if (lexInBucketLayout) maintainLexical()
     recoverNearDup()
     Seq(storeDir -> "_INGEST", s"$storeDir/_snapshots" -> "manifest.v").foreach {
       case (d, name) =>
@@ -445,15 +447,23 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * serving read both deterministic on mixed pre/post-generation
     * sidecars (missing `gen` reads as null → the documented gen-0
     * case, no footer-inference lottery) and cheaper (no schema-merge
-    * job on the hot path). */
+    * job on the hot path). A sidecar still in the md5-bucket layout
+    * reads with the discovered `bucket` column appended, which no
+    * reader uses. */
   private val lexPostingsSchema = new org.apache.spark.sql.types.StructType()
     .add("doc_name", "string").add("page_num", "long")
     .add("content_type", "string").add("content_id", "string")
     .add("dl", "long").add("term", "string").add("tf", "long")
-    .add("gen", "long").add("bucket", "int")
+    .add("gen", "long")
 
   private def readPostings(): DataFrame =
     spark.read.schema(lexPostingsSchema).parquet(lexPostingsPath)
+
+  private val lexTermStatsSchema = new org.apache.spark.sql.types.StructType()
+    .add("term", "string").add("df", "long").add("max_tf", "long")
+
+  private def readTermStats(): DataFrame =
+    spark.read.schema(lexTermStatsSchema).parquet(lexTermStatsPath)
 
   /** The entries still live under the generation rule: no tombstone
     * for the name at-or-after the entry's generation. Legacy rows
@@ -712,18 +722,17 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Root of the lexical sidecar — a persisted inverted index over the
     * text channel's chunks, the keyword half of [[searchHybrid]]:
-    * `postings` (bucket=…/ term, tf, dl, doc_name, page_num,
-    * content_type, content_id) partitioned by a 1-byte md5 bucket of
-    * the term and term-sorted within files, so a query's terms resolve
-    * as a partition-PRUNED, stats-skipped scan; `tombstones`
-    * (doc_name) marks deleted docs until [[maintainLexical]] compacts
-    * them out (the [[nearDupPath]] protocol). Ingests land in one
-    * more partition, the append partition
-    * ([[GraftVectorDB.LexAppendBucket]], (term, doc_name)-sorted per
-    * file), which every pruned read scans beside its terms' buckets
-    * and compaction folds back into them. Corpus stats (`_NDOCS`
-    * chunk count, `_SUMDL` total tokens) live as counter files and
-    * feed BM25's N/avgdl. */
+    * `postings` (term, tf, dl, doc_name, page_num, content_type,
+    * content_id, gen), one flat directory of files range-partitioned
+    * by term and (term, doc_name)-sorted within, so a query's pushed
+    * term filter skips every file and row group whose term min/max
+    * excludes it; `tombstones` (doc_name) marks deleted docs until
+    * [[maintainLexical]] compacts them out (the [[nearDupPath]]
+    * protocol). Each ingest adds its own sorted files to the same
+    * directory and a rewrite merges them — the log-structured-merge
+    * split (O'Neil et al., Acta Informatica 1996). Corpus stats
+    * (`_NDOCS` chunk count, `_SUMDL` total tokens) live as counter
+    * files and feed BM25's N/avgdl. */
   def lexicalPath: String = s"$storeDir/lexical"
   private def lexPostingsPath = s"$lexicalPath/postings"
   private def lexTombPath = s"$lexicalPath/tombstones"
@@ -750,44 +759,104 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .groupBy($"doc_name", $"page_num", $"content_type", $"content_id", $"term")
       .agg(count(lit(1)).as("tf"), first($"dl").as("dl"))
 
-  /** The term's md5 bucket, in-plan: first md5 byte mod
-    * [[GraftVectorDB.LexBuckets]] — md5 driver-reproducible, so
-    * query-time routing needs no Spark job (see
-    * [[GraftVectorDB.lexBucket]]). Every bucket-partitioned lexical
-    * write derives its partition from this, which is how compaction
-    * moves append-partition rows into their buckets. */
-  private def termBucket(term: Column): Column =
-    (conv(substring(md5(term), 1, 2), 16, 10).cast("int")
-      % GraftVectorDB.LexBuckets).cast("int")
-
   /** Build (or rebuild) the lexical sidecar from the store's live text
-    * channel — one corpus explode + partial-agg groupBy, written
-    * bucket-partitioned and term-sorted (staged and swapped in, so the
-    * old sidecar serves until the new one is live). Clears tombstones
-    * (a fresh build can't contain deleted rows) and recomputes the
-    * corpus stats exactly. Returns chunks indexed. */
+    * channel — one corpus explode + partial-agg groupBy, through
+    * [[rewriteLexical]] (a fresh build can't contain deleted rows, so
+    * its tombstones clear). Returns chunks indexed. */
   def indexLexical(): Long = withWriterLease("indexLexical") {
     recoverLexical()
-    lexPostingsOf(store).withColumn("bucket", termBucket($"term"))
-      .withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions($"bucket", $"term", $"doc_name")
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-      .partitionBy("bucket").parquet(lexStagedPath)
-    swapLexPostings()
+    rewriteLexical(lexPostingsOf(store))
+  }
+
+  /** Replace the live postings with `posts` — the one rewrite of
+    * [[indexLexical]] and [[maintainLexical]]: stamped at a fresh
+    * generation, written flat and sorted by (term, doc_name)
+    * ([[writeLexSorted]]), staged and swapped in (the old sidecar
+    * serves until the new one is live), corpus and term stats
+    * recomputed exactly, tombstones cleared LAST — the
+    * [[maintainNearDup]] protocol (reads stay correct throughout:
+    * tombstone filtering applies at query time until the clear). Only
+    * the declared columns are written, so a sidecar read in the
+    * md5-bucket layout comes out flat. Returns the chunk count. */
+  private def rewriteLexical(posts: DataFrame): Long = {
+    val staged = new org.apache.hadoop.fs.Path(s"$lexicalPath/.tmp_postings")
+    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
+    // BUMP the generation: another live instance serving this store
+    // keys its gate/stats caches on _GEN, and a compaction after
+    // deletes rewrites termstats and clears tombstones WITHOUT any
+    // append — same gen, no tombstones, _PCOUNT consistent — so a
+    // pre-delete warm cache over there would serve stale per-term df
+    // and silently diverge MaxScore ranks from the full plan. Bumping
+    // BEFORE the rewrite means a mid-compaction crash costs one
+    // spurious cross-instance cache refresh, never a stale serve.
+    // The rewritten rows re-stamp at the new generation so _GEN
+    // self-healing (max stamped gen) stays monotonic through it —
+    // safe, because every surviving row is live and later tombstones
+    // record the generation current at THEIR delete.
+    writeLexSorted(posts.withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
+      .select(lexPostingsSchema.fieldNames.map(col): _*),
+      staged.toString, $"term", $"doc_name")
+    AtomicDir.swap(fsOf(live), staged, live,
+      new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings"))
+    spark.catalog.refreshByPath(lexicalPath)
+    val n = refreshLexStats()
     val tomb = new org.apache.hadoop.fs.Path(lexTombPath)
     if (existsPath(tomb)) fsOf(tomb).delete(tomb, true)
-    spark.catalog.refreshByPath(lexicalPath)
-    refreshLexStats()
+    n
   }
+
+  /** Write a lexical sidecar frame (postings or termstats) as one flat
+    * directory: range-partitioned by term, each file sorted by
+    * `order`, so every file, row group and page covers one term range
+    * that a pushed term filter ([[termIn]]) prunes on its min/max.
+    * AQE's partition coalescing sets the file count. */
+  private def writeLexSorted(df: DataFrame, path: String, order: Column*): Unit =
+    lexWriter(df.repartitionByRange($"term").sortWithinPartitions(order: _*))
+      .mode(SaveMode.Overwrite).parquet(path)
+
+  /** Every lexical sidecar write: index-sized row groups and pages
+    * ([[GraftVectorDB.LexRowGroupBytes]], [[GraftVectorDB.LexPageRows]]). */
+  private def lexWriter(df: DataFrame) =
+    df.write
+      .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
+      .option("parquet.page.row.count.limit", GraftVectorDB.LexPageRows.toString)
+
+  /** `term IN terms` in the form the Parquet reader prunes on exactly.
+    * Spark hands an IN list longer than
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (10) to Parquet as
+    * its [min, max] range, which on term-sorted files spans about every
+    * page for a dozen scattered terms; an OR of lists that short is
+    * pushed as one equality per term, so only the pages holding a term
+    * are read. The whole list leads the conjunction, so a row outside
+    * it costs one hash probe, not the OR. Past
+    * [[GraftVectorDB.LexExactTermsMax]] terms the plain list serves. */
+  private def termIn(terms: Seq[String]): Column = {
+    val eqMax = spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
+    def anyOf(gs: Seq[Seq[String]]): Column =
+      if (gs.length == 1) $"term".isin(gs.head: _*)
+      else gs.splitAt(gs.length / 2) match { case (l, r) => anyOf(l) || anyOf(r) }
+    if (eqMax <= 0 || terms.length <= eqMax || terms.length > GraftVectorDB.LexExactTermsMax)
+      $"term".isin(terms: _*)
+    else $"term".isin(terms: _*) && anyOf(terms.grouped(eqMax).toSeq)
+  }
+
+  /** Whether the sidecar still holds a `bucket=` directory of the
+    * md5-bucket layout. Rows appended flat beside such directories
+    * would be skipped by partition discovery, so the writer's recovery
+    * rewrites such a sidecar once before any append. */
+  private def lexInBucketLayout: Boolean =
+    Seq(lexPostingsPath, lexTermStatsPath).map(new org.apache.hadoop.fs.Path(_))
+      .exists(p => existsPath(p) &&
+        fsOf(p).listStatus(p).exists(_.getPath.getName.startsWith("bucket=")))
 
   /** Exact corpus stats (`_NDOCS`, `_SUMDL`) and term stats from the
     * LIVE postings — one NARROW sidecar read, not a corpus
-    * scan+tokenize. Empty-safe: deleting every doc must leave (0, 0)
-    * counters, not a crash. Returns the chunk count. */
+    * scan+tokenize. Empty-safe: a fully-compacted-away sidecar (every
+    * doc deleted) holds one empty file, which reads as (0, 0) — nDocs
+    * = 0 is exactly what makes the serving path return an empty pool.
+    * Returns the chunk count. */
   private def refreshLexStats(): Long = {
-    val (n, sumdl, _) = lexPostingsStats()
+    val (n, sumdl, _) = lexStatsOfPostings(readPostings())
     writeLongAt(lexCounter("_NDOCS"), n)
     writeLongAt(lexCounter("_SUMDL"), sumdl)
     refreshLexTermStats()
@@ -810,17 +879,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
-  /** [[lexStatsOfPostings]] over the LIVE sidecar. Empty-safe: a
-    * fully-compacted-away sidecar (every doc deleted) holds no data
-    * files, which must read as (0, 0), not crash — nDocs = 0 is
-    * exactly what makes the serving path return an empty pool. */
-  private def lexPostingsStats(): (Long, Long, Long) =
-    try lexStatsOfPostings(spark.read.parquet(lexPostingsPath))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => (0L, 0L, 0L)
-    }
-
   /** Keep the sidecar current with an ingested batch — called by
     * [[ingestRecords]] AFTER the store write. The fresh generation
     * stamp makes a re-ingested (previously deleted) doc's postings
@@ -830,11 +888,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * dampens idf slightly; the reverse order could under-count into
     * df > N, where the un-clamped idf would NaN. O(batch): the
     * batch's own explode/groupBy and ONE counter aggregate, written
-    * into the append partition ([[GraftVectorDB.LexAppendBucket]]) in
-    * the batch's own partitioning, (term, doc_name)-sorted so
-    * row-group stats prune its term and doc_name runs — one file per
-    * batch partition, not one per touched md5 bucket, until
-    * [[maintainLexical]] folds it back. */
+    * straight into `postings` in the batch's own partitioning,
+    * (term, doc_name)-sorted so row-group stats prune its term and
+    * doc_name runs, until a rewrite merges it. */
   private def appendLexical(records: DataFrame): Unit = {
     val g = nextGen(lexicalPath, lexGenDirs)
     val posts = Tables.materialize(
@@ -843,21 +899,14 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       val (n, sumdl, rows) = lexStatsOfPostings(posts)
       writeLongAt(lexCounter("_NDOCS"), readLongAt(lexCounter("_NDOCS")) + n)
       writeLongAt(lexCounter("_SUMDL"), readLongAt(lexCounter("_SUMDL")) + sumdl)
-      posts.sortWithinPartitions($"term", $"doc_name")
-        .write.mode(SaveMode.Append)
-        .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-        .parquet(lexAppendPath(lexPostingsPath))
+      lexWriter(posts.sortWithinPartitions($"term", $"doc_name"))
+        .mode(SaveMode.Append).parquet(lexPostingsPath)
       // impact stats ride the same materialized frame AFTER the
       // postings land (a crash between leaves _PCOUNT behind the
       // footer count — MaxScore gate closed, serving stays exact)
       appendLexTermStats(posts, rows)
     } finally Tables.release(posts)
   }
-
-  /** The append partition's directory under a bucket-partitioned
-    * lexical sidecar dir. */
-  private def lexAppendPath(dir: String) =
-    s"$dir/bucket=${GraftVectorDB.LexAppendBucket}"
 
   /** Tombstone doc_names in the lexical sidecar (no-op without one).
     * Same fail-open ordering as [[tombstoneNearDup]]: written BEFORE
@@ -873,52 +922,14 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         .withColumn("tgen", lit(curGen(lexicalPath, lexGenDirs)))
         .write.mode(SaveMode.Append).parquet(lexTombPath)
 
-  /** Compact the lexical sidecar: drop tombstoned docs, rewrite every
-    * posting into its md5 bucket term-sorted (the bucket recomputed
-    * from the term, so the append partition's per-batch files fold
-    * back and no append partition remains), swap via rename, recompute
-    * corpus and term stats exactly, clear tombstones LAST — the
-    * [[maintainNearDup]] protocol (reads stay correct throughout:
-    * tombstone filtering applies at query time until the clear). */
+  /** Compact the lexical sidecar: drop tombstoned docs and merge every
+    * ingest's files with the rest through [[rewriteLexical]], which
+    * leaves one flat, (term, doc_name)-sorted set of files. */
   def maintainLexical(): Unit =
     if (lexicalIndexed) withWriterLease("maintainLexical") {
       recoverLexical()
-      val tomb = new org.apache.hadoop.fs.Path(lexTombPath)
-      val hasTomb = existsPath(tomb)
-      // BUMP the generation: another live instance serving this store
-      // keys its gate/stats caches on _GEN, and a compaction after
-      // deletes rewrites termstats and clears tombstones WITHOUT any
-      // append — same gen, no tombstones, _PCOUNT consistent — so a
-      // pre-delete warm cache over there would serve stale per-term df
-      // and silently diverge MaxScore ranks from the full plan. Bumping
-      // BEFORE the rewrite means a mid-compaction crash costs one
-      // spurious cross-instance cache refresh, never a stale serve.
-      // The compacted rows re-stamp at the new generation so _GEN
-      // self-healing (max stamped gen) stays monotonic through it —
-      // safe, because every surviving row is live and later tombstones
-      // record the generation current at THEIR delete.
-      val g2 = nextGen(lexicalPath, lexGenDirs)
-      liveByGen(readSidecar(lexPostingsPath), lexTombPath)
-        .withColumn("gen", lit(g2))
-        .withColumn("bucket", termBucket($"term"))
-        .repartition(col("bucket"))
-        .sortWithinPartitions($"bucket", $"term", $"doc_name")
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-        .partitionBy("bucket").parquet(lexStagedPath)
-      swapLexPostings()
-      spark.catalog.refreshByPath(lexicalPath)
-      refreshLexStats()
-      if (hasTomb) fsOf(tomb).delete(tomb, true)
+      rewriteLexical(liveByGen(readPostings(), lexTombPath))
     }
-
-  private def lexStagedPath = s"$lexicalPath/.tmp_postings"
-
-  private def swapLexPostings(): Unit = {
-    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
-    AtomicDir.swap(fsOf(live), new org.apache.hadoop.fs.Path(lexStagedPath), live,
-      new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings"))
-  }
 
   /** Roll back a crashed [[indexLexical]]/[[maintainLexical]] swap or
     * counter replacement and drop staged residue
@@ -931,13 +942,13 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   // ─────────── MaxScore early termination (impact-ordered stats) ───────────
 
-  /** Per-term impact stats sidecar — `termstats` (bucket=…/ term, df,
-    * max_tf), the max-impact store MaxScore-style early termination
-    * reads (Turtle & Flood 1995, public): df feeds the exact idf
-    * without a postings scan, max_tf the per-term contribution upper
-    * bound. Rebuilds write it whole into md5 buckets; appends add the
-    * batch's partial rows to the append partition (query-time reads
-    * aggregate sum(df)/max(max_tf)). `_PCOUNT`
+  /** Per-term impact stats sidecar — `termstats` (term, df, max_tf),
+    * the max-impact store MaxScore-style early termination reads
+    * (Turtle & Flood 1995, public): df feeds the exact idf without a
+    * postings scan, max_tf the per-term contribution upper bound.
+    * Rewrites write it whole, term-sorted like `postings`; appends add
+    * the batch's partial rows beside it (query-time reads aggregate
+    * sum(df)/max(max_tf)). `_PCOUNT`
     * (total postings rows at last consistent write) is the torn-append
     * detector: the serving gate ([[lexMaxScoreReady]]) only trusts the
     * stats when it matches the live postings' footer row count. */
@@ -948,11 +959,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * rebuild/compaction path, and the adoption path for a sidecar that
     * predates the stats). `_PCOUNT` is deleted FIRST, so every crash
     * window inside leaves the MaxScore gate closed (full-scan serving
-    * stays correct) instead of serving from torn stats. */
+    * stays correct) instead of serving from torn stats. An emptied
+    * sidecar writes one empty file, whose Σ df reads 0. */
   private def refreshLexTermStats(): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(lexicalPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(lexPcount, false)
+    fsOf(lexPcount).delete(lexPcount, false)
     lexGateCache = None
     // the stats CONTENT cache must reset with the gate cache: a
     // compaction after deletes rewrites termstats WITHOUT advancing
@@ -960,50 +970,39 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // stale df here would under-bound idf — the exactness the gate
     // exists to guarantee
     lexStatsCache = (-1L, Map.empty)
-    // grouped by term alone, the bucket recomputed from it: postings
-    // still in the append partition fold into their md5 buckets
-    val stats =
-      try spark.read.parquet(lexPostingsPath)
-        .groupBy($"term")
-        .agg(count(lit(1)).as("df"), max($"tf").as("max_tf"))
-        .withColumn("bucket", termBucket($"term"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          // fully-compacted-away sidecar: empty stats, zero counter
-          fs.delete(new org.apache.hadoop.fs.Path(lexTermStatsPath), true)
-          writeLongAt(lexPcount, 0L)
-          return
-      }
-    stats.repartition(col("bucket"))
-      .sortWithinPartitions($"bucket", $"term")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(lexTermStatsPath)
+    writeLexSorted(readPostings().groupBy($"term")
+      .agg(count(lit(1)).as("df"), max($"tf").as("max_tf")), lexTermStatsPath, $"term")
     // total postings rows = Σ df over the stats just written (narrow)
-    val n = spark.read.parquet(lexTermStatsPath)
+    val n = readTermStats()
       .agg(coalesce(sum($"df"), lit(0L))).collect()(0).getLong(0)
     writeLongAt(lexPcount, n)
   }
 
-  /** Append a batch's partial stats (+ advance `_PCOUNT`) to the
-    * append partition, term-sorted in the aggregate's own partitioning
-    * ([[refreshLexTermStats]] folds them into md5 buckets). Skipped on
-    * a sidecar that predates termstats — partial-only stats would be
-    * wrong, and `_PCOUNT` staying behind keeps the gate closed until
-    * the next [[indexLexical]]/[[maintainLexical]] adopts. Any crash
-    * between the postings append and here leaves `_PCOUNT` ≠ footer
-    * rows — gate closed, serving falls back to the full scan. */
+  /** Append a batch's partial stats (+ advance `_PCOUNT`) beside the
+    * rest, term-sorted in the aggregate's own partitioning (a rewrite
+    * folds them in). Skipped on a sidecar that predates termstats —
+    * partial-only stats would be wrong, and `_PCOUNT` staying behind
+    * keeps the gate closed until the next
+    * [[indexLexical]]/[[maintainLexical]] adopts. Any crash between the
+    * postings append and here leaves `_PCOUNT` ≠ footer rows — gate
+    * closed, serving falls back to the full scan. */
   private def appendLexTermStats(posts: DataFrame, postRows: Long): Unit =
     if (existsPath(new org.apache.hadoop.fs.Path(lexTermStatsPath))) {
-      posts.groupBy($"term")
+      lexWriter(posts.groupBy($"term")
         .agg(count(lit(1)).as("df"), max($"tf").as("max_tf"))
-        .sortWithinPartitions($"term")
-        .write.mode(SaveMode.Append)
-        .parquet(lexAppendPath(lexTermStatsPath))
+        .sortWithinPartitions($"term"))
+        .mode(SaveMode.Append).parquet(lexTermStatsPath)
       writeLongAt(lexPcount, readLongAt(lexPcount) + postRows)
       lexGateCache = None
       lexStatsCache = (-1L, Map.empty)
     }
+
+  /** Test seam: shrink the job-B name-literal cap so the greedy
+    * per-query packing is exercisable at spec scale (production uses
+    * [[GraftVectorDB.InLiteralMax]]). */
+  private[graft] var lexNameCapOverride: Option[Int] = None
+
+  private var lexGateCache: Option[(Long, Boolean)] = None
 
   /** Whether MaxScore pruning may serve: stats must be EXACT, which
     * holds iff (a) termstats exists, (b) no tombstones (un-compacted
@@ -1013,12 +1012,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * postings footer rows (torn appends, legacy sidecars). The footer
     * walk is cached per sidecar generation; tombstone existence is
     * re-checked every call (deletes don't advance the generation). */
-  /** Test seam: shrink the job-B name-literal cap so the greedy
-    * per-query packing is exercisable at spec scale (production uses
-    * [[GraftVectorDB.InLiteralMax]]). */
-  private[graft] var lexNameCapOverride: Option[Int] = None
-
-  private var lexGateCache: Option[(Long, Boolean)] = None
   private[graft] def lexMaxScoreReady: Boolean =
     !existsPath(new org.apache.hadoop.fs.Path(lexTombPath)) &&
       existsPath(new org.apache.hadoop.fs.Path(lexTermStatsPath)) && {
@@ -1052,7 +1045,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     walk(root)
   }
 
-  /** (term → (df, max_tf)) for the query's terms: bucket+term-pruned
+  /** (term → (df, max_tf)) for the query's terms: term-pruned
     * stats scan, partial rows (base build + appends) folded. Exact
     * live values under the [[lexMaxScoreReady]] gate. Results cache
     * per sidecar generation (query vocabularies repeat — the common
@@ -1070,8 +1063,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val merged =
       if (missing.isEmpty) cached
       else {
-        val fetched = spark.read.parquet(lexTermStatsPath)
-          .filter(GraftVectorDB.lexBucketFilter(missing) && $"term".isin(missing: _*))
+        val fetched = readTermStats().filter(termIn(missing))
           .groupBy($"term").agg(sum($"df").as("df"), max($"max_tf").as("max_tf"))
           .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
         val m = cached ++ missing.map(t => t -> fetched.getOrElse(t, (0L, 0L)))
@@ -1142,17 +1134,17 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       pool: Int, location: Option[String],
       nDocs: Long, avgdl: Double): DataFrame = {
     val allTerms = qTerms.flatMap(_._2).distinct
-    // the term In literal is a scan-pruning assist (row-group stats on
-    // the term-sorted files) — the broadcast (q_id, term) join below
-    // filters exactly either way; a huge batch's term union would
+    // the term filter is a scan-pruning assist (page stats on the
+    // term-sorted files, see termIn) — the broadcast (q_id, term) join
+    // below filters exactly either way; a huge batch's term union would
     // bloat the plan as a literal (the InLiteralMax rule), so past it
-    // only the bucket partition pruning narrows the scan
+    // the scan reads every posting — a union that wide touches about
+    // every file's term range anyway
     val matched = liveByGen(
       readPostings()
-        .filter(GraftVectorDB.lexBucketFilter(allTerms))
         .transform(df =>
           if (allTerms.length <= GraftVectorDB.InLiteralMax)
-            df.filter($"term".isin(allTerms: _*))
+            df.filter(termIn(allTerms))
           else df),
       lexTombPath)
     val withDf = matched.withColumn("df", count(lit(1)).over(
@@ -1279,9 +1271,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .toDF("q_id", "term", "df", "q_loc")
     val rareTerms = aQ.flatMap(_._2).distinct
     // the gate holds (no tombstones), so the raw read IS the live set
-    val rScan = readPostings()
-      .filter(GraftVectorDB.lexBucketFilter(rareTerms))
-      .filter($"term".isin(rareTerms: _*))
+    val rScan = readPostings().filter(termIn(rareTerms))
     val anyLoc = qInfo.exists(_._4.isDefined)
     def qScoped(df: DataFrame): DataFrame =
       if (anyLoc) df.filter($"q_loc".isNull || $"doc_name".startsWith($"q_loc"))
@@ -1361,8 +1351,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
           .toDF("q_id", "term", "df", "q_loc")
         val cTerms = commonPruned.flatMap(_._3).distinct
         val cScan = readPostings()
-          .filter(GraftVectorDB.lexBucketFilter(cTerms))
-          .filter($"term".isin(cTerms: _*))
+          .filter(termIn(cTerms))
           .filter($"doc_name".isin(names: _*))
         val cc = qScoped(locScoped(cScan, location).join(broadcast(cQt), "term"))
           .select($"q_id", $"doc_name", $"page_num", $"content_type",
@@ -1396,7 +1385,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   }
 
   /** Single-query form of [[lexAllScanPlan]] (the spec's plan-pin
-    * handle: bucket partition-pruning + the pushed term filter). */
+    * handle: the pushed term filter ([[termIn]]), which skips every
+    * postings file, row group and page whose term min/max excludes the
+    * query's terms). */
   private[graft] def lexScanPlan(queryText: String, pool: Int,
       location: Option[String]): Option[DataFrame] =
     lexAllScanPlan(
@@ -1537,7 +1528,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   /** Batch twin of [[searchHybrid]] — N queries' hybrid results from a
     * CONSTANT number of scans: ONE pruned postings scan scores every
     * query's BM25 pool ([[lexAllScanPlan]]: the batch term set unions
-    * into the bucket/term pruning, per-query pools split by the
+    * into the term pruning, per-query pools split by the
     * bounded `TopKRows` aggregate), the vector pools come from the
     * batch ANN surface ([[searchAllAnn]], 1 scan; exact [[searchAll]]
     * pre-index), and at most ONE doc_name-pruned fetch covers every
@@ -3849,25 +3840,6 @@ object GraftVectorDB {
     kept.result()
   }
 
-  /** Lexical postings partition count: terms spread over this many
-    * md5 buckets so a query's postings lookup prunes to its own terms'
-    * partitions. 256 (the md5 first byte unsplit) keeps directory
-    * listings trivial; per-bucket data volume is what grows with the
-    * corpus, and within a bucket term-sorted row-group stats carry the
-    * pruning the rest of the way. Buckets are 0 until this; the one
-    * value past them is [[LexAppendBucket]]. */
-  val LexBuckets = 256
-
-  /** The lexical sidecar's append partition (`bucket=256`, outside the
-    * md5 range): each ingest lands its postings and term-stats partials
-    * here, (term, doc_name)-sorted, as one file per batch partition
-    * instead of one small file per touched md5 bucket. Compaction
-    * ([[GraftVectorDB.maintainLexical]]) and rebuilds fold it back into
-    * md5 buckets — the log-structured-merge split (O'Neil et al.,
-    * Acta Informatica 1996): small writes land in one place, the
-    * existing compaction moves them. */
-  private[graft] val LexAppendBucket: Int = LexBuckets
-
   /** Per-channel candidate pool depth feeding [[GraftVectorDB.searchHybrid]]'s
     * RRF fusion (the [[HybridSearch.PoolK]] operating point). */
   val HybridPool = 20
@@ -3879,6 +3851,23 @@ object GraftVectorDB {
     * the 128 MB default at a per-group overhead that is noise next to
     * a postings row's width. */
   val LexRowGroupBytes: Long = 8L * 1024 * 1024
+
+  /** Lexical sidecar page size in rows (parquet.page.row.count.limit;
+    * Parquet's default is 20,000): a pushed term equality skips every
+    * page whose column-index min/max excludes it, so a lookup reads
+    * about one page per term. On 200,000 postings a one-term lookup
+    * read 1,000 rows (20,000 at the default) and an 11-term one 10,000,
+    * where 256 md5-bucket directories read 728 and 8,644; past 256,000
+    * postings a page is the finer unit. */
+  private[operators] val LexPageRows = 1000
+
+  /** Most terms a lexical read pushes as per-term equalities (see
+    * `termIn`); a longer list pushes as its [min, max] range. The
+    * equality form's plan grows with the list: on 200,000 postings (4
+    * cores) a 2,048-term lookup took 1.2 s against 0.4 s as a range,
+    * and at 4,096 terms the filter outgrew whole-stage codegen, while a
+    * union of 500 scattered terms already touched 91% of the pages. */
+  private[operators] val LexExactTermsMax = 512
 
   /** MaxScore engages only when the skippable common-list mass clears
     * the pruned plan's fixed overhead. The pruned path costs ~4 small
@@ -3913,23 +3902,6 @@ object GraftVectorDB {
 
   /** RRF dampening constant (Cormack et al. 2009). */
   val RrfK: Int = HybridSearch.RrfK
-
-  /** The term's postings bucket — first md5 byte mod [[LexBuckets]],
-    * driver-reproducible (query-time routing needs no Spark job) and
-    * identical to the in-plan `conv(substring(md5(term),1,2),16,10)`
-    * form the postings writer uses. */
-  private[graft] def lexBucket(term: String): Int = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (md.digest(term.getBytes("UTF-8"))(0) & 0xFF) % LexBuckets
-  }
-
-  /** The one bucket router of every pruned lexical read (postings and
-    * termstats): a partition filter on the terms' md5 buckets plus the
-    * append partition, which holds un-compacted ingests of any term.
-    * Nothing else may prune on `bucket` (CommitProtocolGuardSpec
-    * holds that), or a read would silently skip the append partition. */
-  private[graft] def lexBucketFilter(terms: Seq[String]): Column =
-    col("bucket").isin((terms.map(lexBucket).distinct :+ LexAppendBucket): _*)
 
   /** Intra-batch verified-pair bound for [[GraftVectorDB.ingestNearDup]]'s
     * driver-side keep-smallest sweep (~32 MB of pair tuples — the same

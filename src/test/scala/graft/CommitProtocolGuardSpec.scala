@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `create(` other than the writer lease's exclusive create (mutual
   * exclusion, not a commit), fails this spec. Keeps src/main a library
   * with a fixed set of entry points: one-off measurement programs
-  * belong outside it. Keeps the lexical sidecar's bucket routing in
-  * one helper, so no read can prune away its append partition. */
+  * belong outside it. */
 class CommitProtocolGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -50,31 +49,5 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"a measurement program belongs outside src/main:\n${offenders.mkString("\n")}")
     assert(found.map(_._1).toSet == kept)
-  }
-
-  test("lexical bucket routing lives only in GraftVectorDB.lexBucketFilter") {
-    // a read that maps terms to buckets or prunes on `bucket` by
-    // itself would silently skip the append partition, which holds
-    // every un-compacted ingest
-    val routing = """\blexBucket\b|"bucket"\)?\s*\.(isin|isInCollection)\(""".r
-    val helper = "def lexBucketFilter("
-    val comment = """^\s*(\*|//|/\*)""".r
-    val scanned = walk(root).map(f => f -> lines(f))
-    val helperAt = scanned.flatMap { case (f, ls) =>
-      ls.filter(_._1.contains(helper)).map(l => (f, l._2)) }
-    val offenders = scanned.flatMap { case (f, ls) =>
-      // the helper's own lines: its def through the next blank line
-      val inHelper = helperAt.collect { case (hf, at) if hf == f =>
-        ls.drop(at).takeWhile(_._1.trim.nonEmpty).map(_._2) }.flatten.toSet
-      ls.collect {
-        case (line, i) if routing.findFirstIn(line).nonEmpty && !inHelper(i) &&
-            comment.findFirstIn(line).isEmpty && !line.contains("def lexBucket(") =>
-          s"${f.getPath}:${i + 1}: ${line.trim}"
-      }
-    }
-    assert(offenders.isEmpty,
-      s"route lexical bucket pruning through GraftVectorDB.lexBucketFilter:\n${
-        offenders.mkString("\n")}")
-    assert(helperAt.size == 1, s"expected one routing helper, found $helperAt")
   }
 }

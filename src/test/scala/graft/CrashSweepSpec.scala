@@ -37,23 +37,8 @@ import graft.operators.GraftVectorDB
   * extra ones, so for an ingest the gate input must lie between the
   * before and the fault-free one. Crashes inside Spark's own committer
   * (`_temporary`) are out of scope. */
-class CrashSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class CrashSweepSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  /** Above this many dirs Spark lists a table with a Spark job, one
-    * task per dir, and the lexical sidecar's bucket dirs are past the
-    * default (32); listing them on the driver lists the same files
-    * without a job. */
-  private val ListingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-  private var listingThreshold: Option[String] = None
-
-  override def beforeAll(): Unit = {
-    listingThreshold = spark.conf.getOption(ListingThreshold)
-    spark.conf.set(ListingThreshold, "100000")
-  }
-
-  override def afterAll(): Unit =
-    listingThreshold.fold(spark.conf.unset(ListingThreshold))(spark.conf.set(ListingThreshold, _))
 
   private val base = new java.io.File("target/crash_sweep").getAbsolutePath
   private val templateDir = s"$base/template"

@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{GraftVectorDB, HybridSearch, VectorStore}
 
 /** The lexical (BM25) sidecar + store-level hybrid serving: a
-  * persisted inverted index over the text channel's chunks (bucket-
-  * partitioned postings, the neardup sidecar protocol) fused with the
+  * persisted inverted index over the text channel's chunks (flat,
+  * term-sorted postings, the neardup sidecar protocol) fused with the
   * vector channel by RRF. The value-level ground truth is an
   * independent plain-Scala BM25/RRF model over the same store rows;
-  * the plan pins hold the scale shape (partition-pruned postings
-  * lookup). The operator-level vs_hybrid entry carries the DuckDB
+  * the plan pins and scan metrics hold the scale shape (a stats-pruned
+  * postings lookup). The operator-level vs_hybrid entry carries the DuckDB
   * oracle for the fusion algebra itself. */
 class LexicalHybridSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -78,20 +78,6 @@ class LexicalHybridSpec extends AnyFunSuite {
     }
   }
 
-  test("lexBucket: driver md5 routing is bit-identical to the in-plan bucket") {
-    // a mismatch is a SILENT lookup miss (the query prunes to the
-    // wrong partition), so pin the parity on adversarial terms
-    val terms = Seq("", "a", "alpha", "☃", "ümlaut", "日本語",
-      "x" * 1000, "ctl", "mixed☃ascii", "0", "ZZ")
-    val inPlan = terms.toDF("term")
-      .select((conv(substring(md5($"term"), 1, 2), 16, 10).cast("int")
-        % GraftVectorDB.LexBuckets).cast("int").as("b"))
-      .collect().map(_.getInt(0))
-    terms.map(graft.operators.GraftVectorDB.lexBucket).zip(inPlan)
-      .zipWithIndex.foreach { case ((local, plan), i) =>
-        assert(local == plan, s"term '${terms(i)}'") }
-  }
-
   test("hybrid lifecycle: BM25 parity, fusion parity, append, delete, compaction") {
     val dir = "target/vdb_lexical_spec"
     rmRf(new java.io.File(dir))
@@ -142,12 +128,10 @@ class LexicalHybridSpec extends AnyFunSuite {
     db.searchHybrid(query, 5).collect().foreach(r =>
       assert(r.getAs[String]("content_raw") != null))
 
-    // ---- plan pin: the postings lookup partition-prunes to the query
-    // terms' buckets and pushes the term filter ----
+    // ---- plan pin: the postings lookup pushes the term filter (what
+    // it skips is pinned by "term lookups read the pages ...") ----
     val plan = db.lexScanPlan(query, 5, None).get
       .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      s"bucket partition pruning missing:\n$plan")
     assert(plan.contains("PushedFilters") && plan.contains("term"),
       s"term filter not pushed:\n$plan")
 
@@ -650,9 +634,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     }
   }
 
-  private val appendDir = s"bucket=${GraftVectorDB.LexAppendBucket}"
-
-  test("an ingest lands one file per lexical sidecar, in the append partition") {
+  test("an ingest lands one file per lexical sidecar, flat beside the rest") {
     val dir = "target/vdb_lexical_append_files"
     rmRf(new java.io.File(dir))
     val db = new GraftVectorDB(spark, dir)
@@ -660,17 +642,18 @@ class LexicalHybridSpec extends AnyFunSuite {
     db.indexLexical()
     val subs = Seq("postings", "termstats")
     val before = subs.map(sub => parquetFiles(s"$dir/lexical/$sub"))
-    assert(before.forall(fs => fs.nonEmpty && !fs.exists(_.startsWith(appendDir))),
-      s"indexLexical writes md5 buckets only: $before")
-    // three docs whose terms spread over many md5 buckets
+    assert(before.forall(fs => fs.nonEmpty && fs.forall(!_.contains("/"))),
+      s"indexLexical writes one flat directory per sidecar: $before")
+    // three docs with many distinct terms
     db.ingest(docsFrame(Seq(
       21L -> "harbor lantern mooring quay bollard common",
       22L -> "orchard pruning grafting rootstock scion",
       23L -> "glacier moraine cirque arete serac common")))
     subs.zip(before).foreach { case (sub, was) =>
-      val added = parquetFiles(s"$dir/lexical/$sub") -- was
-      assert(added.size == 1 && added.head.startsWith(s"$appendDir/"),
-        s"$sub: one ingest must add one file, in the append partition: $added")
+      val now = parquetFiles(s"$dir/lexical/$sub")
+      val added = now -- was
+      assert(was.subsetOf(now) && added.size == 1 && !added.head.contains("/"),
+        s"$sub: one ingest must add one file, flat beside the rest: $added")
     }
     assert(db.lexMaxScoreReady, "the append keeps _PCOUNT equal to the footer rows")
     val hits = db.searchHybrid("glacier moraine", 3).collect()
@@ -697,7 +680,8 @@ class LexicalHybridSpec extends AnyFunSuite {
     db.ingest(docsFrame(Seq(
       1002L -> "another zanzibarq quokka stopzz stopzz",
       1003L -> "wombat numbat rarebeta"), source = "ap"))
-    assert(parquetFiles(s"$dir/lexical/postings").count(_.startsWith(s"$appendDir/")) == 2)
+    assert(spark.read.parquet(s"$dir/lexical/postings").filter($"doc_name".rlike("/doc_100[0-3]\\.txt$"))
+      .select(input_file_name()).distinct().count() == 2)
 
     val qt = Seq(
       (0L, Seq("zanzibarq", "stopzz"), Option.empty[String]),
@@ -737,7 +721,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     val incr = served()
     assert(!incr._3.exists(_._3.endsWith("/doc_150.txt")), "the deleted doc must not serve")
     db.indexLexical()
-    assert(parquetFiles(s"$dir/lexical/postings").forall(!_.startsWith(appendDir)))
+    assert(spark.read.parquet(s"$dir/lexical/postings").select($"gen").distinct().count() == 1)
     val rebuilt = served()
     assert(rebuilt == incr, s"rebuild != appended sidecar:\n $rebuilt\n $incr")
     // the rebuild reopens the MaxScore gate: its pruned plan ranks
@@ -746,7 +730,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     assert(maxScore() == incr._3, "MaxScore after the rebuild")
   }
 
-  test("maintainLexical folds the append partition back into md5 buckets") {
+  test("maintainLexical merges the ingests' files into one term-sorted rewrite") {
     val dir = "target/vdb_lexical_fold"
     rmRf(new java.io.File(dir))
     val db = new GraftVectorDB(spark, dir)
@@ -755,24 +739,132 @@ class LexicalHybridSpec extends AnyFunSuite {
     db.ingest(docsFrame(Seq(31L -> "harbor lantern mooring alpha common")))
     db.ingest(docsFrame(Seq(32L -> "glacier moraine beta delta common")))
     val subs = Seq("postings", "termstats")
-    subs.foreach(sub => assert(new java.io.File(s"$dir/lexical/$sub/$appendDir").isDirectory))
+    val written = subs.map(sub => parquetFiles(s"$dir/lexical/$sub"))
+    assert(written.forall(_.size >= 3), s"the build's files and one per ingest: $written")
     def served() = Seq("alpha beta common", "glacier harbor", "moraine delta")
       .map(q => db.searchHybrid(q, 5).collect().map(r =>
         (r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"), r.getAs[String]("doc_name"),
           r.getAs[String]("content_id"))).toSeq)
     val before = served()
     db.maintainLexical()
-    subs.foreach { sub =>
-      assert(!new java.io.File(s"$dir/lexical/$sub/$appendDir").exists,
-        s"$sub: compaction must leave no append partition")
-      val misplaced = spark.read.parquet(s"$dir/lexical/$sub")
-        .select($"term", $"bucket").distinct().collect()
-        .filter(r => GraftVectorDB.lexBucket(r.getString(0)) != r.getInt(1))
-      assert(misplaced.isEmpty, s"$sub: terms outside their md5 bucket: ${misplaced.toSeq}")
+    subs.zip(written).foreach { case (sub, was) =>
+      val now = parquetFiles(s"$dir/lexical/$sub")
+      assert(now.nonEmpty && now.forall(!_.contains("/")) && (now intersect was).isEmpty,
+        s"$sub: compaction must leave no file written before it: $now vs $was")
+      // the rewrite is range-partitioned by term: file term ranges are disjoint
+      val ranges = spark.read.parquet(s"$dir/lexical/$sub")
+        .groupBy(input_file_name()).agg(min($"term"), max($"term"))
+        .collect().map(r => (r.getString(1), r.getString(2))).sorted
+      ranges.zip(ranges.drop(1)).foreach { case ((_, hi), (lo, _)) =>
+        assert(hi < lo, s"$sub: overlapping file term ranges: ${ranges.toSeq}") }
     }
     assert(spark.read.parquet(s"$dir/lexical/postings")
       .filter($"term" === "moraine").count() == 1, "the appended postings survive")
     assert(db.lexMaxScoreReady)
     assert(served() == before, "compaction must not change results")
+  }
+
+  test("term lookups read the pages holding their terms, not the whole sidecar") {
+    val dir = "target/vdb_lexical_pruned"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    // 5,000 docs of 8 terms over a 10,000-term vocabulary: each term in
+    // 4 docs, so no term's postings dominate a file or a page
+    db.ingest(docsFrame((0 until 5000).map(i =>
+      i.toLong -> (0 until 8).map(j => f"t${(i * 8 + j) % 10000}%05d").mkString(" ")),
+      source = "pr"))
+    // AQE keeps at least 1 MB per coalesced partition by default, which
+    // would land this small sidecar in one file; a spec-scale minimum
+    // lets it keep one file per shuffle partition, as a large one does
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val restoreMin = spark.conf.getOption(minSize)
+    spark.conf.set(minSize, "1k")
+    try db.indexLexical()
+    finally restoreMin.fold(spark.conf.unset(minSize))(spark.conf.set(minSize, _))
+    val postings = s"$dir/lexical/postings"
+    val files = parquetFiles(postings)
+    val total = spark.read.parquet(postings).count()
+    assert(files.size >= 2 && files.forall(!_.contains("/")), s"one flat sidecar of files: $files")
+    assert(total == 40000)
+    // the established FileSourceScanExec traversal, under a non-adaptive plan
+    def rowsRead(lookup: org.apache.spark.sql.DataFrame): Long = {
+      val scans = lookup.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.metadata.get("Location").exists(_.contains("postings")) => f
+      }
+      assert(scans.size == 1, "one postings scan")
+      assert(scans.head.metadata.get("PushedFilters").exists(_.contains("term")),
+        s"term filter not pushed: ${scans.head.metadata}")
+      scans.head.metrics("numOutputRows").value
+    }
+    val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val lookup = db.lexScanPlan("t01234", 5, None).get
+      val hits = lookup.collect()
+      assert(hits.length == 4, s"t01234 is in 4 docs: ${hits.toSeq}")
+      val read = rowsRead(lookup)
+      info(s"one-term lookup read $read of $total postings rows over ${files.size} files")
+      assert(read > 0 && read * 10 <= total,
+        s"the lookup must skip the pages whose term range excludes it: read $read of $total")
+      // a batch of 11 queries whose terms spread over the whole
+      // vocabulary: their [min, max] range covers about every page, the
+      // terms themselves about one page each
+      val batch = (0 until 11).map(q => (q.toLong, Seq(f"t${q * 909}%05d"), Option.empty[String]))
+      val batchPlan = db.lexAllScanPlan(batch, 5, None, forceFull = true).get
+      val batchHits = batchPlan.collect()
+      assert(batchHits.length == 44, s"each term is in 4 docs: ${batchHits.length}")
+      val batchRead = rowsRead(batchPlan)
+      info(s"11-term batch read $batchRead of $total postings rows")
+      assert(batchRead > 0 && batchRead * 2 <= total,
+        s"the batch must read only the pages holding its terms: read $batchRead of $total")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", restoreAqe)
+  }
+
+  test("a sidecar in the md5-bucket layout serves, then goes flat before an ingest lands") {
+    val dir = "target/vdb_lexical_bucket_layout"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingest(docsFrame(corpus))
+    db.indexLexical()
+    db.ingest(docsFrame(Seq(41L -> "harbor lantern mooring alpha common")))
+    def served(d: GraftVectorDB) = Seq("alpha beta common", "harbor lantern", "sailing ships")
+      .map(q => d.searchHybrid(q, 5).collect().map(r =>
+        (r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"), r.getAs[String]("doc_name"),
+          r.getAs[String]("content_id"))).toSeq)
+    val want = served(db)
+    // the layout as earlier versions wrote it: every row under
+    // bucket=<first md5 byte of its term>, an ingest's postings in the
+    // append partition bucket=256
+    val md5Bucket = (conv(substring(md5($"term"), 1, 2), 16, 10).cast("int") % 256).cast("int")
+    Seq("postings", "termstats").foreach { sub =>
+      val live = s"$dir/lexical/$sub"
+      val copy = s"$dir/${sub}_copy"
+      spark.read.parquet(live).write.parquet(copy)
+      rmRf(new java.io.File(live))
+      spark.read.parquet(copy)
+        .withColumn("bucket",
+          if (sub == "postings") when($"doc_name".endsWith("/doc_41.txt"), 256).otherwise(md5Bucket)
+          else md5Bucket)
+        .write.partitionBy("bucket").parquet(live)
+      rmRf(new java.io.File(copy))
+    }
+    def bucketDirs(sub: String) = new java.io.File(s"$dir/lexical/$sub").listFiles()
+      .map(_.getName).filter(_.startsWith("bucket=")).toSeq
+    assert(bucketDirs("postings").contains("bucket=256") && bucketDirs("termstats").nonEmpty)
+    // a reader serves the bucket layout as it is
+    assert(served(new GraftVectorDB(spark, dir)) == want, "the bucket layout must serve")
+    // a writer's first write rewrites it flat before its ingest lands
+    val writer = new GraftVectorDB(spark, dir)
+    writer.ingest(docsFrame(Seq(42L -> "glacier moraine cirque arete")))
+    assert(bucketDirs("postings").isEmpty && bucketDirs("termstats").isEmpty,
+      s"no bucket= directory may remain: ${bucketDirs("postings")} ${bucketDirs("termstats")}")
+    val hits = writer.searchHybrid("glacier moraine", 3).collect()
+    assert(hits.nonEmpty && hits.head.getAs[String]("doc_name").endsWith("/doc_42.txt"),
+      s"the new doc must surface lexically: ${hits.toSeq}")
+    assert(writer.lexMaxScoreReady)
+    val migrated = served(writer)
+    writer.indexLexical()
+    assert(served(writer) == migrated, "the migrated sidecar serves what a rebuild serves")
   }
 }
