@@ -192,7 +192,7 @@ object AnnIndex {
     * session/JVM, probe from any other (IvfStoreSpec proves results
     * identical to probing with the build-time frame). */
   def openIvfStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/_centroids")
+    readParts(spark, s"$path/_centroids")
 
   /** Search against a cell-partitioned store: the `cell isin probes`
     * filter prunes store partitions at the scan (no non-probed cell is
@@ -290,6 +290,27 @@ object AnnIndex {
       cells: Int = IvfCells): DataFrame =
     centroidsFromSample(vecsDf.sparkSession, sampleVectors(vecsDf, sortKey), cells)
 
+  /** Read the parquet part files of a table stored under a hidden
+    * (`_`- or `.`-prefixed) directory such as `_centroids` or
+    * `_codebooks`: the same rows as a read of the directory itself,
+    * without Spark's "All paths were ignored" warning for a root whose
+    * name it treats as hidden. */
+  private[graft] def readParts(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(visibleEntries(spark, dir, _.isFile): _*)
+
+  /** The entries of `dir` that a read of `dir` itself would take in
+    * (names not starting with `_` or `.`) and `keep` accepts, listed
+    * rather than globbed: Spark probes a single glob path as a literal
+    * file and logs a FileNotFoundException stack trace for it. */
+  private[graft] def visibleEntries(spark: SparkSession, dir: String,
+      keep: org.apache.hadoop.fs.FileStatus => Boolean): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(st => keep(st) && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath.toString)
+  }
+
   /** Persist / reopen PQ codebooks as a (m, k, cv) frame — the PQ twin
     * of the `_centroids` routing table: an index that only exists in
     * the building session's memory cannot serve a fresh session. */
@@ -302,7 +323,7 @@ object AnnIndex {
   }
 
   private[graft] def readCodebooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(path).collect()
+    readParts(spark, path).collect()
       .map(r => (r.getAs[Int]("m"), r.getAs[Int]("k"), r.getAs[Seq[Double]]("cv").toArray))
       .groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3))

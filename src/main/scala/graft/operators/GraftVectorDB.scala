@@ -165,19 +165,21 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * footer, permissions, transient FS error) must propagate —
     * swallowing it would silently disable ingest dedup and
     * double-ingest the batch. */
-  private def storeHashColumn: DataFrame =
-    try store.select($"file_hash")
+  private def storeHashColumn: DataFrame = {
+    val empty = Seq.empty[String].toDF("file_hash")
+    // a store never created is checked for, not read: a read of a
+    // missing path logs a FileNotFoundException stack trace first
+    if (!existsPath(new org.apache.hadoop.fs.Path(storePath))) empty
+    else try store.select($"file_hash")
     catch {
-      // PATH_NOT_FOUND: store never created. UNABLE_TO_INFER_SCHEMA:
-      // the path exists but holds no data files — the state a crashed
-      // first ingest leaves behind ("_temporary" only); both are the
-      // genuinely-empty store. Anything else (corrupt footer,
-      // permissions, transient FS) propagates.
+      // UNABLE_TO_INFER_SCHEMA: the path exists but holds no data
+      // files — the state a crashed first ingest leaves behind
+      // ("_temporary" only), the genuinely-empty store. Anything else
+      // (corrupt footer, permissions, transient FS) propagates.
       case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-             e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        Seq.empty[String].toDF("file_hash")
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
     }
+  }
 
   /** The not-yet-seen subset of a hashed batch frame. The store's hash
     * set is UNBOUNDED (it grows with every doc ever ingested) while
@@ -2264,10 +2266,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * a driver-local sample-fit routing table (AnnIndex.fitCentroids —
     * one bounded collect, no MLlib job chain) and rewritten
     * cell-partitioned WITH their search metadata, so an approximate
-    * search never joins back to the store. The routing table persists
-    * at `_centroids`, reopenable from any session. At 100 TB this is
-    * the batch index build: one full pass to route + write. Returns
-    * rows indexed.
+    * search never joins back to the store. Each cell is written as one
+    * doc_name-sorted run ([[writeCells]]): at most cells + P − 1 files
+    * for P shuffle partitions, so a probe opens about one file per
+    * probed cell. The routing table persists at `_centroids`,
+    * reopenable from any session. At 100 TB this is the batch index
+    * build: one full pass to route + write. Returns rows indexed.
     *
     * `geometry = "imi"` switches the routing table to the inverted
     * multi-index PRODUCT form ([[AnnIndex.imi]], Babenko & Lempitsky
@@ -2331,11 +2335,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // live
     recoverAnnBuild(_ == channel)
     val tmp = s"$storeDir/.ann_build_tmp_$channel"
-    // sorted by doc_name WITHIN each cell's files: parquet row-group
-    // min/max stats on doc_name then let a location-filtered ANN
-    // search skip row groups instead of sieving rows post-scan
-    indexed.sortWithinPartitions($"cell", $"doc_name")
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
+    writeCells(indexed, tmp, SaveMode.Overwrite)
     centroids.write.mode(SaveMode.Overwrite).parquet(s"$tmp/_centroids")
     // geometry marker rides the swap with the table it describes: a
     // reader never sees an imi table without the marker or vice versa
@@ -2352,7 +2352,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // in atomically with the index it describes. Scoped searches use
     // it to skip cells whose range excludes their prefix — probe
     // ranking AND escalation (see rankCellsScoped / eligibleCells).
-    val builtRanges = spark.read.parquet(tmp).groupBy($"cell")
+    val builtRanges = spark.read.option("basePath", tmp)
+      .parquet(AnnIndex.visibleEntries(spark, tmp, _.isDirectory): _*).groupBy($"cell")
       .agg(min($"doc_name").as("mn"), max($"doc_name").as("mx"))
       .collect().map(r => r.getAs[Int]("cell") ->
         (r.getAs[String]("mn"), r.getAs[String]("mx"))).toMap
@@ -2367,6 +2368,19 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     writeCounter(channel, "_BUILT", n)
     n
   }
+
+  /** Write index rows as one sorted run per cell — the only way
+    * [[buildAnnIndex]] and [[appendAnnIndex]] write them, the ANN twin
+    * of [[writeLexSorted]]. Range-partitioning on (cell, doc_name)
+    * gives every file one contiguous doc_name range of one cell, so a
+    * write of P shuffle partitions (after AQE's coalescing) lands at
+    * most cells + P − 1 files, and parquet's doc_name min/max stats let
+    * a location-filtered search skip row groups. The range sample
+    * costs one small extra job per write. */
+  private def writeCells(df: DataFrame, path: String, mode: SaveMode): Unit =
+    df.repartitionByRange($"cell", $"doc_name")
+      .sortWithinPartitions($"cell", $"doc_name")
+      .write.mode(mode).partitionBy("cell").parquet(path)
 
   /** Crash recovery for [[buildAnnIndex]]'s whole-index swaps of the
     * channels `channels` accepts ([[AtomicDir.recover]] over the store
@@ -2386,8 +2400,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   /** Incrementally extend the channel's ANN index with newly-ingested
     * VectorRecord rows: cells come from the PERSISTED routing table
     * and codes from the persisted codebooks (no refit — re-clustering
-    * belongs to a rebuild), appended as new cell-partitioned files
-    * with existing files untouched, so the job is O(|new rows|) no
+    * belongs to a rebuild), appended as one new sorted run per touched
+    * cell ([[writeCells]]: at most touched cells + P − 1 files) with
+    * existing files untouched, so the job is O(|new rows|) no
     * matter how large the index is — the ingest path that keeps a
     * 100 TB index maintainable between rebuilds (the store twin of
     * [[AnnIndex.appendIvfStore]]). Bumps the index generation stamp so
@@ -2453,10 +2468,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         }
         if (widened != cur) GraftVectorDB.writeDocRanges(fsA, cDirP, widened)
       }
-      // same doc_name-sorted layout as the build, so appended files
-      // keep the row-group-skipping property for location filters
-      indexed.sortWithinPartitions($"cell", $"doc_name")
-        .write.mode(SaveMode.Append).partitionBy("cell").parquet(annPath(channel))
+      // the build's layout: one sorted run per touched cell
+      writeCells(indexed, annPath(channel), SaveMode.Append)
       // drift accounting: appends route with BUILD-time centroids, so
       // cell geometry degrades as the appended fraction grows — past
       // the measured-safe bound (AnnAppendDriftSpec) the caller must
@@ -2545,14 +2558,16 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     annAppendFraction(channel) > GraftVectorDB.AppendRebuildFraction
 
   /** ANN-index maintenance — [[compact]]'s twin for the index files:
-    * [[appendAnnIndex]] adds a file-set per touched cell per
-    * micro-batch forever, and at 100 TB the accumulating small files
-    * are the operational killer (listing latency + one task per tiny
-    * file). Rewrites every cell holding more than `targetFiles`
-    * parquet files into `targetFiles` doc_name-sorted files (restoring
-    * the row-group-skipping layout appends fragment) via a dot-prefixed
-    * temp dir + atomic rename — O(touched cells): untouched cells'
-    * files are neither read nor moved. Search results are invariant
+    * [[appendAnnIndex]] adds a sorted run (about one file) per touched
+    * cell per micro-batch forever, and at 100 TB the accumulating
+    * small files are the operational killer (listing latency + one
+    * task per tiny file). It also brings an index written before
+    * [[writeCells]] (one file per input partition per cell) to the
+    * one-run-per-cell layout. Rewrites every cell holding more than
+    * `targetFiles` parquet files into `targetFiles` doc_name-sorted
+    * files (restoring the row-group-skipping layout appends fragment)
+    * via a dot-prefixed temp dir + atomic rename — O(touched cells):
+    * untouched cells' files are neither read nor moved. Search results are invariant
     * and the generation stamp bumps so every session's cached serving
     * frame re-lists files. Single-writer contract, same as compact().
     * Returns rows rewritten. */
@@ -3236,14 +3251,14 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
             require(tag.startsWith("imi:"),
               s"unknown ANN geometry marker '$tag' at $geomP")
             val k1 = tag.stripPrefix("imi:").toInt
-            val hb = spark.read.parquet(cDir.toString).collect()
+            val hb = AnnIndex.readParts(spark, cDir.toString).collect()
               .map(r => (r.getAs[Int]("m"), r.getAs[Int]("k"),
                 r.getAs[Seq[Double]]("cv").toArray))
               .groupBy(_._1).toArray.sortBy(_._1)
               .map(_._2.sortBy(_._2).map(_._3))
             (for (i <- hb(0).indices; j <- hb(1).indices)
               yield (i * k1 + j, hb(0)(i) ++ hb(1)(j))).toArray
-          case None => AnnIndex.routingBooks(spark.read.parquet(cDir.toString))
+          case None => AnnIndex.routingBooks(AnnIndex.readParts(spark, cDir.toString))
         }
         val books = GraftVectorDB.applySplits(baseBooks, splitOps)
         // an index persisted before PQ landed has no _codebooks —

@@ -359,6 +359,71 @@ class GraftVectorDBSpec extends AnyFunSuite {
     assert(pqHit.getAs[String]("doc_name") == "corpus/srcA/doc_999999.txt")
   }
 
+  /** The executed file scans of the ANN index while `body` runs. */
+  private def annIndexScans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    object walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        walk.collectWithSubqueries(qe.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.contains("ann_index")) => s
+        }.foreach(scans.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark) }
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(scans.iterator).asScala.toSeq
+  }
+
+  test("ANN index is one sorted run per cell: build, append and warm-scan file counts") {
+    assert(firstIngest > 0)
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{input_file_name, max, min}
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    db.buildAnnIndex(cells = 8)
+    def indexFiles: Set[String] = new java.io.File(db.annPath("text")).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("cell="))
+      .flatMap(_.listFiles()).map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val built = indexFiles
+    assert(built.size <= 8 + p - 1,
+      s"a build writes at most cells + P - 1 = ${8 + p - 1} files, wrote ${built.size}")
+    val fileRanges = spark.read.parquet(db.annPath("text"))
+      .groupBy($"cell", input_file_name().as("f"))
+      .agg(min($"doc_name").as("mn"), max($"doc_name").as("mx"))
+      .as[(Int, String, String, String)].collect()
+    fileRanges.groupBy(_._1).foreach { case (cell, fs) =>
+      val ranges = fs.map(f => (f._3, f._4)).sorted
+      ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
+        assert(a._2 < b._1, s"cell $cell: file doc_name ranges overlap: $a, $b")
+      }
+    }
+    // a warm probe opens about one file per probed cell
+    db.searchAnn("fast query join table", topN = 5, nProbe = 3).collect()
+    val scans = annIndexScans {
+      db.searchAnn("slow merge sort line", topN = 5, nProbe = 3).collect()
+    }
+    assert(scans.size == 1, s"one index scan per warm search, saw ${scans.size}")
+    val opened = scans.head.metrics("numFiles").value
+    assert(opened >= 3 && opened <= 3 + p - 1,
+      s"a 3-cell probe reads at most 3 + P - 1 = ${3 + p - 1} files, read $opened")
+    // a multi-doc append adds at most touched cells + P - 1 files
+    val docs = (1 to 12).map(k => (700000L + k,
+      s"layout pin doc $k ${Seq("fast join", "slow merge", "sort line", "hash table")(k % 4)}",
+      "en", s"src${k % 3}")).toDF("doc_id", "text", "lang", "source")
+    assert(db.appendAnnIndex(GraftVectorDB.pipeline(docs)) == 12)
+    val touched = spark.read.parquet(db.annPath("text"))
+      .filter($"doc_name".rlike("doc_7000[0-9]{2}\\.txt$"))
+      .select($"cell").distinct().count()
+    val added = (indexFiles -- built).size
+    assert(touched > 1, "the append should touch several cells")
+    assert(added <= touched + p - 1,
+      s"an append touching $touched cells adds at most ${touched + p - 1} files, added $added")
+  }
+
   test("location-filtered ANN == filtered exact search; filter pushed into the pruned scan") {
     assert(firstIngest > 0)
     db.buildAnnIndex(cells = 8)
