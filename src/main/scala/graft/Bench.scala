@@ -1,34 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // optional AQE reducer fan-out for scaling experiments (a
-      // global bump measured ~20% slower at sf0.1 — the corpus-scale
-      // aggregates that NEED size-based reducers scope it themselves,
-      // see CrawlPipeline.interleave's keeper)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS_X", "1").toInt).toString)
-      // 113 queries × 2 passes generate far more than the default 100
-      // codegen cache entries; evicted entries' classloaders become
-      // unreachable, so the isolation GC below unloads their JIT'd
-      // code and pass 2 pays Janino + C2 again for EVERY query
-      // (measured +20% suite wall at sf0.1). Static conf — must be set
-      // at session build. Sized to hold the whole suite (~15 codegen
-      // units/query × 113 × 2 forms), a few hundred MB of metaspace on
-      // an 8 GB driver.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietCheckpointNoise()
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-bench")
     // 1-minute load average BEFORE the warmup: a contended box inflates
     // every timing (round-3 driver file read 70 s where a quiet box
     // measures 42 s) — recording it lets round logs separate real
@@ -153,7 +128,7 @@ object Bench {
           // vs 133 s alone; at sf1 57.6 s vs 20.2 s with the GC).
           // Cache drop + leftover-block release + one full GC, all
           // OUTSIDE the timed region. The GC is safe for timing only
-          // together with the enlarged codegen cache above: with the
+          // together with GraftSession's enlarged codegen cache: with the
           // default 100-entry cache, evicted generated classes are
           // unloaded by this GC and every pass re-pays Janino + C2
           // (measured +20% suite wall at sf0.1). SPARK_GRAFT_NO_GC=1

@@ -136,13 +136,18 @@ object DocStreams {
   val MaxIntraPairs = 2000000
 
   private def readOrEmpty(spark: SparkSession, path: String,
-      empty: => DataFrame): DataFrame =
-    try spark.read.parquet(path)
+      empty: => DataFrame): DataFrame = {
+    // a dir not landed yet is checked for, not read: a read of a
+    // missing path logs a FileNotFoundException stack trace first
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) empty
+    else try spark.read.parquet(path)
     catch {
+      // the path exists but holds no data files yet
       case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-             e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
     }
+  }
 
   /** The lazy corpus-check frame behind [[curateNearDupBatch]]:
     * sidecar bands scanned against the BROADCAST batch bands, the
