@@ -30,6 +30,7 @@ import graft.util.AtomicDir
   */
 class GraftVectorDB(spark: SparkSession, storeDir: String) {
   import spark.implicits._
+  import GraftVectorDB.locScoped
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftVectorDB])
 
@@ -135,9 +136,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Every area's crash recovery ([[AtomicDir.recover]]): store
     * partitions and files, each built index, both sidecars and the
-    * snapshot dir, a lexical sidecar still in the md5-bucket layout
-    * (rewritten flat, [[lexInBucketLayout]]), then a crashed ingest's
-    * missing entries ([[completeIngest]]). Runs once per instance, on
+    * snapshot dir, then a crashed ingest's missing entries
+    * ([[completeIngest]]). Runs once per instance, on
     * its first write; each area's own recovery also runs on entry to
     * the ops that rewrite it. */
   private def recover(): Unit = {
@@ -145,9 +145,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     recoverAnnBuild(_ => true)
     channelNames.map(ch => new org.apache.hadoop.fs.Path(annPath(ch)))
       .filter(existsPath).foreach(p => recoverAnnIndex(fsOf(p), p))
-    recoverLexical()
-    if (lexInBucketLayout) maintainLexical()
-    recoverNearDup()
+    lexical.recover()
+    nearDup.recover()
     Seq(storeDir -> "_INGEST", s"$storeDir/_snapshots" -> "manifest.v").foreach {
       case (d, name) =>
         val dir = new org.apache.hadoop.fs.Path(d)
@@ -258,8 +257,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
           // buildAnnIndex picks these rows up from the store
         }
         // lexical sidecar rides every ingest once built (fail-open:
-        // after the store write — see appendLexical)
-        if (lexicalIndexed) appendLexical(fresh)
+        // after the store write — see LexicalSidecar.append)
+        if (lexicalIndexed) lexical.append(channelFilter(fresh, "text"))
         fsOf(marker).delete(marker, false)
       }
     } finally Tables.release(fresh) // a failed write must not pin the batch
@@ -291,11 +290,11 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     if (lexicalIndexed) {
       val chunk = Seq("doc_name", "page_num", "content_type", "content_id")
       val missing = Tables.materialize(channelFilter(store, "text").join(
-        liveByGen(readPostings(), lexTombPath).select(chunk.map(col): _*),
+        lexical.livePostings().select(chunk.map(col): _*),
         chunk, "left_anti"))
-      try if (!missing.isEmpty) appendLexical(missing)
+      try if (!missing.isEmpty) lexical.append(missing)
       finally Tables.release(missing)
-      refreshLexStats()
+      lexical.refreshStats()
     }
     fsOf(marker).delete(marker, false)
   }
@@ -362,144 +361,30 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  // ─────────── near-dup ingest gate (persisted MinHash sidecar) ───────────
+  // ─────────── sidecars: near-dup gate and lexical (BM25) index ───────────
 
-  /** Root of the near-dup sidecar — the store-integrated form of
-    * [[Dedup.incrementalPairs]]: `bands` (doc_name, band, bkey) routes
-    * an incoming batch to candidate docs via the MinHash band
-    * equi-join, `sets` (doc_name, shh) holds each indexed doc's
-    * xxhash64-compressed shingle set for exact verification of the
-    * collision residue, `tombstones` (doc_name) marks deleted docs
-    * until [[maintainNearDup]] compacts them out. The reference's
-    * skip-if-hash-seen ingest check (vector_db.py:420-434) generalized
-    * from exact to NEAR duplicates, at O(new) per batch. */
-  def nearDupPath: String = s"$storeDir/neardup"
-  private def ndBandsPath = s"$nearDupPath/bands"
-  private def ndSetsPath = s"$nearDupPath/sets"
-  private def ndTombPath = s"$nearDupPath/tombstones"
+  /** The near-dup sidecar ([[NearDupSidecar]]: its files, schemas and
+    * gate) and the lexical one ([[LexicalSidecar]]: postings, term and
+    * corpus stats, the BM25 plans), both on the [[GenSidecar]]
+    * generation/tombstone protocol. The facade runs them under the
+    * writer lease and feeds them store rows. */
+  private[graft] val nearDup = new NearDupSidecar(spark, s"$storeDir/neardup")
+  private[graft] val lexical = new LexicalSidecar(spark, s"$storeDir/lexical")
+
+  /** Root of the near-dup sidecar ([[NearDupSidecar]]). */
+  def nearDupPath: String = nearDup.root
 
   /** Whether the near-dup sidecar exists ([[ingestNearDup]] creates it
     * on first use; a plain [[ingest]] never does). */
-  def nearDupIndexed: Boolean =
-    existsPath(new org.apache.hadoop.fs.Path(ndBandsPath))
+  def nearDupIndexed: Boolean = nearDup.indexed
 
-  /** Monotonic append-generation for a sidecar root: every entry is
-    * stamped with the generation of the append that wrote it, and a
-    * tombstone records the generation current AT DELETE — "deleted"
-    * therefore means "no entry NEWER than the tombstone", so
-    * re-ingesting a previously deleted doc just works: its fresh
-    * entries carry a newer generation and serve, while the stale
-    * pre-delete entries stay suppressed until compaction drops them
-    * physically. (A tombstone-REVOKING design would resurrect those
-    * stale entries beside the fresh ones — double-counted BM25 term
-    * frequencies, a gate verifying against superseded shingles.) */
-  private def nextGen(root: String, dirs: Seq[(String, String)]): Long = {
-    val g = curGen(root, dirs) + 1
-    // _GEN is CORRECTNESS-critical: a torn value degrading to 0 would
-    // stamp fresh entries BELOW live tombstones, suppressing correctly
-    // ingested docs and letting the next compaction delete them
-    val p = new org.apache.hadoop.fs.Path(root, "_GEN")
-    AtomicDir.write(fsOf(p), p, g.toString)
-    g
-  }
-
-  /** Current generation; a missing/torn `_GEN` SELF-HEALS from the
-    * sidecar data itself (max stamped generation across the listed
-    * (dir, genColumn) pairs) instead of degrading to 0 — the
-    * degrade-to-0 rule is fine for stats counters but would reset the
-    * generation clock here. */
-  private def curGen(root: String, dirs: Seq[(String, String)]): Long = {
-    val p = new org.apache.hadoop.fs.Path(root, "_GEN")
-    val stored = AtomicDir.read(fsOf(p), p).flatMap(_.trim.toLongOption)
-    stored.getOrElse {
-      val recovered = dirs.flatMap { case (dir, genCol) =>
-        if (!existsPath(new org.apache.hadoop.fs.Path(dir))) None
-        else try {
-          val df = spark.read.parquet(dir)
-          if (!df.columns.contains(genCol)) None // pre-generation rows = gen 0
-          else Option(df.agg(coalesce(max(col(genCol)), lit(0L)))
-            .collect()(0).getLong(0))
-        } catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-        }
-      }.foldLeft(0L)(math.max)
-      if (recovered > 0)
-        log.warn(s"$root/_GEN missing or torn - recovered generation $recovered " +
-          "from the sidecar data")
-      recovered
-    }
-  }
-
-  private def lexGenDirs: Seq[(String, String)] =
-    Seq(lexPostingsPath -> "gen", lexTombPath -> "tgen")
-  private def ndGenDirs: Seq[(String, String)] =
-    Seq(ndSetsPath -> "gen", ndBandsPath -> "gen", ndTombPath -> "tgen")
-
-  /** Sidecar entry read — mergeSchema, so a sidecar mixing
-    * pre-generation files with stamped appends deterministically
-    * surfaces `gen` (null on the legacy rows) instead of depending on
-    * which file's footer wins single-schema inference. Costs a footer
-    * merge job — fine on the ingest-gate paths; the per-query postings
-    * read uses [[readPostings]]' explicit schema instead. */
-  private def readSidecar(path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** The postings layout, declared: an EXPLICIT schema makes the
-    * serving read both deterministic on mixed pre/post-generation
-    * sidecars (missing `gen` reads as null → the documented gen-0
-    * case, no footer-inference lottery) and cheaper (no schema-merge
-    * job on the hot path). A sidecar still in the md5-bucket layout
-    * reads with the discovered `bucket` column appended, which no
-    * reader uses. */
-  private val lexPostingsSchema = new org.apache.spark.sql.types.StructType()
-    .add("doc_name", "string").add("page_num", "long")
-    .add("content_type", "string").add("content_id", "string")
-    .add("dl", "long").add("term", "string").add("tf", "long")
-    .add("gen", "long")
-
-  private def readPostings(): DataFrame =
-    spark.read.schema(lexPostingsSchema).parquet(lexPostingsPath)
-
-  private val lexTermStatsSchema = new org.apache.spark.sql.types.StructType()
-    .add("term", "string").add("df", "long").add("max_tf", "long")
-
-  private def readTermStats(): DataFrame =
-    spark.read.schema(lexTermStatsSchema).parquet(lexTermStatsPath)
-
-  /** The entries still live under the generation rule: no tombstone
-    * for the name at-or-after the entry's generation. Legacy rows
-    * (null `gen` from a pre-generation file under a merged schema)
-    * deterministically behave as the documented gen-0 case: any
-    * tombstone for the doc outranks them. Loud on a sidecar with NO
-    * gen column at all: the alternative is an UNRESOLVED_COLUMN error
-    * deep in a serving plan, or silently filtering every legacy row
-    * out. */
-  private def liveByGen(entries: DataFrame, tombPath: String): DataFrame =
-    if (!existsPath(new org.apache.hadoop.fs.Path(tombPath))) entries
-    else {
-      require(entries.columns.contains("gen"),
-        "sidecar predates generation stamps - rebuild it " +
-          "(indexLexical() / indexNearDup()) before deleting against it")
-      val t = spark.read.parquet(tombPath)
-        .groupBy($"doc_name").agg(max($"tgen").as("tgen"))
-      entries.withColumn("gen", coalesce($"gen", lit(0L)))
-        .join(t, Seq("doc_name"), "left_outer")
-        .filter($"tgen".isNull || $"gen" > $"tgen").drop("tgen")
-    }
-
-  /** (doc_id, doc_name, sh, shh) for a documents-shaped frame: the
-    * word-bigram shingle sets the Dedup operators use, the store's
-    * doc_name derivation (must match [[GraftVectorDB.pipeline]]'s so
-    * sidecar keys align with store rows), and xxhash64-compressed
-    * shingles for the sidecar — verification compares hashed sets,
-    * exact up to 64-bit collisions (~0 at any real shingle count). */
+  /** (doc_id, doc_name, sh, shh) of a documents-shaped frame, keyed by
+    * the store's doc_name derivation (must match
+    * [[GraftVectorDB.pipeline]]'s so sidecar keys align with store
+    * rows). */
   private def nearDupSets(docs: DataFrame): DataFrame =
-    Tables.spread(docs).select($"doc_id",
-        concat(lit("corpus/"), $"source", lit("/doc_"), $"doc_id",
-          lit(".txt")).as("doc_name"),
-        array_distinct(shingles(tokens($"text"), 2)).as("sh"))
-      .withColumn("shh", transform($"sh", x => xxhash64(x)))
+    NearDupSidecar.setsOf(Tables.spread(docs),
+      concat(lit("corpus/"), $"source", lit("/doc_"), $"doc_id", lit(".txt")))
 
   /** Near-dup-gated ingest: drop incoming docs that near-duplicate an
     * already-indexed doc (or an earlier doc of the same batch) at
@@ -510,10 +395,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * lifecycle form). Work per batch: O(batch) shingle/signature
     * compute, one broadcast-hash pass of the batch's band keys over
     * the (narrow) corpus band sidecar, exact verification of the
-    * band-collision residue only — the corpus is NEVER re-paired
-    * against itself, and candidate shingle sets are fetched by a
-    * pushed In filter when the candidate list is small (the
-    * batched-delete pattern).
+    * band-collision residue only ([[NearDupSidecar.gate]]).
     *
     * Crash-safety is FAIL-OPEN by construction: the sidecar append
     * runs after the store write, so any crash window leaves sidecar
@@ -526,87 +408,21 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * Returns (rows appended, skipped docs as (doc_id, dup_of, j_r,
     * reason)) where reason is "corpus" or "batch". The intra-batch
     * sweep keeps the smallest doc_id of each dup group (collected
-    * driver-side, bounded by [[GraftVectorDB.MaxIntraPairs]] verified
+    * driver-side, bounded by [[NearDupSidecar.MaxIntraPairs]] verified
     * pairs — the gate is for operational increments; run the corpus-
     * scale [[Dedup]] operators for an initial load). */
   def ingestNearDup(docs: DataFrame, indexChannels: Seq[String] = Nil,
       threshold: Double = Dedup.JaccardThreshold): (Long, DataFrame) =
     withWriterLease("ingestNearDup") {
-    recoverNearDup()
+    nearDup.recover()
     val sets = Tables.materialize(nearDupSets(docs))
-    // shingle-less docs (< 2 tokens) never enter the band space: their
-    // empty-set signatures are all identical, so they would band-collide
-    // with every other such doc (here and in the sidecar) for a verify
-    // that can never pass (jaccard ∅,∅ = null)
-    val newBands = Dedup.bandKeys(spark,
-        sets.filter(size($"sh") > 0).select($"doc_id", $"sh".as("s")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // 1) corpus check: candidates from the persisted band sidecar,
-      // minus generation-dead (deleted, not since re-added) entries
-      val corpusMatches: Seq[(Long, String, Double)] =
-        if (!nearDupIndexed) Seq.empty
-        else {
-          val cand = liveByGen(readSidecar(ndBandsPath), ndTombPath)
-            .join(broadcast(newBands), Seq("band", "bkey"))
-            .select($"doc_id", $"doc_name").distinct()
-          val names = cand.select($"doc_name").distinct()
-            .limit(GraftVectorDB.InLiteralMax + 1).collect().map(_.getString(0))
-          // the sets fetch must apply the SAME liveness rule: a
-          // re-added name holds both stale and live shingle rows, and
-          // verifying against the superseded content would misfire
-          val stored0 = liveByGen(readSidecar(ndSetsPath), ndTombPath)
-          val stored =
-            if (names.length <= GraftVectorDB.InLiteralMax)
-              stored0.filter($"doc_name".isin(names.toIndexedSeq: _*))
-            else stored0
-          cand.join(stored, "doc_name")
-            .join(broadcast(sets.select($"doc_id", $"shh".as("shn"))), "doc_id")
-            .select($"doc_id", $"doc_name", Dedup.jaccard($"shn", $"shh").as("j_r"))
-            .filter($"j_r" >= threshold)
-            .groupBy($"doc_id").agg(max(struct($"j_r", $"doc_name")).as("m"))
-            .select($"doc_id", $"m.doc_name", $"m.j_r")
-            .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-            .toSeq
-        }
-      val corpusSkip = corpusMatches.map(_._1).toSet
-      // 2) intra-batch: band self-join of the batch (batch-sized),
-      // exact verify, then a greedy keep-smallest sweep driver-side —
-      // corpus-skipped docs neither survive nor anchor a batch drop
-      val l = newBands.select($"band", $"bkey", $"doc_id".as("a_id"))
-      val r = newBands.select($"band", $"bkey", $"doc_id".as("b_id"))
-      val intraPairs = l.join(r, Seq("band", "bkey")).filter($"a_id" < $"b_id")
-        .select($"a_id", $"b_id").distinct()
-        .join(sets.select($"doc_id".as("a_id"), $"shh".as("sa")), "a_id")
-        .join(sets.select($"doc_id".as("b_id"), $"shh".as("sb")), "b_id")
-        .select($"a_id", $"b_id", Dedup.jaccard($"sa", $"sb").as("j_r"))
-        .filter($"j_r" >= threshold)
-        .collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getDouble(2)))
-      require(intraPairs.length <= GraftVectorDB.MaxIntraPairs,
-        s"ingestNearDup: ${intraPairs.length} intra-batch near-dup pairs " +
-          s"exceed the gate bound (${GraftVectorDB.MaxIntraPairs}) — this " +
-          "batch is a corpus-scale dedup job; run Dedup.minhashLsh/cluster " +
-          "on it first, then ingest the keepers")
-      val byB = intraPairs.groupBy(_._2)
-      val keptAnchors = scala.collection.mutable.Set[Long]()
-      val intraSkip = scala.collection.mutable.LinkedHashMap[Long, (Long, Double)]()
-      intraPairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted.foreach { id =>
-        if (!corpusSkip(id)) {
-          val anchored = byB.getOrElse(id, Array.empty)
-            .filter(p => keptAnchors(p._1))
-          if (anchored.nonEmpty) {
-            val best = anchored.maxBy(_._3)
-            intraSkip(id) = (best._1, best._3)
-          } else keptAnchors += id
-        }
-      }
-      // 3) ingest the survivors; freshIds (hash-new rows) materialize
-      // BEFORE the store write so the sidecar appends exactly the rows
-      // this batch actually added
-      val skipIds = corpusSkip ++ intraSkip.keySet
+    try nearDup.gate(sets, threshold, "ingestNearDup") { verdict =>
+      // freshIds (hash-new rows) materialize BEFORE the store write so
+      // the sidecar appends exactly the rows this batch actually added
+      val dropped = verdict.dropped
       val survivors =
-        if (skipIds.isEmpty) docs
-        else docs.join(broadcast(skipIds.toSeq.toDF("doc_id")),
+        if (dropped.isEmpty) docs
+        else docs.join(broadcast(dropped.toSeq.toDF("doc_id")),
           Seq("doc_id"), "left_anti")
       val batchHashes = Tables.materialize(
         Tables.spread(survivors).select($"doc_id", md5($"text").as("file_hash")))
@@ -616,62 +432,35 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         finally Tables.release(batchHashes)
       try {
         val n = ingest(survivors, indexChannels)
-        if (freshIds.count() > 0) {
-          // a fresh generation stamp makes re-added docs' entries
-          // NEWER than any tombstone from their deletion — they serve
-          // immediately while the stale rows stay suppressed
-          val g = nextGen(nearDupPath, ndGenDirs)
-          // fail-open ordering: sets before bands — a crash between the
-          // two leaves names with sets but no routing entry (no
-          // candidates, dup admitted later), never the reverse rejection
-          sets.join(broadcast(freshIds), "doc_id")
-            .select($"doc_name", $"shh").withColumn("gen", lit(g))
-            .sortWithinPartitions($"doc_name")
-            .write.mode(SaveMode.Append).parquet(ndSetsPath)
-          newBands.join(broadcast(freshIds), "doc_id")
-            .join(sets.select($"doc_id", $"doc_name"), "doc_id")
-            .select($"doc_name", $"band", $"bkey").withColumn("gen", lit(g))
-            .write.mode(SaveMode.Append).parquet(ndBandsPath)
-        }
+        if (freshIds.count() > 0) nearDup.append(sets, verdict.bands, freshIds)
         // names only for the batch-drop anchors (bounded by the pair
         // guard), not the whole batch
-        val anchorIds = intraSkip.values.map(_._1).toSet
+        val anchorIds = verdict.batch.map(_._2).toSet
         val nameOf =
           if (anchorIds.isEmpty) Map.empty[Long, String]
           else sets.join(broadcast(anchorIds.toSeq.toDF("doc_id")), "doc_id")
             .select($"doc_id", $"doc_name").collect()
             .map(r0 => r0.getLong(0) -> r0.getString(1)).toMap
-        val skipped = (corpusMatches.map { case (id, nm, j) => (id, nm, j, "corpus") } ++
-            intraSkip.toSeq.map { case (b, (a, j)) =>
+        val skipped = (verdict.corpus.map { case (id, nm, j) => (id, nm, j, "corpus") } ++
+            verdict.batch.map { case (b, a, j) =>
               (b, nameOf.getOrElse(a, a.toString), j, "batch") })
           .sortBy(_._1).toDF("doc_id", "dup_of", "j_r", "reason")
         (n, skipped)
       } finally Tables.release(freshIds)
-    } finally {
-      newBands.unpersist(blocking = false)
-      Tables.release(sets)
-    }
+    } finally Tables.release(sets)
   }
 
   /** Adopt the gate on an EXISTING store: index `docs`' signatures
     * into the sidecar WITHOUT ingesting them (they are assumed already
     * stored — the caller supplies the original documents frame, since
-    * chunked store rows don't reconstruct doc text). One corpus pass,
-    * no joins (band keys re-key by doc_name directly); after it every
-    * [[ingestNearDup]] batch checks against the full corpus. */
+    * chunked store rows don't reconstruct doc text). One corpus pass;
+    * after it every [[ingestNearDup]] batch checks against the full
+    * corpus. */
   def indexNearDup(docs: DataFrame): Long = withWriterLease("indexNearDup") {
-    recoverNearDup()
+    nearDup.recover()
     val sets = Tables.materialize(nearDupSets(docs))
     try {
-      val g = nextGen(nearDupPath, ndGenDirs)
-      sets.select($"doc_name", $"shh").withColumn("gen", lit(g))
-        .sortWithinPartitions($"doc_name")
-        .write.mode(SaveMode.Append).parquet(ndSetsPath)
-      // shingle-less docs stay out of the band space (see ingestNearDup)
-      Dedup.bandKeys(spark, sets.filter(size($"sh") > 0)
-          .select($"doc_name".as("doc_id"), $"sh".as("s")))
-        .toDF("doc_name", "band", "bkey").withColumn("gen", lit(g))
-        .write.mode(SaveMode.Append).parquet(ndBandsPath)
+      nearDup.index(sets)
       sets.count()
     } finally Tables.release(sets)
   }
@@ -679,701 +468,42 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   /** Compact the near-dup sidecar: drop tombstoned docs from both
     * tables, rewrite each as `targetFiles` files (streaming-gate use
     * appends a file-set per batch), swap each in, and clear the
-    * tombstones LAST — reads stay correct throughout (tombstone
-    * filtering applies at read time until the clear). */
+    * tombstones LAST. */
   def maintainNearDup(targetFiles: Int = 4): Unit =
     if (nearDupIndexed) withWriterLease("maintainNearDup") {
-      recoverNearDup()
-      val hasTomb = existsPath(new org.apache.hadoop.fs.Path(ndTombPath))
-      Seq(ndBandsPath -> Seq("band", "bkey"), ndSetsPath -> Seq("doc_name"))
-        .foreach { case (dir, sortCols) =>
-          val live = new org.apache.hadoop.fs.Path(dir)
-          val tmp = new org.apache.hadoop.fs.Path(s"$nearDupPath/.tmp_${live.getName}")
-          liveByGen(readSidecar(dir), ndTombPath).repartition(targetFiles)
-            .sortWithinPartitions(sortCols.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          AtomicDir.swap(fsOf(live), tmp, live,
-            new org.apache.hadoop.fs.Path(s"$nearDupPath/.old_${live.getName}"))
-        }
-      if (hasTomb) fsOf(new org.apache.hadoop.fs.Path(ndTombPath))
-        .delete(new org.apache.hadoop.fs.Path(ndTombPath), true)
-      spark.catalog.refreshByPath(nearDupPath)
+      nearDup.recover()
+      nearDup.maintain(targetFiles)
     }
 
-  /** Roll back a crashed [[maintainNearDup]] swap and drop staged
-    * residue ([[AtomicDir.recover]]). Called by every gate entrypoint. */
-  private def recoverNearDup(): Unit = {
-    val root = new org.apache.hadoop.fs.Path(nearDupPath)
-    AtomicDir.recover(fsOf(root), root, ".old_",
-      Seq(".tmp_", AtomicDir.stagedPrefix("_GEN")))
-  }
-
-  /** Tombstone doc_names in the near-dup sidecar (no-op without one).
-    * Written BEFORE the store rewrite by both delete paths: a crash
-    * between the two leaves content deleted from the sidecar's view
-    * but still in the store — re-running the delete converges; the
-    * reverse order would leave ghost sidecar entries silently
-    * rejecting re-ingest of taken-down-then-relicensed content. */
-  private def tombstoneNearDup(names: DataFrame): Unit =
-    if (nearDupIndexed)
-      names.select($"doc_name").distinct()
-        .withColumn("tgen", lit(curGen(nearDupPath, ndGenDirs)))
-        .write.mode(SaveMode.Append).parquet(ndTombPath)
-
-  // ─────────── lexical (BM25) sidecar + hybrid serving ───────────
-
-  /** Root of the lexical sidecar — a persisted inverted index over the
-    * text channel's chunks, the keyword half of [[searchHybrid]]:
-    * `postings` (term, tf, dl, doc_name, page_num, content_type,
-    * content_id, gen), one flat directory of files range-partitioned
-    * by term and (term, doc_name)-sorted within, so a query's pushed
-    * term filter skips every file and row group whose term min/max
-    * excludes it; `tombstones` (doc_name) marks deleted docs until
-    * [[maintainLexical]] compacts them out (the [[nearDupPath]]
-    * protocol). Each ingest adds its own sorted files to the same
-    * directory and a rewrite merges them — the log-structured-merge
-    * split (O'Neil et al., Acta Informatica 1996). Corpus stats
-    * (`_NDOCS` chunk count, `_SUMDL` total tokens) live as counter
-    * files and feed BM25's N/avgdl. */
-  def lexicalPath: String = s"$storeDir/lexical"
-  private def lexPostingsPath = s"$lexicalPath/postings"
-  private def lexTombPath = s"$lexicalPath/tombstones"
-  private def lexCounter(name: String) =
-    new org.apache.hadoop.fs.Path(lexicalPath, name)
+  /** Root of the lexical sidecar ([[LexicalSidecar]]). */
+  def lexicalPath: String = lexical.root
 
   /** Whether the lexical sidecar exists ([[indexLexical]] creates it;
     * once it does, [[ingestRecords]] keeps it current). */
-  def lexicalIndexed: Boolean =
-    existsPath(new org.apache.hadoop.fs.Path(lexPostingsPath)) || {
-      // crashed-maintainLexical window: the only copy sits at .old_
-      recoverLexical()
-      existsPath(new org.apache.hadoop.fs.Path(lexPostingsPath))
-    }
-
-  /** (term, tf, dl, + the store row key) for a records-shaped frame:
-    * one explode of the chunk text, tf and chunk length riding the
-    * same shuffle (the vs_hybrid/tx_tfidf shape). */
-  private def lexPostingsOf(records: DataFrame): DataFrame =
-    channelFilter(records, "text")
-      .select($"doc_name", $"page_num", $"content_type", $"content_id",
-        size(tokens($"content_raw")).cast("long").as("dl"),
-        explode(tokens($"content_raw")).as("term"))
-      .groupBy($"doc_name", $"page_num", $"content_type", $"content_id", $"term")
-      .agg(count(lit(1)).as("tf"), first($"dl").as("dl"))
+  def lexicalIndexed: Boolean = lexical.indexed
 
   /** Build (or rebuild) the lexical sidecar from the store's live text
-    * channel — one corpus explode + partial-agg groupBy, through
-    * [[rewriteLexical]] (a fresh build can't contain deleted rows, so
-    * its tombstones clear). Returns chunks indexed. */
+    * channel. Returns chunks indexed. */
   def indexLexical(): Long = withWriterLease("indexLexical") {
-    recoverLexical()
-    rewriteLexical(lexPostingsOf(store))
+    lexical.recover()
+    lexical.rebuild(channelFilter(store, "text"))
   }
-
-  /** Replace the live postings with `posts` — the one rewrite of
-    * [[indexLexical]] and [[maintainLexical]]: stamped at a fresh
-    * generation, written flat and sorted by (term, doc_name)
-    * ([[writeLexSorted]]), staged and swapped in (the old sidecar
-    * serves until the new one is live), corpus and term stats
-    * recomputed exactly, tombstones cleared LAST — the
-    * [[maintainNearDup]] protocol (reads stay correct throughout:
-    * tombstone filtering applies at query time until the clear). Only
-    * the declared columns are written, so a sidecar read in the
-    * md5-bucket layout comes out flat. Returns the chunk count. */
-  private def rewriteLexical(posts: DataFrame): Long = {
-    val staged = new org.apache.hadoop.fs.Path(s"$lexicalPath/.tmp_postings")
-    val live = new org.apache.hadoop.fs.Path(lexPostingsPath)
-    // BUMP the generation: another live instance serving this store
-    // keys its gate/stats caches on _GEN, and a compaction after
-    // deletes rewrites termstats and clears tombstones WITHOUT any
-    // append — same gen, no tombstones, _PCOUNT consistent — so a
-    // pre-delete warm cache over there would serve stale per-term df
-    // and silently diverge MaxScore ranks from the full plan. Bumping
-    // BEFORE the rewrite means a mid-compaction crash costs one
-    // spurious cross-instance cache refresh, never a stale serve.
-    // The rewritten rows re-stamp at the new generation so _GEN
-    // self-healing (max stamped gen) stays monotonic through it —
-    // safe, because every surviving row is live and later tombstones
-    // record the generation current at THEIR delete.
-    writeLexSorted(posts.withColumn("gen", lit(nextGen(lexicalPath, lexGenDirs)))
-      .select(lexPostingsSchema.fieldNames.map(col): _*),
-      staged.toString, $"term", $"doc_name")
-    AtomicDir.swap(fsOf(live), staged, live,
-      new org.apache.hadoop.fs.Path(s"$lexicalPath/.old_postings"))
-    spark.catalog.refreshByPath(lexicalPath)
-    val n = refreshLexStats()
-    val tomb = new org.apache.hadoop.fs.Path(lexTombPath)
-    if (existsPath(tomb)) fsOf(tomb).delete(tomb, true)
-    n
-  }
-
-  /** Write a lexical sidecar frame (postings or termstats) as one flat
-    * directory: range-partitioned by term, each file sorted by
-    * `order`, so every file, row group and page covers one term range
-    * that a pushed term filter ([[termIn]]) prunes on its min/max.
-    * AQE's partition coalescing sets the file count. */
-  private def writeLexSorted(df: DataFrame, path: String, order: Column*): Unit =
-    lexWriter(df.repartitionByRange($"term").sortWithinPartitions(order: _*))
-      .mode(SaveMode.Overwrite).parquet(path)
-
-  /** Every lexical sidecar write: index-sized row groups and pages
-    * ([[GraftVectorDB.LexRowGroupBytes]], [[GraftVectorDB.LexPageRows]]). */
-  private def lexWriter(df: DataFrame) =
-    df.write
-      .option("parquet.block.size", GraftVectorDB.LexRowGroupBytes.toString)
-      .option("parquet.page.row.count.limit", GraftVectorDB.LexPageRows.toString)
-
-  /** `term IN terms` in the form the Parquet reader prunes on exactly.
-    * Spark hands an IN list longer than
-    * `spark.sql.parquet.pushdown.inFilterThreshold` (10) to Parquet as
-    * its [min, max] range, which on term-sorted files spans about every
-    * page for a dozen scattered terms; an OR of lists that short is
-    * pushed as one equality per term, so only the pages holding a term
-    * are read. The whole list leads the conjunction, so a row outside
-    * it costs one hash probe, not the OR. Past
-    * [[GraftVectorDB.LexExactTermsMax]] terms the plain list serves. */
-  private def termIn(terms: Seq[String]): Column = {
-    val eqMax = spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
-    def anyOf(gs: Seq[Seq[String]]): Column =
-      if (gs.length == 1) $"term".isin(gs.head: _*)
-      else gs.splitAt(gs.length / 2) match { case (l, r) => anyOf(l) || anyOf(r) }
-    if (eqMax <= 0 || terms.length <= eqMax || terms.length > GraftVectorDB.LexExactTermsMax)
-      $"term".isin(terms: _*)
-    else $"term".isin(terms: _*) && anyOf(terms.grouped(eqMax).toSeq)
-  }
-
-  /** Whether the sidecar still holds a `bucket=` directory of the
-    * md5-bucket layout. Rows appended flat beside such directories
-    * would be skipped by partition discovery, so the writer's recovery
-    * rewrites such a sidecar once before any append. */
-  private def lexInBucketLayout: Boolean =
-    Seq(lexPostingsPath, lexTermStatsPath).map(new org.apache.hadoop.fs.Path(_))
-      .exists(p => existsPath(p) &&
-        fsOf(p).listStatus(p).exists(_.getPath.getName.startsWith("bucket=")))
-
-  /** Exact corpus stats (`_NDOCS`, `_SUMDL`) and term stats from the
-    * LIVE postings — one NARROW sidecar read, not a corpus
-    * scan+tokenize. Empty-safe: a fully-compacted-away sidecar (every
-    * doc deleted) holds one empty file, which reads as (0, 0) — nDocs
-    * = 0 is exactly what makes the serving path return an empty pool.
-    * Returns the chunk count. */
-  private def refreshLexStats(): Long = {
-    val (n, sumdl, _) = lexStatsOfPostings(readPostings())
-    writeLongAt(lexCounter("_NDOCS"), n)
-    writeLongAt(lexCounter("_SUMDL"), sumdl)
-    refreshLexTermStats()
-    n
-  }
-
-  /** (chunk count, total tokens, postings rows) folded from a postings
-    * frame in one aggregate — the per-chunk dl repeats on every
-    * posting, so fold to one row per chunk first. BOTH stats paths
-    * (append increments and rebuild/compaction refresh) derive from
-    * postings, so a chunk that produces no postings (e.g. null text)
-    * counts in neither and N stays invariant across maintenance
-    * boundaries. */
-  private def lexStatsOfPostings(posts: DataFrame): (Long, Long, Long) = {
-    val r = posts
-      .groupBy($"doc_name", $"page_num", $"content_type", $"content_id")
-      .agg(first($"dl").as("dl"), count(lit(1)).as("rows"))
-      .agg(count(lit(1)), coalesce(sum($"dl"), lit(0L)), coalesce(sum($"rows"), lit(0L)))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), r.getLong(2))
-  }
-
-  /** Keep the sidecar current with an ingested batch — called by
-    * [[ingestRecords]] AFTER the store write. The fresh generation
-    * stamp makes a re-ingested (previously deleted) doc's postings
-    * NEWER than its tombstone, so they serve immediately with no
-    * tombstone surgery (see [[nextGen]]). Counters advance BEFORE the
-    * postings land — a crash between over-counts N, which only
-    * dampens idf slightly; the reverse order could under-count into
-    * df > N, where the un-clamped idf would NaN. O(batch): the
-    * batch's own explode/groupBy and ONE counter aggregate, written
-    * straight into `postings` in the batch's own partitioning,
-    * (term, doc_name)-sorted so row-group stats prune its term and
-    * doc_name runs, until a rewrite merges it. */
-  private def appendLexical(records: DataFrame): Unit = {
-    val g = nextGen(lexicalPath, lexGenDirs)
-    val posts = Tables.materialize(
-      lexPostingsOf(records).withColumn("gen", lit(g)))
-    try {
-      val (n, sumdl, rows) = lexStatsOfPostings(posts)
-      writeLongAt(lexCounter("_NDOCS"), readLongAt(lexCounter("_NDOCS")) + n)
-      writeLongAt(lexCounter("_SUMDL"), readLongAt(lexCounter("_SUMDL")) + sumdl)
-      lexWriter(posts.sortWithinPartitions($"term", $"doc_name"))
-        .mode(SaveMode.Append).parquet(lexPostingsPath)
-      // impact stats ride the same materialized frame AFTER the
-      // postings land (a crash between leaves _PCOUNT behind the
-      // footer count — MaxScore gate closed, serving stays exact)
-      appendLexTermStats(posts, rows)
-    } finally Tables.release(posts)
-  }
-
-  /** Tombstone doc_names in the lexical sidecar (no-op without one).
-    * Same fail-open ordering as [[tombstoneNearDup]]: written BEFORE
-    * the store rewrite, so a crash between the two converges by
-    * re-running the delete. Corpus stats are NOT decremented here (the
-    * tombstoned rows' token counts would need a full postings scan);
-    * N/avgdl drift by the deleted fraction until [[maintainLexical]]
-    * recomputes them exactly — BM25 is smooth in both, and the drift
-    * is bounded by the un-compacted delete volume. */
-  private def tombstoneLexical(names: DataFrame): Unit =
-    if (lexicalIndexed)
-      names.select($"doc_name").distinct()
-        .withColumn("tgen", lit(curGen(lexicalPath, lexGenDirs)))
-        .write.mode(SaveMode.Append).parquet(lexTombPath)
 
   /** Compact the lexical sidecar: drop tombstoned docs and merge every
-    * ingest's files with the rest through [[rewriteLexical]], which
-    * leaves one flat, (term, doc_name)-sorted set of files. */
+    * ingest's files with the rest into one flat, (term, doc_name)-sorted
+    * set of files. Corpus stats drift by the deleted fraction between
+    * a delete and this call (tombstones do not decrement them). */
   def maintainLexical(): Unit =
     if (lexicalIndexed) withWriterLease("maintainLexical") {
-      recoverLexical()
-      rewriteLexical(liveByGen(readPostings(), lexTombPath))
+      lexical.recover()
+      lexical.maintain()
     }
-
-  /** Roll back a crashed [[indexLexical]]/[[maintainLexical]] swap or
-    * counter replacement and drop staged residue
-    * ([[AtomicDir.recover]]). */
-  private def recoverLexical(): Unit = {
-    val root = new org.apache.hadoop.fs.Path(lexicalPath)
-    AtomicDir.recover(fsOf(root), root, ".old_",
-      ".tmp_" +: Seq("_GEN", "_NDOCS", "_SUMDL", "_PCOUNT").map(AtomicDir.stagedPrefix))
-  }
-
-  // ─────────── MaxScore early termination (impact-ordered stats) ───────────
-
-  /** Per-term impact stats sidecar — `termstats` (term, df, max_tf),
-    * the max-impact store MaxScore-style early termination reads
-    * (Turtle & Flood 1995, public): df feeds the exact idf without a
-    * postings scan, max_tf the per-term contribution upper bound.
-    * Rewrites write it whole, term-sorted like `postings`; appends add
-    * the batch's partial rows beside it (query-time reads aggregate
-    * sum(df)/max(max_tf)). `_PCOUNT`
-    * (total postings rows at last consistent write) is the torn-append
-    * detector: the serving gate ([[lexMaxScoreReady]]) only trusts the
-    * stats when it matches the live postings' footer row count. */
-  private def lexTermStatsPath = s"$lexicalPath/termstats"
-  private def lexPcount = lexCounter("_PCOUNT")
-
-  /** Recompute `termstats` + `_PCOUNT` from the LIVE postings (the
-    * rebuild/compaction path, and the adoption path for a sidecar that
-    * predates the stats). `_PCOUNT` is deleted FIRST, so every crash
-    * window inside leaves the MaxScore gate closed (full-scan serving
-    * stays correct) instead of serving from torn stats. An emptied
-    * sidecar writes one empty file, whose Σ df reads 0. */
-  private def refreshLexTermStats(): Unit = {
-    fsOf(lexPcount).delete(lexPcount, false)
-    lexGateCache = None
-    // the stats CONTENT cache must reset with the gate cache: a
-    // compaction after deletes rewrites termstats WITHOUT advancing
-    // the generation (tombstone writes don't bump _GEN), and serving
-    // stale df here would under-bound idf — the exactness the gate
-    // exists to guarantee
-    lexStatsCache = (-1L, Map.empty)
-    writeLexSorted(readPostings().groupBy($"term")
-      .agg(count(lit(1)).as("df"), max($"tf").as("max_tf")), lexTermStatsPath, $"term")
-    // total postings rows = Σ df over the stats just written (narrow)
-    val n = readTermStats()
-      .agg(coalesce(sum($"df"), lit(0L))).collect()(0).getLong(0)
-    writeLongAt(lexPcount, n)
-  }
-
-  /** Append a batch's partial stats (+ advance `_PCOUNT`) beside the
-    * rest, term-sorted in the aggregate's own partitioning (a rewrite
-    * folds them in). Skipped on a sidecar that predates termstats —
-    * partial-only stats would be wrong, and `_PCOUNT` staying behind
-    * keeps the gate closed until the next
-    * [[indexLexical]]/[[maintainLexical]] adopts. Any crash between the
-    * postings append and here leaves `_PCOUNT` ≠ footer rows — gate
-    * closed, serving falls back to the full scan. */
-  private def appendLexTermStats(posts: DataFrame, postRows: Long): Unit =
-    if (existsPath(new org.apache.hadoop.fs.Path(lexTermStatsPath))) {
-      lexWriter(posts.groupBy($"term")
-        .agg(count(lit(1)).as("df"), max($"tf").as("max_tf"))
-        .sortWithinPartitions($"term"))
-        .mode(SaveMode.Append).parquet(lexTermStatsPath)
-      writeLongAt(lexPcount, readLongAt(lexPcount) + postRows)
-      lexGateCache = None
-      lexStatsCache = (-1L, Map.empty)
-    }
-
-  /** Test seam: shrink the job-B name-literal cap so the greedy
-    * per-query packing is exercisable at spec scale (production uses
-    * [[GraftVectorDB.InLiteralMax]]). */
-  private[graft] var lexNameCapOverride: Option[Int] = None
-
-  private var lexGateCache: Option[(Long, Boolean)] = None
-
-  /** Whether MaxScore pruning may serve: stats must be EXACT, which
-    * holds iff (a) termstats exists, (b) no tombstones (un-compacted
-    * deletes shrink live df below the stats — an UNDER-estimated idf
-    * bound could prune a true winner, so the gate closes until
-    * [[maintainLexical]] compacts), and (c) `_PCOUNT` matches the live
-    * postings footer rows (torn appends, legacy sidecars). The footer
-    * walk is cached per sidecar generation; tombstone existence is
-    * re-checked every call (deletes don't advance the generation). */
-  private[graft] def lexMaxScoreReady: Boolean =
-    !existsPath(new org.apache.hadoop.fs.Path(lexTombPath)) &&
-      existsPath(new org.apache.hadoop.fs.Path(lexTermStatsPath)) && {
-        val g = curGen(lexicalPath, lexGenDirs)
-        lexGateCache match {
-          case Some((cg, ok)) if cg == g => ok
-          case _ =>
-            val ok = readLongAt(lexPcount) == parquetRowsUnder(lexPostingsPath)
-            lexGateCache = Some((g, ok))
-            ok
-        }
-      }
-
-  /** Sum of parquet footer record counts under a directory tree — a
-    * driver metadata read, no Spark job. */
-  private def parquetRowsUnder(dir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return 0L
-    def walk(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).map { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        } else 0L
-      }.sum
-    walk(root)
-  }
-
-  /** (term → (df, max_tf)) for the query's terms: term-pruned
-    * stats scan, partial rows (base build + appends) folded. Exact
-    * live values under the [[lexMaxScoreReady]] gate. Results cache
-    * per sidecar generation (query vocabularies repeat — the common
-    * terms ARE the recurring ones), so a warm query costs no stats
-    * job; zero-df terms cache too (as absent from the returned map)
-    * or every query carrying a typo would re-scan. */
-  @volatile private var lexStatsCache: (Long, Map[String, (Long, Long)]) =
-    (-1L, Map.empty)
-  private def lexTermStats(terms: Seq[String]): Map[String, (Long, Long)] = {
-    val g = curGen(lexicalPath, lexGenDirs)
-    val cached =
-      if (lexStatsCache._1 == g) lexStatsCache._2
-      else Map.empty[String, (Long, Long)]
-    val missing = terms.filterNot(cached.contains)
-    val merged =
-      if (missing.isEmpty) cached
-      else {
-        val fetched = readTermStats().filter(termIn(missing))
-          .groupBy($"term").agg(sum($"df").as("df"), max($"max_tf").as("max_tf"))
-          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val m = cached ++ missing.map(t => t -> fetched.getOrElse(t, (0L, 0L)))
-        // bounded driver state: reset rather than grow past ~64k terms
-        lexStatsCache = (g, if (m.size > 65536) m.view.take(65536).toMap else m)
-        m
-      }
-    terms.flatMap(t => merged.get(t).filter(_._1 > 0).map(t -> _)).toMap
-  }
 
   /** The store-row identity the fusion joins channels on. */
   private type LexKey = (String, Long, String, String)
   private def hybridKeyOf(r: org.apache.spark.sql.Row): LexKey =
     (r.getAs[String]("doc_name"), r.getAs[Long]("page_num"),
       r.getAs[String]("content_type"), r.getAs[String]("content_id"))
-
-  /** The batch BM25 top-`pool` frame — ONE partition-pruned postings
-    * scan serves EVERY query of the batch (single-query serving goes
-    * through it too, so the two paths cannot diverge). df counts over
-    * the MATCHED postings are exact corpus-level document frequencies
-    * (every live posting of a query term is in the scan), computed
-    * pre-scope (stats are corpus-global; location and per-query q_loc
-    * filter CANDIDATES only) and post-tombstone (deleted docs neither
-    * score nor count). The per-query (q_id, term [, q_loc]) frame
-    * broadcasts into the matched residue; the per-query top-`pool` is
-    * the bounded [[graft.functions.expressions.TopKRows]] partial
-    * aggregate with the serving-wide (score desc, row_id) tie-break.
-    * Returns None when no query has terms or the sidecar is empty;
-    * output (q_id, lex_rnk, doc_name, page_num, content_type,
-    * content_id), collect = one Spark job. */
-  private[graft] def lexAllScanPlan(
-      qTerms: Seq[(Long, Seq[String], Option[String])],
-      pool: Int, location: Option[String]): Option[DataFrame] =
-    lexAllScanPlan(qTerms, pool, location, forceFull = false)
-
-  private[graft] def lexAllScanPlan(
-      qTerms: Seq[(Long, Seq[String], Option[String])],
-      pool: Int, location: Option[String],
-      forceFull: Boolean, forceMaxScore: Boolean = false): Option[DataFrame] = {
-    val nDocs = readLongAt(lexCounter("_NDOCS"))
-    val allTerms = qTerms.flatMap(_._2).distinct
-    if (allTerms.isEmpty || nDocs == 0) return None
-    val sumDl = readLongAt(lexCounter("_SUMDL"))
-    val avgdl = sumDl.toDouble / nDocs
-    // MaxScore early termination serves when the corpus is big enough
-    // for a "common" list to clear the engagement floor, its stats are
-    // provably exact, AND a query actually carries a common term whose
-    // skippable mass beats the pruned plan's fixed overhead; every
-    // other shape runs the one-scan full plan (small stores never even
-    // pay the stats-read job). `forceMaxScore` (specs/probes) bypasses
-    // the ECONOMIC floors only — never the exactness gate.
-    if (!forceFull && allTerms.length <= GraftVectorDB.InLiteralMax &&
-        (forceMaxScore || nDocs >= GraftVectorDB.LexMaxScoreMinDocs) &&
-        lexMaxScoreReady)
-      maxScoreScanPlan(qTerms, pool, location, nDocs, avgdl, forceMaxScore) match {
-        case Some(df) => return Some(df)
-        case None => ()
-      }
-    Some(lexFullScanPlan(qTerms, pool, location, nDocs, avgdl))
-  }
-
-  /** The one-scan BM25 plan (every matched posting of every query term
-    * is read and scored; df comes from a count window over the matched
-    * scan). Correct for EVERY sidecar state — the MaxScore path's
-    * fallback, and the ground truth its spec pins parity against. */
-  private def lexFullScanPlan(
-      qTerms: Seq[(Long, Seq[String], Option[String])],
-      pool: Int, location: Option[String],
-      nDocs: Long, avgdl: Double): DataFrame = {
-    val allTerms = qTerms.flatMap(_._2).distinct
-    // the term filter is a scan-pruning assist (page stats on the
-    // term-sorted files, see termIn) — the broadcast (q_id, term) join
-    // below filters exactly either way; a huge batch's term union would
-    // bloat the plan as a literal (the InLiteralMax rule), so past it
-    // the scan reads every posting — a union that wide touches about
-    // every file's term range anyway
-    val matched = liveByGen(
-      readPostings()
-        .transform(df =>
-          if (allTerms.length <= GraftVectorDB.InLiteralMax)
-            df.filter(termIn(allTerms))
-          else df),
-      lexTombPath)
-    val withDf = matched.withColumn("df", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy($"term")))
-    val qt = qTerms.flatMap { case (id, ts, loc) =>
-      ts.map(t => (id, t, loc.orNull)) }.toDF("q_id", "term", "q_loc")
-    val joined = locScoped(withDf, location).join(broadcast(qt), "term")
-    // per-query scope narrows the call-level one (both predicates
-    // hold) and filters BEFORE the bounded top-k, the q_loc contract
-    // every batch surface shares; an unscoped batch skips the filter
-    val anyLoc = qTerms.exists(_._3.isDefined)
-    val perQ =
-      if (anyLoc) joined.filter($"q_loc".isNull || $"doc_name".startsWith($"q_loc"))
-      else joined
-    perQ
-      .select($"q_id", $"doc_name", $"page_num", $"content_type", $"content_id",
-        bm25Contribution(nDocs, avgdl).as("c"))
-      .groupBy($"q_id", $"doc_name", $"page_num", $"content_type", $"content_id")
-      .agg(round(sum($"c"), 6).as("score"))
-      .transform(lexTopPool(pool))
-  }
-
-  /** The per-posting BM25 contribution, 6dp-rounded BEFORE the per-doc
-    * sum (the operator twin's accumulation-order-immunity grid) so
-    * pool ranks are deterministic across plans and runs; the idf
-    * numerator clamps at 0 — a stale over-appended df can exceed the
-    * counter N in a crash window, and log(≤0) would NaN the score and
-    * silently drop the chunk from the pool. Reads (tf, dl, df)
-    * columns; the full plan's df is a count window, the MaxScore
-    * plan's rides the broadcast query frame — same arithmetic. */
-  private def bm25Contribution(nDocs: Long, avgdl: Double): Column = {
-    val k1 = HybridSearch.K1
-    val b = HybridSearch.B
-    round(org.apache.spark.sql.functions.log(
-        lit(1.0) + greatest(lit(0.0), lit(nDocs.toDouble) - $"df" + 0.5)
-          / ($"df" + 0.5))
-      * $"tf" * lit(k1 + 1)
-      / ($"tf" + lit(k1) * (lit(1 - b) + lit(b) * $"dl" / avgdl)), 6)
-  }
-
-  /** Bounded per-query top-`pool` of a scored (q_id, key…, score)
-    * frame → (q_id, lex_rnk, key…) with the serving-wide (score desc,
-    * row_id) tie-break — the one pool definition both lexical plans
-    * share. */
-  private def lexTopPool(pool: Int)(scored: DataFrame): DataFrame =
-    scored
-      .select($"q_id", $"score",
-        xxhash64($"doc_name", $"content_type", $"content_id").as("row_id"),
-        struct($"doc_name", $"page_num", $"content_type", $"content_id").as("meta"))
-      .groupBy($"q_id")
-      .agg(graft.functions.expressions.TopKRows(
-        $"score", $"row_id", $"meta", pool).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("lex_rnk"),
-        $"col.payload.doc_name", $"col.payload.page_num",
-        $"col.payload.content_type", $"col.payload.content_id")
-
-  /** MaxScore early termination (Turtle & Flood 1995, public),
-    * re-shaped for a scan engine: a COMMON query term's posting list
-    * is linear in the corpus, so past ~10⁹ chunks scanning it per
-    * query is the serving wall (SURVEY §8 item 14). Per-term impact
-    * bounds from the stats sidecar cap what any posting can
-    * contribute, so:
-    *
-    *  1. job A fully scores the RARE (low-df) terms only — the scan
-    *     the full plan already does, minus the huge lists;
-    *  2. θ_q = the pool-th best partial score is a LOWER bound on the
-    *     pool-th best full score (contributions are non-negative);
-    *  3. a doc matching ONLY common terms scores ≤ Σ U_common; when
-    *     that sits below θ_q, no such doc can enter the pool — the
-    *     common lists need scoring ONLY for the rare-matched
-    *     candidates whose partial + Σ U_common reaches θ_q;
-    *  4. job B reads the common lists with the candidate doc_names
-    *     PUSHED into the scan — the postings files are doc_name-sorted
-    *     within each term run, so parquet row-group stats skip the
-    *     bulk of the list (the layout's block-skip seam, now used).
-    *
-    * Results are EXACTLY the full plan's (same contributions, same 6dp
-    * grid, same tie-break; candidates provably contain every pool
-    * member). Per-query fallbacks keep it total: no rare terms, θ
-    * undefined (fewer than pool rare matches in scope), Σ U_common ≥
-    * θ, or candidate fan-out past the In-literal cap → that query runs
-    * the full plan; returns None when NO query prunes. Cost: the stats
-    * read + job A + (when common terms exist) the name-pruned job B —
-    * each bounded by rare-df/candidate size, never by the common
-    * lists' length. */
-  private def maxScoreScanPlan(
-      qTerms: Seq[(Long, Seq[String], Option[String])],
-      pool: Int, location: Option[String],
-      nDocs: Long, avgdl: Double, force: Boolean): Option[DataFrame] = {
-    val k1 = HybridSearch.K1
-    val b = HybridSearch.B
-    val eps = 1e-6
-    val stats = lexTermStats(qTerms.flatMap(_._2).distinct)
-    def idfOf(df: Long): Double =
-      math.log(1.0 + math.max(0.0, nDocs.toDouble - df + 0.5) / (df + 0.5))
-    def ceil6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.CEILING).toDouble
-    // upper bound on ONE rounded contribution of the term: idf exact
-    // (gate-exact df), tf-norm at dl → 0 (avgdl-free) and tf = max_tf
-    // (monotone in tf), rounded UP onto the 6dp grid
-    def uBound(t: String): Double = {
-      val (df, maxTf) = stats(t)
-      ceil6(idfOf(df) * maxTf * (k1 + 1) / (maxTf + k1 * (1 - b)))
-    }
-    val commonCap = nDocs / GraftVectorDB.LexCommonDfFrac
-    val qInfo = qTerms.map { case (id, ts0, loc) =>
-      val ts = ts0.distinct.filter(stats.contains) // absent = no postings
-      val (common, rare) = ts.partition(t => stats(t)._1 > commonCap)
-      (id, rare, common, loc)
-    }
-    // no common term anywhere → the full plan's term-pruned scan is
-    // already bounded by the rare dfs; nothing to terminate early
-    if (!qInfo.exists(_._3.nonEmpty)) return None
-    // economic floor: the skippable mass must clear the pruned plan's
-    // fixed multi-job overhead (see LexMaxScoreMinCommonRows)
-    if (!force && qInfo.flatMap(_._3).distinct.map(stats(_)._1).sum <
-        GraftVectorDB.LexMaxScoreMinCommonRows) return None
-    val aQ = qInfo.filter(_._2.nonEmpty) // queries that can establish θ
-    if (aQ.isEmpty) return None // all-common queries: the answer IS the big scan
-    // ---- job A: full scoring over RARE terms only ----
-    val rareQt = aQ.flatMap { case (id, rs, _, loc) =>
-      rs.map(t => (id, t, stats(t)._1, loc.orNull)) }
-      .toDF("q_id", "term", "df", "q_loc")
-    val rareTerms = aQ.flatMap(_._2).distinct
-    // the gate holds (no tombstones), so the raw read IS the live set
-    val rScan = readPostings().filter(termIn(rareTerms))
-    val anyLoc = qInfo.exists(_._4.isDefined)
-    def qScoped(df: DataFrame): DataFrame =
-      if (anyLoc) df.filter($"q_loc".isNull || $"doc_name".startsWith($"q_loc"))
-      else df
-    val partials = Tables.materialize(
-      qScoped(locScoped(rScan, location).join(broadcast(rareQt), "term"))
-        .select($"q_id", $"doc_name", $"page_num", $"content_type", $"content_id",
-          bm25Contribution(nDocs, avgdl).as("c"))
-        .groupBy($"q_id", $"doc_name", $"page_num", $"content_type", $"content_id")
-        .agg(sum($"c").as("partial")))
-    val theta: Map[Long, Double] = partials
-      .select($"q_id", round($"partial", 6).as("s"),
-        xxhash64($"doc_name", $"content_type", $"content_id").as("row_id"),
-        struct($"doc_name").as("meta"))
-      .groupBy($"q_id")
-      .agg(graft.functions.expressions.TopKRows(
-        $"s", $"row_id", $"meta", pool).as("top"))
-      .select($"q_id", $"top").collect()
-      .flatMap { r =>
-        val top = r.getSeq[org.apache.spark.sql.Row](1)
-        if (top.length >= pool) Some(r.getLong(0) -> top(pool - 1).getDouble(0))
-        else None // under-filled scope: θ undefined, query falls back
-      }.toMap
-    val pc: Map[Long, Double] =
-      qInfo.map { case (id, _, cs, _) => id -> cs.map(uBound).sum }.toMap
-    // a query prunes iff θ exists and the common bounds sit below it
-    var prunedIds = aQ.map(_._1)
-      .filter(id => theta.contains(id) && pc(id) <= theta(id) - eps).toSet
-    if (prunedIds.isEmpty) { Tables.release(partials); return None }
-    val commonPruned0 = qInfo.filter(q => prunedIds.contains(q._1) && q._3.nonEmpty)
-    // candidate-name fan-out cap: job B pushes the name union as an IN
-    // literal, so it must fit InLiteralMax. Never abandon the WHOLE
-    // batch when the union is too wide — keep queries greedily
-    // (smallest per-query fan-out first) while the summed fan-outs fit
-    // the cap (Σ per-query counts ≥ |union|, so the kept union always
-    // fits); only the dropped queries take the full plan.
-    val (names: Seq[String], commonKeptIds: Set[Long]) =
-      if (commonPruned0.isEmpty) (Nil, Set.empty[Long])
-      else {
-        val candFrame = partials
-          .filter($"q_id".isin(commonPruned0.map(_._1): _*))
-          .join(broadcast(commonPruned0.map(q => (q._1, theta(q._1), pc(q._1)))
-            .toDF("q_id", "th", "pc")), "q_id")
-          .filter($"partial" + $"pc" >= $"th" - eps)
-        // one row per pruned query — bounded driver state
-        val fanout = candFrame.groupBy($"q_id")
-          .agg(countDistinct($"doc_name").as("n")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val cap = lexNameCapOverride.getOrElse(GraftVectorDB.InLiteralMax).toLong
-        val keptIds = GraftVectorDB.greedyNameBudget(
-          commonPruned0.map(q => q._1 -> fanout.getOrElse(q._1, 0L)), cap)
-        val nm =
-          if (keptIds.isEmpty) Nil
-          else candFrame.filter($"q_id".isin(keptIds.toSeq: _*))
-            .select($"doc_name").distinct()
-            .limit(cap.toInt + 1)
-            .collect().map(_.getString(0)).toSeq
-        if (nm.length > cap) (Nil, Set.empty[Long])
-        else (nm, keptIds)
-      }
-    // over-cap queries fall back to the full plan individually
-    prunedIds --= commonPruned0.map(_._1).filterNot(commonKeptIds)
-    if (prunedIds.isEmpty) { Tables.release(partials); return None }
-    val thetaDf = prunedIds.toSeq.sorted
-      .map(id => (id, theta(id), pc(id))).toDF("q_id", "th", "pc")
-    val cands = partials.join(broadcast(thetaDf), "q_id")
-      .filter($"partial" + $"pc" >= $"th" - eps)
-    val commonPruned = commonPruned0.filter(q => commonKeptIds(q._1))
-    val scored =
-      if (commonPruned.isEmpty)
-        cands.select($"q_id", $"doc_name", $"page_num", $"content_type",
-          $"content_id", round($"partial", 6).as("score"))
-      else {
-        // ---- job B: common lists, candidate-name-pruned ----
-        val cQt = commonPruned.flatMap { case (id, _, cs, loc) =>
-          cs.map(t => (id, t, stats(t)._1, loc.orNull)) }
-          .toDF("q_id", "term", "df", "q_loc")
-        val cTerms = commonPruned.flatMap(_._3).distinct
-        val cScan = readPostings()
-          .filter(termIn(cTerms))
-          .filter($"doc_name".isin(names: _*))
-        val cc = qScoped(locScoped(cScan, location).join(broadcast(cQt), "term"))
-          .select($"q_id", $"doc_name", $"page_num", $"content_type",
-            $"content_id", bm25Contribution(nDocs, avgdl).as("c"))
-          .groupBy($"q_id", $"doc_name", $"page_num", $"content_type",
-            $"content_id")
-          .agg(sum($"c").as("cc"))
-        cands.join(cc,
-            Seq("q_id", "doc_name", "page_num", "content_type", "content_id"),
-            "left_outer")
-          .select($"q_id", $"doc_name", $"page_num", $"content_type",
-            $"content_id",
-            round($"partial" + coalesce($"cc", lit(0.0)), 6).as("score"))
-      }
-    val prunedDf = scored.transform(lexTopPool(pool))
-    val fullQ = qTerms.filter(q => !prunedIds.contains(q._1))
-    Some(if (fullQ.isEmpty) prunedDf
-      else prunedDf.unionByName(
-        lexFullScanPlan(fullQ, pool, location, nDocs, avgdl)))
-  }
 
   /** Collect a one-shot serving frame and RELEASE any materialized
     * ancestors in its plan (the MaxScore path's rare-partials
@@ -1385,16 +515,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     Tables.release(df)
     rows
   }
-
-  /** Single-query form of [[lexAllScanPlan]] (the spec's plan-pin
-    * handle: the pushed term filter ([[termIn]]), which skips every
-    * postings file, row group and page whose term min/max excludes the
-    * query's terms). */
-  private[graft] def lexScanPlan(queryText: String, pool: Int,
-      location: Option[String]): Option[DataFrame] =
-    lexAllScanPlan(
-      Seq((0L, VectorStore.tokensLocal(queryText).distinct.toSeq, None)),
-      pool, location)
 
   /** RRF over two rank maps: the ONE fusion definition the single and
     * batch surfaces share. Returns EVERY fused candidate (≤ 2·pool —
@@ -1465,10 +585,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       nProbe: Int = AnnIndex.AutoNProbe,
       shortlist: Int = AnnIndex.AutoShortlist): DataFrame = {
     require(lexicalIndexed,
-      s"searchHybrid: no lexical sidecar at $lexPostingsPath - " +
+      s"searchHybrid: no lexical sidecar at $lexicalPath/postings - " +
         "run indexLexical() first (ingest keeps it current afterwards)")
     val lexRank: Map[LexKey, Int] =
-      lexScanPlan(queryText, pool, location).map(collectAndRelease)
+      lexical.scanPlan(queryText, pool, location).map(collectAndRelease)
         .getOrElse(Array.empty)
         .map(r => hybridKeyOf(r) -> r.getAs[Long]("lex_rnk").toInt).toMap
     val vecRows = (vector match {
@@ -1529,8 +649,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Batch twin of [[searchHybrid]] — N queries' hybrid results from a
     * CONSTANT number of scans: ONE pruned postings scan scores every
-    * query's BM25 pool ([[lexAllScanPlan]]: the batch term set unions
-    * into the term pruning, per-query pools split by the
+    * query's BM25 pool ([[LexicalSidecar.allScanPlan]]: the batch term
+    * set unions into the term pruning, per-query pools split by the
     * bounded `TopKRows` aggregate), the vector pools come from the
     * batch ANN surface ([[searchAllAnn]], 1 scan; exact [[searchAll]]
     * pre-index), and at most ONE doc_name-pruned fetch covers every
@@ -1553,7 +673,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       nProbe: Int = AnnIndex.AutoNProbe,
       shortlist: Int = AnnIndex.AutoShortlist): DataFrame = {
     require(lexicalIndexed,
-      s"searchAllHybrid: no lexical sidecar at $lexPostingsPath - " +
+      s"searchAllHybrid: no lexical sidecar at $lexicalPath/postings - " +
         "run indexLexical() first (ingest keeps it current afterwards)")
     val hasLoc = queries.columns.contains("q_loc")
     val qRows = queries.select(col("q_id").cast("long") +:
@@ -1571,7 +691,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val qInfo = qRows.map(r => (r.getLong(0), r.getString(1),
       if (hasLoc) Option(r.getString(2)) else None)).toSeq
     val lexByQ: Map[Long, Map[LexKey, Int]] =
-      lexAllScanPlan(qInfo.map { case (id, t, loc) =>
+      lexical.allScanPlan(qInfo.map { case (id, t, loc) =>
           (id, VectorStore.tokensLocal(t).distinct.toSeq, loc) }, pool, location)
         .map(collectAndRelease).getOrElse(Array.empty)
         .groupBy(_.getAs[Long]("q_id"))
@@ -1705,8 +825,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // (gated on tombstones actually existing — an untombstoned sidecar
     // would pay a full rewrite for nothing; fragmentation-driven
     // compaction stays an explicit maintainNearDup/maintainLexical call)
-    if (existsPath(new org.apache.hadoop.fs.Path(ndTombPath))) maintainNearDup()
-    if (existsPath(new org.apache.hadoop.fs.Path(lexTombPath))) maintainLexical()
+    if (nearDup.tombstoned) maintainNearDup()
+    if (lexical.tombstoned) maintainLexical()
     // maintenance exit = a consistent point: stamp the live file set so
     // an external copier has a manifest that cannot straddle a rewrite
     snapshot()
@@ -2371,7 +1491,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Write index rows as one sorted run per cell — the only way
     * [[buildAnnIndex]] and [[appendAnnIndex]] write them, the ANN twin
-    * of [[writeLexSorted]]. Range-partitioning on (cell, doc_name)
+    * of the lexical sidecar's sorted writes. Range-partitioning on (cell, doc_name)
     * gives every file one contiguous doc_name range of one cell, so a
     * write of P shuffle partitions (after AQE's coalescing) lands at
     * most cells + P − 1 files, and parquet's doc_name min/max stats let
@@ -2519,26 +1639,15 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def readCounter(channel: String, name: String): Long =
-    readLongAt(counterPath(channel, name))
+  private def readCounter(channel: String, name: String): Long = {
+    val p = counterPath(channel, name)
+    AtomicDir.readLong(fsOf(p), p)
+  }
 
-  private def writeCounter(channel: String, name: String, v: Long): Unit =
-    writeLongAt(counterPath(channel, name), v)
-
-  private def readLongAt(p: org.apache.hadoop.fs.Path): Long =
-    AtomicDir.read(fsOf(p), p).fold(0L) { s =>
-      // a counter torn by a pre-AtomicDir in-place write is
-      // BOOKKEEPING: degrade to 0 with a warning rather than poisoning
-      // every subsequent append with a NumberFormatException
-      s.trim.toLongOption.getOrElse {
-        log.warn(s"counter $p is unreadable (torn write?) - treating as 0; " +
-          "accounting resets at the next rebuild of its sidecar/index")
-        0L
-      }
-    }
-
-  private def writeLongAt(p: org.apache.hadoop.fs.Path, v: Long): Unit =
+  private def writeCounter(channel: String, name: String, v: Long): Unit = {
+    val p = counterPath(channel, name)
     AtomicDir.write(fsOf(p), p, v.toString)
+  }
 
   /** Appended rows since the last build, as a fraction of the built
     * corpus (0.0 for a fresh or never-built index). The drift gauge:
@@ -2878,9 +1987,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         s"(${GraftVectorDB.InLiteralMax}) — chunk the takedown batch")
     val names = docNames.distinct.sorted
     recoverCompact()
-    // sidecar tombstones FIRST (fail-open — see tombstoneNearDup)
-    tombstoneNearDup(names.toDF("doc_name"))
-    tombstoneLexical(names.toDF("doc_name"))
+    // sidecar tombstones FIRST (fail-open — see GenSidecar)
+    nearDup.tombstone(names.toDF("doc_name"))
+    lexical.tombstone(names.toDF("doc_name"))
     // ONE pruned scan finds the touched partitions + counts: doc_name
     // pushes to parquet, and the sorted layout makes it row-group-skipping
     val touched = store.filter($"doc_name".isin(names: _*))
@@ -3044,8 +2153,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         .select($"doc_name")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        tombstoneNearDup(victims)
-        tombstoneLexical(victims)
+        nearDup.tombstone(victims)
+        lexical.tombstone(victims)
       } finally victims.unpersist(blocking = false)
     }
     val fs = new org.apache.hadoop.fs.Path(storePath)
@@ -3528,13 +2637,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .limit(topN)
   }
 
-  /** get_search_range's folder-prefix scope over any frame that
-    * carries `doc_name` — shared by every exact AND approximate path
-    * so a filtered ANN search can never diverge from the filtered
-    * exact scan's scope. */
-  private def locScoped(df: DataFrame, location: Option[String]): DataFrame =
-    location.fold(df)(loc => df.filter($"doc_name".startsWith(loc)))
-
   private def searchAnnChannel(query: String, channel: String,
       topN: Int, nProbe: Int, location: Option[String] = None): DataFrame = {
     // ONE job: TakeOrderedAndProject over the pruned scan (the local
@@ -3762,10 +2864,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         xxhash64($"doc_name", $"content_type", $"content_id").as("row_id"))
       .orderBy($"sim_r".desc, $"row_id")
       .limit(topN)
-    // rank numbering runs over the already-limited ≤ topN rows — the
-    // unpartitioned window is a driver-sized frame, not a corpus sort
-    top.withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy($"sim_r".desc, $"row_id")).cast("long"))
+    // rank numbering over the ≤ topN rows: TakeOrderedAndProject emits
+    // them as ONE partition in rank order, so the row's id within it
+    // (0-based) is its rank — no window, no second sort of the scan
+    top.withColumn("rnk", monotonically_increasing_id() + 1)
       .select($"rnk", $"sim_r", $"doc_name", $"page_num",
         $"content_type", $"content_id", $"content_raw")
       .orderBy($"rnk")
@@ -3918,11 +3020,12 @@ object GraftVectorDB {
   /** RRF dampening constant (Cormack et al. 2009). */
   val RrfK: Int = HybridSearch.RrfK
 
-  /** Intra-batch verified-pair bound for [[GraftVectorDB.ingestNearDup]]'s
-    * driver-side keep-smallest sweep (~32 MB of pair tuples — the same
-    * budget as the connected-components hybrid finish). A batch past
-    * it is a corpus-scale dedup job, not an operational increment. */
-  private[operators] val MaxIntraPairs = 2000000
+  /** get_search_range's folder-prefix scope over any frame that
+    * carries `doc_name` — shared by every exact AND approximate path
+    * (and the lexical plans) so a filtered ANN search can never diverge
+    * from the filtered exact scan's scope. */
+  private[operators] def locScoped(df: DataFrame, location: Option[String]): DataFrame =
+    location.fold(df)(loc => df.filter(col("doc_name").startsWith(loc)))
 
   /** Per-call bound on the batch search surfaces: the probe-list /
     * ADC-table broadcasts and the driver-side re-rank state all grow

@@ -3,23 +3,23 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis
+import graft.operators.{Dedup, NearDupSidecar, TextAnalysis}
 
 /** Streaming curation — the documents-side twin of [[EventStreams]]:
   * the corpus arrives as an unbounded file stream (nightly crawl
   * drops, not a static table) and flows through the SAME gate the
   * batch pipeline runs.
   *
-  * The lambda split, stated explicitly: the STATELESS half of the
-  * curation gate (lang-id + quality floor, one narrow pass shared
-  * verbatim with `TextAnalysis.curate` via `scoreDocs`) and EXACT
-  * content-hash dedup run in-stream; near-dup LSH stays a batch
-  * compaction job over the accumulated store — banding needs the
-  * corpus-wide shingle frames, which no bounded stream state can hold.
-  * Cross-restart / cross-batch dedup is the store's content-hash
-  * anti-join (StreamingIngestSpec proves replay-idempotence); the
-  * in-stream `dropDuplicates` here only collapses duplicates within
-  * the stream itself.
+  * What runs in-stream: the STATELESS half of the curation gate
+  * (lang-id + quality floor, one narrow pass shared verbatim with
+  * `TextAnalysis.curate` via `scoreDocs`) and EXACT content-hash dedup
+  * ([[curateGate]]; the in-stream `dropDuplicates` only collapses
+  * duplicates within the stream itself, and cross-restart /
+  * cross-batch dedup is the store's content-hash anti-join,
+  * StreamingIngestSpec proves replay-idempotence). Near-dup LSH runs
+  * in-stream too, in [[curateStreamNearDup]]: no bounded stream state
+  * holds the corpus-wide shingle frames, so each micro-batch checks a
+  * persisted MinHash sidecar instead ([[NearDupSidecar]]).
   */
 object DocStreams {
 
@@ -101,17 +101,17 @@ object DocStreams {
     curateGate(graft.Tables.load(spark, dir, "documents"),
       gopherRules, c4Rules)
 
-  // ─────────── in-stream near-dup gate (round 11) ───────────
+  // ─────────── in-stream near-dup gate ───────────
   //
-  // The lambda split above deferred LSH near-dup to batch compaction;
-  // this closes it IN-STREAM with Dedup.incrementalPairs' per-batch
-  // shape: the micro-batch's band keys BROADCAST (bounded) against a
-  // persisted band sidecar (scanned, never shuffled, never broadcast),
-  // the collision residue verifies exactly (jaccard over xxhash64'd
-  // shingles), and only survivors land — O(new) per micro-batch.
-  // GraftVectorDB.ingestNearDup is the store-integrated big sibling
-  // (tombstones, generations, index routing); this is the standalone
-  // curation-pipeline form that writes a curated corpus directory.
+  // Dedup.incrementalPairs' per-batch shape, in-stream: the
+  // micro-batch's band keys BROADCAST (bounded) against a persisted
+  // band sidecar (scanned, never shuffled, never broadcast), the
+  // collision residue verifies exactly (jaccard over xxhash64'd
+  // shingles), and only survivors land — O(new) per micro-batch. The
+  // gate and the sidecar layout are GraftVectorDB.ingestNearDup's
+  // ([[NearDupSidecar]]), keyed by the doc_id as a string; this
+  // sidecar never sees a delete, and the survivors land in a curated
+  // corpus directory rather than a store.
 
   /** Curation stream SINK with the near-dup leg closed in-stream:
     * every micro-batch runs the stateless gate, first-wins exact
@@ -131,48 +131,8 @@ object DocStreams {
       .start()
 
   /** Intra-batch verified near-dup pairs past this are a corpus-scale
-    * dedup job, not an ingest batch — fail loudly (the
-    * GraftVectorDB.MaxIntraPairs discipline). */
-  val MaxIntraPairs = 2000000
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      empty: => DataFrame): DataFrame = {
-    // a dir not landed yet is checked for, not read: a read of a
-    // missing path logs a FileNotFoundException stack trace first
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) empty
-    else try spark.read.parquet(path)
-    catch {
-      // the path exists but holds no data files yet
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
-    }
-  }
-
-  /** The lazy corpus-check frame behind [[curateNearDupBatch]]:
-    * sidecar bands scanned against the BROADCAST batch bands, the
-    * collision residue verified exactly against the sidecar sets.
-    * Exposed so the boundedness pin can inspect the analyzed plan —
-    * every forced broadcast must be batch-derived; the sidecar (which
-    * grows with everything ever landed) is scanned, never shuffled
-    * on its own, never broadcast. */
-  private[graft] def sidecarDropPlan(spark: SparkSession, outDir: String,
-      bands: DataFrame, sets: DataFrame): DataFrame = {
-    import spark.implicits._
-    readOrEmpty(spark, s"$outDir/neardup/bands",
-        Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey"))
-      .join(broadcast(bands.withColumnRenamed("doc_id", "new_id")),
-        Seq("band", "bkey"))
-      .select($"new_id", $"doc_id".as("base_id")).distinct()
-      .join(broadcast(sets.select($"doc_id".as("new_id"), $"h".as("ha"))),
-        "new_id")
-      .join(readOrEmpty(spark, s"$outDir/neardup/sets",
-          Seq.empty[(Long, Seq[Long])].toDF("doc_id", "h"))
-        .select($"doc_id".as("base_id"), $"h".as("hb")), "base_id")
-      .select($"new_id", graft.operators.Dedup.jaccard($"ha", $"hb").as("j_r"))
-      .filter($"j_r" >= graft.operators.Dedup.JaccardThreshold)
-      .select($"new_id").distinct()
-  }
+    * dedup job, not an ingest batch — the gate fails loudly. */
+  val MaxIntraPairs: Int = NearDupSidecar.MaxIntraPairs
 
   /** One micro-batch through the full curation + near-dup gate;
     * returns rows landed. Also the BATCH twin — running it over a
@@ -181,11 +141,7 @@ object DocStreams {
   def curateNearDupBatch(batch: DataFrame, outDir: String): Long = {
     val spark = batch.sparkSession
     import spark.implicits._
-    import graft.functions.TextFunctions.{tokens, shingles}
-    import graft.operators.Dedup
     val docsPath = s"$outDir/docs"
-    val bandsPath = s"$outDir/neardup/bands"
-    val setsPath = s"$outDir/neardup/sets"
     // 1) stateless gate + first-wins exact dedup WITHIN the batch
     val gated = scoredGated(batch)
       .select($"doc_id", $"text", $"file_hash", $"lang_pred",
@@ -197,79 +153,38 @@ object DocStreams {
     // inverted exactly like the store ingest (GraftVectorDB
     // .freshAgainstStore): landed hashes scanned + semi-joined to the
     // BROADCAST batch hash set, never shuffled or broadcast themselves
-    val collisions = readOrEmpty(spark, docsPath,
-        Seq.empty[String].toDF("file_hash"))
-      .select($"file_hash")
+    // (a dir not landed yet is checked for, not read: a read of a
+    // missing path logs a FileNotFoundException stack trace first)
+    val landed = new org.apache.hadoop.fs.Path(docsPath)
+    val collisions = (
+        if (!landed.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(landed))
+          Seq.empty[String].toDF("file_hash")
+        else spark.read.schema("file_hash string").parquet(docsPath))
       .join(broadcast(gated.select($"file_hash").distinct()),
         Seq("file_hash"), "left_semi")
       .distinct()
     val fresh = graft.Tables.materialize(
       gated.join(broadcast(collisions), Seq("file_hash"), "left_anti"))
     try {
-      // 3) shingle sets + band keys of the fresh batch (shingle-less
-      // docs never enter the band space: empty-set signatures all
-      // collide for a verify that cannot pass)
-      val sets = graft.Tables.materialize(fresh.select($"doc_id",
-          array_distinct(shingles(tokens($"text"), 2)).as("s"))
-        .select($"doc_id", $"s", transform($"s", x => xxhash64(x)).as("h")))
-      try {
-        val bands = Dedup.bandKeys(spark,
-            sets.filter(size($"s") > 0).select($"doc_id", $"s"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // 4) corpus check: sidecar bands scanned, batch bands broadcast
-          val corpusDropped: Set[Long] =
-            sidecarDropPlan(spark, outDir, bands, sets)
-              .collect().map(_.getLong(0)).toSet
-          // 5) intra-batch: band self-join (batch-sized), exact verify,
-          // greedy keep-smallest sweep; corpus-dropped docs neither
-          // survive nor anchor a batch drop
-          val l = bands.select($"band", $"bkey", $"doc_id".as("a_id"))
-          val r = bands.select($"band", $"bkey", $"doc_id".as("b_id"))
-          val intraPairs = l.join(r, Seq("band", "bkey")).filter($"a_id" < $"b_id")
-            .select($"a_id", $"b_id").distinct()
-            .join(sets.select($"doc_id".as("a_id"), $"h".as("sa")), "a_id")
-            .join(sets.select($"doc_id".as("b_id"), $"h".as("sb")), "b_id")
-            .select($"a_id", $"b_id", Dedup.jaccard($"sa", $"sb").as("j_r"))
-            .filter($"j_r" >= Dedup.JaccardThreshold)
-            .select($"a_id", $"b_id")
-            .collect().map(r0 => (r0.getLong(0), r0.getLong(1)))
-          require(intraPairs.length <= MaxIntraPairs,
-            s"curateNearDupBatch: ${intraPairs.length} intra-batch near-dup " +
-              s"pairs exceed the gate bound ($MaxIntraPairs) — run " +
-              "Dedup.minhashLsh/cluster on this corpus first")
-          val neighbors = intraPairs.groupBy(_._2).map { case (b, ps) =>
-            b -> ps.map(_._1).toSet }
-          val kept = scala.collection.mutable.Set.empty[Long]
-          val intraDropped = scala.collection.mutable.Set.empty[Long]
-          (intraPairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted).foreach { id =>
-            if (!corpusDropped(id)) {
-              val anchored = neighbors.getOrElse(id, Set.empty)
-                .exists(a => kept(a))
-              if (anchored) intraDropped += id else kept += id
-            }
-          }
-          val dropped = corpusDropped ++ intraDropped
-          val survivors =
-            if (dropped.isEmpty) fresh
-            else fresh.join(broadcast(dropped.toSeq.toDF("doc_id")),
-              Seq("doc_id"), "left_anti")
-          val n = survivors.count()
-          if (n > 0) {
-            survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(docsPath)
-            // fail-open ordering (the ingestNearDup rule): sets before
-            // bands — a crash between the two leaves docs with sets but
-            // no routing entry (dup admitted later), never a rejection
-            // against half-indexed state
-            val keptIds = survivors.select($"doc_id")
-            sets.join(broadcast(keptIds), "doc_id").select($"doc_id", $"h")
-              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(setsPath)
-            bands.join(broadcast(keptIds), "doc_id")
-              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(bandsPath)
-          }
-          n
-        } finally bands.unpersist(blocking = false)
+      // 3) the near-dup gate ([[NearDupSidecar.gate]], the store's):
+      // corpus check against `outDir/neardup`, intra-batch sweep, then
+      // the survivors land and append their entries
+      val sidecar = new NearDupSidecar(spark, s"$outDir/neardup")
+      val sets = graft.Tables.materialize(
+        NearDupSidecar.setsOf(fresh, $"doc_id".cast("string")))
+      try sidecar.gate(sets, Dedup.JaccardThreshold, "curateNearDupBatch") { verdict =>
+        val dropped = verdict.dropped
+        val survivors =
+          if (dropped.isEmpty) fresh
+          else fresh.join(broadcast(dropped.toSeq.toDF("doc_id")),
+            Seq("doc_id"), "left_anti")
+        val n = survivors.count()
+        if (n > 0) {
+          survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
+            .parquet(docsPath)
+          sidecar.append(sets, verdict.bands, survivors.select($"doc_id"))
+        }
+        n
       } finally graft.Tables.release(sets)
     } finally graft.Tables.release(fresh)
   }

@@ -173,6 +173,19 @@ object AtomicDir {
     attempt(List(p, aside(p), p))
   }
 
+  /** The small file `p` as a counter: absent reads 0. A value torn by a
+    * pre-AtomicDir in-place write also reads 0, with a warning: counters
+    * are bookkeeping, and a NumberFormatException would poison every
+    * later append. */
+  def readLong(fs: FileSystem, p: Path): Long =
+    read(fs, p).fold(0L) { s =>
+      s.trim.toLongOption.getOrElse {
+        log.warn(s"counter $p is unreadable (torn write?) - treating as 0; " +
+          "accounting resets at the next rebuild of its sidecar/index")
+        0L
+      }
+    }
+
   private def versions(fs: FileSystem, dir: Path,
       prefix: String): (Seq[(Path, Int)], Seq[Path]) = {
     val names =

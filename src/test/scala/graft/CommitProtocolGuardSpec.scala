@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scans over src/main. Keeps `graft.util.AtomicDir` the store's
   * only commit protocol: a Hadoop `rename(` anywhere else, or a Hadoop
   * `create(` other than the writer lease's exclusive create (mutual
-  * exclusion, not a commit), fails this spec. Keeps src/main a library
-  * with a fixed set of entry points: one-off measurement programs
-  * belong outside it. */
+  * exclusion, not a commit), fails this spec. Keeps every store sidecar
+  * read on its declared schema (no footer inference, no schema-merge
+  * job). Keeps src/main a library with a fixed set of entry points:
+  * one-off measurement programs belong outside it. */
 class CommitProtocolGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -34,6 +35,23 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty,
       s"commit through graft.util.AtomicDir instead:\n${offenders.mkString("\n")}")
+  }
+
+  test("sidecar reads declare their schemas: no mergeSchema in src/main") {
+    val merge = walk(root).flatMap { f =>
+      lines(f).collect { case (line, i) if line.contains("mergeSchema") =>
+        s"${f.getPath}:${i + 1}: ${line.trim}" }
+    }
+    assert(merge.isEmpty, s"read with a declared schema instead:\n${merge.mkString("\n")}")
+    val sidecars = Seq("GenSidecar.scala", "NearDupSidecar.scala", "LexicalSidecar.scala")
+      .map(n => new java.io.File(root, s"graft/operators/$n"))
+    assert(sidecars.forall(_.isFile), s"sidecar components missing: ${sidecars.filterNot(_.isFile)}")
+    val reads = sidecars.flatMap(f => lines(f).collect {
+      case (line, i) if line.contains("spark.read") => (s"${f.getPath}:${i + 1}", line) })
+    assert(reads.nonEmpty, "the sidecar components read no Parquet?")
+    val inferred = reads.filterNot(_._2.contains(".schema("))
+    assert(inferred.isEmpty,
+      s"a sidecar read must pass its declared schema:\n${inferred.map(_._1).mkString("\n")}")
   }
 
   test("src/main has exactly the six kept entry points") {

@@ -130,7 +130,7 @@ class LexicalHybridSpec extends AnyFunSuite {
 
     // ---- plan pin: the postings lookup pushes the term filter (what
     // it skips is pinned by "term lookups read the pages ...") ----
-    val plan = db.lexScanPlan(query, 5, None).get
+    val plan = db.lexical.scanPlan(query, 5, None).get
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("term"),
       s"term filter not pushed:\n$plan")
@@ -248,6 +248,38 @@ class LexicalHybridSpec extends AnyFunSuite {
     db.maintainStore()
     assert(db.searchHybrid("quasar nebula", 3).collect()
       .exists(_.getAs[String]("doc_name") == name))
+  }
+
+  test("a deleted _GEN self-heals: the next append stamps above every stamped row and tombstone") {
+    val dir = "target/vdb_lexical_gen_heal"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingest(docsFrame(corpus.take(2)))
+    db.indexLexical()
+    db.ingest(docsFrame(Seq(77L -> "pulsar quasar lantern")))
+    val name = db.searchHybrid("pulsar quasar", 3).collect().head.getAs[String]("doc_name")
+    db.delete(Seq(name))
+    def stamps(sub: String, ddl: String, column: String): Seq[Long] =
+      spark.read.schema(ddl).parquet(s"$dir/lexical/$sub").select(column)
+        .collect().map(_.getLong(0)).toSeq
+    val rowGens = stamps("postings", "doc_name string, gen long", "gen")
+    val tombGens = stamps("tombstones", "doc_name string, tgen long", "tgen")
+    assert(rowGens.nonEmpty && tombGens.nonEmpty)
+    val highest = (rowGens ++ tombGens).max
+    assert(new java.io.File(s"$dir/lexical/_GEN").delete())
+    db.ingest(docsFrame(Seq(78L -> "meridian sextant azimuth")))
+    val fresh = spark.read.schema("doc_name string, gen long")
+      .parquet(s"$dir/lexical/postings").filter($"doc_name".endsWith("/doc_78.txt"))
+      .select("gen").distinct().collect().map(_.getLong(0)).toSeq
+    assert(fresh == Seq(highest + 1),
+      s"the append must stamp above every stamped row and tombstone ($highest): $fresh")
+    val gen = scala.io.Source.fromFile(s"$dir/lexical/_GEN")
+    try assert(gen.mkString.trim.toLong == highest + 1) finally gen.close()
+    // the deleted doc stays suppressed, the new one serves
+    assert(db.searchHybrid("pulsar quasar", 3).collect()
+      .forall(_.getAs[String]("doc_name") != name))
+    assert(db.searchHybrid("meridian sextant", 3).collect()
+      .head.getAs[String]("doc_name").endsWith("/doc_78.txt"))
   }
 
   test("deleting every doc then compacting leaves a servable empty sidecar") {
@@ -404,9 +436,9 @@ class LexicalHybridSpec extends AnyFunSuite {
     val qt = Seq((0L, Seq("rarealpha", "rarebeta", "stopzz"), Option.empty[String]))
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("lex_rnk"), r.getAs[String]("doc_name"))).toSeq
-    def pruned() = rowsOf(db.lexAllScanPlan(qt, 8, None,
+    def pruned() = rowsOf(db.lexical.allScanPlan(qt, 8, None,
       forceFull = false, forceMaxScore = true).get)
-    def full() = rowsOf(db.lexAllScanPlan(qt, 8, None, forceFull = true).get)
+    def full() = rowsOf(db.lexical.allScanPlan(qt, 8, None, forceFull = true).get)
     // warm the stats cache at the pre-delete dfs (alpha df 5 < beta 6
     // → alpha docs outrank beta docs)
     assert(pruned() == full())
@@ -414,7 +446,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     // order between the families flips
     db.deleteWhere(col("doc_name").rlike("/doc_1[345]\\.txt$"))
     db.maintainStore() // clears tombstones, rewrites termstats, bumps gen
-    assert(db.lexMaxScoreReady, "compaction must reopen the gate")
+    assert(db.lexical.maxScoreReady, "compaction must reopen the gate")
     assert(pruned() == full(),
       "post-compaction MaxScore must rank on LIVE stats, not the cached dfs")
   }
@@ -441,17 +473,17 @@ class LexicalHybridSpec extends AnyFunSuite {
     val qt = Seq((0L, Seq("rarealpha", "rarebeta", "stopzz"), Option.empty[String]))
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("lex_rnk"), r.getAs[String]("doc_name"))).toSeq
-    def prunedR() = rowsOf(reader.lexAllScanPlan(qt, 8, None,
+    def prunedR() = rowsOf(reader.lexical.allScanPlan(qt, 8, None,
       forceFull = false, forceMaxScore = true).get)
-    def fullR() = rowsOf(reader.lexAllScanPlan(qt, 8, None, forceFull = true).get)
+    def fullR() = rowsOf(reader.lexical.allScanPlan(qt, 8, None, forceFull = true).get)
     // warm the READER's gate + stats caches at the pre-delete dfs
-    assert(reader.lexMaxScoreReady)
+    assert(reader.lexical.maxScoreReady)
     assert(prunedR() == fullR())
     // the WRITER deletes 3 beta docs and compacts; the reader never
     // touched its own caches in between
     writer.deleteWhere(col("doc_name").rlike("/doc_1[345]\\.txt$"))
     writer.maintainStore()
-    assert(reader.lexMaxScoreReady, "compaction must reopen the reader's gate")
+    assert(reader.lexical.maxScoreReady, "compaction must reopen the reader's gate")
     assert(prunedR() == fullR(),
       "the second instance must rank on live stats after the writer compacts")
   }
@@ -480,7 +512,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     }
     db.ingest(docsFrame(docs, source = "nc"))
     db.indexLexical()
-    db.lexNameCapOverride = Some(8)
+    db.lexical.nameCapOverride = Some(8)
     val qt = Seq(
       (0L, Seq("zanzibarq", "stopzz"), Option.empty[String]),
       (1L, Seq("widefanq", "stopzz"), Option.empty[String]))
@@ -490,10 +522,10 @@ class LexicalHybridSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val pruned = db.lexAllScanPlan(qt, 3, None,
+      val pruned = db.lexical.allScanPlan(qt, 3, None,
         forceFull = false, forceMaxScore = true).get
       val prunedRows = rowsOf(pruned)
-      val fullRows = rowsOf(db.lexAllScanPlan(qt, 3, None, forceFull = true).get)
+      val fullRows = rowsOf(db.lexical.allScanPlan(qt, 3, None, forceFull = true).get)
       assert(prunedRows == fullRows && prunedRows.size == 6,
         s"capped MaxScore must stay exact:\n pruned $prunedRows\n full $fullRows")
       // job B survived for the narrow query: a bounded candidate-name
@@ -510,7 +542,7 @@ class LexicalHybridSpec extends AnyFunSuite {
           f.metrics("numOutputRows").value}"))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", restoreAqe)
-      db.lexNameCapOverride = None
+      db.lexical.nameCapOverride = None
     }
   }
 
@@ -528,7 +560,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     }
     db.ingest(docsFrame(docs, source = "ms"))
     db.indexLexical()
-    assert(db.lexMaxScoreReady, "fresh consistent sidecar must open the gate")
+    assert(db.lexical.maxScoreReady, "fresh consistent sidecar must open the gate")
 
     val qt = Seq((0L, Seq("zanzibarq", "stopzz"), Option.empty[String]))
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -540,10 +572,10 @@ class LexicalHybridSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val pruned = db.lexAllScanPlan(qt, 3, None,
+      val pruned = db.lexical.allScanPlan(qt, 3, None,
         forceFull = false, forceMaxScore = true).get
       val prunedRows = rowsOf(pruned)
-      val fullRows = rowsOf(db.lexAllScanPlan(qt, 3, None, forceFull = true).get)
+      val fullRows = rowsOf(db.lexical.allScanPlan(qt, 3, None, forceFull = true).get)
       assert(prunedRows == fullRows && prunedRows.size == 3,
         s"MaxScore must be exact:\n pruned $prunedRows\n full $fullRows")
 
@@ -584,41 +616,41 @@ class LexicalHybridSpec extends AnyFunSuite {
     // (a) un-compacted deletes close it (live df < stats df would
     // under-bound idf); serving falls back and stays correct
     db.deleteWhere(col("doc_name").contains("/doc_599"))
-    assert(!db.lexMaxScoreReady, "tombstones must close the gate")
+    assert(!db.lexical.maxScoreReady, "tombstones must close the gate")
     // even FORCED MaxScore must refuse while the gate is closed (the
     // force knob bypasses the economic floors, never exactness)
-    val afterDel = rowsOf(db.lexAllScanPlan(qt, 3, None,
+    val afterDel = rowsOf(db.lexical.allScanPlan(qt, 3, None,
       forceFull = false, forceMaxScore = true).get)
     assert(afterDel == rowsOf(
-      db.lexAllScanPlan(qt, 3, None, forceFull = true).get))
+      db.lexical.allScanPlan(qt, 3, None, forceFull = true).get))
     // (b) compaction clears tombstones + refreshes stats: gate reopens
     db.maintainStore()
-    assert(db.lexMaxScoreReady, "compaction must reopen the gate")
-    assert(rowsOf(db.lexAllScanPlan(qt, 3, None,
+    assert(db.lexical.maxScoreReady, "compaction must reopen the gate")
+    assert(rowsOf(db.lexical.allScanPlan(qt, 3, None,
       forceFull = false, forceMaxScore = true).get) == rowsOf(
-      db.lexAllScanPlan(qt, 3, None, forceFull = true).get))
+      db.lexical.allScanPlan(qt, 3, None, forceFull = true).get))
     // (c) a torn append (postings landed, stats didn't — simulated by
     // breaking _PCOUNT) closes the gate instead of serving torn stats
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/lexical/_PCOUNT"), false)
     db.ingest(docsFrame(Seq(9001L -> "late doc stopzz zanzibarq"), source = "ms"))
-    assert(!db.lexMaxScoreReady, "_PCOUNT mismatch must close the gate")
+    assert(!db.lexical.maxScoreReady, "_PCOUNT mismatch must close the gate")
     // and a rebuild restores consistency
     db.indexLexical()
-    assert(db.lexMaxScoreReady)
-    assert(rowsOf(db.lexAllScanPlan(qt, 3, None,
+    assert(db.lexical.maxScoreReady)
+    assert(rowsOf(db.lexical.allScanPlan(qt, 3, None,
       forceFull = false, forceMaxScore = true).get) == rowsOf(
-      db.lexAllScanPlan(qt, 3, None, forceFull = true).get))
+      db.lexical.allScanPlan(qt, 3, None, forceFull = true).get))
 
     // (d) an appended batch keeps stats exact: the gate stays open and
     // parity holds with the new doc in the corpus
     db.ingest(docsFrame(Seq(9002L -> "another late stopzz zanzibarq doc"),
       source = "ms"))
-    assert(db.lexMaxScoreReady, "a clean append must keep the gate open")
-    assert(rowsOf(db.lexAllScanPlan(qt, 3, None,
+    assert(db.lexical.maxScoreReady, "a clean append must keep the gate open")
+    assert(rowsOf(db.lexical.allScanPlan(qt, 3, None,
       forceFull = false, forceMaxScore = true).get) == rowsOf(
-      db.lexAllScanPlan(qt, 3, None, forceFull = true).get))
+      db.lexical.allScanPlan(qt, 3, None, forceFull = true).get))
   }
 
   /** Parquet data files under `dir`, as paths relative to it. */
@@ -655,7 +687,7 @@ class LexicalHybridSpec extends AnyFunSuite {
       assert(was.subsetOf(now) && added.size == 1 && !added.head.contains("/"),
         s"$sub: one ingest must add one file, flat beside the rest: $added")
     }
-    assert(db.lexMaxScoreReady, "the append keeps _PCOUNT equal to the footer rows")
+    assert(db.lexical.maxScoreReady, "the append keeps _PCOUNT equal to the footer rows")
     val hits = db.searchHybrid("glacier moraine", 3).collect()
     assert(hits.nonEmpty && hits.head.getAs[String]("doc_name").contains("doc_23"),
       s"the appended doc must surface lexically: ${hits.toSeq}")
@@ -691,13 +723,13 @@ class LexicalHybridSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("lex_rnk"),
         r.getAs[String]("doc_name"), r.getAs[String]("content_id")))
       .sortBy(t => (t._1, t._2)).toSeq
-    def full() = lexRows(db.lexAllScanPlan(qt, 3, None, forceFull = true).get)
-    def maxScore() = lexRows(db.lexAllScanPlan(qt, 3, None,
+    def full() = lexRows(db.lexical.allScanPlan(qt, 3, None, forceFull = true).get)
+    def maxScore() = lexRows(db.lexical.allScanPlan(qt, 3, None,
       forceFull = false, forceMaxScore = true).get)
     // with the append partition live and no tombstone, MaxScore (its
     // stats read, job A and job B) must agree with the full scan and
     // rank the appended docs
-    assert(db.lexMaxScoreReady)
+    assert(db.lexical.maxScoreReady)
     val incrMaxScore = maxScore()
     assert(incrMaxScore == full(), "MaxScore over the append partition")
     assert(incrMaxScore.exists(_._3.endsWith("/doc_1002.txt")), incrMaxScore)
@@ -726,7 +758,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     assert(rebuilt == incr, s"rebuild != appended sidecar:\n $rebuilt\n $incr")
     // the rebuild reopens the MaxScore gate: its pruned plan ranks
     // exactly what the appended, tombstoned sidecar's full plan ranked
-    assert(db.lexMaxScoreReady)
+    assert(db.lexical.maxScoreReady)
     assert(maxScore() == incr._3, "MaxScore after the rebuild")
   }
 
@@ -760,7 +792,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     }
     assert(spark.read.parquet(s"$dir/lexical/postings")
       .filter($"term" === "moraine").count() == 1, "the appended postings survive")
-    assert(db.lexMaxScoreReady)
+    assert(db.lexical.maxScoreReady)
     assert(served() == before, "compaction must not change results")
   }
 
@@ -800,7 +832,7 @@ class LexicalHybridSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val lookup = db.lexScanPlan("t01234", 5, None).get
+      val lookup = db.lexical.scanPlan("t01234", 5, None).get
       val hits = lookup.collect()
       assert(hits.length == 4, s"t01234 is in 4 docs: ${hits.toSeq}")
       val read = rowsRead(lookup)
@@ -811,7 +843,7 @@ class LexicalHybridSpec extends AnyFunSuite {
       // vocabulary: their [min, max] range covers about every page, the
       // terms themselves about one page each
       val batch = (0 until 11).map(q => (q.toLong, Seq(f"t${q * 909}%05d"), Option.empty[String]))
-      val batchPlan = db.lexAllScanPlan(batch, 5, None, forceFull = true).get
+      val batchPlan = db.lexical.allScanPlan(batch, 5, None, forceFull = true).get
       val batchHits = batchPlan.collect()
       assert(batchHits.length == 44, s"each term is in 4 docs: ${batchHits.length}")
       val batchRead = rowsRead(batchPlan)
@@ -819,52 +851,5 @@ class LexicalHybridSpec extends AnyFunSuite {
       assert(batchRead > 0 && batchRead * 2 <= total,
         s"the batch must read only the pages holding its terms: read $batchRead of $total")
     } finally spark.conf.set("spark.sql.adaptive.enabled", restoreAqe)
-  }
-
-  test("a sidecar in the md5-bucket layout serves, then goes flat before an ingest lands") {
-    val dir = "target/vdb_lexical_bucket_layout"
-    rmRf(new java.io.File(dir))
-    val db = new GraftVectorDB(spark, dir)
-    db.ingest(docsFrame(corpus))
-    db.indexLexical()
-    db.ingest(docsFrame(Seq(41L -> "harbor lantern mooring alpha common")))
-    def served(d: GraftVectorDB) = Seq("alpha beta common", "harbor lantern", "sailing ships")
-      .map(q => d.searchHybrid(q, 5).collect().map(r =>
-        (r.getAs[Long]("rnk"), r.getAs[Double]("rrf_r"), r.getAs[String]("doc_name"),
-          r.getAs[String]("content_id"))).toSeq)
-    val want = served(db)
-    // the layout as earlier versions wrote it: every row under
-    // bucket=<first md5 byte of its term>, an ingest's postings in the
-    // append partition bucket=256
-    val md5Bucket = (conv(substring(md5($"term"), 1, 2), 16, 10).cast("int") % 256).cast("int")
-    Seq("postings", "termstats").foreach { sub =>
-      val live = s"$dir/lexical/$sub"
-      val copy = s"$dir/${sub}_copy"
-      spark.read.parquet(live).write.parquet(copy)
-      rmRf(new java.io.File(live))
-      spark.read.parquet(copy)
-        .withColumn("bucket",
-          if (sub == "postings") when($"doc_name".endsWith("/doc_41.txt"), 256).otherwise(md5Bucket)
-          else md5Bucket)
-        .write.partitionBy("bucket").parquet(live)
-      rmRf(new java.io.File(copy))
-    }
-    def bucketDirs(sub: String) = new java.io.File(s"$dir/lexical/$sub").listFiles()
-      .map(_.getName).filter(_.startsWith("bucket=")).toSeq
-    assert(bucketDirs("postings").contains("bucket=256") && bucketDirs("termstats").nonEmpty)
-    // a reader serves the bucket layout as it is
-    assert(served(new GraftVectorDB(spark, dir)) == want, "the bucket layout must serve")
-    // a writer's first write rewrites it flat before its ingest lands
-    val writer = new GraftVectorDB(spark, dir)
-    writer.ingest(docsFrame(Seq(42L -> "glacier moraine cirque arete")))
-    assert(bucketDirs("postings").isEmpty && bucketDirs("termstats").isEmpty,
-      s"no bucket= directory may remain: ${bucketDirs("postings")} ${bucketDirs("termstats")}")
-    val hits = writer.searchHybrid("glacier moraine", 3).collect()
-    assert(hits.nonEmpty && hits.head.getAs[String]("doc_name").endsWith("/doc_42.txt"),
-      s"the new doc must surface lexically: ${hits.toSeq}")
-    assert(writer.lexMaxScoreReady)
-    val migrated = served(writer)
-    writer.indexLexical()
-    assert(served(writer) == migrated, "the migrated sidecar serves what a rebuild serves")
   }
 }

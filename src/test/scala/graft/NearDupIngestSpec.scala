@@ -23,6 +23,9 @@ class NearDupIngestSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("gate"))
 
+  /** Spark jobs of one warm, two-doc [[GraftVectorDB.ingestNearDup]]. */
+  private val WarmGateJobs = 43
+
   private val baseText =
     "the quick brown fox jumps over the lazy dog while the cat watches " +
       "from the warm windowsill and the rain falls softly on the roof"
@@ -98,6 +101,69 @@ class NearDupIngestSpec extends AnyFunSuite {
     val (_, skipped6) = db.ingestNearDup(docsFrame(Seq(90L -> (baseText + " anew yet"))))
     assert(skipped6.collect().nonEmpty, "recovered sidecar must still gate")
     assert(new java.io.File(s"$dir/neardup/bands").exists())
+  }
+
+  test("a deleted _GEN self-heals: the next append stamps above every stamped row and tombstone") {
+    val dir = "target/vdb_neardup_gen_heal"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingestNearDup(docsFrame(Seq(10L -> baseText, 30L -> otherText)))
+    db.ingestNearDup(docsFrame(Seq(50L -> thirdText)))
+    db.delete(Seq("corpus/gate/doc_50.txt"))
+    def stamps(sub: String, ddl: String, column: String): Seq[Long] =
+      spark.read.schema(ddl).parquet(s"$dir/neardup/$sub").select(column)
+        .collect().map(_.getLong(0)).toSeq
+    val rowGens = stamps("sets", "doc_name string, gen long", "gen") ++
+      stamps("bands", "doc_name string, gen long", "gen")
+    val tombGens = stamps("tombstones", "doc_name string, tgen long", "tgen")
+    assert(rowGens.nonEmpty && tombGens.nonEmpty)
+    val highest = (rowGens ++ tombGens).max
+    assert(new java.io.File(s"$dir/neardup/_GEN").delete())
+    // the deleted doc re-ingests: its fresh entries must outrank its
+    // tombstone, so they serve as the gate's anchor
+    val (n, skipped) = db.ingestNearDup(docsFrame(Seq(50L -> thirdText)))
+    assert(n > 0 && skipped.isEmpty, s"the deleted doc must re-land: ${skipped.collect().toSeq}")
+    Seq("sets", "bands").foreach { sub =>
+      val fresh = spark.read.schema("doc_name string, gen long")
+        .parquet(s"$dir/neardup/$sub").filter($"gen" > highest)
+        .select("doc_name", "gen").distinct().collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(fresh == Seq(("corpus/gate/doc_50.txt", highest + 1)),
+        s"$sub: the append must stamp above every stamped row and tombstone ($highest): $fresh")
+    }
+    val (_, again) = db.ingestNearDup(docsFrame(Seq(60L -> (thirdText + " tweak"))))
+    assert(again.collect().map(_.getAs[String]("dup_of")).toSeq == Seq("corpus/gate/doc_50.txt"))
+  }
+
+  test("a warm ingestNearDup reads its sidecar by declared schema: no schema-merge jobs") {
+    val dir = "target/vdb_neardup_jobs"
+    rmRf(new java.io.File(dir))
+    val db = new GraftVectorDB(spark, dir)
+    db.ingestNearDup(docsFrame(Seq(10L -> baseText, 30L -> otherText)))
+    db.ingestNearDup(docsFrame(Seq(50L -> thirdText)))
+    def countJobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { body; org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      n.get()
+    }
+    // one corpus dup and one fresh doc: the gate reads both sidecar
+    // tables, verifies, ingests and appends
+    val jobs = countJobs {
+      val (n, skipped) = db.ingestNearDup(docsFrame(Seq(
+        70L -> (baseText + " tweaked"),
+        80L -> "an entirely new document about alpine glaciers and moraines")))
+      assert(n > 0 && skipped.count() == 1)
+    }
+    info(s"warm ingestNearDup: $jobs Spark jobs")
+    assert(jobs <= WarmGateJobs,
+      s"a warm ingestNearDup ran $jobs jobs, more than $WarmGateJobs: a sidecar read " +
+        "inferring or merging schemas costs a job")
   }
 
   test("deleted-then-revised doc: the gate verifies against the NEW content only") {

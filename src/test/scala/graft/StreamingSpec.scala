@@ -139,15 +139,15 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("in-stream near-dup gate plan: the sidecar is never force-broadcast (batch frames only)") {
-    import graft.streaming.DocStreams
     import spark.implicits._
     // reuse the sidecar the gate test built (runs in suite order; if
     // absent the plan still pins — the empty-frame path has the same
     // hint shape)
     val out = "target/doc_nd_out"
     val bands = Seq((1L, 0, "k")).toDF("doc_id", "band", "bkey")
-    val sets = Seq((1L, Seq(1L, 2L))).toDF("doc_id", "h")
-    val plan = DocStreams.sidecarDropPlan(spark, out, bands, sets)
+    val sets = Seq((1L, Seq(1L, 2L))).toDF("doc_id", "shh")
+    val plan = new graft.operators.NearDupSidecar(spark, s"$out/neardup")
+      .corpusPlan(bands, sets)
       .queryExecution.analyzed
     val hints = plan.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h.child
