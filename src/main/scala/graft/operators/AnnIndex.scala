@@ -19,9 +19,10 @@ import graft.functions.VectorFunctions._
   *    capped at [[SampleTarget]] rows) — at 100 TB the build is ONE
   *    full pass (the assign transform), not five; only the tiny sample
   *    is iterated. A query probes its nProbe nearest centroids and
-  *    scans only those cells. [[buildIvfStore]] writes the corpus
-  *    partitioned by cell id so a probe is a partition-pruned scan
-  *    (IvfStoreSpec proves `PartitionFilters` reach the read).
+  *    scans only those cells. The store persists this layout in
+  *    [[AnnSidecar]]: rows partitioned by cell id, so a probe is a
+  *    partition-pruned scan (GraftVectorDBSpec proves the
+  *    `PartitionFilters` reach the read).
   *  - RP-LSH: `LshTables` independent hash tables of `LshPlanes`
   *    deterministic (md5-derived) hyperplanes each. Vectors key into
   *    one bucket per table; queries multi-probe their bucket plus every
@@ -164,65 +165,13 @@ object AnnIndex {
     val q = assigned.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
     val qCells = probeCells(q, centroids, nProbe)
-    // scan only the probed cells (partition-pruned against an
-    // ivf store written by buildIvfStore; see IvfStoreSpec)
+    // candidates: the probed cells' rows only (the store's persisted
+    // index, AnnSidecar, prunes the other cells at the scan)
     val cand = assigned.filter($"vec_id" >= 10).join(qCells, "cell")
     KnnSearch.rankTopK(
       cand.select($"q_id", $"vec_id".as("n_id"),
         round(cosine($"qv", $"v", $"qnrm", $"nrm"), 4).as("sim_r")), TopK)
       .orderBy($"q_id", $"rnk")
-  }
-
-  /** Materialize the IVF layout: corpus written partitioned by cell id,
-    * so probes become partition-pruned scans, PLUS the centroid routing
-    * table persisted at `path/_centroids` — an index that exists only
-    * in the building session's memory cannot be reopened, so the store
-    * carries everything a fresh session needs. The underscore prefix
-    * keeps corpus reads from listing the routing table as data (Spark's
-    * file index hides `_`/`.`-prefixed paths). Returns the centroid
-    * frame for immediate use. */
-  def buildIvfStore(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val (assigned, centroids) = fitAssign(spark, dir)
-    assigned.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path)
-    centroids.write.mode(SaveMode.Overwrite).parquet(s"$path/_centroids")
-    centroids
-  }
-
-  /** Reopen a persisted IVF store's routing table: build in one
-    * session/JVM, probe from any other (IvfStoreSpec proves results
-    * identical to probing with the build-time frame). */
-  def openIvfStore(spark: SparkSession, path: String): DataFrame =
-    readParts(spark, s"$path/_centroids")
-
-  /** Search against a cell-partitioned store: the `cell isin probes`
-    * filter prunes store partitions at the scan (no non-probed cell is
-    * read — IvfStoreSpec asserts PartitionFilters + input files). */
-  def probeIvfStore(spark: SparkSession, path: String, centroids: DataFrame,
-      queries: DataFrame, nProbe: Int = NProbe, k: Int = TopK): DataFrame = {
-    import spark.implicits._
-    val store = spark.read.parquet(path)
-    val qCells = probeCells(queries, centroids, nProbe)
-    val probedCells = qCells.select($"cell").distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ |queries|·nProbe values, driver-tiny
-    val cand = store.filter($"cell".isin(probedCells: _*))
-      .join(qCells, "cell")
-    KnnSearch.rankTopK(
-      cand.select($"q_id", $"vec_id".as("n_id"),
-        round(cosine($"qv", $"v", $"qnrm", $"nrm"), 4).as("sim_r")), k)
-      .orderBy($"q_id", $"rnk")
-  }
-
-  /** Incrementally append new vectors (`vec_id`, `v`, `nrm`) to a
-    * persisted IVF store: cells are assigned with the STORE's routing
-    * table (no refit — the index contract keeps centroids stable
-    * between rebuilds), then appended as cell-partitioned files.
-    * Existing files are untouched, so the job is O(|new|) regardless of
-    * store size — the only way ingest stays feasible when the store is
-    * 100 TB (IvfStoreSpec proves probe parity and old-file survival). */
-  def appendIvfStore(spark: SparkSession, path: String, newVecs: DataFrame): Unit = {
-    val centroids = openIvfStore(spark, path)
-    assignWithCentroids(newVecs, centroids)
-      .write.mode(SaveMode.Append).partitionBy("cell").parquet(path)
   }
 
   /** A routing table collected to the driver: (cell, centroid) pairs,

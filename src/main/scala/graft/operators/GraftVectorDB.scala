@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -27,6 +28,8 @@ import graft.util.AtomicDir
   *  - image rows carry a deterministic caption row into the text
   *    channel — the shape of blip/openai captioning (:547-596) with
   *    the model call stubbed (no image models in this environment).
+  *  - each registered channel's IVF+PQ index is an [[AnnSidecar]]:
+  *    the `*Ann*` methods forward to it under the writer lease.
   */
 class GraftVectorDB(spark: SparkSession, storeDir: String) {
   import spark.implicits._
@@ -142,9 +145,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * the ops that rewrite it. */
   private def recover(): Unit = {
     recoverCompact()
-    recoverAnnBuild(_ => true)
-    channelNames.map(ch => new org.apache.hadoop.fs.Path(annPath(ch)))
-      .filter(existsPath).foreach(p => recoverAnnIndex(fsOf(p), p))
+    AnnSidecar.recoverBuilds(fsOf(new org.apache.hadoop.fs.Path(storeDir)), storeDir, _ => true)
+    channels.values.foreach(_.recover())
     lexical.recover()
     nearDup.recover()
     Seq(storeDir -> "_INGEST", s"$storeDir/_snapshots" -> "manifest.v").foreach {
@@ -155,7 +157,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     completeIngest()
   }
 
-  def store: DataFrame = spark.read.parquet(storePath)
+  def store: DataFrame = spark.read.schema(GraftVectorDB.StoreSchema).parquet(storePath)
 
   /** The store's hash column, one row per record (NOT distinct — a
     * distinct here would shuffle the full store before the batch
@@ -164,21 +166,13 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * footer, permissions, transient FS error) must propagate —
     * swallowing it would silently disable ingest dedup and
     * double-ingest the batch. */
-  private def storeHashColumn: DataFrame = {
-    val empty = Seq.empty[String].toDF("file_hash")
+  private def storeHashColumn: DataFrame =
     // a store never created is checked for, not read: a read of a
-    // missing path logs a FileNotFoundException stack trace first
-    if (!existsPath(new org.apache.hadoop.fs.Path(storePath))) empty
-    else try store.select($"file_hash")
-    catch {
-      // UNABLE_TO_INFER_SCHEMA: the path exists but holds no data
-      // files — the state a crashed first ingest leaves behind
-      // ("_temporary" only), the genuinely-empty store. Anything else
-      // (corrupt footer, permissions, transient FS) propagates.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
-    }
-  }
+    // missing path logs a FileNotFoundException stack trace first. A
+    // store dir holding no data files yet (a crashed first ingest's
+    // "_temporary" only) reads empty through the declared schema.
+    if (!existsPath(new org.apache.hadoop.fs.Path(storePath))) Seq.empty[String].toDF("file_hash")
+    else store.select($"file_hash")
 
   /** The not-yet-seen subset of a hashed batch frame. The store's hash
     * set is UNBOUNDED (it grows with every doc ever ingested) while
@@ -217,7 +211,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // loop below skips channels without an appendable index, so a
     // typo'd name ('txt') would be silently dropped forever and the
     // caller would serve stale ANN results until the next rebuild
-    indexChannels.foreach(ch => channelFilter(records.limit(0), ch))
+    indexChannels.foreach(ann)
     // MATERIALIZED (lineage truncated), not merely persisted: the
     // anti-join's plan READS storePath, and the store write below
     // triggers recacheByPath(storePath) — a persisted frame would be
@@ -244,18 +238,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         // doc_name support location-filtered search skipping
         fresh.sortWithinPartitions("doc_name", "page_num")
           .write.mode(SaveMode.Append).partitionBy("content_type").parquet(storePath)
-        indexChannels.foreach { ch =>
-          if (annIndexExists(ch)) appendAnnIndex(fresh, ch)
-          else if (annIndexBuilt(ch))
-            // centroids exist but no codebooks: a pre-PQ index keeps
-            // SERVING but cannot encode appends — without this warning
-            // the caller believes the index is fresh while searchAnn
-            // silently misses every ingested batch until a rebuild
-            log.warn(s"ingest: ANN index '$ch' predates PQ codes — " +
-              s"skipping index append; rebuild with buildAnnIndex(channel = \"$ch\")")
-          // no index at all is the normal pre-build state: the first
-          // buildAnnIndex picks these rows up from the store
-        }
+        // no index at all is the normal pre-build state: the first
+        // buildAnnIndex picks these rows up from the store
+        indexChannels.filter(annIndexBuilt).foreach(appendAnnIndex(fresh, _))
         // lexical sidecar rides every ingest once built (fail-open:
         // after the store write — see LexicalSidecar.append)
         if (lexicalIndexed) lexical.append(channelFilter(fresh, "text"))
@@ -280,13 +265,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     if (!existsPath(marker)) return
     log.warn(s"an ingest into $storeDir did not finish - adding the stored rows " +
       "its ANN index and lexical sidecar appends missed")
-    channelNames.filter(annIndexExists).foreach { ch =>
-      val missing = Tables.materialize(channelFilter(store, ch)
-        .join(cachedIndex(ch).index.select($"row_id"),
-          xxhash64($"doc_name", $"content_type", $"content_id") === $"row_id", "left_anti"))
-      try if (!missing.isEmpty) appendAnnIndex(missing, ch)
-      finally Tables.release(missing)
-    }
+    channels.values.filter(_.built).foreach(_.appendMissing())
     if (lexicalIndexed) {
       val chunk = Seq("doc_name", "page_num", "content_type", "content_id")
       val missing = Tables.materialize(channelFilter(store, "text").join(
@@ -298,24 +277,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     }
     fsOf(marker).delete(marker, false)
   }
-
-  /** Whether a channel's ANN index has been built AND can take appends
-    * (a pre-PQ index without `_codebooks` serves searches but cannot
-    * encode appended rows — it needs a rebuild first). */
-  def annIndexExists(channel: String): Boolean =
-    annIndexBuilt(channel) &&
-      existsPath(new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_codebooks"))
-
-  /** Whether a channel's ANN index has been built at all (it may still
-    * predate PQ codes — see [[annIndexExists]] for appendability).
-    * A missing index first attempts [[recoverAnnBuild]]: during a
-    * crashed rebuild's between-renames window the only copy sits aside,
-    * and a false here would make [[delete]]/[[maintain]] silently skip
-    * the channel — for a takedown that is silent retention. */
-  def annIndexBuilt(channel: String): Boolean =
-    existsPath(new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")) ||
-      (recoverAnnBuild(_ == channel) &&
-        existsPath(new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")))
 
   private def existsPath(p: org.apache.hadoop.fs.Path): Boolean =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -355,7 +316,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         if (!autoRebuildAt.isPosInfinity)
           indexChannels.filter(ch =>
               annIndexBuilt(ch) && annAppendFraction(ch) > autoRebuildAt)
-            .foreach(rebuildAnnIndexInPlace)
+            .foreach(ch => withWriterLease("buildAnnIndex")(ann(ch).rebuild()))
         ()
       })
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -675,21 +636,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     require(lexicalIndexed,
       s"searchAllHybrid: no lexical sidecar at $lexicalPath/postings - " +
         "run indexLexical() first (ingest keeps it current afterwards)")
-    val hasLoc = queries.columns.contains("q_loc")
-    val qRows = queries.select(col("q_id").cast("long") +:
-        col("q_text").cast("string") +:
-        (if (hasLoc) Seq(col("q_loc").cast("string")) else Nil): _*)
-      .collect()
-    require(qRows.length <= GraftVectorDB.MaxBatchQueries,
-      s"searchAllHybrid: ${qRows.length} queries exceed " +
-        s"${GraftVectorDB.MaxBatchQueries} - chunk the query set")
-    // duplicate q_ids would silently merge two queries' term pools
-    // into one TopKRows group (the batchAnnQueries contract on every
-    // other batch surface)
-    require(qRows.map(_.getLong(0)).distinct.length == qRows.length,
-      "searchAllHybrid: q_id values must be unique")
-    val qInfo = qRows.map(r => (r.getLong(0), r.getString(1),
-      if (hasLoc) Option(r.getString(2)) else None)).toSeq
+    val qInfo = GraftVectorDB.batchQueries(queries, "searchAllHybrid")
     val lexByQ: Map[Long, Map[LexKey, Int]] =
       lexical.allScanPlan(qInfo.map { case (id, t, loc) =>
           (id, VectorStore.tokensLocal(t).distinct.toSeq, loc) }, pool, location)
@@ -738,60 +685,6 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       .toDF("q_id", "rnk", "rrf_r", "lex_rnk", "ann_rnk", "doc_name",
         "page_num", "content_type", "content_id", "content_raw")
   }
-
-  /** Rebuild a channel's index at the SCALE-ADAPTIVE cell count —
-    * the refit the drift/skew gauges call for: the corpus is re-routed
-    * with freshly-fit centroids (and codebooks), `_APPENDED` resets,
-    * and the rename swap keeps the old index serving until the new one
-    * is live. */
-  private def rebuildAnnIndexInPlace(channel: String): Unit = {
-    val cells = adaptiveCells(channel)
-    log.info(s"auto-rebuild: ANN index '$channel' appended fraction " +
-      f"${annAppendFraction(channel)}%.2f tripped the policy - rebuilding " +
-      s"at $cells cells (was ${cachedIndex(channel).books.length})")
-    buildAnnIndex(cells, channel)
-  }
-
-  /** Cell count for a drift-triggered rebuild, derived from the LIVE
-    * index size — the IVF twin of the adaptive embed-LSH geometry
-    * ([[Dedup.adaptivePlanes]]): rebuilding at the built cell count
-    * forever means a store that grows 10× under streaming ingest keeps
-    * its original cells, per-cell occupancy grows 10×, and every probe
-    * scan with it — and UNIFORM growth never trips the 4× skew gauge
-    * (all cells grow together), so hot-cell splitting cannot catch it.
-    * Holds per-cell occupancy at the build-time anchor instead:
-    * `cells = builtCells × liveRows / builtRows`, floored at the
-    * current routing-table size (an index never shrinks its geometry
-    * on rebuild — probe budgets are tuned against it) and capped at
-    * [[GraftVectorDB.MaxAdaptiveCells]] (the driver-Lloyd fit reads a
-    * ≤ [[AnnIndex.SampleTarget]]-row sample; past ~SampleTarget/4
-    * cells the 2-means init is point-starved — deployments growing
-    * beyond the cap raise SampleTarget with it). Live rows come from
-    * the cell histogram (parquet footer stats — driver metadata I/O,
-    * no job), so appends AND deletes both count. */
-  def adaptiveCells(channel: String): Int = {
-    val liveCells = cachedIndex(channel).books.length
-    val built = readCounter(channel, "_BUILT")
-    if (built <= 0) return liveCells // legacy index: no anchor to scale from
-    val live = annCellHistogram(channel).values.sum
-    val scaled = math.ceil(live.toDouble * liveCells / built).toInt
-    math.max(liveCells, math.min(scaled, GraftVectorDB.MaxAdaptiveCells))
-  }
-
-  /** The scheduled-maintenance entrypoint a production store runs per
-    * channel: rebuild-if-drifted (which subsumes compaction — the
-    * whole index rewrites), else compact-if-fragmented with hot-cell
-    * splitting. Single-writer contract, like every maintenance op.
-    * Returns (rows compacted, whether a rebuild ran). */
-  def maintain(channel: String, targetFiles: Int = 1,
-      splitSkewedPast: Double = GraftVectorDB.CellSkewRatio,
-      rebuildAt: Double = GraftVectorDB.AppendRebuildFraction): (Long, Boolean) =
-    withWriterLease("maintain") {
-      if (annAppendFraction(channel) > rebuildAt) {
-        rebuildAnnIndexInPlace(channel)
-        (0L, true)
-      } else (compactAnnIndex(channel, targetFiles, splitSkewedPast), false)
-    }
 
   /** The STORE-side maintenance sweep — [[maintain]]'s twin for the
     * data partitions: streaming ingest lands a file-set per micro-batch
@@ -957,7 +850,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   def searchIn(channel: String, query: String, topN: Int = 5,
       location: Option[String] = None): DataFrame =
     searchChannel(query, channelRows(channel), topN, location,
-      channelDef(channel).encode)
+      ann(channel).channel.encode)
       .withColumn("channel", lit(channel))
 
   /** Batch query-set search: N queries against the text channel in ONE
@@ -985,7 +878,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * top-k. */
   def searchAll(queries: DataFrame, topN: Int = 5,
       location: Option[String] = None, channel: String = "text"): DataFrame = {
-    val encode: Column => Column = channelDef(channel).encode
+    val encode: Column => Column = ann(channel).channel.encode
     val hasLoc = queries.columns.contains("q_loc")
     val q = queries.select(col("q_id") +: encode(col("q_text")).as("qv") +:
         (if (hasLoc) Seq(col("q_loc").cast("string")) else Nil): _*)
@@ -1001,270 +894,8 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         xxhash64($"doc_name", $"content_type", $"content_id").as("row_id"),
         struct($"doc_name", $"page_num", $"content_type", $"content_id",
           $"content_raw").as("meta"))
-    batchTopK(pairs, topN, channel)
+    GraftVectorDB.batchTopK(pairs, topN, channel)
   }
-
-  /** Batch twin of the two-job [[searchAnnPq]] serving path — the
-    * batch surface over the full IVF+PQ architecture: N queries' ADC
-    * shortlists come from ONE partition- AND column-pruned scan of the
-    * unioned probe sets (each query's ADC tables ride a broadcast
-    * equi-join on cell instead of plan literals, so a row only scores
-    * against queries probing its cell), per-query shortlists split via
-    * the bounded [[graft.functions.expressions.TopKByScore]] partial
-    * aggregate, then ONE fetch of the unioned shortlists feeds the
-    * exact driver-side re-rank — two scans for the whole batch instead
-    * of 2N. Per-query results identical to N × [[searchAnnPq]]
-    * (spec-pinned). Per-query probe escalation matches
-    * [[searchAnnPq]]'s: queries whose ADC shortlist under-fills topN
-    * while unprobed cells remain re-shortlist over EVERY cell in ONE
-    * extra batch pass scoped to just that subset, before the (single)
-    * fetch — a dense batch stays two scans (spec-pinned).
-    * PER-QUERY scope: an optional `q_loc` column behaves exactly as
-    * [[searchAll]]'s — the prefix filters INSIDE the ADC stage before
-    * the bounded shortlist (never after, where out-of-scope rows would
-    * crowd it), and only a batch that carries a scope pays the
-    * doc_name column in the ADC scan.
-    * Output contract = [[searchAll]]. */
-  def searchAllAnnPq(queries: DataFrame, topN: Int = 5,
-      nProbe: Int = AnnIndex.AutoNProbe, shortlist: Int = AnnIndex.AutoShortlist,
-      location: Option[String] = None, channel: String = "text"): DataFrame = {
-    val (ci, qInfo) = batchPqProbe(queries, nProbe, channel, location)
-    // AutoNProbe/AutoShortlist defaults resolve against the live index
-    // geometry, exactly as the single-query path
-    val np = AnnIndex.resolveNProbe(nProbe, ci.books.length)
-    val effShortlist =
-      if (shortlist > 0) shortlist
-      else AnnIndex.autoShortlist(ci.rows, ci.books.length, np)
-    // scan 1: per-query ADC shortlist — same ordering contract as the
-    // single-query path (adc desc, row_id asc), so shortlist sets match
-    val short0 = batchPqShortlistOf(ci, qInfo, effShortlist, location).collect()
-    val shortByQ0 = short0.groupBy(_.getAs[Long]("q_id"))
-      .map { case (q, rs) => q -> rs.map(_.getAs[Long]("row_id")).toSet }
-    // ESCALATION, batched (the searchAnnPq contract): an under-filled
-    // shortlist re-probes its SCOPE-ELIGIBLE cells (routing sidecar) —
-    // only for the under-filled subset, in one extra shortlist pass;
-    // filled queries' shortlists stand and the fetch below stays single
-    val cells = ci.books.map(_._1).toSeq
-    val under =
-      if (np >= cells.length) Seq.empty
-      else qInfo.filter { case (id, _, _, probedCells, _, loc) =>
-        shortByQ0.get(id).forall(_.size < topN) &&
-          probedCells.length < eligibleCells(ci, location.toSeq ++ loc.toSeq).length }
-    val (shortByQ, unionCells) =
-      if (under.isEmpty) (shortByQ0, qInfo.flatMap(_._4).distinct)
-      else {
-        val escInfo = under.map { case (id, qv, qnrm, _, dts, loc) =>
-          (id, qv, qnrm, eligibleCells(ci, location.toSeq ++ loc.toSeq), dts, loc) }
-        val escByQ = batchPqShortlistOf(ci, escInfo, effShortlist, location)
-          .collect().groupBy(_.getAs[Long]("q_id"))
-          .map { case (q, rs) => q -> rs.map(_.getAs[Long]("row_id")).toSet }
-        // an escalated query that STILL has no rows keeps an empty set
-        val underIds = under.map(_._1)
-        ((shortByQ0 -- underIds) ++
-          underIds.map(id => id -> escByQ.getOrElse(id, Set.empty[Long])),
-          // the fetch prunes to the union of BOTH passes' probe sets —
-          // under a narrow scope that is far smaller than all cells
-          (qInfo.flatMap(_._4) ++ escInfo.flatMap(_._4)).distinct)
-      }
-    val allIds = shortByQ.values.flatten.toSeq.distinct
-    // scan 2: ONE fetch of the unioned shortlists' vectors + metadata.
-    // If EVERY query's shortlist is untruncated, every row any query
-    // scanned is in the union (its scanning query kept it), so the id
-    // filter is a no-op — skip it (per-query scoping happens in the
-    // shortByQ lookup below either way). A per-query q_loc breaks that
-    // cover argument in the dangerous direction: the shortlist pass
-    // FILTERED rows the fetch would not, so "every shortlist
-    // untruncated" no longer bounds the uncovered fetch — an
-    // all-narrow-scopes batch (the multi-tenant shape) would collect
-    // the whole probed index. Keep the id filter whenever any scope is
-    // carried: ids ≤ N × shortlist bounds the fetch regardless.
-    val coverScan = qInfo.forall(_._6.isEmpty) &&
-      shortByQ.values.forall(_.size < effShortlist)
-    val fetched = fetchShortlist(ci, unionCells, allIds, location, coverScan).collect()
-    // GROUPED by row_id, not a 1:1 map: an xxhash64(doc_name,
-    // content_type, content_id) collision fetches BOTH rows under one
-    // id, and the single-query path re-ranks every fetched row — a
-    // toMap here would silently drop one of the pair, and .map(byId)
-    // would throw on an id the fetch could not find instead of
-    // degrading the way the single-query path does
-    val byId = fetched.groupBy(_.getAs[Long]("row_id"))
-    val outRows = qInfo.flatMap { case (id, qv, qnrm, _, _, _) =>
-      val cand = shortByQ.getOrElse(id, Set.empty[Long]).toSeq
-        .flatMap(rid => byId.getOrElse(rid, Array.empty[org.apache.spark.sql.Row]))
-      pqExactReRank(cand, qv, qnrm, topN).zipWithIndex.map { case ((s, r), i) =>
-        (id, (i + 1).toLong, s, r.getAs[String]("doc_name"),
-          r.getAs[Long]("page_num"), r.getAs[String]("content_type"),
-          r.getAs[String]("content_id"), r.getAs[String]("content_raw"), channel)
-      }
-    }
-    // driver-side (q_id, rnk) sort: the frame is local, a Spark
-    // orderBy would add range-exchange sampling jobs to the serving path
-    outRows.sortBy(t => (t._1, t._2))
-      .toDF("q_id", "rnk", "sim_r", "doc_name", "page_num",
-        "content_type", "content_id", "content_raw", "channel")
-  }
-
-  /** Collect + embed + probe-rank a query batch — driver arithmetic.
-    * q_ids must be unique AFTER the long cast: duplicates would merge
-    * two queries' scores into one shortlist group and silently corrupt
-    * both result sets, so the contract fails loudly here instead.
-    * The last element of each entry is the per-query scope from an
-    * optional `q_loc` column (None when absent/null). */
-  private def batchPqProbe(queries: DataFrame, nProbe: Int, channel: String,
-      location: Option[String])
-      : (GraftVectorDB.CachedAnnIndex,
-         Seq[(Long, Array[Double], Double, Seq[Int], Array[Array[Double]], Option[String])]) = {
-    val ci = cachedIndex(channel)
-    require(ci.pqBooks.nonEmpty,
-      "this ANN index predates PQ codes (no _codebooks) — rebuild with " +
-        "buildAnnIndex, or use searchAllAnn (which needs none)")
-    val hasLoc = queries.columns.contains("q_loc")
-    val qs = queries.select(col("q_id").cast("long").as("q_id") +: col("q_text") +:
-        (if (hasLoc) Seq(col("q_loc").cast("string")) else Nil): _*)
-      .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[String]("q_text"),
-        if (hasLoc) Option(r.getAs[String]("q_loc")) else None))
-    require(qs.length <= GraftVectorDB.MaxBatchQueries,
-      s"searchAllAnnPq: ${qs.length} queries exceeds the per-call bound " +
-        s"(${GraftVectorDB.MaxBatchQueries}) — the probe-list broadcast and " +
-        "driver re-rank state grow with the batch; chunk the query set " +
-        "and union the results")
-    require(qs.map(_._1).distinct.length == qs.length,
-      "searchAllAnnPq: q_id values must be unique (after cast to long)")
-    val qInfo = qs.toSeq.map { case (id, text, loc) =>
-      val qv = embedLocal(channel, text)
-      (id, qv, math.sqrt(qv.map(x => x * x).sum),
-        rankCellsScoped(ci, qv, AnnIndex.resolveNProbe(nProbe, ci.books.length),
-          location.toSeq ++ loc.toSeq),
-        AnnIndex.adcTablesLocal(ci.pqBooks, qv), loc)
-    }
-    (ci, qInfo)
-  }
-
-  /** The lazy batch ADC-shortlist frame (q_id, row_id) — exposed via
-    * [[annAllPqShortlistPlan]] so specs can pin the single pruned scan.
-    * The probe list broadcasts as (q_id, cell) PAIRS and each query's
-    * ADC tables join once by q_id — carrying dt on the pair frame
-    * would ship nProbe redundant copies of every query's tables. */
-  private def batchPqShortlistOf(ci: GraftVectorDB.CachedAnnIndex,
-      qInfo: Seq[(Long, Array[Double], Double, Seq[Int], Array[Array[Double]], Option[String])],
-      shortlist: Int, location: Option[String]): DataFrame = {
-    val unionCells = qInfo.flatMap(_._4).distinct
-    // per-query scope rides the (q_id, cell) pair frame; the prefix
-    // filter must run BEFORE the shortlist top-k — post-shortlist
-    // filtering would let out-of-scope rows crowd the bounded list and
-    // silently shrink in-scope recall (the single-query locScoped
-    // placement, per query). Only a batch that actually carries a
-    // scope pays the doc_name column in the ADC scan.
-    val anyLoc = qInfo.exists(_._6.isDefined)
-    val cellFrame = qInfo.flatMap { case (id, _, _, cells, _, loc) =>
-      cells.map(c => (id, c, loc.orNull)) }.toDF("q_id", "cell", "q_loc")
-    val dtFrame = qInfo.map { case (id, _, _, _, dts, _) =>
-      (id, dts.map(_.toSeq).toSeq) }.toDF("q_id", "dt")
-    val score = ci.pqBooks.indices.map(i =>
-      element_at(element_at($"dt", i + 1), element_at($"codes", i + 1) + 1))
-      .reduce(_ + _) / $"nrm"
-    val joined = locScoped(ci.index.filter($"cell".isin(unionCells: _*)), location)
-      .join(broadcast(cellFrame), "cell")
-    val scoped =
-      if (anyLoc) joined.filter($"q_loc".isNull || $"doc_name".startsWith($"q_loc"))
-      else joined
-    scoped
-      .join(broadcast(dtFrame), "q_id")
-      .select($"q_id", score.as("adc"), $"row_id")
-      .groupBy($"q_id")
-      .agg(graft.functions.expressions.TopKByScore(
-        $"adc", $"row_id", shortlist).as("top"))
-      .select($"q_id", explode($"top").as("t"))
-      .select($"q_id", $"t.id".as("row_id"))
-  }
-
-  private[graft] def annAllPqShortlistPlan(queries: DataFrame, nProbe: Int,
-      shortlist: Int, location: Option[String] = None,
-      channel: String = "text"): DataFrame = {
-    val (ci, qInfo) = batchPqProbe(queries, nProbe, channel, location)
-    batchPqShortlistOf(ci, qInfo, shortlist, location)
-  }
-
-  /** The lazy shortlist-FETCH frame of [[searchAllAnnPq]] — exposed so
-    * specs can pin that a large batch's fetch carries no giant In
-    * literal and still reads the index exactly once. */
-  private[graft] def annAllPqFetchPlan(queries: DataFrame, nProbe: Int,
-      shortlist: Int, location: Option[String] = None,
-      channel: String = "text"): DataFrame = {
-    val (ci, qInfo) = batchPqProbe(queries, nProbe, channel, location)
-    val short = batchPqShortlistOf(ci, qInfo, shortlist, location).collect()
-    // same cover rule as searchAllAnnPq: a per-query scope voids the
-    // untruncated-covers-the-scan argument
-    val coverScan = qInfo.forall(_._6.isEmpty) &&
-      short.groupBy(_.getAs[Long]("q_id")).values.forall(_.length < shortlist)
-    fetchShortlist(ci, qInfo.flatMap(_._4).distinct,
-      short.map(_.getAs[Long]("row_id")).distinct.toSeq, location, coverScan)
-  }
-
-  /** Fetch index rows by id within the probed cells — the second scan
-    * of every PQ path (single and batch). Serving-sized id lists
-    * inline as an In predicate; past
-    * [[GraftVectorDB.InLiteralMax]] the fetch switches to a broadcast
-    * equi-join on a (row_id) frame: a 1 000-query × 100-shortlist
-    * batch (or an exhaustive-config shortlist at corpus size) would
-    * otherwise inline a 10⁵-literal predicate — analysis/codegen bloat
-    * well before data size matters — while the join is the same single
-    * pruned scan with a constant-size plan. Ids are deduplicated so
-    * the join cannot multiply rows. */
-  private def fetchShortlist(ci: GraftVectorDB.CachedAnnIndex,
-      cells: Seq[Int], ids: Seq[Long], location: Option[String],
-      idsCoverScan: Boolean): DataFrame = {
-    val pruned = ci.index.filter($"cell".isin(cells: _*))
-    // an UNTRUNCATED shortlist (the exhaustive-config audit shape —
-    // every scanned row made the list) filters nothing: skip the id
-    // predicate entirely instead of broadcasting a corpus-sized id
-    // frame into a join that cannot exclude a row (the round-6 sf1
-    // regression). The location scope must then re-apply here — in the
-    // id-filtered paths the ids already encode it.
-    val byId =
-      if (idsCoverScan) locScoped(pruned, location)
-      else if (ids.length <= GraftVectorDB.InLiteralMax)
-        pruned.filter($"row_id".isin(ids: _*))
-      else pruned.join(broadcast(ids.distinct.toDF("row_id")), "row_id")
-    byId.select($"row_id", $"v", $"nrm", $"doc_name", $"page_num",
-      $"content_type", $"content_id", $"content_raw")
-  }
-
-  /** Exact re-rank of fetched shortlist rows against one query — the
-    * ONE definition both the single-query ([[searchAnnPq]]) and batch
-    * ([[searchAllAnnPq]]) paths use, so their rounding and tie-break
-    * contracts cannot silently diverge. Returns the topN
-    * (rounded score, row) pairs, score-desc / row_id-asc. */
-  private def pqExactReRank(fetched: Seq[org.apache.spark.sql.Row],
-      qv: Array[Double], qnrm: Double, topN: Int)
-      : Seq[(Double, org.apache.spark.sql.Row)] = {
-    def r4(x: Double) =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    fetched.map { r =>
-      val v = r.getSeq[Double](r.fieldIndex("v"))
-      var d = 0.0; var i = 0
-      while (i < qv.length) { d += qv(i) * v(i); i += 1 }
-      (r4(d / (qnrm * r.getAs[Double]("nrm"))), r)
-    }.sortBy { case (s, r) => (-s, r.getAs[Long]("row_id")) }.take(topN)
-  }
-
-  /** Shared result shaping for BOTH batch paths ([[searchAll]] and
-    * [[searchAllAnn]]): per-query `TopKRows` over a (q_id, sim_r,
-    * row_id, meta) pairs frame → the searchAll output contract. One
-    * definition, so the batch-exact and batch-ANN shapes cannot
-    * silently diverge. */
-  private def batchTopK(pairs: DataFrame, topN: Int, channel: String): DataFrame =
-    pairs.groupBy($"q_id")
-      .agg(graft.functions.expressions.TopKRows(
-        $"sim_r", $"row_id", $"meta", topN).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rnk"),
-        $"col.score".as("sim_r"),
-        $"col.payload.doc_name", $"col.payload.page_num",
-        $"col.payload.content_type", $"col.payload.content_id",
-        $"col.payload.content_raw")
-      .withColumn("channel", lit(channel)) // same contract as search()
-      .orderBy($"q_id", $"rnk")
 
   /** Batch twin of [[searchMultimodal]] — run_search's text_image mode
     * for N queries in TWO store scans (one per channel, each a
@@ -1377,570 +1008,83 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       model.generate(messages, hits), messages, ResponseGen.sources(hits))
   }
 
+  // ─────────── ANN index: one AnnSidecar per channel ───────────
+
   def annPath: String = annPath("text")
   def annPath(channel: String): String = s"$storeDir/ann_index_$channel"
 
-  /** Build (or rebuild) the store's IVF ANN index over one channel
+  /** Whether a channel's ANN index has been built. A crashed rebuild's
+    * swap rolls back first ([[AnnSidecar.built]]), so a delete or
+    * maintenance never skips a channel mid-rebuild. */
+  def annIndexBuilt(channel: String): Boolean = channels.get(channel).exists(_.built)
+
+  /** Build (or rebuild) a channel's IVF+PQ index over its store rows
     * ("text" = text chunks + captions, the run_text_search scope;
-    * "image" = the 48-dim image space): rows are routed to cells with
-    * a driver-local sample-fit routing table (AnnIndex.fitCentroids —
-    * one bounded collect, no MLlib job chain) and rewritten
-    * cell-partitioned WITH their search metadata, so an approximate
-    * search never joins back to the store. Each cell is written as one
-    * doc_name-sorted run ([[writeCells]]): at most cells + P − 1 files
-    * for P shuffle partitions, so a probe opens about one file per
-    * probed cell. The routing table persists at `_centroids`,
-    * reopenable from any session. At 100 TB this is the batch index
-    * build: one full pass to route + write. Returns rows indexed.
-    *
-    * `geometry = "imi"` switches the routing table to the inverted
-    * multi-index PRODUCT form ([[AnnIndex.imi]], Babenko & Lempitsky
-    * 2012): `_centroids` persists 2·⌈√cells⌉ half-space centroids
-    * instead of `cells` full ones, a cell is the code PAIR from the
-    * fused [[graft.functions.expressions.PqEncode]] assignment, and
-    * [[cachedIndex]] expands the product driver-side into the same
-    * flat (cell, concat-centroid) table every serving surface already
-    * consumes — EXACT, because ranking pairs by half-score sums IS
-    * ranking concatenated centroids by L2. The structural win (√cells
-    * routing evaluations, √cells-sized fit/persist) only matters past
-    * ~10⁵ cells where the expansion would give way to the paper's
-    * multi-sequence traversal; below that flat routing is strictly
-    * faster, so "flat" stays the default and the auto-rebuild policy's
-    * sizing — this option proves the wiring (build → persist → reopen
-    * → serve ≡ exact under full probe), deliberately claiming no
-    * performance. */
+    * "image" = the 48-dim image space; or any registered channel):
+    * one bounded sample fits the routing table and the PQ codebooks,
+    * one pass routes, encodes and writes the rows with their search
+    * metadata, and the whole index swaps in at once
+    * ([[AnnSidecar.build]]). `geometry = "imi"` persists the inverted
+    * multi-index's half-space codebooks instead of flat centroids
+    * ([[AnnIndex.imi]]); it proves the wiring (build → persist →
+    * reopen → serve ≡ exact under full probe) and claims no
+    * performance. Returns rows indexed. */
   def buildAnnIndex(cells: Int = AnnIndex.IvfCells,
       channel: String = "text", geometry: String = "flat"): Long =
-    withWriterLease("buildAnnIndex") {
-    require(geometry == "flat" || geometry == "imi",
-      s"buildAnnIndex: unknown geometry '$geometry' (flat|imi)")
-    val chan = channelRows(channel)
-      .withColumn("row_id", xxhash64($"doc_name", $"content_type", $"content_id"))
-      .withColumn("v", toDouble($"embedding"))
-    // ONE bounded sample job feeds BOTH fits (IVF routing + PQ
-    // codebooks); routing + encoding are then narrow projections on
-    // the single full build pass
-    val sample = AnnIndex.sampleVectors(chan.select($"row_id", $"v"), $"row_id")
-    val pqBooks = AnnIndex.pqCodebooksFromSample(sample, AnnIndex.PqStoreK)
-    val (centroids, cellExpr, imiTag) =
-      if (geometry == "flat") {
-        val c = AnnIndex.centroidsFromSample(spark, sample, cells)
-        (c, AnnIndex.cellOf(AnnIndex.routingBooks(c), $"v"), None)
-      } else {
-        val dim = channelDef(channel).dim
-        require(dim % 2 == 0,
-          s"buildAnnIndex(imi): channel '$channel' dim $dim is odd - " +
-            "the two half-space codebooks need an even split")
-        val half = dim / 2
-        val k1 = math.max(1, math.min(sample.length,
-          math.ceil(math.sqrt(cells.toDouble)).toInt))
-        val halfBooks = Array(
-          AnnIndex.lloyd(sample.map(_.slice(0, half)), k1, iters = 5),
-          AnnIndex.lloyd(sample.map(_.slice(half, dim)), k1, iters = 5))
-        val enc = graft.functions.expressions.PqEncode($"v", halfBooks, half)
-        val cdf = halfBooks.zipWithIndex.flatMap { case (bk, m) =>
-          bk.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) } }.toSeq
-          .toDF("m", "k", "cv")
-        (cdf,
-          (element_at(enc, 1) * k1 + element_at(enc, 2)).cast("int"),
-          Some(k1))
-      }
-    val indexed = chan.select($"doc_name", $"page_num", $"content_type",
-        $"content_id", $"content_raw", $"row_id", $"v",
-        l2Norm($"v").as("nrm"), cellExpr.as("cell"),
-        AnnIndex.encodeCodes(pqBooks).as("codes"))
-    // build staged and swap in (AtomicDir.swap): a plain Overwrite
-    // would expose a HALF-BUILT index (cells without a routing table)
-    // for the whole build; the old index serves until the new one is
-    // live
-    recoverAnnBuild(_ == channel)
-    val tmp = s"$storeDir/.ann_build_tmp_$channel"
-    writeCells(indexed, tmp, SaveMode.Overwrite)
-    centroids.write.mode(SaveMode.Overwrite).parquet(s"$tmp/_centroids")
-    // geometry marker rides the swap with the table it describes: a
-    // reader never sees an imi table without the marker or vice versa
-    imiTag.foreach { k1 =>
-      val gp = new org.apache.hadoop.fs.Path(s"$tmp/_centroids/_GEOMETRY")
-      AtomicDir.write(fsOf(gp), gp, s"imi:$k1")
-    }
-    AnnIndex.writeCodebooks(spark, pqBooks, s"$tmp/_codebooks")
-    val live = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // prefix→cell routing sidecar: per-cell doc_name [min, max] from
-    // the just-written files (a column-pruned scan of doc_name + the
-    // cell partition column), staged INSIDE the build dir so it swaps
-    // in atomically with the index it describes. Scoped searches use
-    // it to skip cells whose range excludes their prefix — probe
-    // ranking AND escalation (see rankCellsScoped / eligibleCells).
-    val builtRanges = spark.read.option("basePath", tmp)
-      .parquet(AnnIndex.visibleEntries(spark, tmp, _.isDirectory): _*).groupBy($"cell")
-      .agg(min($"doc_name").as("mn"), max($"doc_name").as("mx"))
-      .collect().map(r => r.getAs[Int]("cell") ->
-        (r.getAs[String]("mn"), r.getAs[String]("mx"))).toMap
-    GraftVectorDB.writeDocRanges(fs,
-      new org.apache.hadoop.fs.Path(s"$tmp/_centroids"), builtRanges)
-    AtomicDir.swap(fs, new org.apache.hadoop.fs.Path(tmp), live,
-      new org.apache.hadoop.fs.Path(s"$storeDir/.ann_build_old_$channel"))
-    val n = spark.read.parquet(annPath(channel)).count() // footer-stats count, no data scan
-    // drift baseline: the rename swapped in a fresh _centroids dir, so
-    // _APPENDED is implicitly reset to 0; record the built size the
-    // append-fraction policy divides by
-    writeCounter(channel, "_BUILT", n)
-    n
-  }
+    withWriterLease("buildAnnIndex")(ann(channel).build(cells, geometry))
 
-  /** Write index rows as one sorted run per cell — the only way
-    * [[buildAnnIndex]] and [[appendAnnIndex]] write them, the ANN twin
-    * of the lexical sidecar's sorted writes. Range-partitioning on (cell, doc_name)
-    * gives every file one contiguous doc_name range of one cell, so a
-    * write of P shuffle partitions (after AQE's coalescing) lands at
-    * most cells + P − 1 files, and parquet's doc_name min/max stats let
-    * a location-filtered search skip row groups. The range sample
-    * costs one small extra job per write. */
-  private def writeCells(df: DataFrame, path: String, mode: SaveMode): Unit =
-    df.repartitionByRange($"cell", $"doc_name")
-      .sortWithinPartitions($"cell", $"doc_name")
-      .write.mode(mode).partitionBy("cell").parquet(path)
+  /** Route newly-ingested rows into a built index with its persisted
+    * centroids and codebooks, O(|new rows|) ([[AnnSidecar.append]]).
+    * Returns rows appended. */
+  def appendAnnIndex(records: DataFrame, channel: String = "text"): Long =
+    withWriterLease("appendAnnIndex")(ann(channel).append(records))
 
-  /** Crash recovery for [[buildAnnIndex]]'s whole-index swaps of the
-    * channels `channels` accepts ([[AtomicDir.recover]] over the store
-    * root): a rebuild crash can never leave a channel index-less. Runs
-    * on buildAnnIndex entry AND from the missing-index paths
-    * ([[annIndexBuilt]], [[cachedIndex]]), so serving self-heals without
-    * waiting for the next maintenance run; those run without the lease,
-    * so they touch only their own channel's exact names and never
-    * another channel's in-flight build. Returns whether an index was
-    * restored. */
-  private def recoverAnnBuild(channels: String => Boolean): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    AtomicDir.recover(fsOf(root), root, ".ann_build_old_",
-      Seq(".ann_build_tmp_"), ch => s"ann_index_$ch", channels)
-  }
+  /** Appended rows since the last build over the built corpus (0.0 for
+    * a fresh or never-built index): the drift gauge. */
+  def annAppendFraction(channel: String): Double = ann(channel).appendFraction
 
-  /** Incrementally extend the channel's ANN index with newly-ingested
-    * VectorRecord rows: cells come from the PERSISTED routing table
-    * and codes from the persisted codebooks (no refit — re-clustering
-    * belongs to a rebuild), appended as one new sorted run per touched
-    * cell ([[writeCells]]: at most touched cells + P − 1 files) with
-    * existing files untouched, so the job is O(|new rows|) no
-    * matter how large the index is — the ingest path that keeps a
-    * 100 TB index maintainable between rebuilds (the store twin of
-    * [[AnnIndex.appendIvfStore]]). Bumps the index generation stamp so
-    * cached serving frames re-list files. Single-writer contract, same
-    * as compact(). Returns rows appended. */
-  def appendAnnIndex(records: DataFrame, channel: String = "text"): Long = withWriterLease("appendAnnIndex") {
-    val ci = cachedIndex(channel)
-    // fail BEFORE any write: an empty-codebook encode would produce an
-    // unwritable array<void> codes column, and failing mid-append
-    // would strand store rows outside the index
-    require(ci.pqBooks.nonEmpty,
-      s"ANN index '$channel' predates PQ codes (no _codebooks) — " +
-        "rebuild with buildAnnIndex before appending")
-    // an index built before the drift counters landed has no _BUILT:
-    // annAppendFraction would read 0.0 forever — indistinguishable
-    // from a fresh build — and the rebuild policy would stay silent on
-    // exactly the indexes most likely to have accumulated drift. Seed
-    // the baseline once from the pre-append index size (footer-stats
-    // count, no data scan; one-time cost for legacy indexes only).
-    if (!counterExists(channel, "_BUILT")) {
-      val seeded = math.max(0L,
-        ci.index.count() - readCounter(channel, "_APPENDED"))
-      writeCounter(channel, "_BUILT", seeded)
-      log.warn(s"appendAnnIndex('$channel'): index predates drift counters — " +
-        s"seeded _BUILT=$seeded from the current index size; the appended " +
-        "fraction is exact from here (and resets at the next buildAnnIndex)")
-    }
-    // scope to the channel like buildAnnIndex: a mixed batch (the
-    // shape ingestRecords accepts) must not leak 48-dim image vectors
-    // into the 64-dim text index — DotProduct truncates silently, so
-    // the rows would route on garbage scores
-    val chan = channelFilter(records, channel)
-      .withColumn("row_id", xxhash64($"doc_name", $"content_type", $"content_id"))
-      .withColumn("v", toDouble($"embedding"))
-    val indexed = chan.select($"doc_name", $"page_num", $"content_type",
-      $"content_id", $"content_raw", $"row_id", $"v",
-      l2Norm($"v").as("nrm"), AnnIndex.cellOf(ci.books, $"v").as("cell"),
-      AnnIndex.encodeCodes(ci.pqBooks).as("codes"))
-    // count the BATCH (bounded by the new rows), never the index —
-    // the same pass also yields the per-cell doc_name stats the
-    // routing sidecar needs, so this stays ONE job
-    val cellStats = indexed.groupBy($"cell")
-      .agg(count(lit(1)).as("n"), min($"doc_name").as("mn"),
-        max($"doc_name").as("mx"))
-      .collect()
-    val n = cellStats.map(_.getAs[Long]("n")).sum
-    if (n > 0) {
-      // WIDEN the routing sidecar BEFORE the data lands: a crash
-      // between the two steps leaves ranges wider than the data
-      // (harmless); the reverse order could prune cells that already
-      // hold the new rows. Only existing entries widen — a cell with
-      // no entry is unknown-contents (always eligible) and must stay
-      // that way.
-      val cDirP = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")
-      val fsA = cDirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cur = GraftVectorDB.readDocRanges(fsA, cDirP)
-      if (cur.nonEmpty) {
-        val widened = cur ++ cellStats.flatMap { r =>
-          val c = r.getAs[Int]("cell")
-          cur.get(c).map { case (mn, mx) =>
-            c -> (GraftVectorDB.minU8(mn, r.getAs[String]("mn")),
-              GraftVectorDB.maxU8(mx, r.getAs[String]("mx"))) }
-        }
-        if (widened != cur) GraftVectorDB.writeDocRanges(fsA, cDirP, widened)
-      }
-      // the build's layout: one sorted run per touched cell
-      writeCells(indexed, annPath(channel), SaveMode.Append)
-      // drift accounting: appends route with BUILD-time centroids, so
-      // cell geometry degrades as the appended fraction grows — past
-      // the measured-safe bound (AnnAppendDriftSpec) the caller must
-      // rebuild, and silence here would hide a slow recall leak.
-      // The fraction is computed ONCE from values already in hand —
-      // this is the hot ingest path, and each readCounter is a driver
-      // FS round-trip (an object-store GET at deployment scale)
-      val appended = readCounter(channel, "_APPENDED") + n
-      writeCounter(channel, "_APPENDED", appended)
-      // stamp LAST: each replacement under _centroids moves its mtime
-      // (a cache-key part), so a reader re-caching before the stamp
-      // would re-cache once more after it
-      bumpIndexGeneration(channel)
-      val built = readCounter(channel, "_BUILT")
-      val frac = if (built <= 0) 0.0 else appended.toDouble / built
-      if (frac > GraftVectorDB.AppendRebuildFraction)
-        log.warn(f"appendAnnIndex('$channel'): appended rows now $frac%.2fx " +
-          f"the built corpus (> ${GraftVectorDB.AppendRebuildFraction}%.1fx) - " +
-          "cell routing uses build-time centroids, so recall degrades from " +
-          "here; rebuild with buildAnnIndex to re-fit the geometry")
-    }
-    n
-  }
+  /** Whether [[annAppendFraction]] is past
+    * [[GraftVectorDB.AppendRebuildFraction]], the bound
+    * AnnAppendDriftSpec measures recall against. */
+  def annIndexNeedsRebuild(channel: String): Boolean = ann(channel).needsRebuild
 
-  /** Invalidate every session's cached serving state for a channel:
-    * rewrite the `_STAMP` content tag (see [[cachedIndex]]) and drop
-    * this JVM's entry directly. A UUID, not nanoTime: nanoTime is an
-    * arbitrary-origin per-JVM counter, so two writers in DIFFERENT
-    * JVMs could in principle write identical tags and leave another
-    * session's cached file listing stale — the exact bug the content
-    * tag exists to prevent. */
-  private def bumpIndexGeneration(channel: String): Unit = {
-    val stamp = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids/_STAMP")
-    AtomicDir.write(fsOf(stamp), stamp, java.util.UUID.randomUUID().toString)
-    GraftVectorDB.routingCache.remove(
-      new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids").toString)
-  }
+  /** Cell count for a drift-triggered rebuild, scaled with the live
+    * index size ([[AnnSidecar.adaptiveCells]]). */
+  def adaptiveCells(channel: String): Int = ann(channel).adaptiveCells
 
-  /** Bookkeeping counters beside the routing table (`_BUILT` = rows at
-    * the last build, `_APPENDED` = rows appended since): tiny text
-    * files, absent == 0. */
-  private def counterPath(channel: String, name: String) =
-    new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids/$name")
+  /** The scheduled per-channel maintenance: rebuild at
+    * [[adaptiveCells]] once the appended fraction is past `rebuildAt`
+    * (which subsumes compaction), else [[compactAnnIndex]] with hot-cell
+    * splitting. Returns (rows compacted, whether a rebuild ran). */
+  def maintain(channel: String, targetFiles: Int = 1,
+      splitSkewedPast: Double = GraftVectorDB.CellSkewRatio,
+      rebuildAt: Double = GraftVectorDB.AppendRebuildFraction): (Long, Boolean) =
+    withWriterLease("maintain")(ann(channel).maintain(targetFiles, splitSkewedPast, rebuildAt))
 
-  private def counterExists(channel: String, name: String): Boolean = {
-    val p = counterPath(channel, name)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readCounter(channel: String, name: String): Long = {
-    val p = counterPath(channel, name)
-    AtomicDir.readLong(fsOf(p), p)
-  }
-
-  private def writeCounter(channel: String, name: String, v: Long): Unit = {
-    val p = counterPath(channel, name)
-    AtomicDir.write(fsOf(p), p, v.toString)
-  }
-
-  /** Appended rows since the last build, as a fraction of the built
-    * corpus (0.0 for a fresh or never-built index). The drift gauge:
-    * appended rows route with build-time centroids, so this is the
-    * knob the rebuild policy reads. */
-  def annAppendFraction(channel: String): Double = {
-    val built = readCounter(channel, "_BUILT")
-    if (built <= 0) 0.0
-    else readCounter(channel, "_APPENDED").toDouble / built
-  }
-
-  /** Rebuild policy: true once the appended fraction exceeds
-    * [[GraftVectorDB.AppendRebuildFraction]] — the bound
-    * AnnAppendDriftSpec measures recall against. [[appendAnnIndex]]
-    * warns when this trips; a scheduled maintenance job should rebuild. */
-  def annIndexNeedsRebuild(channel: String): Boolean =
-    annAppendFraction(channel) > GraftVectorDB.AppendRebuildFraction
-
-  /** ANN-index maintenance — [[compact]]'s twin for the index files:
-    * [[appendAnnIndex]] adds a sorted run (about one file) per touched
-    * cell per micro-batch forever, and at 100 TB the accumulating
-    * small files are the operational killer (listing latency + one
-    * task per tiny file). It also brings an index written before
-    * [[writeCells]] (one file per input partition per cell) to the
-    * one-run-per-cell layout. Rewrites every cell holding more than
-    * `targetFiles` parquet files into `targetFiles` doc_name-sorted
-    * files (restoring the row-group-skipping layout appends fragment)
-    * via a dot-prefixed temp dir + atomic rename — O(touched cells):
-    * untouched cells' files are neither read nor moved. Search results are invariant
-    * and the generation stamp bumps so every session's cached serving
-    * frame re-lists files. Single-writer contract, same as compact().
-    * Returns rows rewritten. */
+  /** Rewrite every cell holding more than `targetFiles` parquet files
+    * as `targetFiles` doc_name-sorted files, O(touched cells), after
+    * splitting cells hotter than `splitSkewedPast` × the mean
+    * ([[AnnSidecar.compact]]). Returns rows rewritten. */
   def compactAnnIndex(channel: String, targetFiles: Int = 1,
-      splitSkewedPast: Double = Double.PositiveInfinity): Long = withWriterLease("compactAnnIndex") {
-    require(annIndexBuilt(channel),
-      s"no ANN index for '$channel' — run buildAnnIndex first")
-    val root = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val recovered = recoverAnnIndex(fs, root)
-    // optional occupancy rebalance rides the same maintenance entry:
-    // split FIRST so the freshly-written sub-cells (1 file each) need
-    // no compaction and the superseded hot cell is never rewritten
-    if (!splitSkewedPast.isPosInfinity) splitHotCells(channel, splitSkewedPast)
-    var rewritten = 0L
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .foreach { st =>
-        val nFiles = fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))
-        if (nFiles > targetFiles) {
-          val cellDir = st.getPath
-          val tmp = new org.apache.hadoop.fs.Path(root,
-            s".compact_tmp_${cellDir.getName}")
-          val old = new org.apache.hadoop.fs.Path(root,
-            s".compact_old_${cellDir.getName}")
-          // reading the cell dir directly excludes the cell partition
-          // column — exactly what the rewritten files must contain
-          val cur = spark.read.parquet(cellDir.toString)
-          val n = cur.count() // footer-stats count, no data scan
-          val laid =
-            if (targetFiles == 1) cur.repartition(1)
-            else cur.repartitionByRange(targetFiles, $"doc_name", $"row_id")
-          laid.sortWithinPartitions("doc_name", "row_id")
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          AtomicDir.swap(fs, tmp, cellDir, old)
-          rewritten += n
-        }
-      }
-    // bump on RECOVERY too, not just rewrites: the crashed compaction
-    // never stamped a new generation, so a session that listed files
-    // during the orphaned window (cell dir absent lists fine) holds a
-    // cache whose key still matches after the restore — without the
-    // bump it would silently serve without the restored cell forever
-    if (rewritten > 0 || recovered) bumpIndexGeneration(channel)
-    rewritten
-  }
+      splitSkewedPast: Double = Double.PositiveInfinity): Long =
+    withWriterLease("compactAnnIndex")(ann(channel).compact(targetFiles, splitSkewedPast))
 
-  /** Per-cell row counts read from parquet file FOOTERS — driver
-    * metadata I/O only: no Spark job, no data scan, O(files) like the
-    * drift counters. The occupancy gauge for routing-skew detection:
-    * routing centroids never refit between rebuilds, so a hot key
-    * range concentrates appends into one cell and that cell's probe
-    * scan comes to dominate p99 search latency at scale. */
-  def annCellHistogram(channel: String): Map[Int, Long] = {
-    require(annIndexBuilt(channel),
-      s"no ANN index for '$channel' — run buildAnnIndex first")
-    val root = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map { st =>
-        val n = fs.listStatus(st.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, spark.sparkContext.hadoopConfiguration)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
-        st.getPath.getName.stripPrefix("cell=").toInt -> n
-      }.toMap
-  }
+  /** Per-cell row counts from parquet footers (no Spark job). */
+  def annCellHistogram(channel: String): Map[Int, Long] = ann(channel).cellHistogram
 
-  /** Occupancy skew: hottest cell / mean non-empty cell (1.0 =
-    * perfectly balanced; 0.0 = empty index). */
-  def annCellSkew(channel: String): Double = {
-    val occ = annCellHistogram(channel).values.filter(_ > 0)
-    if (occ.isEmpty) 0.0 else occ.max.toDouble * occ.size / occ.sum
-  }
+  /** Occupancy skew: hottest cell / mean non-empty cell. */
+  def annCellSkew(channel: String): Double = ann(channel).cellSkew
 
-  /** Skew gauge with the warn the maintenance policy reads — the
-    * occupancy twin of [[annIndexNeedsRebuild]]: true once the hottest
-    * cell exceeds [[GraftVectorDB.CellSkewRatio]] × the mean, the
-    * point where one probe scan dominates latency and
-    * [[splitHotCells]] should run. */
-  def annIndexSkewed(channel: String): Boolean = {
-    val s = annCellSkew(channel)
-    val skewed = s > GraftVectorDB.CellSkewRatio
-    if (skewed)
-      log.warn(f"ANN index '$channel': hottest cell is $s%.1fx the mean occupancy " +
-        f"(> ${GraftVectorDB.CellSkewRatio}%.1fx) - one probe scan dominates " +
-        "search latency; run splitHotCells (or compactAnnIndex with " +
-        "splitSkewedPast) to rebalance without a rebuild")
-    skewed
-  }
+  /** Whether the skew is past [[GraftVectorDB.CellSkewRatio]], with a
+    * warning to split. */
+  def annIndexSkewed(channel: String): Boolean = ann(channel).skewed
 
-  /** Split every cell hotter than `ratio` × the mean occupancy into
-    * two sub-cells — O(touched cells), no rebuild: the hot cell's rows
-    * (and ONLY its rows) are re-fit into 2 sub-centroids (bounded
-    * sample + driver Lloyd, the buildAnnIndex fit machinery), rewritten
-    * into two fresh cell dirs, and the routing table amendment commits
-    * as ONE atomic file rename (`_centroids/_splits.vN` — remove the
-    * hot cell's centroid, append the two sub-centroids). Probes of
-    * other cells are unchanged; full-probe searches remain exhaustive
-    * because the routing table always references exactly the live
-    * cells.
-    *
-    * Crash contract (single-writer, like all maintenance): before the
-    * commit rename the staged sub-cell dirs are UNREFERENCED by the
-    * routing table — invisible to every probe (`cell.isin(routing)`)
-    * — and the source cell still serves; after it, the source dir is
-    * unreferenced and the sub-cells serve. Either way results are
-    * complete at every instant, and [[dropUnreferencedCells]] (run on
-    * every maintenance entry) reclaims the dead side. Returns the cell
-    * ids that were split. */
+  /** Split every cell hotter than `ratio` × the mean occupancy into two
+    * sub-cells without a rebuild ([[AnnSidecar.splitHot]]). Returns the
+    * cells split. */
   def splitHotCells(channel: String,
-      ratio: Double = GraftVectorDB.CellSkewRatio): Seq[Int] = withWriterLease("splitHotCells") {
-    require(annIndexBuilt(channel),
-      s"no ANN index for '$channel' — run buildAnnIndex first")
-    val root = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAnnIndex(fs, root)
-    dropUnreferencedCells(channel, fs, root)
-    // iterate: a bisected hot cell's halves can still sit above the
-    // ratio (a 16× cell needs two rounds) — loop until balanced, with
-    // a bound so a pathological distribution (all rows one point, thus
-    // unsplittable) cannot spin
-    val all = scala.collection.mutable.ArrayBuffer.empty[Int]
-    // cells whose bisection could not separate rows THIS call (all
-    // coincident vectors): re-attempting them every round would restage
-    // and abort the same full-size rewrite up to MaxSplitRounds times
-    val unsplittable = scala.collection.mutable.Set.empty[Int]
-    var rounds = 0
-    var progressed = true
-    while (progressed && rounds < GraftVectorDB.MaxSplitRounds) {
-      val occ = annCellHistogram(channel).filter(_._2 > 0)
-      if (occ.isEmpty) return all.toSeq
-      val mean = occ.values.sum.toDouble / occ.size
-      // a cell needs at least 4 rows for a meaningful 2-means refit
-      val hot = occ.filter { case (c, n) =>
-          n > ratio * mean && n >= 4 && !unsplittable.contains(c) }
-        .keys.toSeq.sorted
-      // a split either COMMITS (sub-cells strictly smaller — progress
-      // by construction) or aborts with nothing staged or amended: a
-      // coincident-vector cell can no longer commit a permanent empty
-      // twin centroid into the routing table on every maintenance run
-      val results = hot.map(h => h -> splitCell(channel, h, fs, root))
-      results.foreach {
-        case (h, Some(_)) => all += h
-        case (h, None) =>
-          unsplittable += h
-          log.warn(s"splitHotCells('$channel'): cell $h cannot be split " +
-            s"(occupancy ${occ(h)} but <2 distinct vectors) — skipping")
-      }
-      progressed = results.exists(_._2.isDefined)
-      rounds += 1
-      if (progressed)
-        log.info(s"splitHotCells('$channel') round $rounds: split cells " +
-          s"${results.collect { case (h, Some(_)) => h }.mkString(",")} " +
-          s"(occupancy ${hot.map(occ).mkString(",")} vs mean $mean%.1f)")
-    }
-    if (all.nonEmpty) bumpIndexGeneration(channel)
-    all.toSeq
-  }
-
-  /** One cell's split: stage two sub-cell dirs, commit the routing
-    * amendment atomically, roll the superseded source dir forward.
-    * Returns the two sub-cells' row counts (footer stats) — or None
-    * WITHOUT committing (or leaving) anything when the cell cannot
-    * make progress: a coincident-vector cell (all rows one point)
-    * would otherwise re-emerge at full size under a fresh id plus a
-    * permanently EMPTY twin centroid in the routing table — repeated
-    * scheduled maintenance would accumulate empty cells without bound,
-    * growing the amendment log and displacing useful cells from probe
-    * sets. */
-  private def splitCell(channel: String, h: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[(Long, Long)] = {
-    val ci = cachedIndex(channel)
-    val cellDir = new org.apache.hadoop.fs.Path(root, s"cell=$h")
-    val cur = spark.read.parquet(cellDir.toString)
-    // bounded deterministic sample of THIS cell only + driver 2-means
-    val sample = AnnIndex.sampleVectors(cur.select($"row_id", $"v"), $"row_id")
-    // pre-check before ANY write: 2-means over <2 distinct points
-    // yields a duplicate centroid and a one-sided assignment
-    if (sample.map(_.toSeq).distinct.lengthCompare(2) < 0) return None
-    val subs = AnnIndex.routingBooks(
-      AnnIndex.centroidsFromSample(spark, sample, 2))
-    // fresh ids: the amendment history only ever appends new ids, so
-    // max+1/max+2 can never collide with a live or superseded cell
-    val maxId = ci.books.map(_._1).max
-    val books2 = Array((maxId + 1, subs(0)._2), (maxId + 2, subs(1)._2))
-    val assigned = cur.withColumn("cell2", AnnIndex.cellOf(books2, $"v"))
-    books2.foreach { case (id, _) =>
-      val tmp = new org.apache.hadoop.fs.Path(root, s".compact_tmp_cell=$id")
-      assigned.filter($"cell2" === id).drop("cell2")
-        .repartition(1).sortWithinPartitions("doc_name", "row_id")
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      AtomicDir.swap(fs, tmp, new org.apache.hadoop.fs.Path(root, s"cell=$id"),
-        new org.apache.hadoop.fs.Path(root, s".compact_old_cell=$id"))
-    }
-    // the staged dirs are UNREFERENCED (invisible to every probe) until
-    // the amendment commits — so an abort here leaves no trace beyond
-    // dirs dropUnreferencedCells reclaims, and we reclaim them eagerly
-    val Seq(na, nb) = books2.toSeq.map { case (id, _) =>
-      spark.read.parquet(
-        new org.apache.hadoop.fs.Path(root, s"cell=$id").toString).count()
-    }
-    if (na == 0L || nb == 0L) {
-      // the sample looked separable but the full cell was not (e.g.
-      // duplicates dominating beyond the sample) — ABORT: committing
-      // would put a permanent empty cell in the routing table
-      books2.foreach { case (id, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"cell=$id"), true) }
-      return None
-    }
-    // COMMIT: one atomic rename of the amendment file
-    val prior = GraftVectorDB.readSplits(fs,
-      new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids"))._2
-    GraftVectorDB.writeSplits(fs,
-      new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids"),
-      prior ++ Seq(GraftVectorDB.SplitOp("R", h, Array.empty[Double])) ++
-        books2.map { case (id, v) => GraftVectorDB.SplitOp("A", id, v) })
-    // roll forward: the source cell is now unreferenced — reclaim it
-    fs.delete(cellDir, true)
-    Some((na, nb))
-  }
-
-  /** Reclaim cell dirs the CURRENT routing table does not reference —
-    * they are invisible to every probe (partition scans filter on the
-    * routing table's cell ids): either a committed split's superseded
-    * source cell or an uncommitted split's staged outputs. Never
-    * touches a referenced dir, so it can never delete serving data. */
-  private def dropUnreferencedCells(channel: String,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val live = cachedIndex(channel).books.map(_._1).toSet
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .filterNot(st => live.contains(st.getPath.getName.stripPrefix("cell=").toInt))
-      .foreach { st =>
-        log.warn(s"ANN index '$channel': reclaiming unreferenced ${st.getPath} " +
-          "(leftover of an interrupted split)")
-        fs.delete(st.getPath, true)
-      }
-  }
-
-  /** Crash recovery ([[AtomicDir.recover]]) for one channel's index:
-    * the per-cell swaps of [[compactAnnIndex]], [[splitHotCells]] and
-    * the delete paths, the small and versioned files under
-    * `_centroids`, and the per-file delete swaps inside each cell.
-    * Returns whether any cell was restored. */
-  private def recoverAnnIndex(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Boolean = {
-    val recovered = AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"))
-    AtomicDir.recover(fs, new org.apache.hadoop.fs.Path(root, "_centroids"), ".old_",
-      Seq("_splits.v", "_docranges.v", "_STAMP", "_BUILT", "_APPENDED", "_DELETED")
-        .map(AtomicDir.stagedPrefix))
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .foreach(st => recoverFileSwaps(fs, st.getPath))
-    recovered
-  }
+      ratio: Double = GraftVectorDB.CellSkewRatio): Seq[Int] =
+    withWriterLease("splitHotCells")(ann(channel).splitHot(ratio))
 
   /** Document deletion — the takedown/GDPR lifecycle op a store
     * operated for years needs, WITHOUT a full rebuild:
@@ -1998,126 +1142,16 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val fs = new org.apache.hadoop.fs.Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.keys.toSeq.sorted.foreach { ct =>
-      deleteNamesFromDir(fs,
+      GraftVectorDB.deleteNamesFromDir(spark, fs,
         new org.apache.hadoop.fs.Path(s"$storePath/content_type=$ct"), names,
-        sortCols = Seq("doc_name", "page_num"))
+        Seq("doc_name", "page_num"), GraftVectorDB.StoreDataSchema)
     }
     // stale FileStatus entries (same path, new length) must not serve
     if (touched.nonEmpty) spark.catalog.refreshByPath(storePath)
     // index cleanup ALWAYS runs for EVERY registered channel — a crash
     // between the store pass and this point converges by re-running
-    channelNames.filter(annIndexBuilt)
-      .foreach(ch => deleteNamesFromAnnIndex(ch, names))
+    channels.values.filter(_.built).foreach(_.deleteNames(names))
     touched.values.sum
-  }
-
-  /** FILE-granular delete within one sorted parquet dir (a store
-    * content_type partition or an index cell): the dir's files are
-    * doc_name-sorted with row-group min/max stats, so the footers —
-    * driver metadata I/O — identify exactly which files can hold a
-    * victim; only THOSE files rewrite. At 100 TB this is the difference
-    * between a takedown costing O(touched files) and rewriting the
-    * whole partition (≈ the corpus for the text channel).
-    *
-    * The rewrite is ONE Spark job for ALL touched files of the dir
-    * (rows tagged with their source file via `input_file_name`, one
-    * output file per source via a partitioned write) — a takedown
-    * touching hundreds of files costs one cluster-parallel job, not
-    * hundreds of sequential driver-paced single-file jobs (the round-6
-    * serialization). Each output then swaps in over its source file
-    * ([[AtomicDir.swap]], aside `.delete_old_<name>`), and an
-    * all-rows-deleted file is replaced by a ZERO-ROW file rather than
-    * removed, so a missing live file is always unambiguous crash
-    * state, never a completed delete. `sortCols` restores the dir's sorted layout (store
-    * partitions: doc_name+page_num; index cells: doc_name+row_id) —
-    * the batched read does not preserve per-file row order the way the
-    * old single-file read did. Returns rows removed. */
-  private def deleteNamesFromDir(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, names: Seq[String],
-      sortCols: Seq[String]): Long = {
-    recoverFileSwaps(fs, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sortedNames = names.sorted.toArray
-    def footerRows(p: org.apache.hadoop.fs.Path): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    val touched = fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .filter(f => GraftVectorDB.fileTouchesNames(f, sortedNames, conf))
-      .map(_.getPath).sortBy(_.getName)
-    if (touched.isEmpty) return 0L
-    val before = touched.map(footerRows).sum
-    // one job: every touched file's survivors, tagged by source file
-    // (file NAMES are unique within the dir — input_file_name returns
-    // the full URI, whose encoding is not worth depending on) and laid
-    // out one output file per source (repartition on the tag puts each
-    // source's rows in one task; the partitioned write splits by tag)
-    val fileIdx = touched.map(_.getName).zipWithIndex.toMap
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".delete_tmp_batch")
-    spark.read.parquet(touched.map(_.toString): _*)
-      .withColumn("__f", element_at(typedLit(fileIdx),
-        substring_index(input_file_name(), "/", -1)))
-      .filter(!$"doc_name".isin(names: _*))
-      .repartition($"__f")
-      .sortWithinPartitions(($"__f" +: sortCols.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("__f").parquet(tmp.toString)
-    var removed = before
-    touched.foreach { live =>
-      val k = fileIdx(live.getName)
-      val outDir = new org.apache.hadoop.fs.Path(tmp, s"__f=$k")
-      val replacement =
-        if (fs.exists(outDir))
-          fs.listStatus(outDir).map(_.getPath)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(throw new java.io.IOException(
-              s"deleteNamesFromDir: no replacement part file under $outDir"))
-        else {
-          // every row of this file was a victim: stage a ZERO-ROW
-          // replacement (schema from the original's footer — one tiny
-          // limit(0) job) so the live file never goes missing
-          val empty = new org.apache.hadoop.fs.Path(tmp, s"__empty_$k")
-          spark.read.parquet(live.toString).limit(0).coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(empty.toString)
-          fs.listStatus(empty).map(_.getPath)
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(throw new java.io.IOException(
-              s"deleteNamesFromDir: no zero-row part file under $empty"))
-        }
-      removed -= footerRows(replacement)
-      AtomicDir.swap(fs, replacement, live,
-        new org.apache.hadoop.fs.Path(dir, s".delete_old_${live.getName}"))
-    }
-    fs.delete(tmp, true)
-    removed
-  }
-
-  /** Crash recovery for [[deleteNamesFromDir]]'s per-file swaps. */
-  private def recoverFileSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit =
-    AtomicDir.recover(fs, dir, ".delete_old_", Seq(".delete_tmp_"))
-
-  /** Name-list index cleanup, file-granular: the touched CELLS come
-    * from one column-pruned, row-group-skipping scan; within each,
-    * only footer-intersecting files rewrite. */
-  private def deleteNamesFromAnnIndex(channel: String, names: Seq[String]): Long = {
-    val root = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val recovered = recoverAnnIndex(fs, root)
-    val ci = cachedIndex(channel)
-    val touchedCells = ci.index.filter($"doc_name".isin(names: _*))
-      .select($"cell").distinct().collect().map(_.getInt(0)).sorted
-    var removed = 0L
-    touchedCells.foreach { c =>
-      removed += deleteNamesFromDir(fs,
-        new org.apache.hadoop.fs.Path(root, s"cell=$c"), names,
-        sortCols = Seq("doc_name", "row_id"))
-    }
-    if (touchedCells.nonEmpty || recovered) bumpIndexGeneration(channel)
-    if (removed > 0)
-      writeCounter(channel, "_DELETED", readCounter(channel, "_DELETED") + removed)
-    removed
   }
 
   def deleteWhere(cond: Column): Long = withWriterLease("deleteWhere") {
@@ -2169,7 +1203,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         .count(_.getPath.getName.endsWith(".parquet")))
       // the partition read excludes content_type — restore it so the
       // predicate can reference it, drop it again before the write
-      val remaining = spark.read.parquet(partDir.toString)
+      val remaining = spark.read.schema(GraftVectorDB.StoreDataSchema).parquet(partDir.toString)
         .withColumn("content_type", lit(ct))
         .filter(keep).drop("content_type")
       // preserve the doc_name-sorted layout (and file count) location
@@ -2182,54 +1216,23 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // index cleanup ALWAYS runs for EVERY registered channel (see
     // scaladoc: rerun-to-converge after a crash between the store
     // rewrite and this point)
-    channelNames.filter(annIndexBuilt)
-      .foreach(ch => deleteFromAnnIndex(ch, hit, keep))
+    channels.values.filter(_.built).foreach(_.deleteWhere(hit, keep))
     touched.values.sum
-  }
-
-  /** Drop matching rows from one channel's ANN index: ONE column-pruned
-    * scan finds the touched cells, each touched cell rewrites via the
-    * compactAnnIndex swap protocol (O(touched cells) — untouched cells'
-    * files are neither read nor moved), generation bumps so every
-    * session's cached serving frame re-lists files. */
-  private def deleteFromAnnIndex(channel: String, hit: Column, keep: Column): Long = {
-    val root = new org.apache.hadoop.fs.Path(annPath(channel))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val recovered = recoverAnnIndex(fs, root)
-    val ci = cachedIndex(channel)
-    val touchedCells = ci.index.filter(hit).select($"cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    var removed = 0L
-    touchedCells.foreach { c =>
-      val cellDir = new org.apache.hadoop.fs.Path(root, s"cell=$c")
-      val tmp = new org.apache.hadoop.fs.Path(root, s".compact_tmp_cell=$c")
-      val old = new org.apache.hadoop.fs.Path(root, s".compact_old_cell=$c")
-      val cur = spark.read.parquet(cellDir.toString)
-      val before = cur.count() // footer-stats count, no data scan
-      // single doc_name-sorted file per rewritten cell — the layout
-      // compactAnnIndex restores (a delete is a compaction opportunity)
-      cur.filter(keep).repartition(1)
-        .sortWithinPartitions("doc_name", "row_id")
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      AtomicDir.swap(fs, tmp, cellDir, old)
-      removed += before - spark.read.parquet(cellDir.toString).count()
-    }
-    if (touchedCells.nonEmpty || recovered) bumpIndexGeneration(channel)
-    if (removed > 0)
-      writeCounter(channel, "_DELETED", readCounter(channel, "_DELETED") + removed)
-    removed
   }
 
   /** The channel REGISTRY — a training-data store has N embedding
     * spaces (text, image, audio, video, code…), not a hardcoded two:
     * every lifecycle op (build/append/search/delete/maintain) resolves
-    * channels here, so a registered space gets the whole surface for
+    * channels here, each to its own index component
+    * ([[AnnSidecar]]), so a registered space gets the whole surface for
     * free. The built-in entries are the reference's dual text/image
     * spaces (run_text_search / run_image_search,
     * vector_db.py:698-759). Insertion-ordered: delete/maintain sweeps
     * iterate deterministically. */
   private val channels = scala.collection.mutable.LinkedHashMap(
-    GraftVectorDB.builtinChannels.map(c => c.name -> c): _*)
+    GraftVectorDB.builtinChannels.map(c => c.name -> annOf(c)): _*)
+
+  private def annOf(c: GraftVectorDB.ChannelDef) = new AnnSidecar(spark, storeDir, c, () => store)
 
   /** Registered channel names, registration order. */
   def channelNames: Seq[String] = channels.keys.toSeq
@@ -2244,547 +1247,86 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   def registerChannel(c: GraftVectorDB.ChannelDef): Unit = {
     require(!channels.contains(c.name), s"channel '${c.name}' already registered")
     require(c.contentTypes.nonEmpty, s"channel '${c.name}' claims no content types")
-    val claimed = channels.values.flatMap(_.contentTypes).toSet
+    val claimed = channels.values.flatMap(_.channel.contentTypes).toSet
     val overlap = c.contentTypes.filter(claimed)
     require(overlap.isEmpty,
       s"channel '${c.name}' claims content types already owned: ${overlap.mkString(",")}")
     require(c.encodeLocal("dim probe").length == c.dim,
       s"channel '${c.name}': encodeLocal produces ${c.encodeLocal("dim probe").length} " +
         s"dims, declared ${c.dim}")
-    channels.put(c.name, c)
+    channels.put(c.name, annOf(c))
   }
 
-  private def channelDef(channel: String): GraftVectorDB.ChannelDef =
+  /** The channel's index component; unknown names fail listing the
+    * registered ones. */
+  private[graft] def ann(channel: String): AnnSidecar =
     channels.getOrElse(channel, throw new IllegalArgumentException(
       s"unknown ANN channel '$channel' (${channels.keys.mkString(" | ")})"))
 
-  /** The one channel→predicate mapping, shared by build and append so
-    * appended rows can never route differently from built rows. */
   private def channelFilter(df: DataFrame, channel: String): DataFrame =
-    df.filter($"content_type".isin(channelDef(channel).contentTypes: _*))
+    ann(channel).rowsOf(df)
 
   private def channelRows(channel: String): DataFrame = channelFilter(store, channel)
 
   /** Approximate text search against the ANN index: the query routes
-    * to its `nProbe` nearest cells (a centroid-table-sized driver
-    * computation) and ONLY those cells' files are scanned — the
-    * partition-pruned twin of [[search]]'s full-channel scan, the path
-    * that keeps p99 search latency flat while the store grows to
-    * 100 TB. Same output contract as [[search]]; `location` applies
-    * get_search_range's folder-prefix scope (vector_db.py:673-682)
-    * INSIDE the pruned scan — metadata-filtered ANN is the most common
-    * vector-db query shape, and falling back to the exact full-scan
-    * path just to filter would forfeit the index.
-    *
-    * Serving-path cost: ONE Spark job (the pruned-scan top-k). The
-    * routing table, index frame, and parquet schema are cached per
-    * build generation (the `_centroids` mtime the build's rename
-    * stamps — a driver metadata call, no job, invalidated by rebuild);
-    * the query embeds driver-side ([[VectorStore.embedTextLocal]]);
-    * rank numbering attaches to the ≤ topN collected rows on the
-    * driver. GraftVectorDBSpec pins the per-search job count. */
+    * to its `nProbe` nearest cells and only those cells' files are
+    * scanned — one pruned-scan Spark job warm, `location` filtering
+    * inside the scan, escalating to every scope-eligible cell when the
+    * probed ones under-fill ([[AnnSidecar.search]]). Same output
+    * contract as [[search]]. */
   def searchAnn(queryText: String, topN: Int = 5,
       nProbe: Int = AnnIndex.AutoNProbe, location: Option[String] = None): DataFrame =
-    searchAnnChannel(queryText, "text", topN, nProbe, location)
+    ann("text").search(queryText, topN, nProbe, location)
 
-  /** Image-space twin of [[searchAnn]] over the `image`-channel index
-    * (build with `buildAnnIndex(channel = "image")`): the query content
-    * encodes with the image-space hash family, mirroring
-    * [[searchImage]]'s exact scan. */
+  /** Image-space twin of [[searchAnn]], mirroring [[searchImage]]. */
   def searchAnnImage(queryContent: String, topN: Int = 5,
       nProbe: Int = AnnIndex.AutoNProbe, location: Option[String] = None): DataFrame =
-    searchAnnChannel(queryContent, "image", topN, nProbe, location)
+    ann("image").search(queryContent, topN, nProbe, location)
 
-  /** ANN search over ANY registered channel — the generic form of
-    * [[searchAnn]]/[[searchAnnImage]] (same pruned-scan serving path,
-    * same probe escalation). */
+  /** [[searchAnn]] over any registered channel. */
   def searchAnnIn(channel: String, query: String, topN: Int = 5,
       nProbe: Int = AnnIndex.AutoNProbe, location: Option[String] = None): DataFrame =
-    searchAnnChannel(query, channel, topN, nProbe, location)
+    ann(channel).search(query, topN, nProbe, location)
 
-  /** IVF+PQ search over ANY registered channel — the generic form of
-    * [[searchAnnPq]]/[[searchAnnPqImage]]. */
-  def searchAnnPqIn(channel: String, query: String, topN: Int = 5,
-      nProbe: Int = AnnIndex.AutoNProbe, shortlist: Int = AnnIndex.AutoShortlist,
-      location: Option[String] = None): DataFrame =
-    searchAnnPqChannel(query, channel, topN, nProbe, shortlist, location)
-
-  /** The channel's routing table + resolved index frame, cached per
-    * build generation. Generation = the `_centroids` mtime (rebuilds
-    * swap via rename, which always moves it) plus the append stamp's
-    * content plus the split-amendment version. The staleness check is
-    * a handful of driver FS metadata calls and two tiny file reads
-    * (stamp + amendment log) — no Spark job, no parquet read on the
-    * warm path; appendAnnIndex additionally drops this JVM's entry
-    * directly, so a same-session writer never even waits on the tag. */
-  private def cachedIndex(channel: String): GraftVectorDB.CachedAnnIndex = {
-    channelDef(channel) // unknown names fail with the registry's error, not a path error
-    val cDir = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_centroids")
-    val fs = cDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a clear contract error beats the raw FileNotFoundException the
-    // getFileStatus below would surface for a never-built index
-    // (annIndexBuilt first rolls back a crashed rebuild swap, so
-    // serving self-heals instead of failing until a manual rebuild)
-    if (!annIndexBuilt(channel))
-      throw new IllegalStateException(
-        s"ANN index '$channel' has not been built (no ${annPath(channel)}/_centroids) — " +
-          s"run buildAnnIndex(channel = \"$channel\") first")
-    // generation = build-swap mtime + the append stamp's CONTENT (a
-    // unique tag string): appends add files inside existing cell dirs
-    // (root mtime does not move) and stamp mtime alone has filesystem
-    // tick granularity — two appends in one tick would leave cached
-    // file listings stale, silently dropping the second batch
-    val stampTag = AtomicDir.read(fs, new org.apache.hadoop.fs.Path(cDir, "_STAMP"))
-      .getOrElse("")
-    // the split-amendment version rides the generation key: a split's
-    // atomic commit (a new _splits.vN) must invalidate cached routing
-    // just like a rebuild or append does
-    val (splitsTag, splitOps) = GraftVectorDB.readSplits(fs, cDir)
-    val gen = s"${fs.getFileStatus(cDir).getModificationTime}:$stampTag:$splitsTag"
-    val key = cDir.toString
-    Option(GraftVectorDB.routingCache.get(key)) match {
-      case Some(c) if c.gen == gen && (c.index.sparkSession eq spark) => c
-      case _ =>
-        // geometry-aware table read: an imi `_centroids` persists the
-        // two half-space codebooks (m, k, cv) — expand the product
-        // driver-side into the flat (cell = i·K + j, c₁ᵢ ⊕ c₂ⱼ) table
-        // the whole serving machinery consumes. Exact: pair-sum
-        // ranking ≡ concatenated-centroid L2 (AnnIndex.imi), and the
-        // separable argmin keeps append-time assignment consistent
-        // with the build's PqEncode code pairs. Past ~10⁵ cells the
-        // production reader would rank via half-score sums instead of
-        // materializing K² rows — below it this expansion is free.
-        val geomP = new org.apache.hadoop.fs.Path(cDir, "_GEOMETRY")
-        val baseBooks = AtomicDir.read(fs, geomP).map(_.trim) match {
-          case Some(tag) =>
-            require(tag.startsWith("imi:"),
-              s"unknown ANN geometry marker '$tag' at $geomP")
-            val k1 = tag.stripPrefix("imi:").toInt
-            val hb = AnnIndex.readParts(spark, cDir.toString).collect()
-              .map(r => (r.getAs[Int]("m"), r.getAs[Int]("k"),
-                r.getAs[Seq[Double]]("cv").toArray))
-              .groupBy(_._1).toArray.sortBy(_._1)
-              .map(_._2.sortBy(_._2).map(_._3))
-            (for (i <- hb(0).indices; j <- hb(1).indices)
-              yield (i * k1 + j, hb(0)(i) ++ hb(1)(j))).toArray
-          case None => AnnIndex.routingBooks(AnnIndex.readParts(spark, cDir.toString))
-        }
-        val books = GraftVectorDB.applySplits(baseBooks, splitOps)
-        // an index persisted before PQ landed has no _codebooks —
-        // it stays servable on the plain probe path; only searchAnnPq
-        // demands a rebuild
-        val cbPath = new org.apache.hadoop.fs.Path(s"${annPath(channel)}/_codebooks")
-        val pqBooks =
-          if (fs.exists(cbPath)) AnnIndex.readCodebooks(spark, cbPath.toString)
-          else Array.empty[Array[Array[Double]]]
-        // resolve the index frame once: schema inference + file listing
-        // happen here, not per search
-        val idx = spark.read.parquet(annPath(channel))
-        // prefix→cell routing sidecar (may be absent: legacy index) —
-        // split-removed parents linger harmlessly (never queried) and
-        // split children are absent (always eligible)
-        val docRanges = GraftVectorDB.readDocRanges(fs, cDir)
-        // footer-stats count, once per generation: sizes the adaptive
-        // PQ shortlist (and nothing else) — no data scan
-        val nRows = idx.count()
-        val c = GraftVectorDB.CachedAnnIndex(gen, books, pqBooks, idx,
-          docRanges, nRows)
-        GraftVectorDB.routingCache.put(key, c)
-        c
-    }
-  }
-
-  /** The channel's driver-side query encoder (the embedTextLocal /
-    * embedImageLocal seam — property-tested bit-identical to the
-    * distributed embedders), resolved through the registry. */
-  private def embedLocal(channel: String, query: String): Array[Double] =
-    channelDef(channel).encodeLocal(query)
-
-  /** Rank probe cells for one query vector — driver arithmetic over
-    * the routing table. Uses the ASSIGNMENT metric (L2 argmin as
-    * dot − |c|²/2), so a query's own cell always ranks first. */
-  private def rankCells(ci: GraftVectorDB.CachedAnnIndex,
-      qv: Array[Double], nProbe: Int): Seq[Int] =
-    rankAmong(ci.books, qv, nProbe)
-
-  private def rankAmong(books: Array[(Int, Array[Double])],
-      qv: Array[Double], nProbe: Int): Seq[Int] =
-    books
-      .map { case (cell, c) =>
-        var d = 0.0; var i = 0
-        while (i < c.length) { d += qv(i) * c(i); i += 1 }
-        (cell, d - c.map(x => x * x).sum / 2) }
-      .sortBy { case (cell, d) => (-d, cell) }
-      .take(nProbe).map(_._1).toSeq
-
-  /** Can this cell hold a row matching EVERY prefix in scope? The
-    * sidecar's [min, max] is a superset of the cell's live doc_names
-    * (build exact, appends widen-first, deletes only shrink content),
-    * so `false` is a proof — skipping the cell cannot lose a row. */
-  private def cellEligible(ci: GraftVectorDB.CachedAnnIndex, cell: Int,
-      prefixes: Seq[String]): Boolean =
-    prefixes.forall(p => ci.docRanges.get(cell).forall {
-      case (mn, mx) => GraftVectorDB.rangeMayContainPrefix(mn, mx, p) })
-
-  /** The scope-eligible cell set — what escalation probes instead of
-    * ALL cells: a multi-tenant narrow scope re-probes only the cells
-    * whose doc_name range can intersect it. */
-  private[graft] def eligibleCells(ci: GraftVectorDB.CachedAnnIndex,
-      prefixes: Seq[String]): Seq[Int] =
-    if (prefixes.isEmpty || ci.docRanges.isEmpty) ci.books.map(_._1).toSeq
-    else ci.books.map(_._1).filter(c => cellEligible(ci, c, prefixes)).toSeq
-
-  /** Spec hook: the eligible set for a channel + scope without running
-    * a search. */
-  private[graft] def eligibleCellsOf(channel: String,
-      prefixes: Seq[String]): Seq[Int] =
-    eligibleCells(cachedIndex(channel), prefixes)
-
-  /** [[rankCells]] restricted to scope-eligible cells: a scoped query
-    * spends its nProbe budget on cells that can actually hold in-scope
-    * rows, so a narrow tenant scope resolves in its first pass instead
-    * of under-filling and paying a full re-probe. */
-  private def rankCellsScoped(ci: GraftVectorDB.CachedAnnIndex,
-      qv: Array[Double], nProbe: Int, prefixes: Seq[String]): Seq[Int] =
-    if (prefixes.isEmpty || ci.docRanges.isEmpty) rankAmong(ci.books, qv, nProbe)
-    else rankAmong(ci.books.filter(b => cellEligible(ci, b._1, prefixes)),
-      qv, nProbe)
-
-  /** Embed the query and rank probe cells — all driver arithmetic.
-    * A `location` scope restricts the ranking to scope-eligible cells
-    * (see [[rankCellsScoped]]). */
-  private def annProbe(query: String, channel: String, nProbe: Int,
-      location: Option[String] = None)
-      : (GraftVectorDB.CachedAnnIndex, Array[Double], Double, Seq[Int]) = {
-    val ci = cachedIndex(channel)
-    val qv = embedLocal(channel, query)
-    val qnrm = math.sqrt(qv.map(x => x * x).sum)
-    // AutoNProbe (the default) resolves against the LIVE cell count —
-    // the probe budget scales with the routing table it ranks over
-    // (see AnnIndex.autoNProbe for the measured decade decay it fixes)
-    val np = AnnIndex.resolveNProbe(nProbe, ci.books.length)
-    (ci, qv, qnrm, rankCellsScoped(ci, qv, np, location.toSeq))
-  }
-
-  /** Batch ANN search — the batch twin of the one-job serving path:
-    * [[searchAll]] scans the FULL channel for N queries, and N warm
-    * [[searchAnn]] calls run N pruned scans; this unions the N
-    * queries' probe sets into ONE partition-pruned scan. Each query
-    * scores only its own probed cells (a broadcast equi-join of the
-    * driver-computed (q_id, cell, qv) probe list against the scan), so
-    * per-query results are identical to N × [[searchAnn]]
-    * (spec-pinned), while each probed cell's files are read once no
-    * matter how many queries probe them; the per-query top-k is the
-    * payload-carrying [[graft.functions.expressions.TopKRows]]
-    * aggregate keyed by q_id, so ≤ topN rows per query per partition
-    * reach the shuffle WITH their metadata. Output contract =
-    * [[searchAll]].
-    *
-    * Per-query probe escalation matches [[searchAnn]]'s: queries whose
-    * top-k under-fills while unprobed cells remain (the sparse-scope
-    * case) re-probe EVERY cell in ONE second batch pass scoped to just
-    * that subset — one query's sparse scope never re-scans for the
-    * whole batch, and a dense batch stays one job (spec-pinned,
-    * AnnSparseScopeSpec). Escalated per-query results equal the
-    * escalated [[searchAnn]] singles.
-    *
-    * PER-QUERY scope: an optional `q_loc` column on the query frame
-    * scopes each query to its own folder prefix, exactly as
-    * [[searchAll]] (the call-level `location` always applies; a
-    * non-null `q_loc` narrows it per query) — each query's results
-    * equal the single-query [[searchAnn]] at its effective scope,
-    * escalation included. */
-  def searchAllAnn(queries: DataFrame, topN: Int = 5,
-      nProbe: Int = AnnIndex.AutoNProbe, location: Option[String] = None,
-      channel: String = "text"): DataFrame = {
-    val (ci, qs) = batchAnnQueries(queries, "searchAllAnn", channel)
-    val np = AnnIndex.resolveNProbe(nProbe, ci.books.length)
-    val first = batchAnnTopKOf(ci, batchProbeRows(ci, qs, np, channel, location),
-      topN, location, channel).collect()
-    val cells = ci.books.length
-    val rows =
-      if (np >= cells) first
-      else {
-        val filled = first.groupBy(_.getAs[Long]("q_id"))
-        // under-filled AND with eligible cells left unprobed: a query
-        // whose first pass already covered its scope-eligible set
-        // (routing sidecar) has nothing more to probe
-        val under = qs.filter { case (id, _, loc) =>
-          filled.get(id).forall(_.length < topN) &&
-            np < eligibleCells(ci, location.toSeq ++ loc.toSeq).length }
-        if (under.isEmpty) first
-        else {
-          // ESCALATION, batched: the under-filled subset re-probes its
-          // scope-eligible cells in ONE extra pruned-scan job; every
-          // other query's first-pass rows stand untouched
-          val underIds = under.map(_._1).toSet
-          first.filterNot(r => underIds(r.getAs[Long]("q_id"))) ++
-            batchAnnTopKOf(ci, batchProbeRows(ci, under, cells, channel, location),
-              topN, location, channel).collect()
-        }
-      }
-    // (q_id, rnk) ordering is driver work over ≤ N×topN rows — a Spark
-    // orderBy on this local frame would pay a range-exchange's sampling
-    // jobs for nothing
-    rows.map { r =>
-      (r.getAs[Long]("q_id"), r.getAs[Long]("rnk"), r.getAs[Double]("sim_r"),
-        r.getAs[String]("doc_name"), r.getAs[Long]("page_num"),
-        r.getAs[String]("content_type"), r.getAs[String]("content_id"),
-        r.getAs[String]("content_raw"), r.getAs[String]("channel"))
-    }.toSeq.sortBy(t => (t._1, t._2))
-      .toDF("q_id", "rnk", "sim_r", "doc_name", "page_num",
-        "content_type", "content_id", "content_raw", "channel")
-  }
-
-  /** Collect + validate a batch-ANN query frame — shared by
-    * [[searchAllAnn]] and the spec-facing [[annAllScanPlan]]. Each
-    * entry is (q_id, q_text, per-query scope) — the scope comes from
-    * an optional `q_loc` column (None when the column is absent or the
-    * row is null). */
-  private def batchAnnQueries(queries: DataFrame, op: String,
-      channel: String): (GraftVectorDB.CachedAnnIndex, Seq[(Long, String, Option[String])]) = {
-    val ci = cachedIndex(channel)
-    val hasLoc = queries.columns.contains("q_loc")
-    // the query batch is serving-sized: embed + rank cells driver-side,
-    // exactly the per-query annProbe arithmetic
-    val qs = queries.select(col("q_id").cast("long").as("q_id") +: col("q_text") +:
-        (if (hasLoc) Seq(col("q_loc").cast("string")) else Nil): _*)
-      .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[String]("q_text"),
-        if (hasLoc) Option(r.getAs[String]("q_loc")) else None)).toSeq
-    require(qs.length <= GraftVectorDB.MaxBatchQueries,
-      s"$op: ${qs.length} queries exceeds the per-call bound " +
-        s"(${GraftVectorDB.MaxBatchQueries}) — the (q_id, cell, qv) probe " +
-        "broadcast grows with the batch; chunk the query set and union the results")
-    // duplicate q_ids would merge two queries' scores into one top-k
-    // group and silently corrupt both result sets — fail loudly
-    require(qs.map(_._1).distinct.length == qs.length,
-      s"$op: q_id values must be unique (after cast to long)")
-    (ci, qs)
-  }
-
-  private def batchProbeRows(ci: GraftVectorDB.CachedAnnIndex,
-      qs: Seq[(Long, String, Option[String])], nProbe: Int, channel: String,
-      location: Option[String])
-      : Seq[(Long, Seq[Double], Double, Int, String)] = {
-    val np = AnnIndex.resolveNProbe(nProbe, ci.books.length)
-    qs.flatMap { case (id, text, loc) =>
-      val qv = embedLocal(channel, text)
-      val qnrm = math.sqrt(qv.map(x => x * x).sum)
-      // each query's probe budget is spent on ITS scope-eligible cells
-      // (call-level location ∩ per-query q_loc) — the multi-tenant
-      // batch shape probes each tenant's cells, not the union of all
-      rankCellsScoped(ci, qv, np, location.toSeq ++ loc.toSeq)
-        .map(cell => (id, qv.toSeq, qnrm, cell, loc.orNull))
-    }
-  }
-
-  /** The lazy batch top-k frame behind [[searchAllAnn]] — ONE scan of
-    * the UNION of probed cells (partition-pruned); the equi-join on
-    * cell scopes each query to its own probe set, and a non-null
-    * per-query `q_loc` prefix filters in the same codegen'd stage
-    * (before the top-k, so a scope can never be crowded out). */
-  private def batchAnnTopKOf(ci: GraftVectorDB.CachedAnnIndex,
-      probeRows: Seq[(Long, Seq[Double], Double, Int, String)], topN: Int,
-      location: Option[String], channel: String): DataFrame = {
-    val unionCells = probeRows.map(_._4).distinct
-    val anyLoc = probeRows.exists(_._5 != null)
-    val qFrame = probeRows.toDF("q_id", "qv", "qnrm", "cell", "q_loc")
-    val pruned = locScoped(ci.index.filter($"cell".isin(unionCells: _*)), location)
-    val joined0 = pruned.join(broadcast(qFrame), "cell")
-    val pairs = (if (anyLoc)
-        joined0.filter($"q_loc".isNull || $"doc_name".startsWith($"q_loc"))
-      else joined0)
-      .select($"q_id",
-        round(cosine($"qv", $"v", $"qnrm", $"nrm"), 4).as("sim_r"),
-        $"row_id",
-        struct($"doc_name", $"page_num", $"content_type", $"content_id",
-          $"content_raw").as("meta"))
-    batchTopK(pairs, topN, channel)
-  }
-
-  /** The lazy batch-ANN plan (first pass, no escalation) — exposed so
-    * specs can assert the single pruned scan and the probe-set union,
-    * the batch twin of [[annScanPlan]]. */
-  private[graft] def annAllScanPlan(queries: DataFrame, topN: Int,
-      nProbe: Int, location: Option[String] = None,
-      channel: String = "text"): DataFrame = {
-    val (ci, qs) = batchAnnQueries(queries, "annAllScanPlan", channel)
-    batchAnnTopKOf(ci, batchProbeRows(ci, qs, nProbe, channel, location),
-      topN, location, channel)
-  }
-
-  /** The lazy pruned-scan top-k frame behind [[searchAnn]] — exposed
-    * package-private so specs can assert the partition pruning on the
-    * un-executed plan. */
-  private[graft] def annScanPlan(query: String, channel: String,
-      topN: Int, nProbe: Int, location: Option[String] = None): DataFrame = {
-    val (ci, qv, qnrm, probed) = annProbe(query, channel, nProbe, location)
-    // the query vector inlines as a LITERAL into the scan projection —
-    // no join side, no broadcast stage: the whole search is one
-    // pruned-scan job even under AQE. The location predicate (the
-    // reference's get_search_range, vector_db.py:673-682) lands INSIDE
-    // the pruned scan: StartsWith pushes to parquet as a >= / <
-    // range filter, and index files are SORTED by doc_name within each
-    // cell (build/append), so row-group min/max stats turn the filter
-    // into a skipping scan rather than a post-scan sieve.
-    val pruned = ci.index
-      .filter($"cell".isin(probed: _*)) // prunes partitions at the scan
-    locScoped(pruned, location)
-      .select(round(cosine(typedLit(qv.toSeq), $"v", lit(qnrm), $"nrm"), 4).as("sim_r"),
-        $"doc_name", $"page_num", $"content_type", $"content_id", $"content_raw",
-        $"row_id")
-      .orderBy($"sim_r".desc, $"row_id")
-      .limit(topN)
-  }
-
-  private def searchAnnChannel(query: String, channel: String,
-      topN: Int, nProbe: Int, location: Option[String] = None): DataFrame = {
-    // ONE job: TakeOrderedAndProject over the pruned scan (the local
-    // query relation broadcasts driver-side, no extra job)
-    val first = annScanPlan(query, channel, topN, nProbe, location).collect()
-    // PROBE ESCALATION — the sparse-scope guard: a location filter
-    // (get_search_range's exact-file case, vector_db.py:673-682) can
-    // concentrate the whole scope in cells the query's nProbe ranking
-    // never probes, under-filling the top-k even though in-scope rows
-    // exist; an under-filled UNFILTERED search means the probed cells
-    // genuinely hold fewer than topN rows while others may hold more.
-    // Either way one full-probe pass (still partition-pruned serving
-    // machinery, now over every cell) returns exactly the filtered
-    // exact scan's answer — escalation ≡ exact is the spec'd contract
-    // (AnnSparseScopeSpec). Dense scopes never pay it: the warm path
-    // stays one job (spec-pinned).
-    val hits =
-      if (first.length >= topN) first
-      else {
-        // escalation probes only the SCOPE-ELIGIBLE cells: the routing
-        // sidecar proves no other cell can hold an in-scope row, so a
-        // narrow tenant scope re-probes its own cells, not the world —
-        // and a scope outside every cell's range escalates to nothing
-        // (zero extra work), still ≡ the (empty) exact filtered scan
-        val ciL = cachedIndex(channel)
-        val eligible = eligibleCells(ciL, location.toSeq).length
-        if (AnnIndex.resolveNProbe(nProbe, ciL.books.length) >= eligible) first
-        else annScanPlan(query, channel, topN, eligible, location).collect()
-      }
-    // rank numbering over the ≤ topN collected rows is driver work
-    hits.zipWithIndex.map { case (r, i) =>
-      ((i + 1).toLong, r.getAs[Double]("sim_r"), r.getAs[String]("doc_name"),
-        r.getAs[Long]("page_num"), r.getAs[String]("content_type"),
-        r.getAs[String]("content_id"), r.getAs[String]("content_raw"), channel)
-    }.toSeq.toDF("rnk", "sim_r", "doc_name", "page_num",
-      "content_type", "content_id", "content_raw", "channel")
-  }
-
-  /** IVF+PQ search against the store index — the composition that
-    * holds up at 100 TB: the shortlist pass reads ONLY the narrow
-    * columns (row_id, nrm, 16-byte codes) of the probed cells — the
-    * partition-pruned, column-pruned scan whose bytes-per-row stay
-    * constant no matter how fat the records get — and the exact
-    * re-rank fetches just the ≤ `shortlist` winners' vectors+metadata
-    * by row_id. Matches the reference's return_similar ranking
-    * (vector_db.py:684-696) with [[searchAnn]]'s output contract.
-    * Exactness: `nProbe = cells` + `shortlist ≥ channel rows`
-    * reproduces [[search]] verbatim (GraftVectorDBSpec). Two Spark
-    * jobs per warm search (ADC shortlist + fetch), spec-pinned. */
+  /** IVF+PQ search: an ADC shortlist over only (row_id, nrm, codes) of
+    * the probed cells, then an exact re-rank of the fetched shortlist —
+    * two Spark jobs warm ([[AnnSidecar.searchPq]]). `nProbe = cells`
+    * with `shortlist ≥ channel rows` reproduces [[search]] verbatim. */
   def searchAnnPq(queryText: String, topN: Int = 5,
       nProbe: Int = AnnIndex.AutoNProbe,
       shortlist: Int = AnnIndex.AutoShortlist,
       location: Option[String] = None): DataFrame =
-    searchAnnPqChannel(queryText, "text", topN, nProbe, shortlist, location)
+    ann("text").searchPq(queryText, topN, nProbe, shortlist, location)
 
   /** Image-space twin of [[searchAnnPq]]. */
   def searchAnnPqImage(queryContent: String, topN: Int = 5,
       nProbe: Int = AnnIndex.AutoNProbe,
       shortlist: Int = AnnIndex.AutoShortlist,
       location: Option[String] = None): DataFrame =
-    searchAnnPqChannel(queryContent, "image", topN, nProbe, shortlist, location)
+    ann("image").searchPq(queryContent, topN, nProbe, shortlist, location)
 
-  /** The lazy ADC-shortlist frame behind [[searchAnnPq]] — exposed so
-    * specs can assert partition pruning AND column pruning (the scan
-    * must not read `v` or `content_raw`). */
-  private[graft] def annPqShortlistPlan(query: String, channel: String,
-      nProbe: Int, shortlist: Int,
-      location: Option[String] = None): DataFrame = {
-    val (ci, qv, _, probed) = annProbe(query, channel, nProbe, location)
-    annPqShortlistOf(ci, qv, probed, shortlist, location)
-  }
+  /** [[searchAnnPq]] over any registered channel. */
+  def searchAnnPqIn(channel: String, query: String, topN: Int = 5,
+      nProbe: Int = AnnIndex.AutoNProbe, shortlist: Int = AnnIndex.AutoShortlist,
+      location: Option[String] = None): DataFrame =
+    ann(channel).searchPq(query, topN, nProbe, shortlist, location)
 
-  private def annPqShortlistOf(ci: GraftVectorDB.CachedAnnIndex,
-      qv: Array[Double], probed: Seq[Int], shortlist: Int,
-      location: Option[String]): DataFrame = {
-    require(ci.pqBooks.nonEmpty,
-      "this ANN index predates PQ codes (no _codebooks) — rebuild with " +
-        "buildAnnIndex, or use searchAnn (which needs none)")
-    val dts = AnnIndex.adcTablesLocal(ci.pqBooks, qv)
-    // ADC score = Σ_m dt[m][codes[m]] / nrm, with the per-query tables
-    // inlined as literals — a narrow codegen'd projection over the
-    // pruned scan, no join
-    val score = dts.toSeq.zipWithIndex.map { case (dt, m) =>
-      element_at(typedLit(dt.toSeq), element_at($"codes", m + 1) + 1)
-    }.reduce(_ + _) / $"nrm"
-    // the location filter belongs HERE, not after the shortlist:
-    // post-shortlist filtering would let out-of-scope rows crowd the
-    // bounded shortlist and silently shrink in-scope recall. Cost: the
-    // ADC scan reads doc_name alongside (row_id, nrm, codes) when a
-    // location is set — still none of v/content, and doc_name-sorted
-    // cells make it a row-group-skipping read.
-    locScoped(ci.index.filter($"cell".isin(probed: _*)), location)
-      .select($"row_id", score.as("adc"))
-      .orderBy($"adc".desc, $"row_id")
-      .limit(shortlist)
-  }
+  /** Batch [[searchAnn]]: N queries' probe sets union into ONE pruned
+    * scan, per-query results identical to N × [[searchAnn]]
+    * ([[AnnSidecar.searchAll]]); an optional `q_loc` column scopes each
+    * query as on [[searchAll]]. Output contract = [[searchAll]]. */
+  def searchAllAnn(queries: DataFrame, topN: Int = 5,
+      nProbe: Int = AnnIndex.AutoNProbe, location: Option[String] = None,
+      channel: String = "text"): DataFrame =
+    ann(channel).searchAll(queries, topN, nProbe, location)
 
-  private def searchAnnPqChannel(query: String, channel: String,
-      topN: Int, nProbe: Int, shortlist0: Int,
-      location: Option[String] = None): DataFrame = {
-    // ONE probe computation (cache check, embed, cell ranking) shared
-    // by both phases — annProbe twice could even straddle a generation
-    val (ci, qv, qnrm, probed0) = annProbe(query, channel, nProbe, location)
-    // AutoShortlist (the default) scales the ADC shortlist with what
-    // it selects FROM — a fixed 100 is 0.2% of the scanned rows at
-    // sf10 and measured recall@5 drops to 0.82 there
-    val shortlist =
-      if (shortlist0 > 0) shortlist0
-      else AnnIndex.autoShortlist(ci.rows, ci.books.length,
-        AnnIndex.resolveNProbe(nProbe, ci.books.length))
-    // job 1: ADC shortlist over (row_id, nrm, codes) of probed cells
-    val ids0 = annPqShortlistOf(ci, qv, probed0, shortlist, location)
-      .collect().map(_.getAs[Long]("row_id"))
-    // PROBE ESCALATION, as in [[searchAnnChannel]]: fewer than topN
-    // shortlisted rows means the probed cells cannot fill the result —
-    // a location scope concentrated in unprobed cells (the sparse-scope
-    // case), or genuinely tiny probed cells. Re-probe everything: the
-    // ADC scan stays location-scoped, so the escalated result equals
-    // the exact filtered search's top-k (spec-pinned). The filled path
-    // never pays it — warm searchAnnPq stays two jobs (spec-pinned).
-    // scope-eligible cells only (routing sidecar): a narrow scope's
-    // escalation is a targeted probe, not a full re-probe
-    val eligible = eligibleCells(ci, location.toSeq)
-    val escalate = ids0.length < topN && probed0.length < eligible.length
-    val probed = if (escalate) eligible else probed0
-    val ids =
-      if (escalate) annPqShortlistOf(ci, qv, probed, shortlist, location)
-        .collect().map(_.getAs[Long]("row_id"))
-      else ids0
-    // job 2: fetch ONLY the shortlisted rows' vectors + metadata (the
-    // same cell pruning; the row_id predicate evaluates post-scan for
-    // lists past parquet's in-filter pushdown threshold, which is fine
-    // — cell pruning already bounds the read and rows are narrow; an
-    // UNTRUNCATED shortlist — the exhaustive audit config — covers the
-    // whole scan, so the id filter is skipped as a no-op)
-    val fetched = fetchShortlist(ci, probed, ids.toSeq, location,
-      ids.length < shortlist).collect()
-    // exact re-rank of ≤ shortlist rows is driver arithmetic, same
-    // rounded-cosine metric as the distributed path — shared with the
-    // batch twin via pqExactReRank
-    pqExactReRank(fetched.toSeq, qv, qnrm, topN)
-      .zipWithIndex.map { case ((s, r), i) =>
-        ((i + 1).toLong, s, r.getAs[String]("doc_name"),
-          r.getAs[Long]("page_num"), r.getAs[String]("content_type"),
-          r.getAs[String]("content_id"), r.getAs[String]("content_raw"), channel)
-      }.toDF("rnk", "sim_r", "doc_name", "page_num",
-        "content_type", "content_id", "content_raw", "channel")
-  }
+  /** Batch [[searchAnnPq]]: one ADC shortlist scan and one fetch for the
+    * whole batch ([[AnnSidecar.searchAllPq]]), per-query results
+    * identical to N × [[searchAnnPq]]. Output contract = [[searchAll]]. */
+  def searchAllAnnPq(queries: DataFrame, topN: Int = 5,
+      nProbe: Int = AnnIndex.AutoNProbe, shortlist: Int = AnnIndex.AutoShortlist,
+      location: Option[String] = None, channel: String = "text"): DataFrame =
+    ann(channel).searchAllPq(queries, topN, nProbe, shortlist, location)
 
   /** Store maintenance: streaming ingest appends a file per micro-batch
     * — at 100 TB the accumulating small-file count is the operational
@@ -2805,7 +1347,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val oldDir = s"$storePath/.compact_old_content_type=$contentType"
     // reading the partition dir directly excludes the content_type
     // column — exactly what the rewritten files must contain
-    val cur = spark.read.parquet(partDir)
+    val cur = spark.read.schema(GraftVectorDB.StoreDataSchema).parquet(partDir)
     val n = cur.count()
     val keys =
       if (zOrdered) Seq(zValue16(
@@ -2831,18 +1373,15 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
 
   /** Crash recovery ([[AtomicDir.recover]]) for the store's partition
     * swaps ([[compact]], [[deleteWhere]]) and, inside each partition,
-    * [[delete]]'s per-file swaps. Pre-r6 asides lack the
-    * `content_type=` segment (`.compact_old_<ct>`); the live-name
-    * mapping restores those too. */
+    * [[delete]]'s per-file swaps. */
   private def recoverCompact(): Unit = {
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsOf(root)
-    AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"),
-      ct => if (ct.startsWith("content_type=")) ct else s"content_type=$ct")
+    AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"))
     if (fs.exists(root))
       fs.listStatus(root)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("content_type="))
-        .foreach(st => recoverFileSwaps(fs, st.getPath))
+        .foreach(st => GraftVectorDB.recoverFileSwaps(fs, st.getPath))
   }
 
   /** One query = ONE corpus scan: scoring and metadata ride the same
@@ -3034,6 +1573,26 @@ object GraftVectorDB {
     * one-scan-per-phase property). */
   val MaxBatchQueries = 4096
 
+  /** The query frame of the collected batch surfaces: (q_id, q_text,
+    * per-query scope from an optional `q_loc` column), collected and
+    * validated — at most [[MaxBatchQueries]], q_ids unique after the
+    * long cast (duplicates would merge two queries into one top-k group
+    * and silently corrupt both). */
+  private[operators] def batchQueries(queries: DataFrame,
+      op: String): Seq[(Long, String, Option[String])] = {
+    val hasLoc = queries.columns.contains("q_loc")
+    val qs = queries.select(col("q_id").cast("long") +: col("q_text").cast("string") +:
+        (if (hasLoc) Seq(col("q_loc").cast("string")) else Nil): _*)
+      .collect().map(r => (r.getLong(0), r.getString(1),
+        if (hasLoc) Option(r.getString(2)) else None)).toSeq
+    require(qs.length <= MaxBatchQueries,
+      s"$op: ${qs.length} queries exceed the per-call bound ($MaxBatchQueries) - " +
+        "chunk the query set and union the results")
+    require(qs.map(_._1).distinct.length == qs.length,
+      s"$op: q_id values must be unique (after cast to long)")
+    qs
+  }
+
   /** Cap on the scale-adaptive rebuild cell count: the routing fit is
     * driver Lloyd over a ≤ [[AnnIndex.SampleTarget]]-row sample, and
     * past ~SampleTarget/4 cells the init is point-starved (< 4 sample
@@ -3053,6 +1612,14 @@ object GraftVectorDB {
     * 2⁶× outlier; the bound exists for the pathological coincident-
     * vector cell that 2-means cannot separate. */
   val MaxSplitRounds = 6
+
+  /** A parquet file's row count from its footer — driver metadata I/O. */
+  private[operators] def footerRows(f: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try r.getRecordCount finally r.close()
+  }
 
   /** Whether a sorted parquet file can hold any of the (sorted) victim
     * names — per row group, the doc_name column chunk's min/max stats
@@ -3081,145 +1648,103 @@ object GraftVectorDB {
     } finally r.close()
   }
 
-  /** One routing-table amendment: op "R" removes a cell's centroid,
-    * op "A" appends one — the split log persisted at
-    * `_centroids/_splits.vN` (text; one atomic rename per version, so
-    * a reader sees either the old amendment history or the new one,
-    * never a torn mix). */
-  private[operators] final case class SplitOp(op: String, cell: Int,
-      cv: Array[Double])
+  /** The store's declared schema: a VectorRecord's data columns as its
+    * files hold them ([[StoreDataSchema]], what one partition dir
+    * reads) plus the `content_type` partition column. */
+  private[operators] val StoreDataSchema: StructType = StructType.fromDDL(
+    "doc_name string, doc_type string, page_num bigint, content_id string, " +
+      "content_raw string, embedding array<double>, file_hash string, ts timestamp, " +
+      "bbox array<double>")
+  private[operators] val StoreSchema: StructType = StoreDataSchema.add("content_type", "string")
 
-  /** Highest-version amendment file in the routing dir: (version tag
-    * for the cache generation, parsed ops). ("", Nil) when no split
-    * has ever committed. */
-  private[operators] def readSplits(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path): (String, Seq[SplitOp]) =
-    AtomicDir.readLatest(fs, cDir, "_splits.v").fold(("", Seq.empty[SplitOp])) {
-      case (name, text) => name -> text.split("\n").filter(_.nonEmpty).map { line =>
-        val parts = line.split(",", 3)
-        SplitOp(parts(0), parts(1).toInt,
-          if (parts.length < 3 || parts(2).isEmpty) Array.empty[Double]
-          else parts(2).split(" ").map(java.lang.Double.parseDouble))
-      }.toSeq
-    }
+  /** Shared result shaping for the batch paths ([[GraftVectorDB.searchAll]]
+    * and the batch ANN search): per-query `TopKRows` over a (q_id,
+    * sim_r, row_id, meta) pairs frame → the searchAll output contract,
+    * defined once so the two shapes cannot diverge. */
+  private[operators] def batchTopK(pairs: DataFrame, topN: Int, channel: String): DataFrame =
+    pairs.groupBy(col("q_id"))
+      .agg(graft.functions.expressions.TopKRows(
+        col("sim_r"), col("row_id"), col("meta"), topN).as("top"))
+      .select(col("q_id"), posexplode(col("top")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
+        col("col.score").as("sim_r"),
+        col("col.payload.doc_name"), col("col.payload.page_num"),
+        col("col.payload.content_type"), col("col.payload.content_id"),
+        col("col.payload.content_raw"))
+      .withColumn("channel", lit(channel)) // same contract as search()
+      .orderBy(col("q_id"), col("rnk"))
 
-  /** Commit a new amendment history as the next `_splits.vN`. Doubles
-    * serialize via Double.toString (exact round-trip through
-    * parseDouble). */
-  private[operators] def writeSplits(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path, ops: Seq[SplitOp]): Unit =
-    AtomicDir.commitVersion(fs, cDir, "_splits.v", ops.map(o =>
-      s"${o.op},${o.cell},${o.cv.map(_.toString).mkString(" ")}").mkString("\n"))
-
-  /** The base routing table with the amendment history applied, in
-    * cell-id order (deterministic probe tie-breaks). */
-  private[operators] def applySplits(base: Array[(Int, Array[Double])],
-      ops: Seq[SplitOp]): Array[(Int, Array[Double])] = {
-    val m = scala.collection.mutable.LinkedHashMap(base.toSeq: _*)
-    ops.foreach {
-      case SplitOp("R", cell, _) => m.remove(cell)
-      case SplitOp("A", cell, cv) => m.put(cell, cv)
-      case SplitOp(op, cell, _) => throw new IllegalStateException(
-        s"unknown _splits op '$op' for cell $cell")
-    }
-    m.toArray.sortBy(_._1)
-  }
-
-  /** One ANN index generation's serving state: routing table, PQ
-    * codebooks, resolved index frame, and the prefix→cell routing
-    * sidecar (per-cell doc_name [min, max]; empty = no sidecar, every
-    * cell eligible for every scope). */
-  private[operators] final case class CachedAnnIndex(gen: String,
-      books: Array[(Int, Array[Double])],
-      pqBooks: Array[Array[Array[Double]]],
-      index: DataFrame,
-      docRanges: Map[Int, (String, String)] = Map.empty,
-      rows: Long = 0L)
-
-  // ---- prefix→cell routing sidecar ------------------------------------
-  // `_centroids/_docranges.vN`: one line per cell, `cell\tb64(min)\tb64(max)`
-  // of the cell's doc_name range. Written whole at build (inside the
-  // staged dir, so it swaps in atomically with the index) and WIDENED
-  // before every append's data commit — widening first means a crash
-  // between the two steps leaves ranges wider than the data, which can
-  // never prune a live row. Cells without an entry (legacy index,
-  // split children) are always treated as eligible. All comparisons
-  // are unsigned UTF-8 byte order — the ordering Spark's string
-  // min/max and StartsWith use — so the pruning proof matches the
-  // filter the scan actually runs.
-
-  private def u8(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  private def cmpU8(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  /** The unsigned-byte-order smaller / larger of two strings — the
-    * merge operation append-widening uses, consistent with Spark's
-    * own min/max on strings. */
-  private[operators] def minU8(a: String, b: String): String =
-    if (cmpU8(u8(a), u8(b)) <= 0) a else b
-  private[operators] def maxU8(a: String, b: String): String =
-    if (cmpU8(u8(a), u8(b)) >= 0) a else b
-
-  /** Can a doc_name inside [mn, mx] (byte order) start with `prefix`?
-    * Strings with the prefix occupy [p, upper(p)) where upper
-    * increments p's last non-0xFF byte — the cell is skippable iff
-    * its whole range falls outside that window. */
-  private[operators] def rangeMayContainPrefix(mn: String, mx: String,
-      prefix: String): Boolean = {
-    val p = u8(prefix)
-    if (cmpU8(u8(mx), p) < 0) return false
-    var i = p.length - 1
-    while (i >= 0 && p(i) == -1) i -= 1
-    if (i < 0) true // prefix is all 0xFF bytes: no finite upper bound
-    else {
-      val upper = java.util.Arrays.copyOf(p, i + 1)
-      upper(i) = (upper(i) + 1).toByte
-      cmpU8(u8(mn), upper) < 0
-    }
-  }
-
-  private[operators] def readDocRanges(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path): Map[Int, (String, String)] = {
-    val dec = java.util.Base64.getDecoder
-    AtomicDir.readLatest(fs, cDir, "_docranges.v").fold(Map.empty[Int, (String, String)]) {
-      case (_, text) => text.split("\n").filter(_.nonEmpty).flatMap { l =>
-        l.split("\t") match {
-          case Array(c, mn, mx) => c.toIntOption.map(_ ->
-            (new String(dec.decode(mn), "UTF-8"),
-              new String(dec.decode(mx), "UTF-8")))
-          case _ => None
+  /** FILE-granular delete within one sorted parquet dir (a store
+    * content_type partition or an index cell) read as `schema`: the
+    * dir's files are doc_name-sorted with row-group min/max stats, so
+    * the footers — driver metadata I/O — identify exactly which files
+    * can hold a victim ([[fileTouchesNames]]); only THOSE files
+    * rewrite, O(touched files) rather than the whole partition.
+    *
+    * The rewrite is ONE Spark job for all touched files of the dir
+    * (rows tagged with their source file via `input_file_name`, one
+    * output file per source via a partitioned write). Each output then
+    * swaps in over its source file ([[AtomicDir.swap]], aside
+    * `.delete_old_<name>`), and an all-rows-deleted file is replaced by
+    * a ZERO-ROW file rather than removed, so a missing live file is
+    * always crash state, never a completed delete. `sortCols` restores
+    * the dir's sorted layout (store partitions: doc_name+page_num;
+    * index cells: doc_name+row_id). Returns rows removed. */
+  private[operators] def deleteNamesFromDir(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+      names: Seq[String], sortCols: Seq[String], schema: StructType): Long = {
+    recoverFileSwaps(fs, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sortedNames = names.sorted.toArray
+    def rowsAt(p: org.apache.hadoop.fs.Path) = footerRows(fs.getFileStatus(p), conf)
+    val touched = fs.listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .filter(f => fileTouchesNames(f, sortedNames, conf))
+      .map(_.getPath).sortBy(_.getName)
+    if (touched.isEmpty) return 0L
+    val before = touched.map(rowsAt).sum
+    // file NAMES are unique within the dir (input_file_name returns the
+    // full URI, whose encoding is not worth depending on); repartition
+    // on the tag puts each source's rows in one task
+    val fileIdx = touched.map(_.getName).zipWithIndex.toMap
+    val tmp = new org.apache.hadoop.fs.Path(dir, ".delete_tmp_batch")
+    spark.read.schema(schema).parquet(touched.map(_.toString): _*)
+      .withColumn("__f", element_at(typedLit(fileIdx),
+        substring_index(input_file_name(), "/", -1)))
+      .filter(!col("doc_name").isin(names: _*))
+      .repartition(col("__f"))
+      .sortWithinPartitions((col("__f") +: sortCols.map(col)): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy("__f").parquet(tmp.toString)
+    def partFile(d: org.apache.hadoop.fs.Path, what: String) =
+      fs.listStatus(d).map(_.getPath).find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new java.io.IOException(
+          s"deleteNamesFromDir: no $what part file under $d"))
+    var removed = before
+    touched.foreach { live =>
+      val k = fileIdx(live.getName)
+      val outDir = new org.apache.hadoop.fs.Path(tmp, s"__f=$k")
+      val replacement =
+        if (fs.exists(outDir)) partFile(outDir, "replacement")
+        else {
+          // every row of this file was a victim: stage a ZERO-ROW
+          // replacement so the live file never goes missing
+          val empty = new org.apache.hadoop.fs.Path(tmp, s"__empty_$k")
+          spark.read.schema(schema).parquet(live.toString).limit(0).coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(empty.toString)
+          partFile(empty, "zero-row")
         }
-      }.toMap
+      removed -= rowsAt(replacement)
+      AtomicDir.swap(fs, replacement, live,
+        new org.apache.hadoop.fs.Path(dir, s".delete_old_${live.getName}"))
     }
+    fs.delete(tmp, true)
+    removed
   }
 
-  private[operators] def writeDocRanges(fs: org.apache.hadoop.fs.FileSystem,
-      cDir: org.apache.hadoop.fs.Path,
-      ranges: Map[Int, (String, String)]): Unit = {
-    val enc = java.util.Base64.getEncoder
-    AtomicDir.commitVersion(fs, cDir, "_docranges.v",
-      ranges.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-        s"$c\t${enc.encodeToString(u8(mn))}\t${enc.encodeToString(u8(mx))}"
-      }.mkString("\n"))
-  }
-
-  /** Serving-path cache keyed by index path. Generation couples the
-    * `_centroids` mtime (a rebuild's rename swap always moves it) with
-    * the append stamp's content, so rebuilds AND appends invalidate;
-    * entries are tiny (≤ cells routing rows + codebooks + a lazy
-    * frame). Keyed by absolute path — safe across db instances. */
-  private[graft] val routingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedAnnIndex]
+  /** Crash recovery for [[deleteNamesFromDir]]'s per-file swaps. */
+  private[operators] def recoverFileSwaps(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Unit =
+    AtomicDir.recover(fs, dir, ".delete_old_", Seq(".delete_tmp_"))
 
   /** documents-shaped frame → VectorRecord rows (chunk + embed + hash
     * + caption stub), shuffle-free except the final write. */

@@ -234,7 +234,7 @@ private class ServeState(spark: SparkSession) {
             !isFolder && (ext(f.getName) == "parquet" || f.isDirectory)
           // /search serves from a built ANN index: rows it does not
           // take stay unfindable until the next rebuild
-          val indexed = d.channelNames.filter(d.annIndexExists)
+          val indexed = d.channelNames.filter(d.annIndexBuilt)
           if (isParquetTable) {
             val n = d.ingest(spark.read.parquet(path), indexed)
             (200, JObject("message" -> JString(s"ingested corpus table $path"),

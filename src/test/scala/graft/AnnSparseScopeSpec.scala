@@ -49,7 +49,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     // find a scope the nProbe=1 raw scan genuinely LOSES rows on —
     // proof the planted case exists and escalation has work to do
     val planted = docLocations.find { loc =>
-      val raw = db.annScanPlan(q, "text", 5, nProbe = 1, Some(loc)).collect()
+      val raw = db.ann("text").scanPlan(q, 5, nProbe = 1, Some(loc)).collect()
       val exact = db.search(q, 5, Some(loc)).collect()
       raw.length < exact.length
     }
@@ -117,7 +117,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     import spark.implicits._
     // a scope the nProbe=1 raw batch pass genuinely under-fills on
     val planted = docLocations.find { loc =>
-      db.annScanPlan(q, "text", 5, nProbe = 1, Some(loc)).collect().length <
+      db.ann("text").scanPlan(q, 5, nProbe = 1, Some(loc)).collect().length <
         db.search(q, 5, Some(loc)).collect().length
     }
     assert(planted.nonEmpty, "no sparse scope found — plant premise broke")
@@ -147,7 +147,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     // a sparse scope (forces that query's escalation) + a dense scope
     // + an unscoped null row, all in ONE batch — the multi-tenant shape
     val sparse = docLocations.find { loc =>
-      db.annScanPlan(q, "text", 5, nProbe = 1, Some(loc)).collect().length <
+      db.ann("text").scanPlan(q, 5, nProbe = 1, Some(loc)).collect().length <
         db.search(q, 5, Some(loc)).collect().length
     }
     assert(sparse.nonEmpty)
@@ -187,7 +187,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val adc = db.annAllPqShortlistPlan(noLoc, nProbe = 3, shortlist = 50)
+      val adc = db.ann("text").allPqShortlistPlan(noLoc, nProbe = 3, shortlist = 50)
       val scans = adc.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
@@ -198,7 +198,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
       // voids the untruncated-shortlist-covers-the-scan argument, so
       // skipping the id filter there would collect the whole probed
       // index for an all-narrow-scopes (multi-tenant) batch
-      val fetch = db.annAllPqFetchPlan(queries, nProbe = 1, shortlist = 100)
+      val fetch = db.ann("text").allPqFetchPlan(queries, nProbe = 1, shortlist = 100)
       val idBound = fetch.queryExecution.executedPlan.flatMap(_.expressions.flatMap(_.collect {
         case in: org.apache.spark.sql.catalyst.expressions.In
             if in.value.references.exists(_.name == "row_id") => in
@@ -276,12 +276,12 @@ class AnnSparseScopeSpec extends AnyFunSuite {
   test("sidecar proof: every cell actually holding a prefix's rows is eligible") {
     import spark.implicits._
     db // force the build
-    val all = db.eligibleCellsOf("text", Nil).toSet
+    val all = db.ann("text").eligibleCells(Nil).toSet
     docLocations.take(8).foreach { loc =>
       val actual = spark.read.parquet(db.annPath("text"))
         .filter($"doc_name".startsWith(loc)).select($"cell").distinct()
         .collect().map(_.getInt(0)).toSet
-      val elig = db.eligibleCellsOf("text", Seq(loc)).toSet
+      val elig = db.ann("text").eligibleCells(Seq(loc)).toSet
       assert(actual.subsetOf(elig),
         s"cells $actual hold rows for $loc but eligible is only $elig — " +
           "the sidecar pruned live data")
@@ -291,7 +291,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
 
   test("a scope outside every cell's range resolves with zero probed cells, <= 1 job") {
     db.searchAnn(q, 5, nProbe = 2).collect() // warm the serving cache
-    assert(db.eligibleCellsOf("text", Seq("zzz/nowhere/")).isEmpty,
+    assert(db.ann("text").eligibleCells(Seq("zzz/nowhere/")).isEmpty,
       "an out-of-universe prefix must be eligible nowhere")
     val jobs = jobCount {
       val r = db.searchAnn(q, 5, nProbe = 2, location = Some("zzz/nowhere/")).collect()
@@ -314,8 +314,8 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     val touched = spark.read.parquet(db.annPath("text"))
       .filter($"doc_name".startsWith("tenants/")).select($"cell").distinct()
       .collect().map(_.getInt(0)).toSet
-    val all = db.eligibleCellsOf("text", Nil).toSet
-    val elig = db.eligibleCellsOf("text", Seq("tenants/acme/")).toSet
+    val all = db.ann("text").eligibleCells(Nil).toSet
+    val elig = db.ann("text").eligibleCells(Seq("tenants/acme/")).toSet
     // widen-first append: every touched cell must be eligible (a miss
     // here would prune live tenant rows)
     assert(touched.subsetOf(elig), s"touched $touched vs eligible $elig")
@@ -335,7 +335,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val planned = scanCells(db.annScanPlan(tq, "text", 5,
+      val planned = scanCells(db.ann("text").scanPlan(tq, 5,
         nProbe = all.size, Some("tenants/acme/")))
       assert(planned.nonEmpty && planned.subsetOf(elig),
         s"scoped full-probe plan scans $planned, beyond eligible $elig")
@@ -343,7 +343,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
       val queries = Seq((0L, tq, "tenants/acme/"), (1L, q, "tenants/acme/"))
         .toDF("q_id", "q_text", "q_loc")
       val plannedBatch = scanCells(
-        db.annAllScanPlan(queries, 5, nProbe = all.size))
+        db.ann("text").allScanPlan(queries, 5, nProbe = all.size))
       assert(plannedBatch.nonEmpty && plannedBatch.subsetOf(elig),
         s"all-narrow q_loc batch scans $plannedBatch, beyond eligible $elig")
     } finally spark.conf.set("spark.sql.adaptive.enabled", restoreAqe)
@@ -377,7 +377,7 @@ class AnnSparseScopeSpec extends AnyFunSuite {
     // the no-escalation baseline: the lazy first-pass plan alone (the
     // batch agg pipeline is several jobs under AQE — the pin is that
     // the public method adds NONE of its own for a filled batch)
-    val baseline = jobs(db.annAllScanPlan(queries, 5, nProbe = 3).collect())
+    val baseline = jobs(db.ann("text").allScanPlan(queries, 5, nProbe = 3).collect())
     val dense = jobs(db.searchAllAnn(queries, 5, nProbe = 3).collect())
     assert(dense == baseline,
       s"dense warm searchAllAnn must run exactly the first-pass plan's " +

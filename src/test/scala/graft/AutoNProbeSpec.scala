@@ -69,9 +69,9 @@ class AutoNProbeSpec extends AnyFunSuite {
     val q = "fast query join table"
     // the default plan probes MORE than the old fixed 20 — and exactly
     // the same cells as the explicit autoNProbe(cells) call
-    val defCells = scanCells(db.annScanPlan(q, "text", 5, AnnIndex.AutoNProbe))
+    val defCells = scanCells(db.ann("text").scanPlan(q, 5, AnnIndex.AutoNProbe))
     assert(defCells.size == np, s"default probe set was ${defCells.size} cells")
-    assert(defCells == scanCells(db.annScanPlan(q, "text", 5, np)))
+    assert(defCells == scanCells(db.ann("text").scanPlan(q, 5, np)))
 
     // result parity on all four serving surfaces: the sentinel is pure
     // resolution, not a behavior fork

@@ -43,7 +43,8 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
         s"${f.getPath}:${i + 1}: ${line.trim}" }
     }
     assert(merge.isEmpty, s"read with a declared schema instead:\n${merge.mkString("\n")}")
-    val sidecars = Seq("GenSidecar.scala", "NearDupSidecar.scala", "LexicalSidecar.scala")
+    val sidecars = Seq("GenSidecar.scala", "NearDupSidecar.scala", "LexicalSidecar.scala",
+      "AnnSidecar.scala")
       .map(n => new java.io.File(root, s"graft/operators/$n"))
     assert(sidecars.forall(_.isFile), s"sidecar components missing: ${sidecars.filterNot(_.isFile)}")
     val reads = sidecars.flatMap(f => lines(f).collect {

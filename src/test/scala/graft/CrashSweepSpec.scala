@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.GraftVectorDB
+import graft.operators.{AnnSidecar, GraftVectorDB}
 
 /** Crash safety of the store lifecycle, proven by injected faults
   * rather than hand-staged residue: every lifecycle op runs once
@@ -113,7 +113,7 @@ class CrashSweepSpec extends AnyFunSuite {
     def restart(): GraftVectorDB = {
       scope.reset()
       new java.io.File(dir, "_LOCK").delete()
-      GraftVectorDB.routingCache.keySet.removeIf(_.contains(s"$dir/"))
+      AnnSidecar.routingCache.keySet.removeIf(_.contains(s"$dir/"))
       new GraftVectorDB(spark, FaultFs.uri(dir))
     }
 
@@ -297,6 +297,12 @@ class CrashSweepSpec extends AnyFunSuite {
       val where = s"${op.name} crashed at op $n/$k (${store.scope.counted.lastOption.getOrElse("?")})"
       assert(store.scope.crashed && outcome.isFailure, s"$where: the injected crash must propagate")
       val db2 = store.reopen()
+      if (op.name == "buildAnnIndex") {
+        // the drift baseline swaps in with the index it describes
+        val cDir = new java.io.File(s"${store.dir}/ann_index_text/_centroids")
+        assert(!cDir.exists || new java.io.File(cDir, "_BUILT").isFile,
+          s"$where: _centroids without _BUILT after recovery")
+      }
       if (op.name == "ingest") {
         val got = store.served(db2)
         assert(Seq(servedBefore, after).exists(_.withoutGate == got.withoutGate),

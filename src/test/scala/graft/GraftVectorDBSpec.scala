@@ -181,7 +181,7 @@ class GraftVectorDBSpec extends AnyFunSuite {
 
       // a partial probe reads strictly fewer partitions at the scan
       // (searchAnn itself is eager now — assert on the lazy scan plan)
-      val df = db.annScanPlan("fast query join table", "text", 5, 3)
+      val df = db.ann("text").scanPlan("fast query join table", 5, 3)
       val scan = df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("ann_index")) => f
@@ -269,7 +269,7 @@ class GraftVectorDBSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = db.annPqShortlistPlan("fast query join table", "text", 3, 50)
+      val df = db.ann("text").pqShortlistPlan("fast query join table", 3, 50)
       val scan = df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("ann_index")) => f
@@ -446,8 +446,8 @@ class GraftVectorDBSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      Seq(db.annScanPlan("fast query join table", "text", 5, 3, loc),
-          db.annPqShortlistPlan("fast query join table", "text", 3, 50, loc))
+      Seq(db.ann("text").scanPlan("fast query join table", 5, 3, loc),
+          db.ann("text").pqShortlistPlan("fast query join table", 3, 50, loc))
         .foreach { df =>
           val scan = df.queryExecution.executedPlan.collect {
             case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -552,25 +552,6 @@ class GraftVectorDBSpec extends AnyFunSuite {
       "recovery must invalidate cached serving frames built during the orphaned window")
   }
 
-  test("appendAnnIndex seeds _BUILT for a legacy index missing the drift counters") {
-    assert(firstIngest > 0)
-    import spark.implicits._
-    db.buildAnnIndex(cells = 8)
-    val builtRows = spark.read.parquet(db.annPath("text")).count()
-    // a pre-counter index: _BUILT (and any _APPENDED) absent
-    val cDir = new java.io.File(db.annPath("text"), "_centroids")
-    Seq("_BUILT", "_APPENDED").foreach(n => new java.io.File(cDir, n).delete())
-    assert(db.annAppendFraction("text") == 0.0)
-    val docs = Seq((900001L, "legacy index seeded baseline doc fast join", "en", "srcA"))
-      .toDF("doc_id", "text", "lang", "source")
-    assert(db.appendAnnIndex(GraftVectorDB.pipeline(docs)) == 1)
-    // the baseline was seeded from the pre-append index size, so the
-    // drift gauge is live from this append on instead of stuck at 0.0
-    val frac = db.annAppendFraction("text")
-    assert(math.abs(frac - 1.0 / builtRows) < 1e-12,
-      s"expected seeded fraction ${1.0 / builtRows}, got $frac")
-  }
-
   test("searchAllAnn: N queries, ONE pruned scan, per-query parity with searchAnn") {
     assert(firstIngest > 0)
     import spark.implicits._
@@ -600,10 +581,10 @@ class GraftVectorDBSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // the lazy first-pass plan (annAllScanPlan): the public method
+      // the lazy first-pass plan (ann("text").allScanPlan): the public method
       // evaluates it to apply per-query escalation, so the scan-shape
       // pin lives on the plan the batch actually runs
-      val df = db.annAllScanPlan(queries, topN = 5, nProbe = 3)
+      val df = db.ann("text").allScanPlan(queries, topN = 5, nProbe = 3)
       val scans = df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("ann_index")) => f
@@ -661,7 +642,7 @@ class GraftVectorDBSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = db.annAllPqShortlistPlan(queries, nProbe = 3, shortlist = 50)
+      val plan = db.ann("text").allPqShortlistPlan(queries, nProbe = 3, shortlist = 50)
       val scans = plan.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("ann_index")) => f
@@ -709,7 +690,7 @@ class GraftVectorDBSpec extends AnyFunSuite {
     val restoreAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val fetch = db.annAllPqFetchPlan(queries, nProbe = 4, shortlist = 30)
+      val fetch = db.ann("text").allPqFetchPlan(queries, nProbe = 4, shortlist = 30)
       val plan = fetch.queryExecution.executedPlan
       val inSizes = plan.flatMap(_.expressions.flatMap(_.collect {
         case in: org.apache.spark.sql.catalyst.expressions.In => in.list.size

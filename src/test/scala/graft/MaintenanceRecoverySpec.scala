@@ -132,21 +132,4 @@ class MaintenanceRecoverySpec extends AnyFunSuite {
     db.compactAnnIndex("text", targetFiles = 1000) // entry sweep only
     assert(!stale.exists(), "writeSplits crash leftovers must be reclaimed")
   }
-
-  test("legacy-named compact leftovers are recovered (old) and dropped (tmp)") {
-    assert(db.store.count() > 0)
-    val storeRoot = new java.io.File(db.storePath)
-    val partDir = new java.io.File(storeRoot, "content_type=text_chunk")
-    val rowsBefore = db.store.count()
-    // legacy crash state: pre-upgrade naming without the content_type=
-    // segment — live dir missing, data aside under the old prefix
-    val legacyOld = new java.io.File(storeRoot, ".compact_old_text_chunk")
-    assert(partDir.renameTo(legacyOld))
-    val legacyTmp = new java.io.File(storeRoot, ".compact_tmp_text_chunk")
-    legacyTmp.mkdir()
-    db.maintainStore(targetFiles = 1000) // recovery-on-entry
-    assert(partDir.exists(), "legacy-named orphan must be restored")
-    assert(!legacyOld.exists() && !legacyTmp.exists())
-    assert(db.store.count() == rowsBefore)
-  }
 }

@@ -19,9 +19,7 @@ import graft.streaming.DocStreams
 class MemoryStreamGateSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
-
-  private case class Doc(doc_id: Long, text: String, lang: String,
-      source: String, n_chars: Long)
+  import MemoryStreamGateSpec.Doc
 
   private def docRows: Seq[Doc] =
     Tables.load(spark, sf, "documents")
@@ -107,4 +105,12 @@ class MemoryStreamGateSpec extends AnyFunSuite {
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+}
+
+object MemoryStreamGateSpec {
+  /** Top level, not inside the spec: generated code must construct it
+    * without an outer instance, or the encoder falls back to the
+    * interpreter. */
+  final case class Doc(doc_id: Long, text: String, lang: String,
+      source: String, n_chars: Long)
 }

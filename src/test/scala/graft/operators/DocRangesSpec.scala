@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * returned for a range that contains a string with the prefix. */
 class DocRangesSpec extends AnyFunSuite {
   private def may(mn: String, mx: String, p: String): Boolean =
-    GraftVectorDB.rangeMayContainPrefix(mn, mx, p)
+    AnnSidecar.rangeMayContainPrefix(mn, mx, p)
 
   test("basic overlap and exclusion") {
     assert(may("corpus/a", "corpus/z", "corpus/"))
@@ -48,8 +48,8 @@ class DocRangesSpec extends AnyFunSuite {
 
   test("unsigned byte order: non-ASCII sorts after ASCII as Spark's UTF8String does") {
     // 'é' (0xC3 0xA9) > 'z' (0x7A) in unsigned byte order
-    assert(GraftVectorDB.maxU8("z", "é") == "é")
-    assert(GraftVectorDB.minU8("z", "é") == "z")
+    assert(AnnSidecar.maxU8("z", "é") == "é")
+    assert(AnnSidecar.minU8("z", "é") == "z")
     assert(!may("aaa", "zzz", "é")) // é-prefix cannot live in [aaa, zzz]
     assert(may("aaa", "é1", "é"))
   }
@@ -62,10 +62,10 @@ class DocRangesSpec extends AnyFunSuite {
     graft.FaultFs.reset()
     fs.delete(dir, true)
     val ranges = Map(0 -> ("corpus/a", "corpus/m"), 1 -> ("corpus/n", "corpus/z"))
-    GraftVectorDB.writeDocRanges(fs, dir, ranges)
+    AnnSidecar.writeDocRanges(fs, dir, ranges)
     // an appendAnnIndex committing v(N+1) and dropping vN between this
     // reader's list and open
     graft.FaultFs.vanishOnOpen(_.startsWith("_docranges.v"))
-    assert(GraftVectorDB.readDocRanges(fs, dir) == ranges)
+    assert(AnnSidecar.readDocRanges(fs, dir) == ranges)
   }
 }
