@@ -14,12 +14,13 @@ import graft.util.AtomicDir
   *
   *  - `cell=<id>/`: the channel's rows ([[IndexSchema]]) with their
   *    search metadata, routed to cells and written as one
-  *    doc_name-sorted run per cell per write ([[writeCells]]);
+  *    doc_name-sorted run per cell per write ([[writeCells]]); the
+  *    cells are a [[SortedRuns]] directory, which compacts, deletes
+  *    from and recovers them;
   *  - `_codebooks/`: the PQ codebooks (m, k, cv) the 16-byte `codes`
   *    column was encoded with;
-  *  - `_centroids/`: the routing table (cell, cv) — or the two
-  *    half-space codebooks of an `imi` build, marked by `_GEOMETRY` —
-  *    and the small files beside it: `_BUILT` (rows at the build),
+  *  - `_centroids/`: the routing table (cell, cv) and the small files
+  *    beside it: `_BUILT` (rows at the build),
   *    `_APPENDED` and `_DELETED` (rows since), `_STAMP` (the append
   *    generation tag), `_splits.vN` (the split amendments to the
   *    routing table) and `_docranges.vN` (per-cell doc_name ranges).
@@ -47,6 +48,9 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
   private val cDir = new Path(s"$path/_centroids")
   private def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The cells, keyed (cell; doc_name, row_id). */
+  private val runs = new SortedRuns(spark, path, "cell", IndexDataSchema, Seq("doc_name", "row_id"))
+
   /** The channel's rows of `df` — the one channel→predicate mapping,
     * shared by build and append so appended rows can never route
     * differently from built rows. */
@@ -68,52 +72,25 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     * bounded sample job fits both the routing table
     * ([[AnnIndex.centroidsFromSample]]) and the PQ codebooks, then one
     * full pass routes, encodes and writes ([[writeCells]]: at most
-    * cells + P − 1 files for P shuffle partitions). `geometry = "imi"`
-    * persists the inverted multi-index's two half-space codebooks
-    * instead ([[AnnIndex.imi]]); [[cached]] expands their product into
-    * the same flat routing table. Everything stages under
-    * `.ann_build_tmp_<channel>` and swaps in at once, so the old index
-    * serves until the new one is live. Returns rows indexed. */
-  def build(cells: Int, geometry: String): Long = {
-    require(geometry == "flat" || geometry == "imi",
-      s"buildAnnIndex: unknown geometry '$geometry' (flat|imi)")
+    * cells + P − 1 files for P shuffle partitions). Everything stages
+    * under `.ann_build_tmp_<channel>` and swaps in at once, so the old
+    * index serves until the new one is live. Returns rows indexed. */
+  def build(cells: Int): Long = {
     val chan = rowsOf(store())
       .withColumn("row_id", rowId)
       .withColumn("v", toDouble($"embedding"))
     val sample = AnnIndex.sampleVectors(chan.select($"row_id", $"v"), $"row_id")
     val pqBooks = AnnIndex.pqCodebooksFromSample(sample, AnnIndex.PqStoreK)
-    val (centroids, cellExpr, imiTag) =
-      if (geometry == "flat") {
-        val c = AnnIndex.centroidsFromSample(spark, sample, cells)
-        (c, AnnIndex.cellOf(AnnIndex.routingBooks(c), $"v"), None)
-      } else {
-        val dim = channel.dim
-        require(dim % 2 == 0,
-          s"buildAnnIndex(imi): channel '$name' dim $dim is odd - " +
-            "the two half-space codebooks need an even split")
-        val half = dim / 2
-        val k1 = math.max(1, math.min(sample.length,
-          math.ceil(math.sqrt(cells.toDouble)).toInt))
-        val halfBooks = Array(
-          AnnIndex.lloyd(sample.map(_.slice(0, half)), k1, iters = 5),
-          AnnIndex.lloyd(sample.map(_.slice(half, dim)), k1, iters = 5))
-        val enc = graft.functions.expressions.PqEncode($"v", halfBooks, half)
-        val cdf = halfBooks.zipWithIndex.flatMap { case (bk, m) =>
-          bk.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) } }.toSeq
-          .toDF("m", "k", "cv")
-        (cdf, (element_at(enc, 1) * k1 + element_at(enc, 2)).cast("int"), Some(k1))
-      }
+    val centroids = AnnIndex.centroidsFromSample(spark, sample, cells)
     val indexed = chan.select($"doc_name", $"page_num", $"content_type",
-        $"content_id", $"content_raw", $"row_id", $"v",
-        l2Norm($"v").as("nrm"), cellExpr.as("cell"),
+        $"content_id", $"content_raw", $"row_id", $"v", l2Norm($"v").as("nrm"),
+        AnnIndex.cellOf(AnnIndex.routingBooks(centroids), $"v").as("cell"),
         AnnIndex.encodeCodes(pqBooks).as("codes"))
     recoverBuild()
     val tmp = s"$storeDir/.ann_build_tmp_$name"
     val tmpC = new Path(s"$tmp/_centroids")
     writeCells(indexed, tmp, SaveMode.Overwrite)
     centroids.write.mode(SaveMode.Overwrite).parquet(tmpC.toString)
-    // the geometry marker rides the swap with the table it describes
-    imiTag.foreach(k1 => AtomicDir.write(fs, new Path(tmpC, "_GEOMETRY"), s"imi:$k1"))
     AnnIndex.writeCodebooks(spark, pqBooks, s"$tmp/_codebooks")
     // one column-pruned pass over the staged cells yields the build's
     // size and each cell's doc_name [min, max] (the ranges scoped
@@ -271,7 +248,7 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     log.info(s"auto-rebuild: ANN index '$name' appended fraction " +
       f"$appendFraction%.2f tripped the policy - rebuilding " +
       s"at $cells cells (was ${cached.books.length})")
-    build(cells, "flat")
+    build(cells)
   }
 
   /** Rebuild if the appended fraction is past `rebuildAt` (which
@@ -284,15 +261,10 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
   private def requireBuilt(): Unit =
     require(built, s"no ANN index for '$name' — run buildAnnIndex first")
 
-  private def cellDirs: Array[Path] =
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath)
-
   /** Rewrite every cell holding more than `targetFiles` parquet files
-    * into `targetFiles` doc_name-sorted files (appends add about one
-    * file per touched cell per batch, and at scale the small files are
-    * the operational killer), each swapped in whole — O(touched
+    * into `targetFiles` doc_name-sorted files ([[SortedRuns.compact]]:
+    * appends add about one file per touched cell per batch, and at
+    * scale the small files are the operational killer) — O(touched
     * cells): untouched cells are neither read nor moved. Results are
     * invariant; the generation bumps so cached serving frames re-list.
     * A finite `splitSkewedPast` runs [[splitHot]] first. Returns rows
@@ -303,29 +275,12 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     // split FIRST so the fresh sub-cells (1 file each) need no
     // compaction and the superseded hot cell is never rewritten
     if (!splitSkewedPast.isPosInfinity) splitHot(splitSkewedPast)
-    var rewritten = 0L
-    cellDirs.foreach { cellDir =>
-      val nFiles = fs.listStatus(cellDir).count(_.getPath.getName.endsWith(".parquet"))
-      if (nFiles > targetFiles) {
-        // the cell dir read has no cell column — exactly what the
-        // rewritten files must contain
-        val cur = spark.read.schema(IndexDataSchema).parquet(cellDir.toString)
-        val n = cur.count() // footer-stats count, no data scan
-        val laid =
-          if (targetFiles == 1) cur.repartition(1)
-          else cur.repartitionByRange(targetFiles, $"doc_name", $"row_id")
-        val tmp = new Path(root, s".compact_tmp_${cellDir.getName}")
-        laid.sortWithinPartitions("doc_name", "row_id")
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        AtomicDir.swap(fs, tmp, cellDir, new Path(root, s".compact_old_${cellDir.getName}"))
-        rewritten += n
-      }
-    }
+    val compacted = runs.compact(targetFiles)
     // bump on RECOVERY too: the crashed compaction never stamped, so a
     // session that listed files while the cell dir was aside would keep
     // serving without the restored cell
-    if (rewritten > 0 || recovered) bumpGeneration()
-    rewritten
+    if (compacted.nonEmpty || recovered) bumpGeneration()
+    compacted.map(_._2).sum
   }
 
   /** Per-cell row counts from parquet FOOTERS — driver metadata I/O,
@@ -334,11 +289,7 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     * into one cell, whose probe scan comes to dominate p99 latency. */
   def cellHistogram: Map[Int, Long] = {
     requireBuilt()
-    cellDirs.map { dir =>
-      val n = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => GraftVectorDB.footerRows(f, spark.sparkContext.hadoopConfiguration)).sum
-      dir.getName.stripPrefix("cell=").toInt -> n
-    }.toMap
+    runs.partitions.map(dir => runs.valueOf(dir).toInt -> runs.rowCount(dir)).toMap
   }
 
   /** Hottest cell / mean non-empty cell (1.0 balanced, 0.0 empty). */
@@ -414,8 +365,8 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     * (all rows one point): committing would put a permanently empty
     * twin centroid in the routing table on every maintenance run. */
   private def splitCell(h: Int): Boolean = {
-    val cellDir = new Path(root, s"cell=$h")
-    val cur = spark.read.schema(IndexDataSchema).parquet(cellDir.toString)
+    val cellDir = runs.dir(h.toString)
+    val cur = runs.read(cellDir)
     // bounded deterministic sample of THIS cell + driver 2-means
     val sample = AnnIndex.sampleVectors(cur.select($"row_id", $"v"), $"row_id")
     if (sample.map(_.toSeq).distinct.lengthCompare(2) < 0) return false
@@ -426,18 +377,13 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     val books2 = Array((maxId + 1, subs(0)._2), (maxId + 2, subs(1)._2))
     val assigned = cur.withColumn("cell2", AnnIndex.cellOf(books2, $"v"))
     val sizes = books2.toSeq.map { case (id, _) =>
-      val tmp = new Path(root, s".compact_tmp_cell=$id")
-      val sub = new Path(root, s"cell=$id")
-      assigned.filter($"cell2" === id).drop("cell2")
-        .repartition(1).sortWithinPartitions("doc_name", "row_id")
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      AtomicDir.swap(fs, tmp, sub, new Path(root, s".compact_old_cell=$id"))
-      spark.read.schema(IndexDataSchema).parquet(sub.toString).count()
+      runs.rewrite(id.toString, assigned.filter($"cell2" === id).drop("cell2"), 1)
+      runs.rowCount(runs.dir(id.toString))
     }
     if (sizes.contains(0L)) {
       // the sample looked separable but the full cell was not: abort,
       // the staged dirs are still unreferenced
-      books2.foreach { case (id, _) => fs.delete(new Path(root, s"cell=$id"), true) }
+      books2.foreach { case (id, _) => fs.delete(runs.dir(id.toString), true) }
       return false
     }
     // COMMIT: one atomic rename of the amendment file
@@ -453,7 +399,7 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     * or an uncommitted split's staged outputs. */
   private def dropUnreferencedCells(): Unit = {
     val live = cached.books.map(_._1).toSet
-    cellDirs.filterNot(d => live.contains(d.getName.stripPrefix("cell=").toInt))
+    runs.partitions.filterNot(d => live.contains(runs.valueOf(d).toInt))
       .foreach { d =>
         log.warn(s"ANN index '$name': reclaiming unreferenced $d " +
           "(leftover of an interrupted split)")
@@ -461,16 +407,15 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
       }
   }
 
-  /** Crash recovery ([[AtomicDir.recover]]) of the per-cell swaps of
-    * [[compact]], [[splitHot]] and the deletes, the small and versioned
-    * files under `_centroids`, and the per-file delete swaps inside each
-    * cell. Returns whether any cell was restored. */
+  /** Crash recovery of the cells ([[SortedRuns.recover]]: the swaps
+    * of [[compact]], [[splitHot]] and the deletes) and of the small and
+    * versioned files under `_centroids` ([[AtomicDir.recover]]).
+    * Returns whether any cell was restored. */
   def recover(): Boolean = fs.exists(root) && {
-    val restored = AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"))
+    val restored = runs.recover()
     AtomicDir.recover(fs, cDir, ".old_",
       Seq("_splits.v", "_docranges.v", "_STAMP", "_BUILT", "_APPENDED", "_DELETED")
         .map(AtomicDir.stagedPrefix))
-    cellDirs.foreach(GraftVectorDB.recoverFileSwaps(fs, _))
     restored
   }
 
@@ -479,34 +424,24 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
   /** Drop the named docs' rows, file-granular: one column-pruned,
     * row-group-skipping scan finds the touched cells, and within each
     * only footer-intersecting files rewrite
-    * ([[GraftVectorDB.deleteNamesFromDir]]). Returns rows removed. */
+    * ([[SortedRuns.deleteNames]]). Returns rows removed. */
   def deleteNames(names: Seq[String]): Long = {
     val recovered = recover()
     val touched = cached.index.filter($"doc_name".isin(names: _*))
       .select($"cell").distinct().collect().map(_.getInt(0)).sorted
-    val removed = touched.map(c => GraftVectorDB.deleteNamesFromDir(spark, fs,
-      new Path(root, s"cell=$c"), names, Seq("doc_name", "row_id"), IndexDataSchema)).sum
+    val removed = touched.map(c => runs.deleteNames(c.toString, names)).sum
     deleted(touched.nonEmpty || recovered, removed)
   }
 
   /** Drop the rows `hit` matches: one column-pruned scan finds the
-    * touched cells, each of which rewrites as one doc_name-sorted file
-    * of its `keep` rows ([[compact]]'s swap) — O(touched cells).
-    * Returns rows removed. */
+    * touched cells, each of which rewrites its `keep` rows at its file
+    * count ([[SortedRuns.deleteWhere]]) — O(touched cells). Returns
+    * rows removed. */
   def deleteWhere(hit: Column, keep: Column): Long = {
     val recovered = recover()
     val touched = cached.index.filter(hit).select($"cell").distinct()
       .collect().map(_.getInt(0)).sorted
-    val removed = touched.map { c =>
-      val cellDir = new Path(root, s"cell=$c")
-      val tmp = new Path(root, s".compact_tmp_cell=$c")
-      val cur = spark.read.schema(IndexDataSchema).parquet(cellDir.toString)
-      val before = cur.count() // footer-stats count, no data scan
-      cur.filter(keep).repartition(1).sortWithinPartitions("doc_name", "row_id")
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      AtomicDir.swap(fs, tmp, cellDir, new Path(root, s".compact_old_cell=$c"))
-      before - spark.read.schema(IndexDataSchema).parquet(cellDir.toString).count()
-    }.sum
+    val removed = touched.map(c => runs.deleteWhere(c.toString, keep)).sum
     deleted(touched.nonEmpty || recovered, removed)
   }
 
@@ -542,22 +477,7 @@ private[graft] final class AnnSidecar(spark: SparkSession, storeDir: String,
     Option(routingCache.get(cDir.toString)) match {
       case Some(c) if c.gen == gen && (c.index.sparkSession eq spark) => c
       case _ =>
-        // an imi table persists the two half-space codebooks (m, k, cv):
-        // expand the product driver-side into the flat (cell = i·K + j,
-        // c₁ᵢ ⊕ c₂ⱼ) table every probe consumes. Exact: pair-sum
-        // ranking ≡ concatenated-centroid L2 (AnnIndex.imi), and the
-        // separable argmin keeps append-time assignment consistent with
-        // the build's PqEncode code pairs.
-        val geomP = new Path(cDir, "_GEOMETRY")
-        val baseBooks = AtomicDir.read(fs, geomP).map(_.trim) match {
-          case Some(tag) =>
-            require(tag.startsWith("imi:"), s"unknown ANN geometry marker '$tag' at $geomP")
-            val k1 = tag.stripPrefix("imi:").toInt
-            val hb = AnnIndex.readCodebooks(spark, cDir.toString)
-            (for (i <- hb(0).indices; j <- hb(1).indices)
-              yield (i * k1 + j, hb(0)(i) ++ hb(1)(j))).toArray
-          case None => AnnIndex.routingBooks(AnnIndex.readParts(spark, cDir.toString))
-        }
+        val baseBooks = AnnIndex.routingBooks(AnnIndex.readParts(spark, cDir.toString))
         val idx = spark.read.schema(IndexSchema).parquet(path)
         // footer-stats count, once per generation: sizes the adaptive
         // PQ shortlist (and nothing else) — no data scan

@@ -20,7 +20,8 @@ import graft.util.AtomicDir
   *  - the store persists as parquet partitioned by content_type
   *    (_save_vector_db/_load_pickle, :160-238) — at 100 TB that is
   *    the layout that lets a text-only search prune the image
-  *    partitions at the scan.
+  *    partitions at the scan. The partitions are a [[SortedRuns]]
+  *    directory, which compacts, deletes from and recovers them.
   *  - `search` = run_search text mode; `searchMultimodal` = text_image
   *    mode (both channels, unioned, channel-tagged);
   *    `searchIn` = get_search_range's location filter (:673-682).
@@ -38,6 +39,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftVectorDB])
 
   def storePath: String = s"$storeDir/vector_store"
+
+  /** The records, keyed (content_type; doc_name, page_num). */
+  private val records = new SortedRuns(spark, storePath, "content_type",
+    GraftVectorDB.StoreDataSchema, Seq("doc_name", "page_num"))
 
   // ---- single-writer lease --------------------------------------------
   // The store's mutation protocols (rename swaps, stamp bumps, sidecar
@@ -144,7 +149,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * its first write; each area's own recovery also runs on entry to
     * the ops that rewrite it. */
   private def recover(): Unit = {
-    recoverCompact()
+    records.recover()
     AnnSidecar.recoverBuilds(fsOf(new org.apache.hadoop.fs.Path(storeDir)), storeDir, _ => true)
     channels.values.foreach(_.recover())
     lexical.recover()
@@ -691,29 +696,15 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * and file-granular deletes leave zero-row residue, so each
     * content_type partition fragments over time. Compacts every
     * partition holding more than `targetFiles` parquet files down to
-    * `targetFiles` (the `compact()` swap + recovery protocol);
-    * partitions at or under the bound are untouched — their files are
-    * neither read nor moved. Single-writer contract. Returns
-    * (partitions compacted, rows rewritten). */
+    * `targetFiles` ([[SortedRuns.compact]]); partitions at or under the
+    * bound are untouched — their files are neither read nor moved.
+    * Single-writer contract. Returns (partitions compacted, rows
+    * rewritten). */
   def maintainStore(targetFiles: Int = 32): (Int, Long) = withWriterLease("maintainStore") {
-    recoverCompact()
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (0, 0L)
-    var parts = 0
-    var rows = 0L
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("content_type="))
-      .map(_.getPath).sortBy(_.getName)
-      .foreach { dir =>
-        val nFiles = fs.listStatus(dir)
-          .count(_.getPath.getName.endsWith(".parquet"))
-        if (nFiles > targetFiles) {
-          rows += compact(dir.getName.stripPrefix("content_type="), targetFiles)
-          parts += 1
-        }
-      }
-    if (parts > 0) spark.catalog.refreshByPath(storePath)
+    records.recover()
+    if (!existsPath(new org.apache.hadoop.fs.Path(storePath))) return (0, 0L)
+    val compacted = records.compact(targetFiles)
+    if (compacted.nonEmpty) spark.catalog.refreshByPath(storePath)
     // sidecars with accumulated tombstones compact in the same sweep
     // (gated on tombstones actually existing — an untombstoned sidecar
     // would pay a full rewrite for nothing; fragmentation-driven
@@ -723,7 +714,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     // maintenance exit = a consistent point: stamp the live file set so
     // an external copier has a manifest that cannot straddle a rewrite
     snapshot()
-    (parts, rows)
+    (compacted.length, compacted.map(_._2).sum)
   }
 
   /** Versioned snapshot manifest — the consistent-copy contract for a
@@ -731,10 +722,10 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * (`_snapshots/manifest.vN`, an [[AtomicDir.commitVersion]])
     * listing every LIVE data/metadata file of the store and
     * every channel's ANN index with its byte length. Dot-prefixed
-    * crash/staging residue (`.compact_*`, `.delete_*`, `.ann_build_*`,
-    * `.splits_tmp_*`) is NEVER listed — a copy made by replaying the
-    * manifest reproduces exactly the serving state, mid-ingest
-    * leftovers excluded, and serves identically (SnapshotSpec).
+    * crash/staging residue ([[AtomicDir]]'s staged and aside names) is
+    * NEVER listed — a copy made by replaying the manifest reproduces
+    * exactly the serving state, mid-ingest leftovers excluded, and
+    * serves identically (SnapshotSpec).
     * Written at [[maintainStore]] exit (the single-writer quiescent
     * point) and callable directly; driver metadata I/O only, O(files),
     * no Spark job. Returns the committed manifest path. */
@@ -1000,12 +991,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val textRows =
       (if (annIndexBuilt("text")) searchAnn(queryText, topN, location = location)
        else search(queryText, topN, location)).collect().toSeq
-    val imageRows = queryImages.flatMap(b64 =>
-      searchIn("image", b64, topN, location).collect())
-    val hits = textRows ++ imageRows
+    val imageRows = queryImages.map(b64 =>
+      searchIn("image", b64, topN, location).collect().toSeq)
+    val hits = textRows ++ imageRows.flatten
     val messages = ResponseGen.assemble(Some(queryText), queryImages, hits)
-    ResponseGen.SearchResponse(
-      model.generate(messages, hits), messages, ResponseGen.sources(hits))
+    ResponseGen.SearchResponse(model.generate(messages, hits), messages,
+      ResponseGen.sources(hits), textRows, imageRows)
   }
 
   // ─────────── ANN index: one AnnSidecar per channel ───────────
@@ -1024,14 +1015,9 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     * one bounded sample fits the routing table and the PQ codebooks,
     * one pass routes, encodes and writes the rows with their search
     * metadata, and the whole index swaps in at once
-    * ([[AnnSidecar.build]]). `geometry = "imi"` persists the inverted
-    * multi-index's half-space codebooks instead of flat centroids
-    * ([[AnnIndex.imi]]); it proves the wiring (build → persist →
-    * reopen → serve ≡ exact under full probe) and claims no
-    * performance. Returns rows indexed. */
-  def buildAnnIndex(cells: Int = AnnIndex.IvfCells,
-      channel: String = "text", geometry: String = "flat"): Long =
-    withWriterLease("buildAnnIndex")(ann(channel).build(cells, geometry))
+    * ([[AnnSidecar.build]]). Returns rows indexed. */
+  def buildAnnIndex(cells: Int = AnnIndex.IvfCells, channel: String = "text"): Long =
+    withWriterLease("buildAnnIndex")(ann(channel).build(cells))
 
   /** Route newly-ingested rows into a built index with its persisted
     * centroids and codebooks, O(|new rows|) ([[AnnSidecar.append]]).
@@ -1092,12 +1078,12 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     *  - [[delete]] (by name, the common takedown shape) is
     *    FILE-granular: parquet footers identify exactly which
     *    doc_name-sorted files can hold a victim, and only those files
-    *    rewrite (per-file [[AtomicDir.swap]]) —
+    *    rewrite ([[SortedRuns.deleteNames]]) —
     *    O(touched files) regardless of store size; untouched files are
     *    neither read nor moved.
     *  - [[deleteWhere]] (arbitrary predicate) rewrites the touched
-    *    content_type partitions (per-partition anti-join and swap, as
-    *    `compact()` does) — general but
+    *    content_type partitions at their file counts
+    *    ([[SortedRuns.deleteWhere]]) — general but
     *    partition-granular; prefer [[delete]] for name lists.
     *  - every BUILT channel's ANN index drops the same rows —
     *    O(touched cells) for predicates, O(touched files) for name
@@ -1130,7 +1116,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
       s"delete: ${docNames.length} names exceeds the per-call bound " +
         s"(${GraftVectorDB.InLiteralMax}) — chunk the takedown batch")
     val names = docNames.distinct.sorted
-    recoverCompact()
+    records.recover()
     // sidecar tombstones FIRST (fail-open — see GenSidecar)
     nearDup.tombstone(names.toDF("doc_name"))
     lexical.tombstone(names.toDF("doc_name"))
@@ -1139,13 +1125,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
     val touched = store.filter($"doc_name".isin(names: _*))
       .groupBy($"content_type").agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.keys.toSeq.sorted.foreach { ct =>
-      GraftVectorDB.deleteNamesFromDir(spark, fs,
-        new org.apache.hadoop.fs.Path(s"$storePath/content_type=$ct"), names,
-        Seq("doc_name", "page_num"), GraftVectorDB.StoreDataSchema)
-    }
+    touched.keys.toSeq.sorted.foreach(records.deleteNames(_, names))
     // stale FileStatus entries (same path, new length) must not serve
     if (touched.nonEmpty) spark.catalog.refreshByPath(storePath)
     // index cleanup ALWAYS runs for EVERY registered channel — a crash
@@ -1155,7 +1135,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   }
 
   def deleteWhere(cond: Column): Long = withWriterLease("deleteWhere") {
-    recoverCompact() // restore any prior rewrite's crash leftovers first
+    records.recover() // restore any prior rewrite's crash leftovers first
     // fail fast if the predicate references store-only columns
     // (file_hash/ts/bbox): it would succeed on the store and then blow
     // up half-way through the index cleanup
@@ -1191,28 +1171,7 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
         lexical.tombstone(victims)
       } finally victims.unpersist(blocking = false)
     }
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.keys.toSeq.sorted.foreach { ct =>
-      val partDir = new org.apache.hadoop.fs.Path(s"$storePath/content_type=$ct")
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$storePath/.compact_tmp_content_type=$ct")
-      val old = new org.apache.hadoop.fs.Path(
-        s"$storePath/.compact_old_content_type=$ct")
-      val nFiles = math.max(1, fs.listStatus(partDir)
-        .count(_.getPath.getName.endsWith(".parquet")))
-      // the partition read excludes content_type — restore it so the
-      // predicate can reference it, drop it again before the write
-      val remaining = spark.read.schema(GraftVectorDB.StoreDataSchema).parquet(partDir.toString)
-        .withColumn("content_type", lit(ct))
-        .filter(keep).drop("content_type")
-      // preserve the doc_name-sorted layout (and file count) location
-      // filters' row-group skipping depends on
-      remaining.repartitionByRange(nFiles, $"doc_name", $"page_num")
-        .sortWithinPartitions("doc_name", "page_num")
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      AtomicDir.swap(fs, tmp, partDir, old)
-    }
+    touched.keys.toSeq.sorted.foreach(records.deleteWhere(_, keep))
     // index cleanup ALWAYS runs for EVERY registered channel (see
     // scaladoc: rerun-to-converge after a crash between the store
     // rewrite and this point)
@@ -1331,57 +1290,19 @@ class GraftVectorDB(spark: SparkSession, storeDir: String) {
   /** Store maintenance: streaming ingest appends a file per micro-batch
     * — at 100 TB the accumulating small-file count is the operational
     * killer (file-listing latency + one task per tiny file). Rewrites
-    * one content_type partition into `targetFiles` range-partitioned
-    * files sorted by (doc_name, page_num), so parquet row-group min/max
-    * stats keep supporting location-filtered skipping; `zOrdered=true`
-    * interleaves (doc_name-hash, page_num) bits instead, bounding BOTH
-    * dimensions per file (the layout ZOrderSpec proves prunes). The
-    * rewrite lands in a dot-prefixed temp dir (invisible to concurrent
+    * one content_type partition into `targetFiles` files sorted by
+    * (doc_name, page_num), so parquet row-group min/max stats keep
+    * supporting location-filtered skipping ([[SortedRuns.compact]]).
+    * The rewrite stages in a dot-prefixed dir (invisible to concurrent
     * reads) and swaps in via rename; rows and search results are
-    * invariant (GraftVectorDBSpec). Returns the rows rewritten. */
-  def compact(contentType: String, targetFiles: Int = 1,
-      zOrdered: Boolean = false): Long = withWriterLease("compact") {
-    recoverCompact() // restore any prior compaction's crash leftovers first
-    val partDir = s"$storePath/content_type=$contentType"
-    val tmpDir = s"$storePath/.compact_tmp_content_type=$contentType"
-    val oldDir = s"$storePath/.compact_old_content_type=$contentType"
-    // reading the partition dir directly excludes the content_type
-    // column — exactly what the rewritten files must contain
-    val cur = spark.read.schema(GraftVectorDB.StoreDataSchema).parquet(partDir)
-    val n = cur.count()
-    val keys =
-      if (zOrdered) Seq(zValue16(
-        pmod(xxhash64($"doc_name"), lit(65536)).cast("int"),
-        pmod($"page_num", lit(65536)).cast("int")))
-      else Seq($"doc_name", $"page_num")
-    cur.withColumn("__k", keys.head)
-      .repartitionByRange(targetFiles, (col("__k") +: keys.tail): _*)
-      .sortWithinPartitions((col("__k") +: keys.tail): _*)
-      .drop("__k")
-      .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-    // the store path's OWN filesystem: a store on s3a/hdfs with a
-    // different fs.defaultFS would otherwise rename nothing.
-    // CONCURRENCY CONTRACT: maintenance assumes a single writer — run
-    // compact() with streaming ingest stopped (an append landing
-    // between the renames would be lost); readers in the swap window
-    // see the partition briefly absent, not corrupt.
-    val part = new org.apache.hadoop.fs.Path(partDir)
-    AtomicDir.swap(fsOf(part), new org.apache.hadoop.fs.Path(tmpDir), part,
-      new org.apache.hadoop.fs.Path(oldDir))
-    n
-  }
-
-  /** Crash recovery ([[AtomicDir.recover]]) for the store's partition
-    * swaps ([[compact]], [[deleteWhere]]) and, inside each partition,
-    * [[delete]]'s per-file swaps. */
-  private def recoverCompact(): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = fsOf(root)
-    AtomicDir.recover(fs, root, ".compact_old_", Seq(".compact_tmp_"))
-    if (fs.exists(root))
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("content_type="))
-        .foreach(st => GraftVectorDB.recoverFileSwaps(fs, st.getPath))
+    * invariant (GraftVectorDBSpec). CONCURRENCY CONTRACT: maintenance
+    * assumes a single writer — run it with streaming ingest stopped (an
+    * append landing between the renames would be lost); readers in the
+    * swap window see the partition briefly absent, not corrupt.
+    * Returns the rows rewritten. */
+  def compact(contentType: String, targetFiles: Int = 1): Long = withWriterLease("compact") {
+    records.recover() // restore any prior compaction's crash leftovers first
+    records.compact(contentType, targetFiles)
   }
 
   /** One query = ONE corpus scan: scoring and metadata ride the same
@@ -1613,41 +1534,6 @@ object GraftVectorDB {
     * vector cell that 2-means cannot separate. */
   val MaxSplitRounds = 6
 
-  /** A parquet file's row count from its footer — driver metadata I/O. */
-  private[operators] def footerRows(f: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-    try r.getRecordCount finally r.close()
-  }
-
-  /** Whether a sorted parquet file can hold any of the (sorted) victim
-    * names — per row group, the doc_name column chunk's min/max stats
-    * (parquet truncates stats to BOUNDS, so containment stays safe);
-    * missing stats degrade to "touched" (rewrite, never skip). Driver
-    * metadata I/O only. */
-  private[graft] def fileTouchesNames(f: org.apache.hadoop.fs.FileStatus,
-      sortedNames: Array[String], conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val nameBytes = sortedNames.map(_.getBytes("UTF-8"))
-    def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getBlocks.asScala.exists { block =>
-      block.getColumns.asScala.find(_.getPath.toDotString == "doc_name") match {
-        case Some(c) =>
-          val st = c.getStatistics
-          if (st == null || !st.hasNonNullValue) true // no stats: must rewrite
-          else {
-            val mn = st.getMinBytes
-            val mx = st.getMaxBytes
-            nameBytes.exists(v => cmp(mn, v) <= 0 && cmp(v, mx) <= 0)
-          }
-        case None => true // column absent from footer: must rewrite
-      }
-    } finally r.close()
-  }
-
   /** The store's declared schema: a VectorRecord's data columns as its
     * files hold them ([[StoreDataSchema]], what one partition dir
     * reads) plus the `content_type` partition column. */
@@ -1673,78 +1559,6 @@ object GraftVectorDB {
         col("col.payload.content_raw"))
       .withColumn("channel", lit(channel)) // same contract as search()
       .orderBy(col("q_id"), col("rnk"))
-
-  /** FILE-granular delete within one sorted parquet dir (a store
-    * content_type partition or an index cell) read as `schema`: the
-    * dir's files are doc_name-sorted with row-group min/max stats, so
-    * the footers — driver metadata I/O — identify exactly which files
-    * can hold a victim ([[fileTouchesNames]]); only THOSE files
-    * rewrite, O(touched files) rather than the whole partition.
-    *
-    * The rewrite is ONE Spark job for all touched files of the dir
-    * (rows tagged with their source file via `input_file_name`, one
-    * output file per source via a partitioned write). Each output then
-    * swaps in over its source file ([[AtomicDir.swap]], aside
-    * `.delete_old_<name>`), and an all-rows-deleted file is replaced by
-    * a ZERO-ROW file rather than removed, so a missing live file is
-    * always crash state, never a completed delete. `sortCols` restores
-    * the dir's sorted layout (store partitions: doc_name+page_num;
-    * index cells: doc_name+row_id). Returns rows removed. */
-  private[operators] def deleteNamesFromDir(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
-      names: Seq[String], sortCols: Seq[String], schema: StructType): Long = {
-    recoverFileSwaps(fs, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sortedNames = names.sorted.toArray
-    def rowsAt(p: org.apache.hadoop.fs.Path) = footerRows(fs.getFileStatus(p), conf)
-    val touched = fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .filter(f => fileTouchesNames(f, sortedNames, conf))
-      .map(_.getPath).sortBy(_.getName)
-    if (touched.isEmpty) return 0L
-    val before = touched.map(rowsAt).sum
-    // file NAMES are unique within the dir (input_file_name returns the
-    // full URI, whose encoding is not worth depending on); repartition
-    // on the tag puts each source's rows in one task
-    val fileIdx = touched.map(_.getName).zipWithIndex.toMap
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".delete_tmp_batch")
-    spark.read.schema(schema).parquet(touched.map(_.toString): _*)
-      .withColumn("__f", element_at(typedLit(fileIdx),
-        substring_index(input_file_name(), "/", -1)))
-      .filter(!col("doc_name").isin(names: _*))
-      .repartition(col("__f"))
-      .sortWithinPartitions((col("__f") +: sortCols.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("__f").parquet(tmp.toString)
-    def partFile(d: org.apache.hadoop.fs.Path, what: String) =
-      fs.listStatus(d).map(_.getPath).find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new java.io.IOException(
-          s"deleteNamesFromDir: no $what part file under $d"))
-    var removed = before
-    touched.foreach { live =>
-      val k = fileIdx(live.getName)
-      val outDir = new org.apache.hadoop.fs.Path(tmp, s"__f=$k")
-      val replacement =
-        if (fs.exists(outDir)) partFile(outDir, "replacement")
-        else {
-          // every row of this file was a victim: stage a ZERO-ROW
-          // replacement so the live file never goes missing
-          val empty = new org.apache.hadoop.fs.Path(tmp, s"__empty_$k")
-          spark.read.schema(schema).parquet(live.toString).limit(0).coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(empty.toString)
-          partFile(empty, "zero-row")
-        }
-      removed -= rowsAt(replacement)
-      AtomicDir.swap(fs, replacement, live,
-        new org.apache.hadoop.fs.Path(dir, s".delete_old_${live.getName}"))
-    }
-    fs.delete(tmp, true)
-    removed
-  }
-
-  /** Crash recovery for [[deleteNamesFromDir]]'s per-file swaps. */
-  private[operators] def recoverFileSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit =
-    AtomicDir.recover(fs, dir, ".delete_old_", Seq(".delete_tmp_"))
 
   /** documents-shaped frame → VectorRecord rows (chunk + embed + hash
     * + caption stub), shuffle-free except the final write. */

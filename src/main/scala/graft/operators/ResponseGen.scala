@@ -65,9 +65,10 @@ object ResponseGen {
 
   /** run_search's return contract plus the assembled prompt (the
     * reference keeps the prompt internal; surfacing it is what makes
-    * the contract testable). */
+    * the contract testable) and the retrieved rows it was built from:
+    * the text rows, then each query image's rows. */
   case class SearchResponse(response: String, messages: Seq[ContentPart],
-      sources: Seq[SourceRef])
+      sources: Seq[SourceRef], textRows: Seq[Row], imageRows: Seq[Seq[Row]])
 
   /** The model seam: everything deterministic happens before this
     * call. A real LLM client implements `generate` over the assembled

@@ -789,39 +789,19 @@ object TextAnalysis {
         size(graft.functions.TextFunctions.tokens(c)).cast("long"))
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val np = spark.sparkContext.defaultParallelism
-    // persisted so both passes see the SAME partition ids (two
-    // independently-planned jobs may otherwise repartition differently)
-    val base = Tables.load(spark, dir, "documents")
-      .select($"source", $"doc_id", tokenCount($"text").as("n_tokens"))
-      .repartitionByRange(np, $"source", $"doc_id")
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offDf = {
-      val subs = base.groupBy($"pid", $"source").agg(sum($"n_tokens").as("t"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      subs.groupBy(_._2).toSeq.flatMap { case (_, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, src, t) =>
-          val off = acc; acc += t; (pid, src, off) }
-      }.toDF("pid", "source", "off")
-    }
-    val w = Window.partitionBy($"pid", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val spans = base
-      .join(broadcast(offDf), Seq("pid", "source"))
-      .withColumn("cum", sum($"n_tokens").over(w) + $"off")
-      .select($"source", $"doc_id", $"n_tokens",
-        expr(s"(cum - n_tokens) div $SeqLen").as("seq_first"),
-        expr(s"(cum - n_tokens) % $SeqLen").as("pos_in_seq"),
-        expr(s"(cum - 1) div $SeqLen - (cum - n_tokens) div $SeqLen + 1").as("n_seqs"))
+    val (cum, base) = distributedCumSum(Tables.load(spark, dir, "documents")
+      .select($"source", $"doc_id", tokenCount($"text").as("n_tokens")),
+      "source", "doc_id", "n_tokens")
+    val spans = cum.select($"source", $"doc_id", $"n_tokens",
+      expr(s"(cum - n_tokens) div $SeqLen").as("seq_first"),
+      expr(s"(cum - n_tokens) % $SeqLen").as("pos_in_seq"),
+      expr(s"(cum - 1) div $SeqLen - (cum - n_tokens) div $SeqLen + 1").as("n_seqs"))
     (spans, base)
   }
 
-  /** The generic form of [[packFrame]]'s DISTRIBUTED two-pass prefix
-    * sum, for any (partition key, order key, value) triple: range-
-    * partition on (part, order) so each task holds a contiguous run,
+  /** The DISTRIBUTED two-pass prefix sum behind [[packFrame]], for any
+    * (partition key, order key, value) triple: range-partition on
+    * (part, order) so each task holds a contiguous run,
     * fold per-(task, part) subtotals (≤ partitions + groups rows,
     * collected), prefix-sum them driver-side into per-task starting
     * offsets, broadcast those back, and add a task-LOCAL running sum.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.operators.{DocParse, GraftVectorDB, ResponseGen}
+import graft.operators.{DocParse, GraftVectorDB}
 
 /** HTTP serving veneer — the analog of the reference's Flask app
   * (app.py: POST /initialize, /embed, /search over one global
@@ -275,7 +275,7 @@ private class ServeState(spark: SparkSession) {
       }
   }
 
-  private def rowsJson(rows: Array[org.apache.spark.sql.Row]): JArray =
+  private def rowsJson(rows: Seq[org.apache.spark.sql.Row]): JArray =
     JArray(rows.toList.map { r =>
       JObject(
         "rnk" -> JLong(r.getAs[Long]("rnk")),
@@ -320,21 +320,13 @@ private class ServeState(spark: SparkSession) {
                   JString(s"invalid image format: ${e.getMessage}")))
             }
           }
-          val textRows =
-            (if (d.annIndexBuilt("text")) d.searchAnn(text, topN, location = location)
-             else d.search(text, topN, location)).collect()
-          val imgResults = images.map(b64 =>
-            d.searchIn("image", b64, topN, location).collect())
           // run_search's return contract (vector_db.py:666-671):
-          // response + source manifest over the combined rows (text
-          // rows first — the reference's concat order), assembled
-          // from the ALREADY-collected results (no second retrieval)
-          val hits = textRows.toSeq ++ imgResults.flatten
-          val messages = ResponseGen.assemble(Some(text), images, hits)
-          val summary = ResponseGen.ExtractiveModel.generate(messages, hits)
+          // response + source manifest, with the rows they were
+          // assembled from
+          val r = d.runSearch(text, images, topN, location)
           (200, JObject(
-            "response" -> JString(summary),
-            "sources" -> JArray(ResponseGen.sources(hits).toList.map(s =>
+            "response" -> JString(r.response),
+            "sources" -> JArray(r.sources.toList.map(s =>
               JObject(
                 "doc_name" -> JString(s.docName),
                 "page_num" -> JLong(s.pageNum),
@@ -342,8 +334,8 @@ private class ServeState(spark: SparkSession) {
                 "content_id" -> JString(s.contentId),
                 "content_raw" -> JString(s.contentRaw)))),
             "results" -> JObject(
-              "text" -> rowsJson(textRows),
-              "image" -> JArray(imgResults.map(rowsJson)))))
+              "text" -> rowsJson(r.textRows),
+              "image" -> JArray(r.imageRows.toList.map(rowsJson)))))
       }
   }
 

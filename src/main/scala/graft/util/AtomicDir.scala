@@ -15,11 +15,13 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
   * Dot-prefixed names are invisible to Spark's file listing and are
   * never listed by the snapshot manifest, so no residue ever serves.
   * The callers' prefixes are part of the on-disk format: `.tmp_` /
-  * `.old_` (sidecar dirs and small files), `.compact_tmp_` /
-  * `.compact_old_` (store partitions, index cells), `.ann_build_tmp_`
-  * / `.ann_build_old_` (whole indexes), `.delete_tmp_` /
-  * `.delete_old_` (files a delete rewrites) and `.<stem>_tmp_<uuid>`
-  * (small and versioned files, see [[stagedPrefix]]).
+  * `.old_` (sidecar dirs and small files), `.ann_build_tmp_` /
+  * `.ann_build_old_` (whole indexes), `.<stem>_tmp_<uuid>` (small and
+  * versioned files, see [[stagedPrefix]]), and the two pairs owned by
+  * `graft.operators.SortedRuns`, the one rewriter of store partitions
+  * and index cells: `.compact_tmp_` / `.compact_old_` (a rewritten
+  * partition or cell) and `.delete_tmp_` / `.delete_old_` (files a
+  * name delete rewrites).
   *
   * '''Swap''' ([[swap]]): with nothing live, one rename staged → live.
   * Otherwise live → aside, staged → live, then the aside is dropped.

@@ -5,10 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scans over src/main. Keeps `graft.util.AtomicDir` the store's
   * only commit protocol: a Hadoop `rename(` anywhere else, or a Hadoop
   * `create(` other than the writer lease's exclusive create (mutual
-  * exclusion, not a commit), fails this spec. Keeps every store sidecar
-  * read on its declared schema (no footer inference, no schema-merge
-  * job). Keeps src/main a library with a fixed set of entry points:
-  * one-off measurement programs belong outside it. */
+  * exclusion, not a commit), fails this spec. Keeps the partition and
+  * file rewrite names inside `graft.operators.SortedRuns`, the one
+  * owner of that lifecycle. Keeps every store sidecar read on its
+  * declared schema (no footer inference, no schema-merge job). Keeps
+  * src/main a library with a fixed set of entry points: one-off
+  * measurement programs belong outside it. */
 class CommitProtocolGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -37,6 +39,22 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
       s"commit through graft.util.AtomicDir instead:\n${offenders.mkString("\n")}")
   }
 
+  test("partition and file rewrite residue is named only by SortedRuns") {
+    // the store's records and every ANN index share one sorted-run
+    // lifecycle; a second copy of its rewrite or recovery would name
+    // these prefixes again (AtomicDir's Scaladoc lists them as format)
+    val residue = Seq(".compact_tmp_", ".compact_old_", ".delete_tmp_", ".delete_old_")
+    val offenders = walk(root).filterNot(_.getName == "SortedRuns.scala").flatMap { f =>
+      lines(f).collect {
+        case (line, i) if residue.exists(line.contains) &&
+            !(f.getName == "AtomicDir.scala" && line.trim.startsWith("*")) =>
+          s"${f.getPath}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"rewrite partitions through graft.operators.SortedRuns:\n${offenders.mkString("\n")}")
+  }
+
   test("sidecar reads declare their schemas: no mergeSchema in src/main") {
     val merge = walk(root).flatMap { f =>
       lines(f).collect { case (line, i) if line.contains("mergeSchema") =>
@@ -44,7 +62,7 @@ class CommitProtocolGuardSpec extends AnyFunSuite {
     }
     assert(merge.isEmpty, s"read with a declared schema instead:\n${merge.mkString("\n")}")
     val sidecars = Seq("GenSidecar.scala", "NearDupSidecar.scala", "LexicalSidecar.scala",
-      "AnnSidecar.scala")
+      "AnnSidecar.scala", "SortedRuns.scala")
       .map(n => new java.io.File(root, s"graft/operators/$n"))
     assert(sidecars.forall(_.isFile), s"sidecar components missing: ${sidecars.filterNot(_.isFile)}")
     val reads = sidecars.flatMap(f => lines(f).collect {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.ContentTypes
-import graft.operators.GraftVectorDB
+import graft.operators.{GraftVectorDB, SortedRuns}
 
 /** Document deletion — the takedown/GDPR lifecycle op: deleted docs
   * vanish from every serving path (exact, ANN, PQ, both channels)
@@ -258,7 +258,7 @@ class DeletionSpec extends AnyFunSuite {
     val st = org.apache.hadoop.fs.FileSystem.getLocal(conf)
       .getFileStatus(new org.apache.hadoop.fs.Path(f.getAbsolutePath))
     def touches(names: String*): Boolean =
-      GraftVectorDB.fileTouchesNames(st, names.sorted.toArray, conf)
+      SortedRuns.fileTouchesNames(st, names.sorted.toArray, conf)
     assert(touches("b"), "min boundary must touch")
     assert(touches("d"), "max boundary must touch")
     assert(touches("c"), "an absent name inside the range must stay touched (conservative)")

@@ -736,81 +736,6 @@ class GraftVectorDBSpec extends AnyFunSuite {
     assert(db2.annAppendFraction("text") == db.annAppendFraction("text"))
   }
 
-  test("IMI geometry: code-pair cells persist as half-space books; full-probe == exact; reopen works") {
-    val dir = "target/vdb_imi_spec"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(dir))
-    val idb = new GraftVectorDB(spark, dir)
-    idb.ingest(Tables.load(spark, sf, "documents"))
-    idb.buildAnnIndex(cells = 9, geometry = "imi") // K = 3 → 9 pair cells
-    // the persisted routing table IS the product form: 2·K half-space
-    // centroids (the √cells structural point), plus the marker that
-    // rides the build swap
-    val cdf = spark.read.parquet(s"$dir/ann_index_text/_centroids")
-    assert(cdf.columns.toSet == Set("m", "k", "cv"))
-    assert(cdf.count() == 6, "an imi table persists 2K half books, not K² cells")
-    assert(new java.io.File(s"$dir/ann_index_text/_centroids/_GEOMETRY").exists)
-    // data partitions are the PqEncode code pairs i·K + j
-    val cellsSeen = spark.read.parquet(idb.annPath("text"))
-      .select("cell").distinct().collect().map(_.getInt(0))
-    assert(cellsSeen.forall(c => c >= 0 && c < 9), s"${cellsSeen.toSeq}")
-    // assignment separability, on real rows: every stored cell equals
-    // the argmin over the EXPANDED concat table — the exact claim the
-    // reader's expansion rests on
-    val hb = cdf.collect().map(r => (r.getAs[Int]("m"), r.getAs[Int]("k"),
-        r.getAs[Seq[Double]]("cv").toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.sortBy(_._2).map(_._3))
-    val concat = (for (i <- hb(0).indices; j <- hb(1).indices)
-      yield (i * 3 + j, hb(0)(i) ++ hb(1)(j))).toArray
-    spark.read.parquet(idb.annPath("text")).select("v", "cell").collect()
-      .foreach { r =>
-        val v = r.getSeq[Double](0).toArray
-        val best = concat.map { case (c, cv) =>
-          var d = 0.0; var i = 0
-          while (i < cv.length) { d += v(i) * cv(i); i += 1 }
-          (c, d - cv.map(x => x * x).sum / 2)
-        }.maxBy { case (c, d) => (d, -c) }._1
-        assert(best == r.getInt(1), s"separability broke at cell ${r.getInt(1)}")
-      }
-    // full probe ≡ exact on every surface, scoped included
-    def key(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      (r.getAs[Long]("rnk"), r.getAs[Double]("sim_r"),
-        r.getAs[String]("doc_name"), r.getAs[String]("content_id"))).toSeq
-    val nRows = spark.read.parquet(idb.annPath("text")).count().toInt
-    val loc = Some(idb.store.select("doc_name").first().getString(0)
-      .split("/").init.mkString("/") + "/")
-    for (q <- Seq("fast query join table", "slow merge sort line");
-         l <- Seq(None, loc)) {
-      val exact = key(idb.search(q, 5, l).collect())
-      assert(key(idb.searchAnn(q, 5, nProbe = 9, location = l).collect()) == exact,
-        s"imi full-probe != exact for '$q' scope $l")
-      assert(key(idb.searchAnnPq(q, 5, 9, nRows, l).collect()) == exact,
-        s"imi full-probe PQ != exact for '$q' scope $l")
-    }
-    // reopen from a fresh session: books re-expand off the persisted
-    // half tables; serving is identical
-    val db2 = new GraftVectorDB(spark.newSession(), dir)
-    val exact0 = key(idb.search("fast query join table", 5).collect())
-    assert(key(db2.searchAnn("fast query join table", 5, nProbe = 9).collect())
-      == exact0)
-    // an append through the reopened instance routes on the expanded
-    // books and serves (assignment consistency across the seam)
-    import spark.implicits._
-    val late = Seq((990001L, "imigeom xylograph planted probe doc", "en", "imi"))
-      .toDF("doc_id", "text", "lang", "source")
-    db2.ingest(late, indexChannels = Seq("text"))
-    val hit = db2.searchAnn("imigeom xylograph planted", 5, nProbe = 9).collect()
-    assert(hit.exists(_.getAs[String]("doc_name").contains("/imi/")),
-      "appended doc must be reachable through the imi-routed index")
-    // and the flat default is untouched
-    val e = intercept[IllegalArgumentException](
-      idb.buildAnnIndex(9, "text", "hilbert"))
-    assert(e.getMessage.contains("unknown geometry"))
-  }
-
   test("a never-built ANN index fails with a contract error naming buildAnnIndex") {
     val d = new GraftVectorDB(spark, "target/vdb_nobuild_spec")
     val e = intercept[IllegalStateException] { d.searchAnn("any query") }
